@@ -5,7 +5,8 @@ defaults. Only what depends on the host is set: cores (``nproc``),
 driver memory (a quarter of host RAM, capped at the factory default)
 and the directories Spark and the JVM write scratch files to, which
 live in the benchmark's work directory so a run writes only inside its
-checkout.
+checkout. The JVM also keeps a fixed set of JIT compiler threads, which
+the CPU figure needs (see ``window``).
 """
 
 from __future__ import annotations
@@ -15,7 +16,6 @@ import os
 import platform
 import resource
 import statistics
-import subprocess
 import sys
 import time
 
@@ -55,7 +55,10 @@ def start_session(app_name: str):
     os.environ["SPARK_LOCAL_DIRS"] = scratch  # wins over spark.local.dir
     conf = {
         "spark.driver.memory": settings["driver_memory"],
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={scratch} -XX:-UsePerfData",
+        # a fixed set of JIT threads, so ``window`` can take their CPU out
+        "spark.driver.extraJavaOptions": (
+            f"-Djava.io.tmpdir={scratch} -XX:-UsePerfData -XX:-UseDynamicNumberOfCompilerThreads"
+        ),
         "spark.sql.warehouse.dir": os.path.join(WORK_DIR, "warehouse"),
     }
     t0 = time.perf_counter()
@@ -67,24 +70,20 @@ def start_session(app_name: str):
 
 
 def stop_session(spark) -> None:
-    """Stop Spark, then end the gateway JVM and wait until it has exited."""
+    """Stop Spark and wait until the gateway JVM has exited.
+
+    ``spark.stop()`` leaves the gateway JVM running. It exits when its
+    stdin closes, which PySpark leaves to interpreter exit without
+    waiting: on a 4-core VM the JVM outlived the Python process by
+    0.5-1 s, with or without ``spark.stop()``. Closing stdin here and
+    waiting means a run leaves no JVM behind."""
     from pyspark import SparkContext
 
-    gateway = SparkContext._gateway
+    proc = getattr(SparkContext._gateway, "proc", None)
     spark.stop()
-    if gateway is None:
-        return
-    proc = getattr(gateway, "proc", None)
-    gateway.shutdown()
-    SparkContext._gateway = None
-    SparkContext._jvm = None
     if proc is not None:
-        proc.stdin.close()  # the gateway server exits when stdin closes
-        try:
-            proc.wait(timeout=60)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            proc.wait(timeout=60)
+        proc.stdin.close()
+        proc.wait(timeout=60)
 
 
 def peak_rss_mb(spark) -> float:
@@ -102,24 +101,33 @@ def _jvm_pid(spark) -> int:
     return int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
 
 
-def _thread_cpu(pid: int) -> dict[str, tuple[str, int]]:
-    """Per-thread CPU ticks of a process: {tid: (thread name, ticks)}."""
+def _ticks(stat_path: str) -> tuple[str, int]:
+    """(name, utime + stime ticks) from a /proc stat file."""
+    with open(stat_path) as fh:
+        stat = fh.read()
+    fields = stat.rsplit(")", 1)[1].split()
+    return stat[stat.index("(") + 1 : stat.rindex(")")], int(fields[11]) + int(fields[12])
+
+
+def _jit_ticks(pid: int) -> dict[str, int]:
+    """CPU ticks of each JIT compiler thread: {tid: ticks}. The session
+    turns off the JVM's dynamic compiler thread count, so these threads
+    live as long as the JVM and none of their CPU is lost in a diff."""
     out = {}
     for tid in os.listdir(f"/proc/{pid}/task"):
         try:
-            with open(f"/proc/{pid}/task/{tid}/stat") as fh:
-                stat = fh.read()
+            name, ticks = _ticks(f"/proc/{pid}/task/{tid}/stat")
         except FileNotFoundError:  # the thread ended meanwhile
             continue
-        name = stat[stat.index("(") + 1 : stat.rindex(")")]
-        fields = stat.rsplit(")", 1)[1].split()
-        out[tid] = (name, int(fields[11]) + int(fields[12]))
+        if "CompilerThre" in name:
+            out[tid] = ticks
     return out
 
 
 def counters(spark) -> dict:
-    """A snapshot of the JVM's per-thread CPU, this process's CPU, JVM GC
-    seconds and host CPU ticks; ``window`` diffs two of them."""
+    """A snapshot of the JVM's CPU (the whole process, which includes
+    threads that have ended, and its JIT threads apart), this process's
+    CPU, JVM GC seconds and host CPU ticks; ``window`` diffs two."""
     with open("/proc/stat") as fh:
         ticks = [int(x) for x in fh.readline().split()[1:]]
     own = os.times()
@@ -127,9 +135,11 @@ def counters(spark) -> dict:
         b.getCollectionTime()
         for b in spark.sparkContext._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
     )
+    pid = _jvm_pid(spark)
     return {
         "wall": time.perf_counter(),
-        "threads": _thread_cpu(_jvm_pid(spark)),
+        "jvm": _ticks(f"/proc/{pid}/stat")[1],
+        "jit": _jit_ticks(pid),
         "own_cpu": own.user + own.system,
         "gc": gc / 1000,
         "host_ticks": sum(ticks),
@@ -140,22 +150,17 @@ def counters(spark) -> dict:
 def window(before: dict, after: dict) -> dict[str, float]:
     """What a measured window cost.
 
-    ``cpu_s`` is the CPU time of the JVM's threads, except the JIT
-    compiler's, plus this process's (which builds the queries and runs
+    ``cpu_s`` is the CPU time of the JVM, except its JIT compiler
+    threads, plus this process's (which builds the queries and runs
     the streaming callbacks). JIT compilation is left out because it
     depends on how warm the JVM is, not on the work: after one warm-up
-    pass it still costs 5-11 s per analytics pass, falling pass by
-    pass, while the other threads' CPU holds within a few percent.
+    pass it still costs 17-21 s per analytics pass, more than the rest
+    of the JVM, and it falls pass by pass.
     ``host_steal_share`` is the share of host CPU time the hypervisor
     gave to other tenants, which marks a noisy host window."""
     tick = os.sysconf("SC_CLK_TCK")
-    engine = jit = 0
-    for tid, (name, t) in after["threads"].items():
-        delta = t - before["threads"].get(tid, (name, 0))[1]
-        if "CompilerThre" in name:
-            jit += delta
-        else:
-            engine += delta
+    jit = sum(t - before["jit"].get(tid, 0) for tid, t in after["jit"].items())
+    engine = after["jvm"] - before["jvm"] - jit
     host = after["host_ticks"] - before["host_ticks"]
     return {
         "wall_s": after["wall"] - before["wall"],

@@ -272,8 +272,21 @@ def figures(exp: Expected, c: dict) -> dict:
     }
 
 
-def layer_metrics(spark, exp: Expected, c: dict, tracer) -> dict:
-    """Per-layer metrics of the lake and streaming layers for a traced cycle."""
+def rows_upserted(silver) -> list[int]:
+    """Rows each silver commit wrote or replaced, from the committed
+    versions themselves: all of version 0, then the rows of each
+    version that the version before it does not hold."""
+    versions = silver.versions()
+    out = [silver.manifest(versions[0])["rows"]] if versions else []
+    for prev, v in zip(versions, versions[1:]):
+        out.append(silver.read(version=v).exceptAll(silver.read(version=prev)).count())
+    return out
+
+
+def layer_metrics(spark, exp: Expected, c: dict, tracer, ledger: Ledger) -> dict:
+    """Per-layer metrics of the lake and streaming layers for a traced
+    cycle. The rows each upsert committed are checked against the
+    generator's expected result; a mismatch fails the silver ingest."""
     from big_data_data_lake_spark.sources.metadata import MANIFEST_DIR
 
     from tracing import exec_counters, layer_totals, spark_jobs
@@ -294,6 +307,10 @@ def layer_metrics(spark, exp: Expected, c: dict, tracer) -> dict:
         manifest_bytes += sum(
             os.path.getsize(os.path.join(mdir, n)) for n in os.listdir(mdir) if n.endswith(".json")
         )
+    upserted = rows_upserted(c["silver"])
+    want = [n for n in exp.upserted_by_poll if n]
+    if upserted != want:
+        ledger.mismatch("silver rows upserted", [f"{upserted} != {want}"])
     progress = c["bronze_progress"] + c["silver_progress"]
 
     def dur(key: str) -> float:
@@ -314,7 +331,7 @@ def layer_metrics(spark, exp: Expected, c: dict, tracer) -> dict:
         "lake.read_s": totals.get("lake.read", {}).get("s", 0.0),
         "lake.files_added": len(all_files),
         "lake.bytes_written": sum(all_files.values()),
-        "lake.upsert_bytes_rewritten_per_row": upsert_bytes / max(1, sum(exp.upserted_by_poll[1:])),
+        "lake.upsert_bytes_rewritten_per_row": upsert_bytes / max(1, sum(upserted[1:])),
         "lake.snapshot_files": snapshot_files,
         "lake.manifest_bytes": manifest_bytes,
         "lake.read_files_scanned": c["read_files_scanned"],
@@ -327,7 +344,7 @@ def layer_metrics(spark, exp: Expected, c: dict, tracer) -> dict:
         "ingest.rows_in": sum(p["numInputRows"] for p in c["bronze_progress"]),
         "ingest.rows_parsed": c["rows_committed"],
         "ingest.rows_dropped_malformed": exp.vectors_written - c["rows_committed"],
-        "ingest.rows_upserted": sum(exp.upserted_by_poll),
+        "ingest.rows_upserted": sum(upserted),
     }
     out.update(exec_counters(spark, jobs))
     return out

@@ -72,14 +72,25 @@ def test_tail_has_exactly_ten_samples_beyond():
 
 def test_wrong_query_result_counts_as_failed_op(monkeypatch):
     import analytics
-    from big_data_data_lake_spark import caching, testing
+    from big_data_data_lake_spark import caching, queries
 
     wrong = "pricing_summary"
 
-    def fake_check(spark, name, sf_dir):
-        return ["row count: spark=3 oracle=4"] if name == wrong else []
+    class _Query:
+        def __init__(self, name):
+            self.name = name
 
-    monkeypatch.setattr(testing, "check_query", fake_check)
+        def fn(self, spark, sf_dir):
+            return self
+
+        def toPandas(self):
+            return self.name
+
+    def fake_oracle(qd, got):
+        return ["row count: spark=3 oracle=4"] if got == wrong else []
+
+    monkeypatch.setattr(queries, "load_all", lambda: {n: _Query(n) for n in analytics.QUERIES})
+    monkeypatch.setattr(analytics, "oracle_issues", fake_oracle)
     monkeypatch.setattr(caching, "release_query_caches", lambda: 0)
     ledger = Ledger()
     analytics.check_pass(None, list(analytics.QUERIES), ledger)
