@@ -15,14 +15,22 @@ Scale shapes:
   band-bucket shuffle whose fan-out is controlled by band width, not
   corpus size. No O(n²) anywhere.
 - SimHash: row-local 62-bit sketch (widened affine rehash of the
-  31-bit shingle hashes); pair generation is a pigeonhole chunk-band
-  equi-join with 8-bit slots — bucketed shuffle, no O(n²).
+  31-bit shingle hashes); pair generation is a pigeonhole equi-join on
+  14-bit keys, one per 2-of-8 block combination
+  (``simhash_combo_keys``) — bucketed shuffle, no O(n²).
+- Per-document near-dup summaries: ``two_level_summary`` collapses
+  identical sketches to one representative and runs the pair search
+  between representatives only.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..caching import scoped_persist
 
 MERSENNE_P = 2_147_483_647  # 2^31 - 1
 
@@ -505,6 +513,15 @@ def spark_minhash_sig_array_expr(text: str = "text") -> str:
     )
 
 
+# Spark-SQL predicate: ``text`` has at least one bigram shingle, i.e.
+# its minhash signature is not NULL (NULL text and one-token documents
+# fail it). Filter degenerate documents with this, not with a test on
+# the signature itself: Catalyst pushes a filter on the signature alias
+# below the round-robin repartition, so the whole sketch would run a
+# second time on the scan's single partition.
+SPARK_HAS_SHINGLES = "size(split(text, ' ')) >= 2"
+
+
 def spark_widened_hashes_expr(hs: str = "hs") -> str:
     """Spark-SQL: widen each 31-bit hash to 62 bits (two independent
     affine rehashes; see the constants block). Compute this ONCE per
@@ -582,3 +599,95 @@ def simhash_sql(wh: str = "wh", bits: int = N_SIMHASH_BITS) -> str:
         )
     return "(" + " + ".join(terms) + ")"
 
+
+# ---------------------------------------------------------------------------
+# Two-level near-dup summaries
+# ---------------------------------------------------------------------------
+
+
+def two_level_summary(
+    sketch: DataFrame,
+    group_cols: list[str],
+    rep_pairs: Callable[[DataFrame], DataFrame],
+    in_group_score: float | int,
+    best: Callable[[str], Column],
+    out_cols: tuple[str, str],
+) -> DataFrame:
+    """Per-document near-dup degree and best score, computed between
+    distinct sketches instead of between documents.
+
+    ``sketch`` has one row per document: ``doc_id`` plus
+    ``group_cols``, with NULL-key rows already filtered out (groupBy
+    puts NULL keys in one group, while an equi-join never matches
+    them). Documents with equal ``group_cols`` form a group of size
+    ``g`` whose representative ``rep`` is its smallest ``doc_id``.
+
+    ``rep_pairs(grp)`` receives the persisted group table
+    (``group_cols``, ``g``, ``rep``) and must return exactly one row
+    per near-dup pair of DIFFERENT groups, with columns ``r1 < r2``
+    (the two reps), ``g1``, ``g2`` (their group sizes) and ``score``.
+    A duplicate row would be counted twice. Candidacy and score must
+    depend on the group key alone, so that every member of a group is
+    a near-dup of every other member at ``in_group_score``, and a rep
+    pair stands for ``g1 * g2`` document pairs.
+
+    The result has ``doc_id``, ``out_cols[0]`` = (g - 1) + the summed
+    sizes of neighbouring groups (bigint), and ``out_cols[1]`` =
+    ``in_group_score`` when g > 1, else ``best`` over the doc's rep
+    pairs. Documents with no near-dup are absent. The duplication
+    rate drops out of the pair search: its input is the group table.
+    """
+    sketch = scoped_persist(sketch)
+    # map-side partial aggregation collapses duplicates before the
+    # exchange; read by rep_pairs and by the final expansion join
+    grp = scoped_persist(
+        sketch.groupBy(*group_cols).agg(
+            F.count(F.lit(1)).alias("g"), F.min("doc_id").alias("rep")
+        )
+    )
+    # symmetrize in one explode-array pass: a unionAll of two selects
+    # would run the whole rep_pairs lineage twice
+    sym = rep_pairs(grp).select(
+        F.explode(
+            F.array(
+                F.struct(F.col("r1").alias("rep"), F.col("g2").alias("g_other"), "score"),
+                F.struct(F.col("r2").alias("rep"), F.col("g1").alias("g_other"), "score"),
+            )
+        ).alias("e")
+    ).select("e.rep", "e.g_other", "e.score")
+    cross = sym.groupBy("rep").agg(
+        F.sum("g_other").alias("cross_deg"), best("score").alias("cross_best")
+    )
+    n = (F.col("g") - 1 + F.coalesce(F.col("cross_deg"), F.lit(0))).cast("bigint")
+    score = F.when(F.col("g") > 1, F.lit(in_group_score)).otherwise(F.col("cross_best"))
+    return (
+        sketch.join(grp.select(*group_cols, "g", "rep"), group_cols)
+        .join(cross, "rep", "left")
+        .where(n >= 1)
+        .select("doc_id", n.alias(out_cols[0]), score.alias(out_cols[1]))
+    )
+
+
+def band_candidates(grp: DataFrame) -> DataFrame:
+    """Distinct ``(r1, r2)`` pairs, ``r1 < r2``, of reps in ``grp``
+    (``rep`` plus a ``sigarr`` array of the N_MINHASH signature values)
+    that collide in at least one LSH band.
+
+    The pairs are deduplicated here, before any verification join: at
+    ~4x duplication a pair collides in up to 16 bands, and verifying
+    every collision measured slower at sf10. A bucket-local variant
+    (collect each band bucket, explode its pairs) gave no gain at sf10
+    and loses AQE skew splitting on a hot bucket (OPTIMIZATION_r13.md).
+    """
+    sigs = grp.selectExpr("rep", *[f"sigarr[{k}] AS s{k}" for k in range(N_MINHASH)])
+    bands = sigs.select("rep", F.explode(minhash_bands()).alias("bk")).select(
+        "rep", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
+    )
+    a = bands.select(F.col("rep").alias("r1"), "band", "bkey")
+    b = bands.select(F.col("rep").alias("r2"), "band", "bkey")
+    return (
+        a.join(b, ["band", "bkey"])
+        .where(F.col("r1") < F.col("r2"))
+        .select("r1", "r2")
+        .dropDuplicates(["r1", "r2"])
+    )

@@ -1494,124 +1494,72 @@ GROUP BY doc_id
 """
 
 
+def _edit_dist_rep_pairs(cand: DataFrame) -> DataFrame:
+    """Verify candidate rep pairs (r1, r2, g1, g2, prefixes p1, p2) by
+    threshold-bounded Levenshtein; the ``rep_pairs`` result shared by
+    both fuzzy summaries.
+
+    The DP projection is persisted BEFORE the threshold filter: a
+    filter on the aliased DP column is alias-substituted and pushed
+    into the join as a two-conjunct condition, so every pair would pay
+    the DP once per conjunct plus once in the projection. With the
+    cache boundary directly under the filter the DP runs exactly once
+    per candidate pair. The repartition spreads the DP: the candidate
+    frame is a few MB, which AQE coalesces to one partition, so the
+    DP stage would run on a single core."""
+    dist = F.levenshtein("p1", "p2", LEV_THRESHOLD).cast("int")
+    return scoped_persist(
+        cand.repartition(cand.sparkSession.sparkContext.defaultParallelism).select(
+            "r1", "r2", "g1", "g2", dist.alias("score")
+        )
+    ).where(F.col("score").between(0, LEV_THRESHOLD))
+
+
 @register("fuzzy_dup_summary", FUZZY_DUP_SUMMARY_ORACLE)
 def fuzzy_dup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document edit-distance fuzzy-dup verdict — the bounded
     deliverable replacing fuzzy_dup_levenshtein's raw pair dump in the
-    headline bench (r11 verdict #1, the same treatment simhash/minhash
-    got in r9-r11): for every document with at least one in-block
+    headline bench: for every document with at least one in-block
     neighbor at prefix edit distance <= 30, its fuzzy-dup degree and
     closest distance. Output is O(docs), not O(sum over dup clusters
     of k^2).
 
-    TWO-LEVEL PLAN (exact — same answer as the all-pairs oracle): in a
-    ~4x-duplicated corpus almost all of the raw form's cost is DPs
-    between documents whose 120-char prefixes are IDENTICAL — edit
-    distance 0 by closed form, not a DP. (1) One window over
-    (lang, blk, p) gives every doc its identical-prefix group size g
-    and representative (the block keys lang/blk must join the grouping
-    key: same-prefix docs in different length buckets are NOT
-    candidates in the oracle); (2) the blocked self-join + banded DP
-    (threshold-bounded levenshtein, O(len*k) per pair) runs over
-    DISTINCT prefixes only, so block occupancy — and the DP count — no
-    longer grows with the duplication rate; (3) each doc expands to
-    degree = (g-1) + sum of neighboring groups' sizes, min_edit = 0 if
-    g>1 else min rep-pair distance. Degenerate docs (NULL text/lang/
-    n_chars) are filtered before the window: the oracle's equi-join
-    rejects NULL keys while Window.partitionBy groups NULLs together
-    (the minhash_dup_summary r11-advice bug class).
+    Two-level plan (``dd.two_level_summary``, exact): the group key is
+    (lang, blk, p). The block keys lang/blk belong in it because
+    same-prefix docs in different length buckets are NOT candidates
+    in the oracle; the 8-char block prefix p8 is a function of p. The
+    blocked self-join and DP run between distinct prefixes only, so
+    the DP count no longer grows with the duplication rate. Docs with
+    a NULL lang, n_chars or text never join in the oracle and are
+    filtered before grouping.
 
     At 100 TB: the same recall trade as fuzzy_dup_levenshtein (the
     8-char prefix block misses edits in the first 8 chars); the
     content-robust production path is fuzzy_dup_lsh_summary, which
     sources candidates from MinHash LSH bands instead."""
-    from pyspark.sql import Window
-
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    d = docs.select(
+    sketch = docs.select(
         "doc_id",
         "lang",
         (F.col("n_chars") / LEV_BUCKET).cast("bigint").alias("blk"),
-        F.substring("text", 1, LEV_BLOCK_PREFIX).alias("p8"),
         F.substring("text", 1, LEV_PREFIX).alias("p"),
-    ).where(
-        F.col("lang").isNotNull()
-        & F.col("blk").isNotNull()
-        & F.col("p").isNotNull()
-    )
-    w = Window.partitionBy("lang", "blk", "p")
-    dw = scoped_persist(
-        d.withColumn("g", F.count(F.lit(1)).over(w)).withColumn(
-            "rep", F.min("doc_id").over(w)
+    ).where(F.col("lang").isNotNull() & F.col("blk").isNotNull() & F.col("p").isNotNull())
+
+    def rep_pairs(grp: DataFrame) -> DataFrame:
+        p8 = F.substring("p", 1, LEV_BLOCK_PREFIX).alias("p8")
+        a = grp.select(
+            F.col("rep").alias("r1"), F.col("g").alias("g1"),
+            "lang", "blk", p8, F.col("p").alias("p1"),
         )
-    )
-    reps = dw.where(F.col("doc_id") == F.col("rep"))
-    a = reps.select(
-        F.col("rep").alias("r1"), "lang", "blk", "p8",
-        F.col("p").alias("p1"), F.col("g").alias("g1"),
-    )
-    b = reps.select(
-        F.col("rep").alias("r2"), "lang", "blk", "p8",
-        F.col("p").alias("p2"), F.col("g").alias("g2"),
-    )
-    dist = F.levenshtein("p1", "p2", LEV_THRESHOLD).cast("int")
-    # Persist the DP PROJECTION itself, before any filter or explode
-    # references edit_dist (r12; tightens the r12-build persist):
-    # a filter on the aliased DP column gets alias-substituted and
-    # pushed below the projection INTO the join as a two-conjunct
-    # join condition, so every pair paid the O(len*k) DP once per
-    # conjunct plus once in the projection (executed-plan receipt:
-    # `BroadcastHashJoin ... ((levenshtein(p1,p2,30) >= 0) AND
-    # (levenshtein(...) <= 30))`). With the cache boundary directly
-    # under the filter the DP runs EXACTLY ONCE per candidate pair.
-    # The repartition between the join and the projection fixes the
-    # second half (guide §2.5): the candidate frame is a few MB, AQE
-    # coalesces the post-join output to ONE partition, and the DP
-    # stage ran on a single core. The cached frame is candidate-
-    # bounded (r1, r2, g1, g2, edit_dist — ~40 B/row).
-    rep_pairs = scoped_persist(
-        a.join(b, ["lang", "blk", "p8"])
-        .where(F.col("r1") < F.col("r2"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("r1", "r2", "g1", "g2", dist.alias("edit_dist"))
-    ).where(F.col("edit_dist").between(0, LEV_THRESHOLD))
-    # symmetrize in ONE pass (explode-array; a unionAll of two selects
-    # would run the whole blocked-join lineage twice — the r10 lesson)
-    sym = rep_pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("r1").alias("rep"),
-                    F.col("g2").alias("g_other"),
-                    F.col("edit_dist"),
-                ),
-                F.struct(
-                    F.col("r2").alias("rep"),
-                    F.col("g1").alias("g_other"),
-                    F.col("edit_dist"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.rep", "e.g_other", "e.edit_dist")
-    cross = sym.groupBy("rep").agg(
-        F.sum("g_other").alias("cross_deg"),
-        F.min("edit_dist").alias("cross_min"),
-    )
-    n = (F.col("g") - 1 + F.coalesce(F.col("cross_deg"), F.lit(0))).cast(
-        "bigint"
-    )
-    min_e = (
-        F.when(F.col("g") > 1, F.lit(0)).otherwise(F.col("cross_min"))
-    ).cast("int")
-    return (
-        dw.select("doc_id", "g", "rep")
-        .join(cross, "rep", "left")
-        .where(n >= 1)
-        .select(
-            "doc_id",
-            n.alias("n_fuzzy_dups"),
-            min_e.alias("min_edit_dist"),
+        b = grp.select(
+            F.col("rep").alias("r2"), F.col("g").alias("g2"),
+            "lang", "blk", p8, F.col("p").alias("p2"),
         )
+        cand = a.join(b, ["lang", "blk", "p8"]).where(F.col("r1") < F.col("r2"))
+        return _edit_dist_rep_pairs(cand)
+
+    return dd.two_level_summary(
+        sketch, ["lang", "blk", "p"], rep_pairs, 0, F.min, ("n_fuzzy_dups", "min_edit_dist")
     )
 
 
@@ -1654,125 +1602,38 @@ GROUP BY doc_id
 def fuzzy_dup_lsh_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-robust fuzzy-dup verdicts: MinHash-LSH band collisions
     supply the candidates, threshold-bounded Levenshtein on the
-    120-char prefixes only RE-RANKS them — the 100 TB recipe
-    fuzzy_dup_levenshtein's docstring promised (r11 verdict #1
-    stretch), now executable. Versus the (lang, length-bucket, 8-char
-    prefix) blocking it has no first-8-chars or bucket-boundary blind
-    spot: a candidate only needs one of 16 band collisions, which
-    token-level edits rarely erase.
+    120-char prefixes only RE-RANKS them. Versus the (lang,
+    length-bucket, 8-char prefix) blocking it has no first-8-chars or
+    bucket-boundary blind spot: a candidate only needs one of 16 band
+    collisions, which token-level edits rarely erase.
 
-    TWO-LEVEL PLAN (exact): docs group by (s0..s31, p) — candidacy is
-    a function of the signature alone, the re-rank distance of the
-    prefix alone, so both are group-constant and rep-level results
-    expand losslessly (in-group pairs: identical sigs collide in all
-    16 bands, distance 0). The banded candidate join runs over
-    distinct-signature reps exactly like minhash_dup_summary; the DP
-    count is bounded by the band-collision volume, not block
-    occupancy. Degenerate docs (<2 tokens) sketch to all-NULL
-    signatures and are filtered before the window: concat_ws skips
-    NULLs so their Spark-side band key would be '' and self-collide,
-    while the oracle's `||` concatenation yields NULL and never joins
-    (same bug class as the r11-advice minhash_dup_summary fix)."""
-    from pyspark.sql import Window
+    Two-level plan (``dd.two_level_summary``, exact): the group key is
+    (signature array, p). Candidacy is a function of the signature
+    alone and the re-rank distance of the prefix alone, so both are
+    group-constant (in-group pairs collide in all 16 bands at distance
+    0). The band join runs between distinct keys, so the DP count is
+    bounded by the band-collision volume, not the duplication rate.
 
-    # One scan carries BOTH the prefix and the sketch lineage — a join
-    # back to documents for the prefix would broadcast (or worse,
-    # shuffle) the fact table; the prefix is a row-local projection of
-    # the same row, so it rides along for free (plan-linted).
+    One scan carries both the prefix and the sketch, so the prefix
+    needs no join back to the fact table. The sketch is the same
+    lambda-bound array expression minhash_dup_summary uses, and
+    degenerate docs (<2 tokens, all-NULL signature) are filtered the
+    same way."""
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    # persist the shingle frame BEFORE the 32 sig exprs: without this
-    # cache barrier CollapseProject inlines the whole token+shingle
-    # fold into EVERY sig expression (32x the fold per row — measured
-    # 36.5 s for this frame alone at sf0.1 vs ~3 s persisted). Same
-    # reason llm_ops._shingle_hashes persists; re-built here rather
-    # than reused so the prefix rides the SAME scan (no join back to
-    # the fact table for p).
-    hs = scoped_persist(
-        docs.selectExpr(
-            "doc_id",
-            f"substring(text, 1, {LEV_PREFIX}) AS p",
-            dd.spark_token_hashes_expr() + " AS th",
-        ).selectExpr("doc_id", "p", dd.spark_shingle_hashes_expr(2) + " AS hs")
+    sketch = docs.where(dd.SPARK_HAS_SHINGLES).selectExpr(
+        "doc_id",
+        f"substring(text, 1, {LEV_PREFIX}) AS p",
+        dd.spark_minhash_sig_array_expr() + " AS sigarr",
     )
-    sig_cols = [f"s{k}" for k in range(dd.N_MINHASH)]
-    w = Window.partitionBy(*sig_cols, "p")
-    dw = scoped_persist(
-        hs.selectExpr("doc_id", "p", *dd.spark_minhash_sig_exprs())
-        .where(F.col("s0").isNotNull())
-        .withColumn("g", F.count(F.lit(1)).over(w))
-        .withColumn("rep", F.min("doc_id").over(w))
-    )
-    reps = dw.where(F.col("doc_id") == F.col("rep"))
-    bands = reps.select("rep", F.explode(dd.minhash_bands()).alias("bk")).select(
-        "rep", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey")
-    )
-    a = bands.select(F.col("rep").alias("r1"), "band", "bkey")
-    b = bands.select(F.col("rep").alias("r2"), "band", "bkey")
-    cand = (
-        a.join(b, ["band", "bkey"])
-        .where(F.col("r1") < F.col("r2"))
-        .select("r1", "r2")
-        .dropDuplicates(["r1", "r2"])
-    )
-    x = reps.select(
-        F.col("rep").alias("r1"), F.col("g").alias("g1"), F.col("p").alias("p1")
-    )
-    y = reps.select(
-        F.col("rep").alias("r2"), F.col("g").alias("g2"), F.col("p").alias("p2")
-    )
-    dist = F.levenshtein("p1", "p2", LEV_THRESHOLD).cast("int")
-    # Persist the DP PROJECTION itself, before the threshold filter
-    # references edit_dist (r12; see fuzzy_dup_summary for the full
-    # receipt): the filter on the aliased DP column alias-substitutes
-    # and pushes below the projection INTO the join as a two-conjunct
-    # join condition — every one of the 198k band-FP pairs paid the
-    # bounded DP 1-3x. And the post-join output is a few MB, so AQE
-    # coalesced it to ONE partition and the DP stage ran single-core
-    # (measured 6.5 s for the bare DP at sf0.1; 1.5 s once spread).
-    # Cache boundary directly under the filter + repartition between
-    # the joins and the projection = exactly one DP per pair, spread
-    # over the session's cores.
-    rep_pairs = scoped_persist(
-        cand.join(x, "r1")
-        .join(y, "r2")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select("r1", "r2", "g1", "g2", dist.alias("edit_dist"))
-    ).where(F.col("edit_dist").between(0, LEV_THRESHOLD))
-    sym = rep_pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("r1").alias("rep"),
-                    F.col("g2").alias("g_other"),
-                    F.col("edit_dist"),
-                ),
-                F.struct(
-                    F.col("r2").alias("rep"),
-                    F.col("g1").alias("g_other"),
-                    F.col("edit_dist"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.rep", "e.g_other", "e.edit_dist")
-    cross = sym.groupBy("rep").agg(
-        F.sum("g_other").alias("cross_deg"),
-        F.min("edit_dist").alias("cross_min"),
-    )
-    n = (F.col("g") - 1 + F.coalesce(F.col("cross_deg"), F.lit(0))).cast(
-        "bigint"
-    )
-    min_e = (
-        F.when(F.col("g") > 1, F.lit(0)).otherwise(F.col("cross_min"))
-    ).cast("int")
-    return (
-        dw.select("doc_id", "g", "rep")
-        .join(cross, "rep", "left")
-        .where(n >= 1)
-        .select(
-            "doc_id",
-            n.alias("n_fuzzy_dups"),
-            min_e.alias("min_edit_dist"),
-        )
+
+    def rep_pairs(grp: DataFrame) -> DataFrame:
+        x = grp.select(F.col("rep").alias("r1"), F.col("g").alias("g1"), F.col("p").alias("p1"))
+        y = grp.select(F.col("rep").alias("r2"), F.col("g").alias("g2"), F.col("p").alias("p2"))
+        cand = dd.band_candidates(grp).join(x, "r1").join(y, "r2")
+        return _edit_dist_rep_pairs(cand)
+
+    return dd.two_level_summary(
+        sketch, ["sigarr", "p"], rep_pairs, 0, F.min, ("n_fuzzy_dups", "min_edit_dist")
     )
 
 

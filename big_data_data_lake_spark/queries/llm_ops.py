@@ -700,147 +700,49 @@ GROUP BY doc_id
 @register("minhash_dup_summary", MINHASH_DUP_SUMMARY_ORACLE)
 def minhash_dup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document MinHash near-dup verdict — the bounded deliverable
-    a curation run actually consumes (r10 verdict #2, finishing the
-    pattern r10 applied to simhash/decontamination): for every
-    document with at least one LSH-candidate neighbor at estimated
-    Jaccard >= 0.5, its near-dup degree and strongest agreement.
+    a curation run actually consumes: for every document with at least
+    one LSH-candidate neighbor at estimated Jaccard >= 0.5, its
+    near-dup degree and strongest agreement. Output is O(docs), not
+    the raw O(dup-cluster k^2) pair dump of minhash_lsh_pairs.
 
-    TWO-LEVEL PLAN (exact, same answer as the all-pairs oracle): a
-    corpus with a ~4x duplication rate spends almost all of the raw
-    pair form's cost on pairs WITHIN identical-signature groups — a
-    group of k exact dups collides in all 16 bands and contributes
-    k(k-1)/2 pairs with est 1.0, which is closed-form arithmetic, not
-    a join. So: (1) one window over the 32 signature columns gives
-    every doc its group size g and representative; (2) the banded
-    candidate join + signature agreement runs over DISTINCT
-    signatures only (reps) — est depends only on the signatures, so
-    doc-level and rep-level candidacy/agreement coincide; (3) each
-    doc's verdict expands as degree = (g-1) + sum of neighboring
-    groups' sizes, max_est = 1.0 if g>1 else max rep-pair est. The
-    duplication rate drops out of the join entirely — at 100 TB the
-    near-dup join's input is the distinct-signature table, exactly
-    the exact-dedup-before-near-dedup staging production pipelines
-    use. Measured vs the shared-pair-impl form in SCALE.md r11.
+    Two-level plan (``dd.two_level_summary``, exact): the group key is
+    the 32-value signature array. Band candidacy and the agreement
+    estimate depend on the signatures alone, so they run between
+    distinct signatures, and a group of identical signatures is a
+    clique at est 1.0.
 
-    Degenerate docs (NULL text or <2 tokens) sketch to an all-NULL
-    signature (array_min over an empty/NULL shingle array). In the
-    oracle they can never be candidates — equi-joins and the est
-    filter both reject NULLs — but Window.partitionBy groups NULLs
-    TOGETHER, so without the isNotNull filter below they'd form one
-    phantom dup group (g = count of degenerate docs, est 1.0) and
-    downstream dedup would falsely drop unique short documents (r11
-    advice, reproduced in tests/test_dedup.py degenerate-corpus
-    case). All 32 sigs are NULL together, so filtering s0 suffices."""
-    # ONE metadata-scale persist (r13, r12 verdict #3/#7): the whole
-    # 32-minhash sketch is a single lambda-bound array expression —
-    # fold evaluated once per row, no corpus-scale shingle cache (the
-    # r12 two-persist form) — and the group stats (g, rep) come from a
-    # partial-aggregated groupBy on the sketch array instead of a
-    # window over 32 sort columns: the window shuffled and sorted
-    # every doc row; the groupBy's map-side partial aggregation
-    # collapses to distinct signatures per partition BEFORE its
-    # exchange, and g/rep re-attach through one sigarr equi-join at
-    # the very end (broadcast while the distinct-signature table is
-    # small). Degenerate docs filter out on sigarr[0] exactly like the
-    # old s0 filter (all 32 are NULL together).
+    The sketch is one lambda-bound array expression, so the token and
+    shingle folds run once per row and the only persisted frame is
+    (doc_id, 32 longs). Degenerate docs (NULL text or <2 tokens)
+    sketch to an all-NULL signature, which the oracle's joins never
+    match; ``dd.SPARK_HAS_SHINGLES`` drops them before grouping."""
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    siga = scoped_persist(
-        docs.selectExpr(
-            "doc_id", dd.spark_minhash_sig_array_expr() + " AS sigarr"
-        ).where(F.expr("sigarr[0] IS NOT NULL"))
+    sketch = docs.where(dd.SPARK_HAS_SHINGLES).selectExpr(
+        "doc_id", dd.spark_minhash_sig_array_expr() + " AS sigarr"
     )
-    # distinct-signature scale; read three times (band explode, x/y
-    # agreement sides, final expansion join)
-    grp = scoped_persist(
-        siga.groupBy("sigarr").agg(
-            F.count(F.lit(1)).alias("g"), F.min("doc_id").alias("rep")
+
+    def rep_pairs(grp: DataFrame) -> DataFrame:
+        x = grp.select(
+            F.col("rep").alias("r1"), F.col("g").alias("g1"), F.col("sigarr").alias("xa")
         )
-    )
-    grp_cols = grp.selectExpr(
-        "rep", *[f"sigarr[{k}] AS s{k}" for k in range(dd.N_MINHASH)]
-    )
-    bands = grp_cols.select(
-        "rep", F.explode(dd.minhash_bands()).alias("bk")
-    ).select("rep", F.col("bk.band").alias("band"), F.col("bk.bkey").alias("bkey"))
-    # Candidate generation stays the two-sided band self-join with the
-    # pair dedup BEFORE the agreement joins. Two alternatives were
-    # built and MEASURED at both tiers (r13, guide §1): (a)
-    # bucket-local pair generation (one groupBy collecting each
-    # (band, bkey) bucket's reps, pairs exploding row-locally) won
-    # ~1 s at sf1 (9.5 -> 8.5 s warm, candidate set bit-identical)
-    # but at sf10 sat inside the join form's ambient band (22-26 s
-    # across calm windows, both forms) while forfeiting AQE
-    # skew-splitting on a hot bucket; (b) moving the dedup after the
-    # est filter compounds at sf10's ~4x duplication, where every
-    # pair collides in up to 16 bands and the agreement joins re-run
-    # per collision: 33.4 s median — clearly worse. sf1's win is
-    # overhead at a tier where distinct sigs ~= docs; neither
-    # alternative beats the join where scale lives. Join form kept.
-    a = bands.select(F.col("rep").alias("r1"), "band", "bkey")
-    b = bands.select(F.col("rep").alias("r2"), "band", "bkey")
-    cand = (
-        a.join(b, ["band", "bkey"])
-        .where(F.col("r1") < F.col("r2"))
-        .select("r1", "r2")
-        .dropDuplicates(["r1", "r2"])
-    )
-    x = grp.select(
-        F.col("rep").alias("r1"),
-        F.col("g").alias("g1"),
-        F.col("sigarr").alias("xa"),
-    )
-    y = grp.select(
-        F.col("rep").alias("r2"),
-        F.col("g").alias("g2"),
-        F.col("sigarr").alias("ya"),
-    )
-    # same integer-agreement arithmetic as the 32-column form, over
-    # the cached arrays (no NULLs reach here — filtered above)
-    est = F.expr(
-        "aggregate(zip_with(xa, ya, (a, b) -> CAST(a = b AS INT)), 0, "
-        f"(acc, v) -> acc + v) / {float(dd.N_MINHASH)}"
-    )
-    rep_pairs = (
-        cand.join(x, "r1")
-        .join(y, "r2")
-        .where(est >= 0.5)
-        .select("r1", "r2", "g1", "g2", F.round(est, 4).alias("est_sim"))
-    )
-    # symmetrize rep pairs in ONE pass (explode-array, r10 lesson) and
-    # roll up each representative's cross-group degree/agreement
-    sym = rep_pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("r1").alias("rep"),
-                    F.col("g2").alias("g_other"),
-                    F.col("est_sim"),
-                ),
-                F.struct(
-                    F.col("r2").alias("rep"),
-                    F.col("g1").alias("g_other"),
-                    F.col("est_sim"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.rep", "e.g_other", "e.est_sim")
-    cross = sym.groupBy("rep").agg(
-        F.sum("g_other").alias("cross_deg"),
-        F.max("est_sim").alias("cross_max"),
-    )
-    n = (F.col("g") - 1 + F.coalesce(F.col("cross_deg"), F.lit(0))).cast(
-        "bigint"
-    )
-    max_est = F.when(F.col("g") > 1, F.lit(1.0)).otherwise(F.col("cross_max"))
-    return (
-        siga.join(grp.select("sigarr", "g", "rep"), "sigarr")
-        .join(cross, "rep", "left")
-        .where(n >= 1)
-        .select(
-            "doc_id",
-            n.alias("n_near_dups"),
-            max_est.alias("max_est_sim"),
+        y = grp.select(
+            F.col("rep").alias("r2"), F.col("g").alias("g2"), F.col("sigarr").alias("ya")
         )
+        # same integer agreement as the 32-column oracle form
+        est = F.expr(
+            "aggregate(zip_with(xa, ya, (a, b) -> CAST(a = b AS INT)), 0, "
+            f"(acc, v) -> acc + v) / {float(dd.N_MINHASH)}"
+        )
+        return (
+            dd.band_candidates(grp)
+            .join(x, "r1")
+            .join(y, "r2")
+            .where(est >= 0.5)
+            .select("r1", "r2", "g1", "g2", F.round(est, 4).alias("score"))
+        )
+
+    return dd.two_level_summary(
+        sketch, ["sigarr"], rep_pairs, 1.0, F.max, ("n_near_dups", "max_est_sim")
     )
 
 
@@ -881,8 +783,7 @@ WHERE bit_count(xor(a.h, b.h)) <= {dd.SIMHASH_HAMMING_BUDGET}
 
 
 def _simhash_near_dup_pairs_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared pair core of simhash_near_dups (the raw audit form) and
-    simhash_dup_summary (the bounded per-doc deliverable): deduped
+    """Pair core of simhash_near_dups (the raw audit form): deduped
     (d1 < d2, hamming) near-dup pairs via the pigeonhole combo-key
     join (see simhash_near_dups for the banding scheme)."""
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
@@ -979,109 +880,46 @@ GROUP BY doc_id
 @register("simhash_dup_summary", SIMHASH_DUP_SUMMARY_ORACLE)
 def simhash_dup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document near-dup verdict — the bounded deliverable a
-    curation run actually consumes (r9 verdict #1), replacing the raw
-    O(dup-cluster k^2) pair dump of simhash_near_dups in the headline
-    bench: for every document with at least one SimHash near-dup
-    (Hamming <= 6), its near-dup degree and closest distance. A dup
-    cluster of size k contributes k rows here vs k(k-1)/2 pair rows —
-    output is O(docs), the keep/drop worklist shape that survives a
-    100 TB corpus with a 4x duplication rate.
+    curation run actually consumes, replacing the raw O(dup-cluster
+    k^2) pair dump of simhash_near_dups: for every document with at
+    least one SimHash near-dup (Hamming <= 6), its near-dup degree and
+    closest distance. A dup cluster of size k contributes k rows here
+    vs k(k-1)/2 pair rows.
 
-    TWO-LEVEL PLAN (r11, exact — same answer as the all-pairs
-    oracle): the dominant near-dup population in a ~4x-duplicated
-    corpus is Hamming-0 pairs inside identical-sketch groups — a
-    group of k contributes k(k-1)/2 such pairs, closed-form
-    arithmetic, not a join. (1) One window over the 8-byte sketch
-    gives every doc its group size g and representative; (2) the
-    pigeonhole combo-key join (see simhash_near_dups) runs over
-    DISTINCT sketches only; (3) each doc expands to degree =
-    (g-1) + sum of neighboring groups' sizes, min_hamming = 0 if
-    g>1 else min rep-pair Hamming. The duplication rate drops out of
-    the join entirely; combined with the 14-bit combo keys this is
-    the config that holds past 1M docs (r10 verdict #3 — A/B vs the
-    r10 shared-pair form recorded in SCALE.md r11); cf. the
-    reference's count-style dedup reporting (dashboard.py:173-183)."""
+    Two-level plan (``dd.two_level_summary``, exact): the group key is
+    the 8-byte sketch, so identical sketches form a clique at Hamming
+    0 and the combo-key join (see simhash_near_dups) runs between
+    distinct sketches only. The Hamming re-check runs inside the join
+    and the dedup after it: a pair agreeing on k combos surfaces k
+    times, but only the small filtered set is deduplicated."""
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
-    hs = (
+    sketch = (
         docs.selectExpr("doc_id", dd.spark_token_hashes_expr() + " AS th")
         .selectExpr("doc_id", dd.spark_shingle_hashes_expr(2) + " AS hs")
         .selectExpr("doc_id", dd.spark_widened_hashes_expr() + " AS wh")
+        .selectExpr("doc_id", dd.spark_simhash_expr() + " AS h")
     )
-    # group stats via partial-aggregated groupBy, not a window (r13,
-    # r12 verdict #7): the window shuffled and SORTED every (doc_id, h)
-    # row to attach g/rep; the groupBy's map-side partial aggregation
-    # collapses to distinct sketches per partition BEFORE its exchange,
-    # and g/rep re-attach to docs through one equi-join at the very end
-    # (broadcast while the distinct-sketch table is small; the combo
-    # join never needed doc-level rows at all — it reads grp directly,
-    # where the old form filtered doc_id == rep back out of the window
-    # output). The persisted frame shrinks from (doc_id, h, g, rep) to
-    # the 16 B/row sketch projection.
-    sigp = scoped_persist(hs.selectExpr("doc_id", dd.spark_simhash_expr() + " AS h"))
-    # distinct-sketch scale; read twice (combo-key explode + the final
-    # doc-level expansion join)
-    grp = scoped_persist(
-        sigp.groupBy("h").agg(
-            F.count(F.lit(1)).alias("g"), F.min("doc_id").alias("rep")
+
+    def rep_pairs(grp: DataFrame) -> DataFrame:
+        keys = grp.select(
+            "rep", "h", "g", F.explode(dd.simhash_combo_keys(F.col("h"))).alias("k")
+        ).select("rep", "h", "g", F.col("k.ki").alias("ki"), F.col("k.kv").alias("kv"))
+        a = keys.select(
+            F.col("rep").alias("r1"), F.col("h").alias("h1"), F.col("g").alias("g1"), "ki", "kv"
         )
-    )
-    keys = grp.select(
-        "rep", "h", "g", F.explode(dd.simhash_combo_keys(F.col("h"))).alias("k")
-    ).select("rep", "h", "g", F.col("k.ki").alias("ki"), F.col("k.kv").alias("kv"))
-    a = keys.select(
-        F.col("rep").alias("r1"), F.col("h").alias("h1"),
-        F.col("g").alias("g1"), "ki", "kv",
-    )
-    b = keys.select(
-        F.col("rep").alias("r2"), F.col("h").alias("h2"),
-        F.col("g").alias("g2"), "ki", "kv",
-    )
-    ham = dd.hamming64(F.col("h1"), F.col("h2"))
-    rep_pairs = (
-        a.join(b, ["ki", "kv"])
-        .where((F.col("r1") < F.col("r2")) & (ham <= dd.SIMHASH_HAMMING_BUDGET))
-        .select("r1", "r2", "g1", "g2", ham.cast("int").alias("hamming"))
-        .dropDuplicates(["r1", "r2"])
-    )
-    # symmetrize rep pairs in ONE pass (explode-array: a unionAll of
-    # two selects would execute the whole combo-join lineage twice —
-    # at sf10 that doubled a 70 s candidate join, caught by the r10
-    # sweep at 138 s vs the raw form's 85 s)
-    sym = rep_pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("r1").alias("rep"),
-                    F.col("g2").alias("g_other"),
-                    F.col("hamming"),
-                ),
-                F.struct(
-                    F.col("r2").alias("rep"),
-                    F.col("g1").alias("g_other"),
-                    F.col("hamming"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.rep", "e.g_other", "e.hamming")
-    cross = sym.groupBy("rep").agg(
-        F.sum("g_other").alias("cross_deg"),
-        F.min("hamming").alias("cross_min"),
-    )
-    n = (F.col("g") - 1 + F.coalesce(F.col("cross_deg"), F.lit(0))).cast(
-        "bigint"
-    )
-    min_h = (
-        F.when(F.col("g") > 1, F.lit(0)).otherwise(F.col("cross_min"))
-    ).cast("int")
-    return (
-        sigp.join(grp.select("h", "g", "rep"), "h")
-        .join(cross, "rep", "left")
-        .where(n >= 1)
-        .select(
-            "doc_id",
-            n.alias("n_near_dups"),
-            min_h.alias("min_hamming"),
+        b = keys.select(
+            F.col("rep").alias("r2"), F.col("h").alias("h2"), F.col("g").alias("g2"), "ki", "kv"
         )
+        ham = dd.hamming64(F.col("h1"), F.col("h2"))
+        return (
+            a.join(b, ["ki", "kv"])
+            .where((F.col("r1") < F.col("r2")) & (ham <= dd.SIMHASH_HAMMING_BUDGET))
+            .select("r1", "r2", "g1", "g2", ham.cast("int").alias("score"))
+            .dropDuplicates(["r1", "r2"])
+        )
+
+    return dd.two_level_summary(
+        sketch, ["h"], rep_pairs, 0, F.min, ("n_near_dups", "min_hamming")
     )
 
 

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_DIR = "_manifest"
+# copy-on-write rewrites size their output to this many bytes per file
+TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
 def zorder_key(
@@ -361,13 +363,10 @@ class LakeTable:
         no-op when the plan already has fewer partitions. Sizing is
         scale-adaptive — bytes/target, not a constant — so a 100 TB
         table's multi-GB rewrite keeps thousands of write tasks while
-        a point-update writes one file. Target is overridable via
-        $SPARK_GRAFT_LAKE_TARGET_FILE_BYTES (bytes); files written by
-        pre-r13 manifests lack ``bytes`` and fall back to a stat call.
+        a point-update writes one file. The target is
+        ``TARGET_FILE_BYTES``; files written by pre-r13 manifests lack
+        ``bytes`` and fall back to a stat call.
         """
-        target = int(
-            os.environ.get("SPARK_GRAFT_LAKE_TARGET_FILE_BYTES", "0")
-        ) or 128 * 1024 * 1024
         total = 0
         for f in touched:
             b = f.get("bytes")
@@ -377,7 +376,7 @@ class LakeTable:
                 except OSError:
                     b = 0
             total += int(b)
-        return max(1, -(-total // target))
+        return max(1, -(-total // TARGET_FILE_BYTES))
 
     @staticmethod
     def _plan_size_estimate(df: DataFrame) -> int:

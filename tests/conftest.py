@@ -1,35 +1,8 @@
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 import pytest
 
 from big_data_data_lake_spark.session import get_spark
-
-
-def registry_sweep(names, run_one, batch: int = 4) -> list[str]:
-    """Run ``run_one(name) -> failure-string | None`` over every name,
-    ``batch`` at a time in a thread pool, and return the sorted
-    failures. Spark happily overlaps independent jobs from driver
-    threads (optimization guide §2.6) and the full-registry sweeps
-    are per-query-latency-bound at test SFs, not compute-bound —
-    sequential form cost 125-177 s each and was the reason the
-    driver's pytest budget overran (r12 verdict #1). Query-scoped
-    caches are released BETWEEN batches, never mid-flight, so no
-    thread can unpersist a frame another thread's query still uses;
-    coverage is byte-identical to the sequential loop."""
-    from big_data_data_lake_spark.caching import release_query_caches
-
-    failures: list[str] = []
-    names = list(names)
-    for i in range(0, len(names), batch):
-        chunk = names[i : i + batch]
-        with ThreadPoolExecutor(max_workers=len(chunk)) as pool:
-            for res in pool.map(run_one, chunk):
-                if res:
-                    failures.append(res)
-        release_query_caches()
-    return sorted(failures)
 
 
 @pytest.fixture(scope="session")

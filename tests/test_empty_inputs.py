@@ -31,7 +31,7 @@ def empty_sf_dir(tmp_path_factory):
 
 
 def test_every_query_survives_empty_tables(spark, empty_sf_dir):
-    from tests.conftest import registry_sweep
+    from _sweep import registry_sweep
 
     reg = load_all()
 
@@ -80,7 +80,7 @@ def test_every_query_survives_all_null_nullable_columns(spark, null_heavy_sf_dir
     """Found three real crashes when written: NULL blobs crashing the
     Arrow kernels' len(), and a NULL grand total crashing
     global_cumsum's driver-side int()."""
-    from tests.conftest import registry_sweep
+    from _sweep import registry_sweep
 
     reg = load_all()
 

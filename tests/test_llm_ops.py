@@ -1168,3 +1168,36 @@ def test_simhash_dup_summary_consistent_with_pairs(spark):
     assert sum(n for n, _ in summary.values()) == 2 * len(pairs)
     for doc, (n, mh) in summary.items():
         assert n == len(want[doc]) and mh == min(want[doc]), doc
+
+
+@pytest.mark.parametrize(
+    "best, in_group, score_type, scores, want_best",
+    [(F.max, 1.0, "double", (0.6, 0.8), 0.8), (F.min, 0, "int", (3, 5), 3)],
+)
+def test_two_level_summary_kernel(spark, best, in_group, score_type, scores, want_best):
+    """The shared near-dup kernel on a hand-built sketch: key 10 is a
+    group of three with no cross neighbour, keys 20 (two docs) and 30
+    (three docs) neighbour the singleton key 40, key 50 is a singleton
+    with no neighbour, and two NULL-key docs are filtered out as the
+    contract requires."""
+    rows = [(1, 10), (2, 10), (3, 10), (4, 20), (5, 20), (6, 30), (7, 30), (8, 30),
+            (9, 40), (10, 50), (11, None), (12, None)]
+    sketch = spark.createDataFrame(rows, "doc_id long, k long").where(F.col("k").isNotNull())
+    edges = spark.createDataFrame(
+        [(20, 40, scores[0]), (30, 40, scores[1])], f"k1 long, k2 long, score {score_type}"
+    )
+
+    def rep_pairs(grp):
+        a = grp.select(F.col("k").alias("k1"), F.col("rep").alias("r1"), F.col("g").alias("g1"))
+        b = grp.select(F.col("k").alias("k2"), F.col("rep").alias("r2"), F.col("g").alias("g2"))
+        return edges.join(a, "k1").join(b, "k2").select("r1", "r2", "g1", "g2", "score")
+
+    out = dd.two_level_summary(sketch, ["k"], rep_pairs, in_group, best, ("n", "best"))
+    assert out.columns == ["doc_id", "n", "best"]
+    got = {r.doc_id: (r.n, r.best) for r in out.collect()}
+    assert got == {
+        1: (2, in_group), 2: (2, in_group), 3: (2, in_group),
+        4: (2, in_group), 5: (2, in_group),
+        6: (3, in_group), 7: (3, in_group), 8: (3, in_group),
+        9: (5, want_best),
+    }

@@ -900,7 +900,7 @@ def test_plan_lint_every_registered_query(spark):
     automatically; a nested loop is tolerated only via the explicit
     allowlist above, and cartesians / unpartitioned windows never."""
     from big_data_data_lake_spark.plans import lint_plan
-    from tests.conftest import registry_sweep
+    from _sweep import registry_sweep
 
     def run_one(name):
         findings = lint_plan(
@@ -910,3 +910,21 @@ def test_plan_lint_every_registered_query(spark):
 
     failures = registry_sweep(sorted(REG), run_one)
     assert not failures, "\n".join(failures)
+
+
+def test_registry_sweep_releases_caches_when_a_query_raises(monkeypatch):
+    """A raising ``run_one`` propagates, and the batch's query-scoped
+    caches are still released."""
+    import _sweep
+
+    released = []
+    monkeypatch.setattr(_sweep, "release_query_caches", lambda: released.append(1))
+
+    def run_one(name):
+        if name == "b":
+            raise RuntimeError("query failed")
+        return None
+
+    with pytest.raises(RuntimeError, match="query failed"):
+        _sweep.registry_sweep(["a", "b", "c"], run_one, batch=2)
+    assert released == [1]
