@@ -300,6 +300,68 @@ def _auto_shuffle_partitions(sf_dir: str, cpus: int) -> int:
     return cpus * waves
 
 
+def shuffle_partitions(sf_dir: str, cpus: int) -> int:
+    """The tier's shuffle-partition count: $SPARK_GRAFT_SHUFFLE_PARTITIONS
+    when set, else the input-bytes rule above. Every tool resolves it
+    here, so a replay runs under the config its bench record ran under."""
+    return int(
+        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
+    ) or _auto_shuffle_partitions(sf_dir, cpus)
+
+
+def warm_up(spark, cpus: int) -> None:
+    """Warm the JVM/codegen path and the (long-lived) Python worker
+    pool once so timings measure the queries, not process startup
+    (standard benchmark practice; every query still runs cold
+    w.r.t. its own data — nothing is cached)."""
+    spark.range(1_000_000).selectExpr("sum(id) s").write.format("noop").mode(
+        "overwrite"
+    ).save()
+
+    def _noop_batches(batches):
+        yield from batches
+
+    spark.range(cpus).repartition(cpus).mapInPandas(
+        _noop_batches, schema="id long"
+    ).write.format("noop").mode("overwrite").save()
+
+
+def timed_reps(spark, fn, sf_dir: str, reps: int) -> list[float]:
+    """The one per-rep timing protocol of the bench and every replay
+    tool: run ``fn(spark, sf_dir)`` to a noop sink ``reps`` times and
+    return the wall time of each rep. Callers pick their statistic."""
+    samples: list[float] = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        samples.append(time.perf_counter() - t0)
+        # each query's own persisted intermediates are inside its
+        # timing; drop them after every rep so no rep reuses (or
+        # pays GC pressure for) another's cache — every timing is
+        # cold-data
+        release_query_caches()
+        spark.catalog.clearCache()
+        # force a driver GC so the ContextCleaner releases the
+        # rep's dead broadcast/shuffle blocks NOW — without it the
+        # backlog competes with the next rep's execution memory
+        # and shuffle-heavy queries degrade ~3x across reps
+        # (measured: 5.3/7.6/9.5s reps -> 5.8/3.4/3.2s with GC)
+        spark.sparkContext._jvm.System.gc()
+        # a heavy shuffle query leaves cleaner/GC work that the
+        # synchronous System.gc() call doesn't fully drain; without
+        # a settle the NEXT query absorbs it (measured 5x on the
+        # 77 s sf1 inverted-index join's successor — standalone
+        # 9.3 s, in-bench 54 s). Settle proportionally; the r4 cap
+        # of 2 s was too small at sf1, where several 10-20 s
+        # queries in a row still inflated a successor 3x over its
+        # standalone median (repetition_quality_flags, SCALE.md
+        # round-5 sweep) — scale the cap with the query that
+        # produced the backlog.
+        if samples[-1] > 5.0:
+            time.sleep(min(6.0, samples[-1] / 5))
+    return samples
+
+
 # Host-speed canary (r11, extending r10 verdict #4): three fixed-work
 # microbenchmarks whose PLANS never change round-over-round — codegen'd
 # CPU sum, a hash-aggregate shuffle, an Arrow/Python round trip. The
@@ -359,10 +421,7 @@ def main() -> None:
     spark = get_spark(
         app_name="bench",
         cpus=cpus,
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
-        )
-        or _auto_shuffle_partitions(sf_dir, cpus),
+        shuffle_partitions=shuffle_partitions(sf_dir, cpus),
         # ContextCleaner only releases dereferenced broadcast/shuffle
         # blocks after a DRIVER GC; the default periodic GC (30 min)
         # never fires inside one bench run, so dozens of query
@@ -371,22 +430,7 @@ def main() -> None:
         extra_conf={"spark.cleaner.periodicGC.interval": "30s"},
     )
     registry = load_all()
-
-    # Warm the JVM/codegen path and the (long-lived) Python worker
-    # pool once so timings measure the queries, not process startup
-    # (standard benchmark practice; every query still runs cold
-    # w.r.t. its own data — nothing is cached).
-    spark.range(1_000_000).selectExpr("sum(id) s").write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    def _noop_batches(batches):
-        yield from batches
-
-    spark.range(cpus).repartition(cpus).mapInPandas(
-        _noop_batches, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-
+    warm_up(spark, cpus)
     canary = host_canary(spark)
 
     reps = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
@@ -402,36 +446,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     all_samples: dict[str, list[float]] = {}
     for name in names:
-        fn = registry[name].fn
-        samples = all_samples[name] = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-            # each query's own persisted intermediates are inside its
-            # timing; drop them after every rep so no rep reuses (or
-            # pays GC pressure for) another's cache — every timing is
-            # cold-data
-            release_query_caches()
-            spark.catalog.clearCache()
-            # force a driver GC so the ContextCleaner releases the
-            # rep's dead broadcast/shuffle blocks NOW — without it the
-            # backlog competes with the next rep's execution memory
-            # and shuffle-heavy queries degrade ~3x across reps
-            # (measured: 5.3/7.6/9.5s reps -> 5.8/3.4/3.2s with GC)
-            spark.sparkContext._jvm.System.gc()
-            # a heavy shuffle query leaves cleaner/GC work that the
-            # synchronous System.gc() call doesn't fully drain; without
-            # a settle the NEXT query absorbs it (measured 5x on the
-            # 77 s sf1 inverted-index join's successor — standalone
-            # 9.3 s, in-bench 54 s). Settle proportionally; the r4 cap
-            # of 2 s was too small at sf1, where several 10-20 s
-            # queries in a row still inflated a successor 3x over its
-            # standalone median (repetition_quality_flags, SCALE.md
-            # round-5 sweep) — scale the cap with the query that
-            # produced the backlog.
-            if samples[-1] > 5.0:
-                time.sleep(min(6.0, samples[-1] / 5))
+        samples = all_samples[name] = timed_reps(spark, registry[name].fn, sf_dir, reps)
         timings[name] = round(statistics.median(samples), 3)
 
     total = round(sum(timings.values()), 3)

@@ -12,8 +12,14 @@ spirit of Delta Lake's (Armbrust et al., VLDB'20 — see PAPERS.md):
   that version (snapshot isolation: readers pin one manifest, never a
   directory listing), the schema as Spark DDL, the partition columns,
   and per-file row counts / min-max stats for data skipping.
-- Commits are atomic via write-temp + ``os.replace`` of the version
-  file; the latest version is the highest N present.
+- Every mutator reads one snapshot (the latest version N and its
+  manifest) and commits version N + 1, never a version re-read after
+  its data write. The version file is written to a unique temp name
+  and published with ``os.link``, which fails when the target exists:
+  a put-if-absent write, so of two writers that read the same N only
+  one commits N + 1 and the other gets ``FileExistsError`` instead of
+  silently dropping the winner's files. The latest version is the
+  highest N present.
 - Readers get time travel (``version=``) and partition/stat pruning
   for free by selecting files from the manifest before handing Spark
   an explicit file list.
@@ -33,6 +39,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 MANIFEST_DIR = "_manifest"
 # copy-on-write rewrites size their output to this many bytes per file
@@ -175,6 +182,50 @@ def _append_compatible(df_schema, table_schema) -> bool:
     return True
 
 
+def _may_overlap(f: dict, ranges: dict) -> bool:
+    """Zone-map test: False only when the footer min/max of file ``f``
+    proves that no value of some column lies in its ``(lo, hi)`` range
+    (``None`` leaves that side unbounded). A file without stats on a
+    column cannot be skipped."""
+    for col, (lo, hi) in ranges.items():
+        st = f.get("stats", {}).get(col)
+        if st is not None and (
+            (hi is not None and st["min"] > hi) or (lo is not None and st["max"] < lo)
+        ):
+            return False
+    return True
+
+
+def _key_pruner(df: DataFrame, key: str):
+    """File predicate for a MERGE of ``df`` on ``key``: is a file
+    possibly holding one of the batch's keys? One aggregate collects
+    the batch's key range and whether it holds a NULL key (a single
+    row, metadata-scale). A NULL key disables pruning, because footer
+    min/max excludes nulls and so cannot prove a file null-free.
+    Returns None when the batch has no key at all: it is empty and
+    touches no file."""
+    b = df.agg(
+        F.min(key).alias("lo"),
+        F.max(key).alias("hi"),
+        F.max(F.col(key).isNull()).alias("has_null"),
+    ).collect()[0]
+    if b["has_null"]:
+        return lambda f: True
+    if b["lo"] is None:
+        return None
+    return lambda f: _may_overlap(f, {key: (b["lo"], b["hi"])})
+
+
+def _split_files(files: list[dict], touch) -> tuple[list[dict], list[dict]]:
+    """(files a copy-on-write commit rewrites, files it carries over by
+    reference)."""
+    touched: list[dict] = []
+    keep: list[dict] = []
+    for f in files:
+        (touched if touch(f) else keep).append(f)
+    return touched, keep
+
+
 class ExpectationViolation(ValueError):
     """A write was rejected because expectation rules failed."""
 
@@ -221,6 +272,17 @@ def enforce_expectations(
     return clean, violations
 
 
+def _gate(
+    df: DataFrame, extra: dict | None, rules: dict[str, str] | None, mode: str
+) -> tuple[DataFrame, dict | None]:
+    """Apply ``enforce_expectations`` when ``rules`` are given and
+    record the mode and violation counts in the commit's ``extra``."""
+    if not rules:
+        return df, extra
+    df, stats = enforce_expectations(df, rules, mode)
+    return df, {**(extra or {}), "expectations": {"mode": mode, "violations": stats}}
+
+
 class LakeTable:
     """Handle to one versioned table rooted at ``path``."""
 
@@ -251,15 +313,25 @@ class LakeTable:
         with open(os.path.join(self._mdir, f"v{v}.json")) as fh:
             return json.load(fh)
 
+    def _snapshot(self) -> tuple[int, dict]:
+        """The latest version and its manifest. Each mutator reads this
+        once, derives its new file set from it, and commits exactly
+        this version + 1."""
+        v = self.latest_version()
+        return v, self.manifest(v)
+
     def history(self) -> list[dict]:
         """Commit history, newest last — the DESCRIBE HISTORY surface:
         one dict per version with the operation that produced it (the
         outermost public mutator, stamped at commit time), row/file
-        counts, and partitioning. Driver-side metadata only (one small
-        JSON per version) — no scan."""
+        counts, partitioning, and the operation metrics of commits
+        that wrote data (``files_added``, ``files_removed``,
+        ``bytes_added``; None for metadata-only commits). Driver-side
+        metadata only (one small JSON per version) — no scan."""
         out = []
         for v in self.versions():
             m = self.manifest(v)
+            metrics = m.get("metrics", {})
             out.append(
                 {
                     "version": v,
@@ -267,11 +339,17 @@ class LakeTable:
                     "rows": m["rows"],
                     "n_files": len(m["files"]),
                     "partition_by": ",".join(m["partition_by"]),
+                    **{
+                        k: metrics.get(k)
+                        for k in ("files_added", "files_removed", "bytes_added")
+                    },
                 }
             )
         return out
 
-    def _commit(self, version: int, manifest: dict, operation: str) -> None:
+    def _commit(
+        self, version: int, manifest: dict, operation: str, metrics: dict | None = None
+    ) -> int:
         """Atomic put-if-absent of the version file. ``os.link`` fails
         with EEXIST when the target exists, so two writers racing on
         the same version cannot both win (an exists()-then-replace
@@ -280,12 +358,14 @@ class LakeTable:
         create-exclusive primitive Delta's log protocol requires.
 
         ``operation`` is stamped explicitly by each public mutator
-        (compact/cluster_by forward their own name through overwrite)
-        so history() reads "compact", not the "overwrite" it rides on
-        — r4 advice: stack sniffing mislabeled commits whenever a
+        (compact/cluster_by pass their own name, not "overwrite") —
+        r4 advice: stack sniffing mislabeled commits whenever a
         CALLER function happened to share a mutator name, and paid
-        per-commit source-file I/O."""
-        manifest["operation"] = operation
+        per-commit source-file I/O. ``metrics`` are the operation
+        metrics ``_commit_files`` computes; a metadata-only commit
+        passes none, which also drops any it copied from the manifest
+        it derives from. Returns ``version``."""
+        manifest = {**manifest, "operation": operation, "metrics": metrics or {}}
         os.makedirs(self._mdir, exist_ok=True)
         tmp = os.path.join(self._mdir, f".v{version}.json.{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as fh:
@@ -299,6 +379,7 @@ class LakeTable:
             ) from None
         finally:
             os.remove(tmp)
+        return version
 
     # ------------------------------------------------------------- writes
 
@@ -395,33 +476,56 @@ class LakeTable:
             return 0
         return sz if 0 <= sz < (1 << 50) else 0
 
-    def _new_manifest(
+    def _commit_files(
         self,
+        v_read: int,
+        prev: dict,
+        keep: list[dict],
         df: DataFrame,
-        files: list[dict],
-        partition_by: list[str],
+        operation: str,
         extra: dict | None = None,
         schema=None,
-    ) -> dict:
-        """``schema`` overrides ``df.schema`` as the committed table
+    ) -> int:
+        """The one commit tail of every data-writing mutator: write
+        ``df`` as new files and commit ``keep`` plus those files as
+        version ``v_read + 1``, where ``v_read`` is the version the
+        caller's snapshot ``prev`` was read at. The version is never
+        re-read after the write: when another writer committed in
+        between, the put-if-absent ``_commit`` raises
+        ``FileExistsError`` instead of committing a file set that
+        drops the other writer's files.
+
+        ``schema`` overrides ``df.schema`` as the committed table
         schema — append() passes the nullability UNION of the previous
         table schema and the appended frame, because committing the
         frame's own (possibly narrower) nullability would apply a
         non-nullable schema to older null-bearing files and make
-        append acceptance order-dependent (round-9 advice)."""
+        append acceptance order-dependent (round-9 advice).
+
+        ``df`` None writes no file: an empty MERGE batch still commits
+        a version, so its ``extra`` (a streaming ``batch_id``) is
+        recorded. The commit records its operation metrics: files
+        written, files of ``prev`` not carried over, and bytes
+        written."""
         schema = schema if schema is not None else df.schema
-        out = {
+        new = self._write_files(df, prev["partition_by"]) if df is not None else []
+        files = keep + new
+        manifest = {
             "schema_ddl": schema.simpleString(),  # human-readable
             "schema_json": schema.jsonValue(),  # exact reconstruction
-            "partition_by": partition_by,
+            "partition_by": prev["partition_by"],
             "files": files,
             "rows": sum(f["rows"] for f in files),
+            **self._carry(prev, extra),
         }
-        if extra:
-            out.update(extra)
-        return out
+        metrics = {
+            "files_added": len(new),
+            "files_removed": len(prev["files"]) - len(keep),
+            "bytes_added": sum(f["bytes"] for f in new),
+        }
+        return self._commit(v_read + 1, manifest, operation, metrics)
 
-    def _carry(self, prev: dict, extra: dict | None) -> dict | None:
+    def _carry(self, prev: dict, extra: dict | None) -> dict:
         """Streaming replay metadata must outlive maintenance commits:
         the exactly-once guard in ``lake_table_sink`` reads
         ``batch_id`` from the LATEST manifest, so a compact/overwrite/
@@ -432,7 +536,7 @@ class LakeTable:
         out = {k: prev[k] for k in ("batch_id",) if k in prev}
         if extra:
             out.update(extra)
-        return out or None
+        return out
 
     def create(
         self,
@@ -445,16 +549,9 @@ class LakeTable:
         """Version 0: initial snapshot."""
         if self.versions():
             raise FileExistsError(f"table already exists at {self.path}")
-        if expectations:
-            df, stats = enforce_expectations(df, expectations, expect_mode)
-            extra = {
-                **(extra or {}),
-                "expectations": {"mode": expect_mode, "violations": stats},
-            }
-        pb = partition_by or []
-        files = self._write_files(df, pb)
-        self._commit(0, self._new_manifest(df, files, pb, extra), "create")
-        return 0
+        df, extra = _gate(df, extra, expectations, expect_mode)
+        empty = {"files": [], "partition_by": partition_by or []}
+        return self._commit_files(-1, empty, [], df, "create", extra)
 
     def append(
         self,
@@ -476,15 +573,8 @@ class LakeTable:
         (enforce_expectations): 'fail' rejects the whole commit,
         'drop' admits passing rows and records violation counts in
         the committed manifest — an audit trail per version."""
-        from pyspark.sql.types import StructType
-
-        if expectations:
-            df, stats = enforce_expectations(df, expectations, expect_mode)
-            extra = {
-                **(extra or {}),
-                "expectations": {"mode": expect_mode, "violations": stats},
-            }
-        prev = self.manifest()
+        df, extra = _gate(df, extra, expectations, expect_mode)
+        v, prev = self._snapshot()
         prev_schema = StructType.fromJson(prev["schema_json"])
         if merge_schema:
             for f in prev_schema.fields:
@@ -495,19 +585,15 @@ class LakeTable:
                         )
                 else:
                     df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-            merged = StructType(
-                list(prev_schema.fields)
-                + [f for f in df.schema.fields if f.name not in prev_schema.names]
+            df = df.select(
+                *prev_schema.names, *[c for c in df.columns if c not in prev_schema.names]
             )
-            df = df.select([F.col(f.name) for f in merged.fields])
         elif not _append_compatible(df.schema, prev_schema):
             raise ValueError(
                 "append schema differs from table schema; pass merge_schema=True "
                 f"for additive evolution. table={prev_schema.simpleString()} "
                 f"df={df.schema.simpleString()}"
             )
-        files = self._write_files(df, prev["partition_by"])
-        v = self.latest_version() + 1
         # Commit the per-field nullability UNION of the table schema
         # and the appended frame, never the frame's schema alone: a
         # non-nullable df appending into a nullable column must not
@@ -515,61 +601,33 @@ class LakeTable:
         # nulls, and acceptance of later nullable appends would become
         # order-dependent). merge_schema-new columns are forced
         # nullable — pre-existing files read back NULL for them.
-        from pyspark.sql.types import StructField, StructType
-
         prev_nullable = {f.name: f.nullable for f in prev_schema.fields}
         committed = StructType(
             [
                 StructField(
                     f.name,
                     f.dataType,
-                    (
-                        prev_nullable[f.name] or f.nullable
-                        if f.name in prev_nullable
-                        else True
-                    ),
+                    prev_nullable.get(f.name, True) or f.nullable,
                     f.metadata,
                 )
                 for f in df.schema.fields
             ]
         )
-        man = self._new_manifest(
-            df,
-            prev["files"] + files,
-            prev["partition_by"],
-            self._carry(prev, extra),
-            schema=committed,
-        )
-        self._commit(v, man, "append")
-        return v
+        return self._commit_files(v, prev, prev["files"], df, "append", extra, committed)
 
     def overwrite(
         self,
         df: DataFrame,
         expectations: dict[str, str] | None = None,
         expect_mode: str = "fail",
-        _operation: str = "overwrite",
     ) -> int:
         """New version replacing the visible file set; old files stay
         on disk so prior versions remain readable (``vacuum`` is the
         separate, explicitly destructive retirement step).
-        ``expectations`` gates the batch exactly as in append.
-        ``_operation`` lets maintenance mutators that ride on
-        overwrite (compact, cluster_by) stamp their own name into
-        history()."""
-        extra = None
-        if expectations:
-            df, stats = enforce_expectations(df, expectations, expect_mode)
-            extra = {"expectations": {"mode": expect_mode, "violations": stats}}
-        prev = self.manifest()
-        files = self._write_files(df, prev["partition_by"])
-        v = self.latest_version() + 1
-        self._commit(
-            v,
-            self._new_manifest(df, files, prev["partition_by"], self._carry(prev, extra)),
-            _operation,
-        )
-        return v
+        ``expectations`` gates the batch exactly as in append."""
+        df, extra = _gate(df, None, expectations, expect_mode)
+        v, prev = self._snapshot()
+        return self._commit_files(v, prev, [], df, "overwrite", extra)
 
     def add_bloom(self, col: str, bits: int = 1024, k: int = 4) -> int:
         """Maintenance commit attaching a per-file Bloom filter on
@@ -584,9 +642,7 @@ class LakeTable:
         set no bits)."""
         if k > len(_BLOOM_A):
             raise ValueError(f"k <= {len(_BLOOM_A)} supported")
-        from pyspark.sql.types import StructType
-
-        man = self.manifest()
+        v, man = self._snapshot()
         schema = StructType.fromJson(man["schema_json"])
         if schema[col].dataType.typeName() not in ("integer", "long", "string"):
             raise ValueError(f"bloom supports int/long/string columns, not {schema[col].dataType}")
@@ -625,23 +681,24 @@ class LakeTable:
                 "add_bloom: scanned file(s) do not match any manifest path "
                 f"after URI normalization: {sorted(unmatched)[:3]}"
             )
-        files = []
-        for f in man["files"]:
-            nf = dict(f)
-            # files absent from by_path had only null values: an empty
-            # bitmap (no bits set) is the CORRECT filter for them —
-            # bloom_eq rightly skips a file that cannot contain any
-            # non-null value
-            bitmap = by_path.get(_norm_file_uri(f["path"]), _pack_bits([], bits))
-            nf["bloom"] = {**nf.get("bloom", {}), col: bitmap}
-            files.append(nf)
-        new_man = dict(man)
-        new_man["files"] = files
-        new_man.setdefault("bloom_meta", {})
-        new_man["bloom_meta"] = {**new_man["bloom_meta"], col: {"bits": bits, "k": k}}
-        v = self.latest_version() + 1
-        self._commit(v, new_man, "add_bloom")
-        return v
+        # files absent from by_path had only null values: an empty
+        # bitmap (no bits set) is the CORRECT filter for them —
+        # bloom_eq rightly skips a file that cannot contain any
+        # non-null value
+        no_bits = _pack_bits([], bits)
+        files = [
+            {
+                **f,
+                "bloom": {
+                    **f.get("bloom", {}),
+                    col: by_path.get(_norm_file_uri(f["path"]), no_bits),
+                },
+            }
+            for f in man["files"]
+        ]
+        bloom_meta = {**man.get("bloom_meta", {}), col: {"bits": bits, "k": k}}
+        man = {**man, "files": files, "bloom_meta": bloom_meta}
+        return self._commit(v + 1, man, "add_bloom")
 
     # -------------------------------------------------------------- reads
 
@@ -660,8 +717,6 @@ class LakeTable:
         skips files whose Bloom filter (see add_bloom) proves the
         value absent. All are pruning-only: callers still apply the
         exact predicate to the returned DataFrame."""
-        from pyspark.sql.types import StructType
-
         man = self.manifest(version)
         schema = StructType.fromJson(man["schema_json"])
         files = man["files"]
@@ -684,18 +739,7 @@ class LakeTable:
                 if all(f["partition"].get(k) == str(v) for k, v in partition_filter.items())
             ]
         if stat_filter:
-            def may_match(f: dict) -> bool:
-                for col, (lo, hi) in stat_filter.items():
-                    st = f.get("stats", {}).get(col)
-                    if st is None:
-                        continue  # no stats -> cannot skip
-                    if (hi is not None and st["min"] > hi) or (
-                        lo is not None and st["max"] < lo
-                    ):
-                        return False
-                return True
-
-            files = [f for f in files if may_match(f)]
+            files = [f for f in files if _may_overlap(f, stat_filter)]
         if not files:
             return self.spark.createDataFrame([], schema)
         return self._read_files(schema, files)
@@ -774,14 +818,9 @@ class LakeTable:
         files per partition (streaming sinks leave one small file per
         micro-batch — the classic small-file problem). Produces a new
         version; old versions stay readable until ``vacuum``."""
-        man = self.manifest()
-        df = self.read()
-        pb = man["partition_by"]
-        if pb:
-            df = df.repartition(files_per_partition, *pb)
-        else:
-            df = df.repartition(files_per_partition)
-        return self.overwrite(df, _operation="compact")
+        v, man = self._snapshot()
+        df = self.read(v).repartition(files_per_partition, *man["partition_by"])
+        return self._commit_files(v, man, [], df, "compact")
 
     def cluster_by(self, cols: list[str], n_files: int = 16, bits: int = 12) -> int:
         """Rewrite the current snapshot z-ordered on ``cols``: rows are
@@ -793,7 +832,8 @@ class LakeTable:
         1/n_files of the table instead of all of it. Produces a new
         version (old versions stay readable); the min/max scan is one
         cheap aggregate over the snapshot."""
-        df = self.read()
+        v, man = self._snapshot()
+        df = self.read(v)
         bounds = df.agg(
             *[F.min(c).alias(f"lo_{c}") for c in cols],
             *[F.max(c).alias(f"hi_{c}") for c in cols],
@@ -809,7 +849,7 @@ class LakeTable:
             .repartitionByRange(n_files, "__z")
             .drop("__z")
         )
-        return self.overwrite(clustered, _operation="cluster_by")
+        return self._commit_files(v, man, [], clustered, "cluster_by")
 
     def changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Rows in files ADDED between two versions — incremental
@@ -819,8 +859,6 @@ class LakeTable:
         upsert/compact/overwrite the added files also contain
         carried-over survivor rows, so consumers of rewriting tables
         should treat it as file-level, not row-level, change data."""
-        from pyspark.sql.types import StructType
-
         man_to = self.manifest(v_to)
         old_paths = {f["path"] for f in self.manifest(v_from)["files"]}
         added = [f for f in man_to["files"] if f["path"] not in old_paths]
@@ -877,10 +915,8 @@ class LakeTable:
         t = LakeTable(self.spark, dest)
         if t.versions():
             raise FileExistsError(f"table already exists at {dest}")
-        man = dict(self.manifest())
-        man.pop("operation", None)
-        man["cloned_from"] = {"path": self.path, "version": self.latest_version()}
-        t._commit(0, man, "clone")
+        v, man = self._snapshot()
+        t._commit(0, {**man, "cloned_from": {"path": self.path, "version": v}}, "clone")
         return t
 
     def restore(self, version: int) -> int:
@@ -898,15 +934,9 @@ class LakeTable:
         keeps the restored files alive as long as any retained
         manifest references them."""
         target = self.manifest(version)  # raises if the version is gone
-        latest = self.manifest()
-        man = dict(target)
-        man.pop("operation", None)  # restamped by _commit
-        carried = self._carry(latest, {"restored_from": version})
-        if carried:
-            man.update(carried)
-        v = self.latest_version() + 1
-        self._commit(v, man, "restore")
-        return v
+        v, latest = self._snapshot()
+        man = {**target, **self._carry(latest, {"restored_from": version})}
+        return self._commit(v + 1, man, "restore")
 
     def upsert(self, df: DataFrame, keys: list[str], extra: dict | None = None) -> int:
         """Copy-on-write MERGE: rows in ``df`` replace same-key rows;
@@ -924,30 +954,12 @@ class LakeTable:
         pruning is disabled for that commit — correctness over
         pruning; a plain equi anti-join would leave the stored
         NULL-key row in place and duplicate it on every upsert."""
-        prev = self.manifest()
-        k0 = keys[0]
-        bounds = df.agg(
-            F.min(k0).alias("lo"),
-            F.max(k0).alias("hi"),
-            F.max(F.col(k0).isNull()).alias("has_null"),
-        ).collect()[0]
-        lo, hi = bounds["lo"], bounds["hi"]
-        null_key_present = bool(bounds["has_null"])
-
-        def may_contain(f: dict) -> bool:
-            if null_key_present:
-                return True  # footer stats exclude nulls: cannot prune
-            st = f.get("stats", {}).get(k0)
-            if st is None or lo is None:
-                return True  # no stats -> must assume a match
-            return not (st["min"] > hi or st["max"] < lo)
-
-        touched = [f for f in prev["files"] if may_contain(f)]
-        untouched = [f for f in prev["files"] if not may_contain(f)]
-
-        from pyspark.sql.types import StructType
-
+        v, prev = self._snapshot()
         schema = StructType.fromJson(prev["schema_json"])
+        touch = _key_pruner(df, keys[0])
+        if touch is None:
+            return self._commit_files(v, prev, prev["files"], None, "upsert", extra, schema)
+        touched, keep = _split_files(prev["files"], touch)
         if touched:
             # go through the evolved-schema read path: touched files
             # may pre-date added columns (a plain parquet read of them
@@ -975,19 +987,21 @@ class LakeTable:
                 + [{"bytes": self._plan_size_estimate(df), "path": ""}]
             )
             rewritten = rewritten.coalesce(n_out)
-        new_files = self._write_files(rewritten, prev["partition_by"])
-        v = self.latest_version() + 1
-        self._commit(
-            v,
-            self._new_manifest(
-                rewritten,
-                untouched + new_files,
-                prev["partition_by"],
-                self._carry(prev, extra),
-            ),
-            "upsert",
-        )
-        return v
+        return self._commit_files(v, prev, keep, rewritten, "upsert", extra)
+
+    def _probe_files(self, schema, files: list[dict], match) -> tuple[list, list]:
+        """Split ``files`` into (touched, carried) for a copy-on-write
+        delete by one pushdown scan: ``match`` narrows the scan,
+        tagged with ``input_file_name()``, to the rows the delete
+        removes, and only files holding such a row are touched. Only
+        the matched FILE PATHS collect to the driver (manifest-scale),
+        never rows or keys."""
+        probe = self._read_files(schema, files).withColumn("__file", F.input_file_name())
+        hits = {
+            _norm_file_uri(r["__file"])
+            for r in match(probe).select("__file").distinct().collect()
+        }
+        return _split_files(files, lambda f: _norm_file_uri(f["path"]) in hits)
 
     def delete_where(self, cond: str, extra: dict | None = None) -> int:
         """Copy-on-write DELETE (the GDPR / right-to-be-forgotten
@@ -1007,40 +1021,19 @@ class LakeTable:
         (file paths, not rows). On a 100 TB table a targeted delete
         therefore costs one filtered scan plus a rewrite of the few
         files holding the subject's rows."""
-        prev = self.manifest()
-        from pyspark.sql.types import StructType
-
+        v, prev = self._snapshot()
         schema = StructType.fromJson(prev["schema_json"])
-        cond_col = F.expr(cond)
-        probe = self._read_files(schema, prev["files"]).withColumn(
-            "__file", F.input_file_name()
+        touched, keep = self._probe_files(
+            schema, prev["files"], lambda probe: probe.filter(F.expr(cond))
         )
-        hits = {
-            _norm_file_uri(r["__file"])
-            for r in probe.filter(cond_col).select("__file").distinct().collect()
-        }
-        touched = [f for f in prev["files"] if _norm_file_uri(f["path"]) in hits]
-        untouched = [f for f in prev["files"] if _norm_file_uri(f["path"]) not in hits]
         if not touched:
-            return self.latest_version()  # no-op: nothing matched
+            return v  # no-op: nothing matched
         kept = self._read_files(schema, touched).filter(
             ~F.coalesce(F.expr(cond), F.lit(False))
         )
         # deletes only shrink: size output files to the touched bytes
         kept = kept.coalesce(self._rewrite_partitions(touched))
-        new_files = self._write_files(kept, prev["partition_by"])
-        v = self.latest_version() + 1
-        self._commit(
-            v,
-            self._new_manifest(
-                kept,
-                untouched + new_files,
-                prev["partition_by"],
-                self._carry(prev, extra),
-            ),
-            "delete_where",
-        )
-        return v
+        return self._commit_files(v, prev, keep, kept, "delete_where", extra)
 
     def delete_matching(
         self, df: DataFrame, keys: list[str], extra: dict | None = None
@@ -1064,46 +1057,23 @@ class LakeTable:
         (manifest-scale), never the keys. NULL keys match null-safely
         (``<=>``), the natural join-frame semantics — unlike SQL
         DELETE, a NULL key in ``df`` deletes stored NULL-key rows."""
-        prev = self.manifest()
-        from pyspark.sql.types import StructType
-
+        v, prev = self._snapshot()
         schema = StructType.fromJson(prev["schema_json"])
         incoming = df.select(*keys).dropDuplicates(keys)
-        probe = self._read_files(schema, prev["files"]).withColumn(
-            "__file", F.input_file_name()
+
+        def matching(frame: DataFrame, how: str) -> DataFrame:
+            cond = [frame[k].eqNullSafe(incoming[k]) for k in keys]
+            return frame.join(incoming, on=cond, how=how)
+
+        touched, keep = self._probe_files(
+            schema, prev["files"], lambda probe: matching(probe, "left_semi")
         )
-        semi_cond = [probe[k].eqNullSafe(incoming[k]) for k in keys]
-        hits = {
-            _norm_file_uri(r["__file"])
-            for r in probe.join(incoming, on=semi_cond, how="left_semi")
-            .select("__file")
-            .distinct()
-            .collect()
-        }
-        touched = [f for f in prev["files"] if _norm_file_uri(f["path"]) in hits]
-        untouched = [
-            f for f in prev["files"] if _norm_file_uri(f["path"]) not in hits
-        ]
         if not touched:
-            return self.latest_version()  # no-op: nothing matched
-        old = self._read_files(schema, touched)
-        anti_cond = [old[k].eqNullSafe(incoming[k]) for k in keys]
-        kept = old.join(incoming, on=anti_cond, how="left_anti")
+            return v  # no-op: nothing matched
+        kept = matching(self._read_files(schema, touched), "left_anti")
         # deletes only shrink: size output files to the touched bytes
         kept = kept.coalesce(self._rewrite_partitions(touched))
-        new_files = self._write_files(kept, prev["partition_by"])
-        v = self.latest_version() + 1
-        self._commit(
-            v,
-            self._new_manifest(
-                kept,
-                untouched + new_files,
-                prev["partition_by"],
-                self._carry(prev, extra),
-            ),
-            "delete_matching",
-        )
-        return v
+        return self._commit_files(v, prev, keep, kept, "delete_matching", extra)
 
     SCD2_COLS = ("__valid_from", "__valid_to", "__is_current")
 
@@ -1132,39 +1102,22 @@ class LakeTable:
         when history is 100x the delta. NULL keys match null-safely,
         with pruning disabled for that commit (footer stats exclude
         nulls), exactly as in ``upsert``."""
-        from pyspark.sql.types import StructType
-
-        prev = self.manifest()
+        v, prev = self._snapshot()
         schema = StructType.fromJson(prev["schema_json"])
         vf, vt, cur = self.SCD2_COLS
-        k0 = keys[0]
-
-        bounds = df.agg(
-            F.min(k0).alias("lo"),
-            F.max(k0).alias("hi"),
-            F.max(F.col(k0).isNull()).alias("has_null"),
-        ).collect()[0]
-        lo, hi = bounds["lo"], bounds["hi"]
-        null_key_present = bool(bounds["has_null"])
-
-        def may_contain(f: dict) -> bool:
-            if null_key_present:
-                return True
-            st = f.get("stats", {}).get(k0)
-            if st is None or lo is None:
-                return True
-            return not (st["min"] > hi or st["max"] < lo)
-
-        bootstrapped = vf not in [x.name for x in schema.fields]
         # a bootstrap rewrites everything (every file gains the SCD2
         # columns); afterwards only key-range-matching files rewrite
-        touched = [
-            f for f in prev["files"] if bootstrapped or may_contain(f)
-        ]
-        untouched = [f for f in prev["files"] if f not in touched]
-
-        stored = self._read_files(schema, touched) if touched else (
-            self.spark.createDataFrame([], schema)
+        bootstrapped = vf not in schema.names
+        touch = (lambda f: True) if bootstrapped else _key_pruner(df, keys[0])
+        if touch is None:
+            return self._commit_files(
+                v, prev, prev["files"], None, "upsert_scd2", extra, schema
+            )
+        touched, keep = _split_files(prev["files"], touch)
+        stored = (
+            self._read_files(schema, touched)
+            if touched
+            else self.spark.createDataFrame([], schema)
         )
         if bootstrapped:
             stored = stored.select(
@@ -1196,19 +1149,7 @@ class LakeTable:
             F.when(should_close, F.lit(False)).otherwise(stored[cur]).alias(cur),
         )
         rewritten = closed.unionByName(incoming, allowMissingColumns=True)
-        new_files = self._write_files(rewritten, prev["partition_by"])
-        v = self.latest_version() + 1
-        self._commit(
-            v,
-            self._new_manifest(
-                rewritten,
-                untouched + new_files,
-                prev["partition_by"],
-                self._carry(prev, extra),
-            ),
-            "upsert_scd2",
-        )
-        return v
+        return self._commit_files(v, prev, keep, rewritten, "upsert_scd2", extra)
 
     def read_asof(self, t, version: int | None = None) -> DataFrame:
         """Point-in-time view of an SCD2 table: rows valid at ``t``

@@ -780,6 +780,21 @@ def test_history_records_operations(spark, events, tmp_path):
     assert [e["operation"] for e in h] == ["create", "append", "compact"]
     assert h[1]["rows"] > h[0]["rows"]
     assert all(e["n_files"] >= 1 for e in h)
+    # every data commit stamps its operation metrics, and they agree
+    # with the file sets of consecutive manifests
+    t.upsert(events.where("id = 1").withColumn("v", F.lit(99.0)), keys=["id"])
+    t.delete_where("id = 2")
+    h = t.history()
+    assert [e["operation"] for e in h[3:]] == ["upsert", "delete_where"]
+    prev: dict = {}
+    for e in h:
+        files = {f["path"]: f["bytes"] for f in t.manifest(e["version"])["files"]}
+        added = files.keys() - prev.keys()
+        assert e["files_added"] == len(added) > 0
+        assert e["files_removed"] == len(prev.keys() - files.keys())
+        assert e["bytes_added"] == sum(files[p] for p in added) > 0
+        prev = files
+    assert h[3]["files_removed"] == h[4]["files_removed"] == 1
 
 
 def test_crash_debris_invisible_to_readers_and_vacuumed(spark, events, tmp_path):
@@ -963,3 +978,70 @@ def test_merge_schema_new_column_committed_nullable(spark, tmp_path):
     assert committed["extra"].nullable
     got = {r.id: r.extra for r in t.read().collect()}
     assert got == {0: None, 1: None, 2: 7, 3: 7}
+
+
+@pytest.mark.parametrize("op", ["upsert", "upsert_scd2"])
+def test_empty_merge_batch_carries_every_file(spark, tmp_path, op):
+    """An empty MERGE batch has no key range and no NULL key, so it
+    touches no file: every file carries over by path, no file is
+    written, and the row count is unchanged. The version still
+    commits, so the streaming batch_id is recorded."""
+    t = LakeTable(spark, str(tmp_path / "t"))
+    df = spark.createDataFrame(
+        [(i, f"v{i}", "2024-01-01") for i in range(2000)],
+        "id long, val string, ts string",
+    )
+    t.create(df.repartition(3))
+    if op == "upsert":
+        def merge(batch, **kw):
+            return t.upsert(batch, keys=["id"], **kw)
+    else:
+        def merge(batch, **kw):
+            return t.upsert_scd2(batch, keys=["id"], change_ts="ts", **kw)
+
+        merge(df.limit(0))  # the first SCD2 merge adds the history columns
+    before = t.manifest()
+    assert len(before["files"]) >= 3
+    v = merge(df.limit(0), extra={"batch_id": 5})
+    after = t.manifest(v)
+    assert v == t.latest_version() and after["batch_id"] == 5
+    assert {f["path"] for f in after["files"]} == {f["path"] for f in before["files"]}
+    assert after["rows"] == before["rows"] == 2000
+    assert t.read().count() == 2000
+
+
+@pytest.mark.parametrize("op", ["append", "overwrite", "upsert", "delete_matching"])
+def test_stale_snapshot_commit_fails_instead_of_dropping_files(
+    spark, tmp_path, monkeypatch, op
+):
+    """Each mutator commits at its snapshot's version + 1. When another
+    writer commits between the snapshot and the commit, the commit
+    fails with the named put-if-absent error; it must never commit a
+    file set that drops the other writer's rows."""
+    path = str(tmp_path / "t")
+
+    def rows(lo, n):
+        return spark.createDataFrame(
+            [(i, f"v{i}") for i in range(lo, lo + n)], "id long, val string"
+        )
+
+    LakeTable(spark, path).create(rows(0, 100))
+    writer, competitor = LakeTable(spark, path), LakeTable(spark, path)
+    write_files = writer._write_files
+
+    def racing_write(df, partition_by):
+        competitor.append(rows(1000, 50))
+        return write_files(df, partition_by)
+
+    monkeypatch.setattr(writer, "_write_files", racing_write)
+    args = {
+        "append": (rows(2000, 10),),
+        "overwrite": (rows(2000, 10),),
+        "upsert": (rows(50, 10), ["id"]),
+        "delete_matching": (rows(0, 10), ["id"]),
+    }[op]
+    with pytest.raises(FileExistsError, match="version 1"):
+        getattr(writer, op)(*args)
+    assert competitor.latest_version() == 1
+    got = {r.id for r in competitor.read().collect()}
+    assert got == set(range(100)) | set(range(1000, 1050))

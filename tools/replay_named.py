@@ -1,8 +1,9 @@
 """Same-window per-query replay for optimization work: run the named
-queries with bench.py's EXACT per-rep protocol (noop sink, query-scoped
-cache release, clearCache, driver GC, settle) and print medians plus a
-host_canary stamp, so a before/after pair taken back to back in one
-session is ambient-comparable.
+queries with bench.py's per-rep protocol (``bench.timed_reps``: noop
+sink, query-scoped cache release, clearCache, driver GC, settle) after
+its warm-up, and print medians plus a host_canary stamp, so a
+before/after pair taken back to back in one session is
+ambient-comparable.
 
 Usage:
     python tools/replay_named.py QUERY [QUERY ...] [--sf-dir DIR]
@@ -18,12 +19,10 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _auto_shuffle_partitions, host_canary  # noqa: E402
-from big_data_data_lake_spark.caching import release_query_caches  # noqa: E402
+from bench import host_canary, shuffle_partitions, timed_reps, warm_up  # noqa: E402
 from big_data_data_lake_spark.queries import load_all  # noqa: E402
 from big_data_data_lake_spark.session import get_spark  # noqa: E402
 
@@ -39,44 +38,20 @@ def main() -> None:
     args = ap.parse_args()
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    parts = int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
-    ) or _auto_shuffle_partitions(args.sf_dir, cpus)
     spark = get_spark(
         app_name="replay_named",
         cpus=cpus,
-        shuffle_partitions=parts,
+        shuffle_partitions=shuffle_partitions(args.sf_dir, cpus),
         extra_conf={"spark.cleaner.periodicGC.interval": "30s"},
     )
     registry = load_all()
-    # same JVM/codegen + Python worker warmup as bench.py
-    spark.range(1_000_000).selectExpr("sum(id) s").write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    def _noop_batches(batches):
-        yield from batches
-
-    spark.range(cpus).repartition(cpus).mapInPandas(
-        _noop_batches, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-
+    warm_up(spark, cpus)
     canary = host_canary(spark)
     out: dict = {"sf_dir": args.sf_dir, "reps": args.reps, "canary": canary}
     results = out["queries"] = {}
     for name in args.queries:
-        fn = registry[name].fn
-        samples = []
         spark.sparkContext.setJobDescription(f"replay:{name}")
-        for _ in range(args.reps):
-            t0 = time.perf_counter()
-            fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-            release_query_caches()
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            if samples[-1] > 5.0:
-                time.sleep(min(6.0, samples[-1] / 5))
+        samples = timed_reps(spark, registry[name].fn, args.sf_dir, args.reps)
         results[name] = {
             "median": round(statistics.median(samples), 3),
             "samples": [round(x, 3) for x in samples],

@@ -6,8 +6,10 @@ In a full bench run, a heavy query's GC/cleaner backlog inflates its
 successors (measured up to 5x — see bench.py's settle comment), so a
 big sf0.1->sf1 IN-BENCH ratio is ambiguous: real superlinearity or a
 noisy neighbor. The discriminator is a STANDALONE replay — same data,
-fresh timing, best-of-N with cache drops — of exactly the queries whose
-in-bench ratio exceeds a threshold.
+fresh timing, best-of-N under bench.py's per-rep protocol
+(``bench.timed_reps``: cache drops, driver GC, settle) after its
+warm-up — of exactly the queries whose in-bench ratio exceeds a
+threshold.
 
 Usage:
     python tools/replay_outliers.py BENCH_LOCAL_r07.json BENCH_SF1_r07.json \
@@ -47,9 +49,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -63,8 +63,6 @@ def _sf_dir(sf: float) -> str:
 
 
 def _replay(spark, fn, sf_dir: str, reps: int) -> float:
-    from big_data_data_lake_spark.caching import release_query_caches
-
     # Match bench.py's tier config EXACTLY (r10, r9 verdict #5): the
     # chronic "in-bench mover" gap (dsir 13.1s in-bench vs 3.0s
     # "standalone", every round) was never interference — this tool
@@ -77,22 +75,22 @@ def _replay(spark, fn, sf_dir: str, reps: int) -> float:
     # (r10 advice): a bench recorded under SPARK_GRAFT_SHUFFLE_PARTITIONS
     # must replay under the same value, or this tool reintroduces the
     # exact config-mismatch class the r10 fix closed.
-    from bench import _auto_shuffle_partitions
+    from bench import shuffle_partitions, timed_reps
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    parts = int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
-    ) or _auto_shuffle_partitions(sf_dir, cpus)
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-        release_query_caches()
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-    return round(best, 3)
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions(sf_dir, cpus)))
+    return round(min(timed_reps(spark, fn, sf_dir, reps)), 3)
+
+
+def _session(app_name: str):
+    """A warmed-up session at $SPARK_GRAFT_CPUS cores (bench.warm_up)."""
+    from bench import warm_up
+    from big_data_data_lake_spark.session import get_spark
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark(app_name=app_name, cpus=cpus)
+    warm_up(spark, cpus)
+    return spark
 
 
 def _drift_main(args, low: dict, high: dict) -> int:
@@ -127,10 +125,8 @@ def _drift_main(args, low: dict, high: dict) -> int:
     rc = 0
     if movers:
         from big_data_data_lake_spark.queries import load_all
-        from big_data_data_lake_spark.session import get_spark
 
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        spark = get_spark(app_name="replay-drift", cpus=cpus)
+        spark = _session("replay-drift")
         registry = load_all()
         sf_dir = _sf_dir(low["sf"])
         for n in movers:
@@ -209,10 +205,8 @@ def main() -> int:
     rc = 0
     if outliers:
         from big_data_data_lake_spark.queries import load_all
-        from big_data_data_lake_spark.session import get_spark
 
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        spark = get_spark(app_name="replay-outliers", cpus=cpus)
+        spark = _session("replay-outliers")
         registry = load_all()
         lo_dir, hi_dir = _sf_dir(low["sf"]), _sf_dir(high["sf"])
         for n in outliers:

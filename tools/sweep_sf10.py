@@ -3,7 +3,8 @@ evidence tier from the ~23 hand-picked flagship queries to EVERY
 query above a time threshold at sf1.
 
 For each query in the sweep population, replay standalone (reps with
-raw samples recorded, cache-dropped, fixed cores) at BOTH sf0.1 and
+raw samples recorded, under bench.py's per-rep protocol
+``bench.timed_reps`` after its warm-up, fixed cores) at BOTH sf0.1 and
 sf10 and record the 100x growth ratio. On a real cluster cores scale
 with data; a small multiple at 100x-data-on-fixed-cores is the
 strongest single-box signal that the plan has no superlinear term.
@@ -39,7 +40,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -47,29 +47,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def _replay(spark, fn, sf_dir: str, reps: int) -> list[float]:
     """Per-rep wall times (caller takes min for the headline stat but
     records the raw samples — r11 verdict #2)."""
-    from big_data_data_lake_spark.caching import release_query_caches
-
     # Tier-faithful config (r10): shuffle partitions follow bench.py's
     # volume rule for THIS sf_dir, so sweep numbers are comparable to
     # bench records at the same tier (see replay_outliers._replay).
     # Mirror bench.py's FULL resolution order, env override included
     # (r10 advice): see replay_outliers._replay.
-    from bench import _auto_shuffle_partitions
+    from bench import shuffle_partitions, timed_reps
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    parts = int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
-    ) or _auto_shuffle_partitions(sf_dir, cpus)
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    samples: list[float] = []
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples.append(round(time.perf_counter() - t0, 3))
-        release_query_caches()
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-    return samples
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions(sf_dir, cpus)))
+    return [round(x, 3) for x in timed_reps(spark, fn, sf_dir, reps)]
 
 
 def _canary(spark, sf10_dir: str) -> dict:
@@ -77,12 +64,9 @@ def _canary(spark, sf10_dir: str) -> dict:
     config — the tier whose cross-round drift this record must make
     adjudicable. Same-tier comparisons only (the shuffle leg follows
     the partition count)."""
-    from bench import _auto_shuffle_partitions, host_canary
+    from bench import host_canary, shuffle_partitions
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    parts = int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
-    ) or _auto_shuffle_partitions(sf10_dir, cpus)
+    parts = shuffle_partitions(sf10_dir, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     c = host_canary(spark)
     return {**c, "total_sec": round(sum(c.values()), 3), "shuffle_partitions": parts}
@@ -105,6 +89,7 @@ def main() -> int:
     )
     args = ap.parse_args()
 
+    from bench import warm_up
     from big_data_data_lake_spark.queries import load_all
     from big_data_data_lake_spark.session import get_spark
 
@@ -144,6 +129,7 @@ def main() -> int:
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="sweep-sf10", cpus=cpus)
+    warm_up(spark, cpus)
     result = {
         "sf01_dir": args.sf01_dir,
         "sf10_dir": args.sf10_dir,
