@@ -527,9 +527,10 @@ class LakeTable:
 
     def _carry(self, prev: dict, extra: dict | None) -> dict:
         """Streaming replay metadata must outlive maintenance commits:
-        the exactly-once guard in ``lake_table_sink`` reads
-        ``batch_id`` from the LATEST manifest, so a compact/overwrite/
-        upsert between micro-batches that dropped it would reset the
+        the exactly-once guard of the streaming sinks
+        (``streaming.ingest._commit_batch``) reads ``batch_id`` from
+        the LATEST manifest, so a compact/overwrite/upsert between
+        micro-batches that dropped it would reset the
         high-water mark to -1 and let a replayed batch append twice.
         Every new manifest therefore carries the previous one's
         ``batch_id`` forward unless ``extra`` explicitly overrides."""
@@ -740,9 +741,18 @@ class LakeTable:
             ]
         if stat_filter:
             files = [f for f in files if _may_overlap(f, stat_filter)]
-        if not files:
-            return self.spark.createDataFrame([], schema)
         return self._read_files(schema, files)
+
+    def read_candidates(self, df: DataFrame, key: str) -> DataFrame:
+        """The latest snapshot's rows that may share a ``key`` value
+        with ``df``: the rows of every file ``_key_pruner`` cannot rule
+        out — all files when ``df`` holds a NULL key, and none (no read
+        at all) when ``df`` is empty. Pruning-only, like ``read``'s
+        filters: callers still join on the exact keys, null-safely."""
+        man = self.manifest()
+        touch = _key_pruner(df, key)
+        files = [f for f in man["files"] if touch(f)] if touch else []
+        return self._read_files(StructType.fromJson(man["schema_json"]), files)
 
     @staticmethod
     def _base_of(path: str, partition_cols: list[str]) -> str:
@@ -780,7 +790,9 @@ class LakeTable:
         shallow clone's manifest references the source table's files
         by absolute path, so a single table-rooted basePath would
         reject them. One read per distinct root (>= 1, tiny), unioned
-        by name."""
+        by name. An empty file list reads as an empty frame."""
+        if not files:
+            return self.spark.createDataFrame([], schema)
         by_base: dict[str, list[str]] = {}
         for f in files:
             pcols = list(f.get("partition", {}).keys())
@@ -862,10 +874,7 @@ class LakeTable:
         man_to = self.manifest(v_to)
         old_paths = {f["path"] for f in self.manifest(v_from)["files"]}
         added = [f for f in man_to["files"] if f["path"] not in old_paths]
-        schema = StructType.fromJson(man_to["schema_json"])
-        if not added:
-            return self.spark.createDataFrame([], schema)
-        return self._read_files(schema, added)
+        return self._read_files(StructType.fromJson(man_to["schema_json"]), added)
 
     def vacuum(self, retain_last: int = 1) -> list[str]:
         """Explicitly destructive: drop all but the last ``retain_last``
@@ -953,9 +962,22 @@ class LakeTable:
         NULL key the zone-map cannot prove any file null-free and
         pruning is disabled for that commit — correctness over
         pruning; a plain equi anti-join would leave the stored
-        NULL-key row in place and duplicate it on every upsert."""
+        NULL-key row in place and duplicate it on every upsert.
+
+        Columns the table already has are cast to the table's type
+        first, so a wider frame type (a ``long`` into an ``int``
+        column) never widens the committed schema: the untouched files
+        keep the table type, and a mixed-type snapshot could not be
+        read back. A value that does not fit fails the cast (ANSI
+        mode) instead of committing."""
         v, prev = self._snapshot()
         schema = StructType.fromJson(prev["schema_json"])
+        df = df.select(
+            *[
+                df[c].cast(schema[c].dataType) if c in schema.names else df[c]
+                for c in df.columns
+            ]
+        )
         touch = _key_pruner(df, keys[0])
         if touch is None:
             return self._commit_files(v, prev, prev["files"], None, "upsert", extra, schema)
@@ -1114,11 +1136,7 @@ class LakeTable:
                 v, prev, prev["files"], None, "upsert_scd2", extra, schema
             )
         touched, keep = _split_files(prev["files"], touch)
-        stored = (
-            self._read_files(schema, touched)
-            if touched
-            else self.spark.createDataFrame([], schema)
-        )
+        stored = self._read_files(schema, touched)
         if bootstrapped:
             stored = stored.select(
                 "*",

@@ -11,6 +11,14 @@ at-least-once buffer/flush (consumer.py:102-139) and text-file
 high-water-mark (process_silver.py:14-26) are replaced by checkpointed
 exactly-once; its wall-clock dedup TTL (producer.py:26,84-86) becomes
 an event-time TTL, deterministic under replay.
+
+The LakeTable sinks (``lake_table_sink``, ``lake_upsert_sink``,
+``lake_aggregate_sink``, ``lake_scd2_sink``, ``indexed_novelty_sink``)
+share one exactly-once step, ``_commit_batch``: every commit records
+its micro-batch id in the manifest, the first batch creates the table,
+and a batch whose id is at or below the latest recorded one is a replay
+and is skipped. Each sink supplies only its create and write calls;
+``_lake_sink`` is their one checkpointed ``foreachBatch`` writer.
 """
 
 from __future__ import annotations
@@ -430,6 +438,50 @@ def interval_join(
     ).drop("__rk")
 
 
+def _start(writer, trigger_seconds: int, available_now: bool):
+    """Start ``writer`` on the one trigger choice every sink offers:
+    drain what is available and stop, or fire every
+    ``trigger_seconds``."""
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=f"{trigger_seconds} seconds").start()
+
+
+def _lake_sink(
+    stream: DataFrame,
+    checkpoint: str,
+    output_mode: str,
+    trigger_seconds: int,
+    available_now: bool,
+    commit,
+):
+    """The checkpointed ``foreachBatch`` writer of every LakeTable
+    sink: ``commit(batch_df, batch_id)`` runs once per micro-batch."""
+    writer = (
+        stream.writeStream.foreachBatch(commit)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(output_mode)
+    )
+    return _start(writer, trigger_seconds, available_now)
+
+
+def _commit_batch(table, batch_id: int, create, write) -> None:
+    """The one exactly-once step of the LakeTable sinks. Spark's
+    checkpoint dedups source offsets, but a batch that committed to the
+    table before its checkpoint commit was written re-runs after a
+    restart with the same id. Every manifest records the ``batch_id``
+    it came from, so: on the first batch call ``create(extra)``; skip a
+    batch whose id is at or below the latest manifest's ``batch_id``
+    (already committed); otherwise call ``write(extra)``. ``extra`` is
+    ``{"batch_id": batch_id}`` for the commit to record."""
+    extra = {"batch_id": batch_id}
+    versions = table.versions()
+    if not versions:
+        create(extra)
+    elif batch_id > table.manifest(versions[-1]).get("batch_id", -1):
+        write(extra)
+
+
 def micro_batch_writer(
     stream: DataFrame,
     path: str,
@@ -447,11 +499,7 @@ def micro_batch_writer(
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, trigger_seconds, available_now)
 
 
 def lake_table_sink(
@@ -471,7 +519,7 @@ def lake_table_sink(
     Exactly-once: Spark's checkpoint dedups source offsets, and the
     commit itself is idempotent under replay — each manifest records
     the ``batch_id`` it came from, and a replayed batch id (<= the
-    last committed one) is skipped without writing.
+    last committed one) is skipped without writing (``_commit_batch``).
 
     ``expectations`` applies write-time CHECK gates per micro-batch in
     drop mode (a stream must keep flowing, so violating ROWS are shed
@@ -479,32 +527,20 @@ def lake_table_sink(
     manifest carries that batch's violation audit."""
     from ..sources.metadata import LakeTable
 
+    gate = {"expectations": expectations, "expect_mode": "drop"} if expectations else {}
+
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         table = LakeTable(batch_df.sparkSession, table_path)
-        gate = {"expectations": expectations, "expect_mode": "drop"} if expectations else {}
-        if not table.versions():
-            table.create(
-                batch_df,
-                partition_by=partition_by,
-                extra={"batch_id": batch_id},
-                **gate,
-            )
-            return
-        last = table.manifest().get("batch_id", -1)
-        if batch_id <= last:  # replay after restart: already committed
-            return
-        table.append(batch_df, extra={"batch_id": batch_id}, **gate)
+        _commit_batch(
+            table,
+            batch_id,
+            lambda extra: table.create(
+                batch_df, partition_by=partition_by, extra=extra, **gate
+            ),
+            lambda extra: table.append(batch_df, extra=extra, **gate),
+        )
 
-    writer = (
-        stream.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _lake_sink(stream, checkpoint, "append", trigger_seconds, available_now, commit)
 
 
 def lake_upsert_sink(
@@ -526,59 +562,47 @@ def lake_upsert_sink(
       1. collapse the batch to one deterministic winner per key
          (max ``order_col``, ties by arrival order within the window
          dedup — operators/windows.latest_per_key);
-      2. drop batch rows NOT newer than the stored row for that key
-         (stat-pruned snapshot read on keys[0] + broadcast-able join —
-         the batch side is micro-batch-sized, so nothing at table
-         scale shuffles);
+      2. drop batch rows NOT newer than the stored row for that key:
+         ``LakeTable.read_candidates`` reads only the files whose zone
+         map on keys[0] can hold a batch key (all files when the batch
+         has a NULL key), and a null-safe (``<=>``) left join of the
+         winners against those rows finds each key's stored row, so a
+         NULL key is matched like any other and only candidate files
+         are scanned;
       3. copy-on-write MERGE via LakeTable.upsert — only files whose
          zone-map range intersects the incoming keys are rewritten.
 
     Exactly-once: Spark's checkpoint dedups source offsets, and every
     commit records its ``batch_id`` — a replayed batch id (<= the last
     committed one) is skipped without writing, so restarts never
-    double-apply (same contract as lake_table_sink). Batches whose
-    rows are ALL stale skip the commit entirely; replaying them is a
-    cheap idempotent no-op.
+    double-apply (``_commit_batch``, shared with lake_table_sink).
+    Batches whose rows are ALL stale skip the commit entirely;
+    replaying them is a cheap idempotent no-op.
     """
     from ..sources.metadata import LakeTable
     from ..operators.windows import latest_per_key
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         winners = latest_per_key(batch_df, keys, order_col)
-        table = LakeTable(spark, table_path)
-        if not table.versions():
-            table.create(winners, extra={"batch_id": batch_id})
-            return
-        last = table.manifest().get("batch_id", -1)
-        if batch_id <= last:  # replay after restart: already committed
-            return
-        k0 = keys[0]
-        bounds = winners.agg(F.min(k0).alias("lo"), F.max(k0).alias("hi")).collect()[0]
-        if bounds["lo"] is None:  # empty batch
-            return
-        current = table.read(stat_filter={k0: (bounds["lo"], bounds["hi"])}).select(
-            *keys, F.col(order_col).alias("__cur_ord")
-        )
-        newer = (
-            winners.join(current, on=keys, how="left")
-            .where(F.col("__cur_ord").isNull() | (F.col(order_col) > F.col("__cur_ord")))
-            .drop("__cur_ord")
-        )
-        if not newer.take(1):  # all stale: nothing to merge
-            return
-        table.upsert(newer, keys, extra={"batch_id": batch_id})
+        table = LakeTable(batch_df.sparkSession, table_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+        def write(extra: dict) -> None:
+            stored = table.read_candidates(winners, keys[0]).select(
+                *keys, F.col(order_col).alias("__cur_ord")
+            )
+            newer = (
+                winners.join(
+                    stored, on=[winners[k].eqNullSafe(stored[k]) for k in keys], how="left"
+                )
+                .where(F.col("__cur_ord").isNull() | (F.col(order_col) > F.col("__cur_ord")))
+                .select(winners["*"])
+            )
+            if newer.take(1):  # else all stale: nothing to merge
+                table.upsert(newer, keys, extra=extra)
+
+        _commit_batch(table, batch_id, lambda extra: table.create(winners, extra=extra), write)
+
+    return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
 
 
 def lake_aggregate_sink(
@@ -600,67 +624,47 @@ def lake_aggregate_sink(
     Per micro-batch:
       1. the batch reduces to per-key delta counts (micro-batch-sized);
       2. the stored counts for ONLY the touched keys come back via a
-         batch-keyed join against the stat-pruned snapshot;
+         batch-keyed semi join against ``LakeTable.read_candidates``
+         (the zone-map-pruned snapshot files that can hold a batch
+         key). The join is null-safe (``<=>``), or the stored NULL-key
+         count never matches and the key re-inserts fresh every batch
+         (silent divergence);
       3. stored + delta sum per key and copy-on-write MERGE in place
          (untouched files carry over by reference).
 
     Exactly-once: checkpointed source offsets plus the recorded
-    ``batch_id`` high-water mark — a replayed batch is skipped before
-    any arithmetic, so counts can never double-apply (the failure
-    mode that makes naive foreachBatch aggregation wrong)."""
+    ``batch_id`` high-water mark (``_commit_batch``) — a replayed batch
+    is skipped before any arithmetic, so counts can never double-apply
+    (the failure mode that makes naive foreachBatch aggregation
+    wrong)."""
     from ..sources.metadata import LakeTable
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         delta = batch_df.groupBy(*key_cols).agg(
             F.count(F.lit(1)).cast("bigint").alias(count_col)
         )
         if not delta.take(1):  # empty batch: nothing to add
             return
-        table = LakeTable(spark, table_path)
-        if not table.versions():
-            table.create(delta, extra={"batch_id": batch_id})
-            return
-        if batch_id <= table.manifest().get("batch_id", -1):
-            return  # replay after restart: already committed
-        k0 = key_cols[0]
-        bounds = delta.agg(
-            F.min(k0).alias("lo"),
-            F.max(k0).alias("hi"),
-            F.max(F.col(k0).isNull()).alias("has_null"),
-        ).collect()[0]
-        # NULL keys: footer min/max excludes nulls, so zone-map pruning
-        # can't prove a file free of stored NULL-key rows — read the
-        # full snapshot for that batch; and the semi join must be
-        # null-safe (<=>) or the stored NULL-key count never matches
-        # and the key re-inserts fresh every batch (silent divergence).
-        stat_filter = (
-            None if bounds["has_null"] else {k0: (bounds["lo"], bounds["hi"])}
-        )
-        stored = table.read(stat_filter=stat_filter)
-        batch_keys = F.broadcast(delta.select(*key_cols))
-        current = stored.join(
-            batch_keys,
-            on=[stored[k].eqNullSafe(batch_keys[k]) for k in key_cols],
-            how="semi",
-        )
-        merged = (
-            current.unionByName(delta)
-            .groupBy(*key_cols)
-            .agg(F.sum(count_col).cast("bigint").alias(count_col))
-        )
-        table.upsert(merged, key_cols, extra={"batch_id": batch_id})
+        table = LakeTable(batch_df.sparkSession, table_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+        def write(extra: dict) -> None:
+            stored = table.read_candidates(delta, key_cols[0])
+            batch_keys = F.broadcast(delta.select(*key_cols))
+            current = stored.join(
+                batch_keys,
+                on=[stored[k].eqNullSafe(batch_keys[k]) for k in key_cols],
+                how="semi",
+            )
+            merged = (
+                current.unionByName(delta)
+                .groupBy(*key_cols)
+                .agg(F.sum(count_col).cast("bigint").alias(count_col))
+            )
+            table.upsert(merged, key_cols, extra=extra)
+
+        _commit_batch(table, batch_id, lambda extra: table.create(delta, extra=extra), write)
+
+    return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
 
 
 def lake_scd2_sink(
@@ -682,44 +686,34 @@ def lake_scd2_sink(
     (earlier same-batch changes are superseded before touching the
     table — one batch-sized aggregation), then merges copy-on-write
     with zone-map pruning. Exactly-once via the recorded ``batch_id``
-    high-water mark, the same replay contract as lake_upsert_sink:
-    a replayed batch is skipped before any arithmetic, so history can
-    never double-close or duplicate versions."""
+    high-water mark (``_commit_batch``), the same replay contract as
+    lake_upsert_sink: a replayed batch is skipped before any
+    arithmetic, so history can never double-close or duplicate
+    versions."""
     from ..operators.windows import latest_per_key
     from ..sources.metadata import LakeTable
 
+    vf, vt, cur = LakeTable.SCD2_COLS
+
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         if not batch_df.take(1):
             return
         winners = latest_per_key(batch_df, keys, change_ts)
-        table = LakeTable(spark, table_path)
-        if not table.versions():
-            vf, vt, cur = LakeTable.SCD2_COLS
-            table.create(
-                winners.select(
-                    "*",
-                    F.col(change_ts).cast("timestamp").alias(vf),
-                    F.lit(None).cast("timestamp").alias(vt),
-                    F.lit(True).alias(cur),
-                ),
-                extra={"batch_id": batch_id},
-            )
-            return
-        if batch_id <= table.manifest().get("batch_id", -1):
-            return  # replay after restart: already committed
-        table.upsert_scd2(winners, keys, change_ts, extra={"batch_id": batch_id})
+        table = LakeTable(batch_df.sparkSession, table_path)
+        first = winners.select(
+            "*",
+            F.col(change_ts).cast("timestamp").alias(vf),
+            F.lit(None).cast("timestamp").alias(vt),
+            F.lit(True).alias(cur),
+        )
+        _commit_batch(
+            table,
+            batch_id,
+            lambda extra: table.create(first, extra=extra),
+            lambda extra: table.upsert_scd2(winners, keys, change_ts, extra=extra),
+        )
 
-    writer = (
-        stream.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
 
 
 def indexed_novelty_sink(
@@ -762,10 +756,13 @@ def indexed_novelty_sink(
     from ..sources.metadata import LakeTable
 
     def _commit_or_skip(table: "LakeTable", df: DataFrame, batch_id: int) -> None:
-        if not table.versions():
-            table.create(df.coalesce(4), extra={"batch_id": batch_id})
-        elif batch_id > table.manifest().get("batch_id", -1):
-            table.append(df.coalesce(4), extra={"batch_id": batch_id})
+        df = df.coalesce(4)
+        _commit_batch(
+            table,
+            batch_id,
+            lambda extra: table.create(df, extra=extra),
+            lambda extra: table.append(df, extra=extra),
+        )
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         # lazy: queries.* imports streaming.* at module load
@@ -812,16 +809,7 @@ def indexed_novelty_sink(
             for c in batch_caches:
                 c.unpersist()
 
-    writer = (
-        stream.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _lake_sink(stream, checkpoint, "append", trigger_seconds, available_now, commit)
 
 
 def sessionize_stateful(

@@ -258,6 +258,28 @@ def test_upsert_null_keys_replace_not_duplicate(spark, tmp_path):
     assert got == [(1, "a"), (2, "b"), (None, "new_null")]
 
 
+def test_upsert_never_widens_a_column_type(spark, tmp_path):
+    """An upsert frame with a wider type (``v long`` into ``v int``)
+    that touches only some files must commit the table's type: a
+    widened schema would sit over untouched files still typed ``int``,
+    and reading both back fails to merge them."""
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(
+        spark.createDataFrame([(i, i) for i in range(100)], "k bigint, v int")
+        .repartitionByRange(4, "k")
+    )
+    assert len(t.manifest()["files"]) == 4
+    t.upsert(spark.createDataFrame([(5, 7)], "k long, v long"), keys=["k"])
+    assert len(t.manifest()["files"]) == 4  # 3 untouched files carried over
+    df = t.read()
+    assert dict((f.name, f.dataType.simpleString()) for f in df.schema.fields) == {
+        "k": "bigint",
+        "v": "int",
+    }
+    assert df.count() == 100
+    assert {r.k: r.v for r in df.collect()}[5] == 7
+
+
 def test_append_with_schema_evolution(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "t"))
     t.create(spark.createDataFrame([(1, "a")], "id long, k string"))
