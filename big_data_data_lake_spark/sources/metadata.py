@@ -37,7 +37,7 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -214,6 +214,58 @@ def _key_pruner(df: DataFrame, key: str):
     if b["lo"] is None:
         return None
     return lambda f: _may_overlap(f, {key: (b["lo"], b["hi"])})
+
+
+def _to_table_types(df: DataFrame, schema: StructType) -> DataFrame:
+    """``df`` with every column the table already has cast to the
+    table's type, so a wider frame type (a ``long`` into an ``int``
+    column) never widens the committed schema: untouched files keep
+    the table type, and a mixed-type snapshot could not be read back.
+    A value that does not fit fails the cast (ANSI mode) instead of
+    committing. Columns the table lacks pass through unchanged."""
+    return df.select(
+        *[
+            df[c].cast(schema[c].dataType) if c in schema.names else df[c]
+            for c in df.columns
+        ]
+    )
+
+
+def _latest_wins(stored: DataFrame, batch: DataFrame, keys: list[str], order_col: str):
+    """One conditional MERGE pass (``WHEN MATCHED AND batch.order >
+    stored.order UPDATE``, ``WHEN NOT MATCHED INSERT``): union the
+    ``stored`` rows with the ``batch`` rows, tagged by side, and keep
+    one row per key of the batch with a ``row_number`` window. The
+    batch row wins when the stored order is NULL or lower; the stored
+    row wins ties and against a NULL batch order. The window's
+    ``partitionBy`` groups NULL keys, so keys match null-safely, and
+    stored rows of keys the batch lacks pass through unchanged.
+
+    Returns ``(merged, any_won)``: ``any_won()``, called after
+    ``merged`` is written, says whether a batch row won. The count is
+    observed on the written plan itself, so it costs no extra pass."""
+    both = stored.withColumn("__batch", F.lit(False)).unionByName(
+        batch.withColumn("__batch", F.lit(True)), allowMissingColumns=True
+    )
+    o, is_batch = F.col(order_col), F.col("__batch")
+    # among equal orders the stored row ranks first, unless both are NULL
+    w = Window.partitionBy(*keys).orderBy(
+        o.desc_nulls_last(), F.when(o.isNull(), is_batch).otherwise(~is_batch).desc()
+    )
+    obs = Observation()
+    merged = (
+        both.withColumn("__rn", F.row_number().over(w))
+        .withColumn(
+            "__has_batch",
+            F.max(is_batch).over(
+                w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+            ),
+        )
+        .where((F.col("__rn") == 1) | ~F.col("__has_batch"))
+        .observe(obs, F.count_if(is_batch).alias("won"))
+        .drop("__batch", "__rn", "__has_batch")
+    )
+    return merged, lambda: obs.get["won"] > 0
 
 
 def _split_files(files: list[dict], touch) -> tuple[list[dict], list[dict]]:
@@ -485,6 +537,7 @@ class LakeTable:
         operation: str,
         extra: dict | None = None,
         schema=None,
+        commit_if=None,
     ) -> int:
         """The one commit tail of every data-writing mutator: write
         ``df`` as new files and commit ``keep`` plus those files as
@@ -506,9 +559,22 @@ class LakeTable:
         a version, so its ``extra`` (a streaming ``batch_id``) is
         recorded. The commit records its operation metrics: files
         written, files of ``prev`` not carried over, and bytes
-        written."""
+        written.
+
+        ``commit_if``, when given, is called after the write: if it
+        returns False the files just written are deleted and nothing is
+        committed, and ``v_read`` is returned. It lets a check observed
+        during the write itself (upsert's stale-batch count) veto the
+        commit without a second pass over the data."""
         schema = schema if schema is not None else df.schema
         new = self._write_files(df, prev["partition_by"]) if df is not None else []
+        if commit_if is not None and not commit_if():
+            for f in new:  # and the checksum file Hadoop's local FS writes beside it
+                d, name = os.path.split(f["path"])
+                for p in (f["path"], os.path.join(d, f".{name}.crc")):
+                    if os.path.exists(p):
+                        os.remove(p)
+            return v_read
         files = keep + new
         manifest = {
             "schema_ddl": schema.simpleString(),  # human-readable
@@ -748,7 +814,10 @@ class LakeTable:
         with ``df``: the rows of every file ``_key_pruner`` cannot rule
         out — all files when ``df`` holds a NULL key, and none (no read
         at all) when ``df`` is empty. Pruning-only, like ``read``'s
-        filters: callers still join on the exact keys, null-safely."""
+        filters: callers still join on the exact keys, null-safely.
+        Its caller is ``streaming.ingest.lake_aggregate_sink``, which
+        sums stored and batch counts; the latest-wins upsert sink reads
+        its candidates inside ``upsert(order_col=...)`` instead."""
         man = self.manifest()
         touch = _key_pruner(df, key)
         files = [f for f in man["files"] if touch(f)] if touch else []
@@ -947,13 +1016,20 @@ class LakeTable:
         man = {**target, **self._carry(latest, {"restored_from": version})}
         return self._commit(v + 1, man, "restore")
 
-    def upsert(self, df: DataFrame, keys: list[str], extra: dict | None = None) -> int:
+    def upsert(
+        self,
+        df: DataFrame,
+        keys: list[str],
+        extra: dict | None = None,
+        order_col: str | None = None,
+    ) -> int:
         """Copy-on-write MERGE: rows in ``df`` replace same-key rows;
         new keys append. Only files whose zone-map range on
         ``keys[0]`` can intersect the incoming key range are
         rewritten — untouched files carry over into the new manifest
         by reference, which is what keeps a point-update cheap on a
-        100 TB table. Exactness comes from the anti-join; the stats
+        100 TB table. Exactness comes from the key match (the
+        anti-join, or with ``order_col`` the per-key window); the stats
         pruning is a strict superset of the files that contain
         matches.
 
@@ -965,38 +1041,49 @@ class LakeTable:
         NULL-key row in place and duplicate it on every upsert.
 
         Columns the table already has are cast to the table's type
-        first, so a wider frame type (a ``long`` into an ``int``
-        column) never widens the committed schema: the untouched files
-        keep the table type, and a mixed-type snapshot could not be
-        read back. A value that does not fit fails the cast (ANSI
-        mode) instead of committing."""
+        first (``_to_table_types``), so a wider frame type never widens
+        the committed schema.
+
+        ``order_col`` makes the MERGE conditional (latest wins): ``df``
+        should hold one row per key, and its row replaces the stored
+        row only when it is newer. The batch row wins when no stored
+        row has its key, when the stored ``order_col`` is NULL, or when
+        its ``order_col`` is greater; the stored row stays on a tie and
+        against a NULL batch order. This is one pass over the touched
+        files (``_latest_wins``), so ``df`` is best persisted by the
+        caller: it is read for the key range and again for the write.
+        When no batch row wins (an all-stale or empty batch) nothing is
+        committed: the files just written are deleted, and the return
+        value is the unchanged latest version. Without
+        ``order_col`` every ``df`` row wins, via a null-safe anti-join
+        of the touched files against ``df``'s keys."""
         v, prev = self._snapshot()
         schema = StructType.fromJson(prev["schema_json"])
-        df = df.select(
-            *[
-                df[c].cast(schema[c].dataType) if c in schema.names else df[c]
-                for c in df.columns
-            ]
-        )
+        df = _to_table_types(df, schema)
         touch = _key_pruner(df, keys[0])
         if touch is None:
+            if order_col is not None:
+                return v  # empty batch: no row can win
             return self._commit_files(v, prev, prev["files"], None, "upsert", extra, schema)
         touched, keep = _split_files(prev["files"], touch)
-        if touched:
-            # go through the evolved-schema read path: touched files
-            # may pre-date added columns (a plain parquet read of them
-            # would fail the declared-schema select)
-            old = self._read_files(schema, touched)
+        # go through the evolved-schema read path: touched files may
+        # pre-date added columns (a plain parquet read of them would
+        # fail the declared-schema select); no touched file reads as an
+        # empty frame
+        old = self._read_files(schema, touched)
+        any_won = None
+        if order_col is None:
             incoming = df.select(*keys)
             cond = [old[k].eqNullSafe(incoming[k]) for k in keys]
-            base = old.join(incoming, on=cond, how="left_anti")
+            # columns df lacks null-fill from the declared schema; new
+            # df columns widen it (additive evolution, as in
+            # merge_schema append) — the manifest schema is taken from
+            # the union, so an upsert can never silently narrow the table
+            rewritten = old.join(incoming, on=cond, how="left_anti").unionByName(
+                df, allowMissingColumns=True
+            )
         else:
-            base = self.spark.createDataFrame([], schema)
-        # columns df lacks null-fill from the declared schema; new df
-        # columns widen it (additive evolution, as in merge_schema
-        # append) — the manifest schema is taken from the union, so an
-        # upsert can never silently narrow the table
-        rewritten = base.unionByName(df, allowMissingColumns=True)
+            rewritten, any_won = _latest_wins(old, df, keys, order_col)
         if touched:
             # size the rewrite to the bytes it replaces plus the
             # incoming batch's estimated bytes (the latter keeps a
@@ -1009,7 +1096,9 @@ class LakeTable:
                 + [{"bytes": self._plan_size_estimate(df), "path": ""}]
             )
             rewritten = rewritten.coalesce(n_out)
-        return self._commit_files(v, prev, keep, rewritten, "upsert", extra)
+        return self._commit_files(
+            v, prev, keep, rewritten, "upsert", extra, commit_if=any_won
+        )
 
     def _probe_files(self, schema, files: list[dict], match) -> tuple[list, list]:
         """Split ``files`` into (touched, carried) for a copy-on-write
@@ -1123,9 +1212,13 @@ class LakeTable:
         over by reference — what keeps a daily dimension delta cheap
         when history is 100x the delta. NULL keys match null-safely,
         with pruning disabled for that commit (footer stats exclude
-        nulls), exactly as in ``upsert``."""
+        nulls), exactly as in ``upsert``. As in ``upsert`` too, columns
+        the table already has are cast to the table's types first
+        (``_to_table_types``), so a wider frame type never widens the
+        committed schema."""
         v, prev = self._snapshot()
         schema = StructType.fromJson(prev["schema_json"])
+        df = _to_table_types(df, schema)
         vf, vt, cur = self.SCD2_COLS
         # a bootstrap rewrites everything (every file gains the SCD2
         # columns); afterwards only key-range-matching files rewrite

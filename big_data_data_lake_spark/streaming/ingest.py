@@ -561,46 +561,42 @@ def lake_upsert_sink(
     Per micro-batch:
       1. collapse the batch to one deterministic winner per key
          (max ``order_col``, ties by arrival order within the window
-         dedup — operators/windows.latest_per_key);
-      2. drop batch rows NOT newer than the stored row for that key:
-         ``LakeTable.read_candidates`` reads only the files whose zone
-         map on keys[0] can hold a batch key (all files when the batch
-         has a NULL key), and a null-safe (``<=>``) left join of the
-         winners against those rows finds each key's stored row, so a
-         NULL key is matched like any other and only candidate files
-         are scanned;
-      3. copy-on-write MERGE via LakeTable.upsert — only files whose
-         zone-map range intersects the incoming keys are rewritten.
+         dedup — operators/windows.latest_per_key) and persist the
+         winners once: every later action reuses them instead of
+         re-deriving the parse, the enrichment join and the window
+         (Spark's pattern for several actions on one foreachBatch
+         frame), and they are released when the commit ends;
+      2. one conditional copy-on-write MERGE,
+         ``LakeTable.upsert(order_col=...)``: it reads the files whose
+         zone map on keys[0] can hold a batch key (all files when the
+         batch has a NULL key) once, and keeps per key the stored row
+         or the winner, whichever is newer — NULL keys match
+         null-safely, and a stored NULL order counts as older. Files
+         outside the key range carry over by reference.
 
     Exactly-once: Spark's checkpoint dedups source offsets, and every
     commit records its ``batch_id`` — a replayed batch id (<= the last
     committed one) is skipped without writing, so restarts never
     double-apply (``_commit_batch``, shared with lake_table_sink).
-    Batches whose rows are ALL stale skip the commit entirely;
-    replaying them is a cheap idempotent no-op.
+    Batches whose rows are ALL stale commit nothing (``upsert`` deletes
+    the files it wrote for them); replaying them is a cheap idempotent
+    no-op.
     """
     from ..sources.metadata import LakeTable
     from ..operators.windows import latest_per_key
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        winners = latest_per_key(batch_df, keys, order_col)
+        winners = latest_per_key(batch_df, keys, order_col).persist()
         table = LakeTable(batch_df.sparkSession, table_path)
-
-        def write(extra: dict) -> None:
-            stored = table.read_candidates(winners, keys[0]).select(
-                *keys, F.col(order_col).alias("__cur_ord")
+        try:
+            _commit_batch(
+                table,
+                batch_id,
+                lambda extra: table.create(winners, extra=extra),
+                lambda extra: table.upsert(winners, keys, extra=extra, order_col=order_col),
             )
-            newer = (
-                winners.join(
-                    stored, on=[winners[k].eqNullSafe(stored[k]) for k in keys], how="left"
-                )
-                .where(F.col("__cur_ord").isNull() | (F.col(order_col) > F.col("__cur_ord")))
-                .select(winners["*"])
-            )
-            if newer.take(1):  # else all stale: nothing to merge
-                table.upsert(newer, keys, extra=extra)
-
-        _commit_batch(table, batch_id, lambda extra: table.create(winners, extra=extra), write)
+        finally:
+            winners.unpersist()
 
     return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
 
@@ -622,7 +618,9 @@ def lake_aggregate_sink(
     ever re-reading history.
 
     Per micro-batch:
-      1. the batch reduces to per-key delta counts (micro-batch-sized);
+      1. the batch reduces to per-key delta counts (micro-batch-sized),
+         persisted once for the empty check, the key range, the semi
+         join and the MERGE, and released when the commit ends;
       2. the stored counts for ONLY the touched keys come back via a
          batch-keyed semi join against ``LakeTable.read_candidates``
          (the zone-map-pruned snapshot files that can hold a batch
@@ -642,9 +640,7 @@ def lake_aggregate_sink(
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         delta = batch_df.groupBy(*key_cols).agg(
             F.count(F.lit(1)).cast("bigint").alias(count_col)
-        )
-        if not delta.take(1):  # empty batch: nothing to add
-            return
+        ).persist()
         table = LakeTable(batch_df.sparkSession, table_path)
 
         def write(extra: dict) -> None:
@@ -662,7 +658,13 @@ def lake_aggregate_sink(
             )
             table.upsert(merged, key_cols, extra=extra)
 
-        _commit_batch(table, batch_id, lambda extra: table.create(delta, extra=extra), write)
+        try:
+            if delta.take(1):  # else an empty batch: nothing to add
+                _commit_batch(
+                    table, batch_id, lambda extra: table.create(delta, extra=extra), write
+                )
+        finally:
+            delta.unpersist()
 
     return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
 

@@ -280,6 +280,87 @@ def test_upsert_never_widens_a_column_type(spark, tmp_path):
     assert {r.k: r.v for r in df.collect()}[5] == 7
 
 
+def _two_step_latest_wins(t, batch, keys, order_col):
+    """The reference latest-wins MERGE in two steps: a null-safe left
+    join of the batch against the candidate stored rows, the ``stored
+    order IS NULL OR batch order > stored order`` filter, then a plain
+    upsert of the surviving rows (none: no commit)."""
+    stored = t.read_candidates(batch, keys[0]).select(
+        *keys, F.col(order_col).alias("__cur_ord")
+    )
+    newer = (
+        batch.join(stored, on=[batch[k].eqNullSafe(stored[k]) for k in keys], how="left")
+        .where(F.col("__cur_ord").isNull() | (F.col(order_col) > F.col("__cur_ord")))
+        .select(batch["*"])
+    )
+    if newer.take(1):
+        t.upsert(newer, keys)
+
+
+def _sorted_rows(df):
+    return sorted(((r.k, r.ts, r.v) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize(
+    "batch_rows, want",
+    [
+        (  # no NULL key: only the a-e file is touched, the x-y file is pruned
+            [
+                ("a", 200, "a1"),  # newer: batch wins
+                ("b", 50, "b1"),  # older: stored stays
+                ("c", 100, "c1"),  # tie: stored stays
+                ("d", 10, "d1"),  # stored NULL order: batch wins
+                ("e", None, "e1"),  # batch NULL order: stored stays
+                ("f", 1, "f1"),  # new key: inserted
+            ],
+            [
+                ("a", 200, "a1"), ("b", 100, "b0"), ("c", 100, "c0"), ("d", 10, "d1"),
+                ("e", 100, "e0"), ("f", 1, "f1"), ("x", 100, "x0"), ("y", 100, "y0"),
+                (None, 100, "n0"),
+            ],
+        ),
+        (  # a NULL key: every file is touched, the key matches null-safely
+            [(None, 200, "n1"), ("x", 50, "x1"), ("g", 5, "g1")],
+            [
+                ("a", 100, "a0"), ("b", 100, "b0"), ("c", 100, "c0"), ("d", None, "d0"),
+                ("e", 100, "e0"), ("g", 5, "g1"), ("x", 100, "x0"), ("y", 100, "y0"),
+                (None, 200, "n1"),
+            ],
+        ),
+    ],
+)
+def test_upsert_order_col_matches_two_step_latest_wins(spark, tmp_path, batch_rows, want):
+    """``upsert(order_col=...)`` is one conditional MERGE pass; it must
+    commit exactly what the two-step path (stale filter, then a plain
+    upsert) commits for every case of the winner rule."""
+    schema = "k string, ts long, v string"
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(
+        spark.createDataFrame(
+            [("a", 100, "a0"), ("b", 100, "b0"), ("c", 100, "c0"), ("d", None, "d0"),
+             ("e", 100, "e0")],
+            schema,
+        ).coalesce(1)
+    )
+    t.append(
+        spark.createDataFrame([("x", 100, "x0"), ("y", 100, "y0"), (None, 100, "n0")], schema)
+        .coalesce(1)
+    )
+    ref = t.clone_to(str(tmp_path / "ref"))
+    xy_file = next(f["path"] for f in t.manifest()["files"] if f["stats"]["k"]["min"] == "x")
+    batch = spark.createDataFrame(batch_rows, schema)
+
+    v = t.upsert(batch, keys=["k"], order_col="ts")
+    _two_step_latest_wins(ref, batch, ["k"], "ts")
+
+    assert v == 2 == t.latest_version()
+    assert _sorted_rows(t.read()) == _sorted_rows(ref.read()) == _sorted_rows(
+        spark.createDataFrame(want, schema)
+    )
+    batch_has_null_key = any(k is None for k, _, _ in batch_rows)
+    assert (xy_file in {f["path"] for f in t.manifest()["files"]}) != batch_has_null_key
+
+
 def test_append_with_schema_evolution(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "t"))
     t.create(spark.createDataFrame([(1, "a")], "id long, k string"))
@@ -695,6 +776,44 @@ def test_scd2_prunes_unmatched_files_after_bootstrap(spark, tmp_path):
     assert lo_files <= after, "low-range files must carry over by reference"
     assert t.read().where("id = 107 AND __is_current").count() == 1
     assert t.read().where("id = 107").count() == 2
+
+
+def test_scd2_upsert_never_widens_a_column_type(spark, tmp_path):
+    """``upsert_scd2`` casts like ``upsert``: a delta with a wider type
+    (``v long`` into ``v int``) that touches only some files must
+    commit the table's type, or the untouched ``int`` files and the
+    rewritten ``long`` file cannot be read back together."""
+    t = LakeTable(spark, str(tmp_path / "dim"))
+    t.create(
+        spark.createDataFrame(
+            [(i, i) for i in range(100)], "k bigint, v int"
+        )
+        .select(
+            "*",
+            F.timestamp_micros(F.lit(0)).alias("__valid_from"),
+            F.lit(None).cast("timestamp").alias("__valid_to"),
+            F.lit(True).alias("__is_current"),
+        )
+        .repartitionByRange(4, "k")
+    )
+    before = {f["path"] for f in t.manifest()["files"]}
+    assert len(before) == 4
+    t.upsert_scd2(
+        spark.createDataFrame([(5, 7, "2024-02-01 00:00:00")], "k long, v long, ts string")
+        .withColumn("ts", F.col("ts").cast("timestamp")),
+        keys=["k"],
+        change_ts="ts",
+    )
+    # 3 untouched files carried over
+    assert len(before & {f["path"] for f in t.manifest()["files"]}) == 3
+    df = t.read()
+    assert {f.name: f.dataType.simpleString() for f in df.schema.fields[:2]} == {
+        "k": "bigint",
+        "v": "int",
+    }
+    assert df.count() == 101
+    assert {r.v for r in df.where("k = 5").collect()} == {5, 7}
+    assert [r.v for r in t.read_asof("2024-03-01 00:00:00").where("k = 5").collect()] == [7]
 
 
 def test_delete_where_removes_rows_new_version(spark, events, tmp_path):
