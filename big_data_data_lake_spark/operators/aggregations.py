@@ -32,21 +32,9 @@ def multi_key_counts(df: DataFrame, keys: Sequence[str], count_col: str = "n") -
     return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(count_col))
 
 
-def group_means(df: DataFrame, keys: Sequence[str], cols: Sequence[str], ndigits: int = 2) -> DataFrame:
-    """A4 — per-group means of several measures (app.py:78-82)."""
-    aggs = [F.round(F.avg(c), ndigits).alias(f"avg_{c}") for c in cols]
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def kpis(df: DataFrame, *exprs: Column) -> DataFrame:
     """A5 — global scalar KPI row (app.py:234-239)."""
     return df.agg(*exprs)
-
-
-def exact_quantile(df: DataFrame, col: str, q: float) -> DataFrame:
-    """A7 — exact quantile (app.py:286-287). Matches DuckDB
-    quantile_cont; at 100 TB use percentile_approx instead."""
-    return df.select(F.expr(f"percentile({col}, {q})").alias(f"q{int(q * 100)}_{col}"))
 
 
 def mode_of(df: DataFrame, col: str) -> DataFrame:
@@ -59,15 +47,6 @@ def mode_of(df: DataFrame, col: str) -> DataFrame:
         .orderBy(F.col("__n").desc(), F.col(col).asc())
         .limit(1)
         .select(col)
-    )
-
-
-def ts_extent(df: DataFrame, ts_col: str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> DataFrame:
-    """A9 — min/max event-time banner (app.py:121-137), exported as
-    strings so oracles compare textually."""
-    return df.agg(
-        F.date_format(F.min(ts_col), fmt).alias("min_ts"),
-        F.date_format(F.max(ts_col), fmt).alias("max_ts"),
     )
 
 

@@ -122,17 +122,6 @@ def shingles(text: Column | str, n: int = 2) -> Column:
     return F.array_distinct(grams)
 
 
-def shingles_sql(n: int = 2, text: str = "text") -> str:
-    """DuckDB expression computing the same distinct shingles."""
-    if n == 1:
-        return f"list_distinct(string_split({text}, ' '))"
-    parts = " || ' ' || ".join(f"t[i+{j}]" for j in range(n))
-    return (
-        f"list_distinct(list_transform("
-        f"generate_series(1, len(t) - {n - 1}), i -> {parts}))"
-    )
-
-
 def _poly_hash(token: Column) -> Column:
     """Polynomial char hash mod 2^31-1 (portable token hash)."""
     return F.aggregate(
@@ -196,22 +185,6 @@ def shingle_hashes_sql(n: int = 2) -> str:
     return (
         f"list_distinct(list_transform(generate_series(1, len(th) - {n - 1}), i -> {acc}))"
     )
-
-
-def _affine(a: int, b: int):
-    def apply(h: Column) -> Column:
-        return (F.lit(a).cast("long") * h + F.lit(b)) % F.lit(MERSENNE_P)
-
-    return apply
-
-
-def minhash_signature(hash_arr: Column) -> list[Column]:
-    """N_MINHASH permutation-min values: min over tokens of
-    (a_k * h + b_k) mod p. Row-local — no shuffle."""
-    return [
-        F.array_min(F.transform(hash_arr, _affine(a, b))).alias(f"s{k}")
-        for k, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-    ]
 
 
 def minhash_bands(sig_prefix: str = "s") -> Column:

@@ -30,23 +30,6 @@ def in_range(col: Column | str, lo, hi) -> Column:
     return c.between(lo, hi)
 
 
-def suspicious_flight(
-    on_ground: str = "on_ground",
-    velocity: str = "velocity_ms",
-    altitude: str = "baro_altitude_m",
-    lat: str = "latitude",
-    lon: str = "longitude",
-) -> Column:
-    """F4 — compound OR anomaly predicate (app.py:317-325):
-    airborne AND (slow < 30 OR altitude < 0 OR missing coords)."""
-    return (~F.col(on_ground)) & (
-        (F.col(velocity) < 30)
-        | (F.col(altitude) < 0)
-        | F.col(lat).isNull()
-        | F.col(lon).isNull()
-    )
-
-
 def quantile_threshold(df: DataFrame, col: str, q: float = 0.99) -> DataFrame:
     """F5/M4 — keep rows at or above the q-quantile of ``col``
     (app.py:286-290).
@@ -59,9 +42,3 @@ def quantile_threshold(df: DataFrame, col: str, q: float = 0.99) -> DataFrame:
     """
     thresh = df.select(F.expr(f"percentile({col}, {q})").alias("__q"))
     return df.join(F.broadcast(thresh)).where(F.col(col) >= F.col("__q")).drop("__q")
-
-
-def valid_state_vector(arr: Column | str, min_len: int = 17) -> Column:
-    """F8 — positional-array validity (consumer.py:172-173)."""
-    c = F.col(arr) if isinstance(arr, str) else arr
-    return F.size(c) >= min_len

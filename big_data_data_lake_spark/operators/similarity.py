@@ -258,38 +258,6 @@ def ivf_assignments(
     return model.transform(fv).drop("__fv"), model
 
 
-def ivf_probe_lists(
-    queries: DataFrame,
-    model: "object",
-    vec_col: str = "v",
-    nprobe: int = 4,
-) -> DataFrame:
-    """Explode each query to its ``nprobe`` nearest centroid lists.
-    Centroids are tiny (n_lists × dim) → literal columns; the distance
-    argsort is a row-local expression, no crossJoin."""
-    import numpy as np
-
-    centers = np.asarray([np.asarray(c) for c in model.clusterCenters()])
-
-    def dist2(j: int) -> Column:
-        c = centers[j]
-        return F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.array(*[F.lit(float(x)) for x in c]),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    pairs = F.array(
-        *[F.struct(dist2(j).alias("d"), F.lit(j).alias("list_id")) for j in range(len(centers))]
-    )
-    probed = F.slice(F.array_sort(pairs), 1, nprobe)
-    return queries.withColumn("list_id", F.explode(F.transform(probed, lambda s: s.list_id)))
-
-
 # ---------------------------------------------------------------------------
 # Quantized Gram matrix (covariance / PCA building block)
 # ---------------------------------------------------------------------------

@@ -10,59 +10,13 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def positional_project(df: DataFrame, array_col: str, fields: Sequence[str]) -> DataFrame:
-    """P1 — positional array → named columns (consumer.py:66-100).
-
-    Tail fields beyond the array length come back null, matching the
-    reference's ``s[i] if len(s) > i else None``: ``element_at`` /
-    ``getItem`` return null past the end.
-    """
-    a = F.col(array_col)
-    return df.select(*[a.getItem(i).alias(name) for i, name in enumerate(fields)])
-
-
-def normalize_key(col: Column | str) -> Column:
-    """P2 — lower+trim join-key normalization (consumer.py:37,88)."""
-    return F.lower(F.trim(F.col(col) if isinstance(col, str) else col))
-
-
-def strip_str(col: Column | str) -> Column:
-    """P3 — trim with null pass-through (consumer.py:70)."""
-    return F.trim(F.col(col) if isinstance(col, str) else col)
-
-
-def fill_unknown(df: DataFrame, cols: Sequence[str], value="Unknown") -> DataFrame:
-    """P4 — constant null fill (process_silver.py:247-248)."""
-    return df.na.fill({c: value for c in cols})
-
-
-def drop_null_coords(df: DataFrame, cols: Sequence[str] = ("longitude", "latitude")) -> DataFrame:
-    """P5 — dropna subset (dashboard.py:68, app.py:55,283)."""
-    return df.na.drop(subset=list(cols))
-
-
-def epoch_to_ts(col: Column | str) -> Column:
-    """P6 — epoch seconds → timestamp (app.py:118)."""
-    return F.timestamp_seconds(F.col(col) if isinstance(col, str) else col)
 
 
 def extract_hour(ts: Column | str) -> Column:
     """P7 — hour-of-day from a timestamp (dashboard.py:90)."""
     return F.hour(F.col(ts) if isinstance(ts, str) else ts)
-
-
-def parse_file_ts(col: Column | str) -> Column:
-    """P8 — filename-embedded timestamp parse (dashboard.py:73-85)."""
-    return F.to_timestamp(F.col(col) if isinstance(col, str) else col, "yyyyMMdd_HHmmss")
-
-
-def format_ts(ts: Column | str, fmt: str = "yyyy-MM-dd HH:mm") -> Column:
-    """P8 — timestamp → display string (app.py:129-130)."""
-    return F.date_format(F.col(ts) if isinstance(ts, str) else ts, fmt)
 
 
 def bucketize(col: Column | str, bins: Sequence[float], labels: Sequence[str]) -> Column:
@@ -97,12 +51,3 @@ def marker_size(alt: Column | str, default: float = 5.0) -> Column:
     c = F.col(alt) if isinstance(alt, str) else alt
     scaled = clip(c / F.lit(1000.0) + F.lit(5.0), 5.0, 20.0)
     return F.when(c.isNull() | F.isnan(c), F.lit(default)).otherwise(scaled)
-
-
-def label_map(col: Column | str, mapping: dict, default=None) -> Column:
-    """P17 — small dict lookup as a when-chain (app.py:86-94)."""
-    c = F.col(col) if isinstance(col, str) else col
-    expr = F.lit(default)
-    for k, v in mapping.items():
-        expr = F.when(c == F.lit(k), F.lit(v)).otherwise(expr)
-    return expr

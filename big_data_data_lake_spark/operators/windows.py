@@ -77,16 +77,6 @@ def topk_per_group(
     )
 
 
-def running_sum(df: DataFrame, keys: Sequence[str], order_col: str, value_col: str, out: str = "running") -> DataFrame:
-    """Cumulative sum per key in event order."""
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(out, F.sum(value_col).over(w))
-
-
 def global_rank(
     df: DataFrame,
     order_cols: Sequence[str],
@@ -269,25 +259,6 @@ def exact_ntile_grouped(
         .otherwise(r + idiv(rank0 - split, q))
         + 1
     ).cast("int")
-
-
-def sessionize(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    gap_seconds: int,
-    session_col: str = "session_id",
-) -> DataFrame:
-    """Gap-based sessionization: a new session starts when the gap to
-    the previous event exceeds ``gap_seconds``. lag + cumulative sum —
-    two window passes over one shuffle partitioning."""
-    w = Window.partitionBy(key).orderBy(ts_col)
-    gap = F.col(ts_col).cast("long") - F.lag(F.col(ts_col).cast("long")).over(w)
-    new_session = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
-    return df.withColumn(
-        session_col,
-        F.sum(new_session).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
 
 
 def global_cummax_prev(

@@ -36,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -232,14 +233,16 @@ def _to_table_types(df: DataFrame, schema: StructType) -> DataFrame:
 
 
 def _latest_wins(stored: DataFrame, batch: DataFrame, keys: list[str], order_col: str):
-    """One conditional MERGE pass (``WHEN MATCHED AND batch.order >
-    stored.order UPDATE``, ``WHEN NOT MATCHED INSERT``): union the
-    ``stored`` rows with the ``batch`` rows, tagged by side, and keep
-    one row per key of the batch with a ``row_number`` window. The
-    batch row wins when the stored order is NULL or lower; the stored
-    row wins ties and against a NULL batch order. The window's
-    ``partitionBy`` groups NULL keys, so keys match null-safely, and
-    stored rows of keys the batch lacks pass through unchanged.
+    """The ``resolve`` of ``upsert(order_col=...)`` for
+    ``LakeTable._merge``, one conditional MERGE pass (``WHEN MATCHED
+    AND batch.order > stored.order UPDATE``, ``WHEN NOT MATCHED
+    INSERT``): union the ``stored`` rows with the ``batch`` rows,
+    tagged by side, and keep one row per key of the batch with a
+    ``row_number`` window. The batch row wins when the stored order is
+    NULL or lower; the stored row wins ties and against a NULL batch
+    order. The window's ``partitionBy`` groups NULL keys, so keys match
+    null-safely, and stored rows of keys the batch lacks pass through
+    unchanged.
 
     Returns ``(merged, any_won)``: ``any_won()``, called after
     ``merged`` is written, says whether a batch row won. The count is
@@ -809,20 +812,6 @@ class LakeTable:
             files = [f for f in files if _may_overlap(f, stat_filter)]
         return self._read_files(schema, files)
 
-    def read_candidates(self, df: DataFrame, key: str) -> DataFrame:
-        """The latest snapshot's rows that may share a ``key`` value
-        with ``df``: the rows of every file ``_key_pruner`` cannot rule
-        out — all files when ``df`` holds a NULL key, and none (no read
-        at all) when ``df`` is empty. Pruning-only, like ``read``'s
-        filters: callers still join on the exact keys, null-safely.
-        Its caller is ``streaming.ingest.lake_aggregate_sink``, which
-        sums stored and batch counts; the latest-wins upsert sink reads
-        its candidates inside ``upsert(order_col=...)`` instead."""
-        man = self.manifest()
-        touch = _key_pruner(df, key)
-        files = [f for f in man["files"] if touch(f)] if touch else []
-        return self._read_files(StructType.fromJson(man["schema_json"]), files)
-
     @staticmethod
     def _base_of(path: str, partition_cols: list[str]) -> str:
         """The partition-discovery base for one data file: the path up
@@ -851,7 +840,7 @@ class LakeTable:
         then column order and partition-column types are pinned back
         (path-derived partition values are inferred; columns newer
         than a file read back as nulls). Every internal reader of
-        manifest files — read() and upsert()'s touched-file path —
+        manifest files — read() and _merge()'s touched-file read —
         must go through this, or a schema-evolved table breaks them.
 
         Files are grouped by their partition-discovery base
@@ -1016,6 +1005,65 @@ class LakeTable:
         man = {**target, **self._carry(latest, {"restored_from": version})}
         return self._commit(v + 1, man, "restore")
 
+    def _merge(
+        self,
+        df: DataFrame,
+        keys: list[str],
+        resolve,
+        operation: str,
+        extra: dict | None = None,
+        touch_all=None,
+    ) -> int:
+        """The one copy-on-write MERGE step of ``upsert``,
+        ``upsert_scd2`` and ``accumulate``; each supplies only its
+        match clause, ``resolve(stored, batch, keys) -> (merged,
+        commit_if)``.
+
+        From one snapshot: ``df`` is cast to the table's types
+        (``_to_table_types``) and persisted as the batch, released when
+        the commit ends, so the key range, the match and the write all
+        read it once and the rewrite sizing sees its real cached size.
+        Only files whose zone-map range on ``keys[0]`` can hold a batch
+        key are touched (all of them when the batch holds a NULL key,
+        since footer min/max excludes nulls); the rest carry over by
+        reference. The touched files are read once, through the
+        evolved-schema read path, as ``stored``; ``resolve`` derives the
+        rows that replace them, and ``_commit_files`` writes and commits
+        those. A ``commit_if`` other than None is called after the write
+        and vetoes the commit by returning False.
+
+        An empty batch touches no file and writes none, but still
+        commits a version, so its ``extra`` (a streaming ``batch_id``)
+        is recorded. ``touch_all(schema)``, when given and true for the
+        snapshot's schema, touches every file instead, empty batch or
+        not (the SCD2 bootstrap adds columns to every row).
+
+        A merge that prunes sizes its rewrite to the bytes it replaces
+        plus the batch's bytes (the latter keeps a bulk MERGE from
+        collapsing into too few write tasks). A merge that touches no
+        file is append-shaped and keeps the batch's own partitioning,
+        and a touch-every-file merge keeps its input file layout."""
+        v, prev = self._snapshot()
+        schema = StructType.fromJson(prev["schema_json"])
+        batch = _to_table_types(df, schema).persist()
+        try:
+            everything = touch_all is not None and touch_all(schema)
+            touch = (lambda f: True) if everything else _key_pruner(batch, keys[0])
+            if touch is None:
+                return self._commit_files(
+                    v, prev, prev["files"], None, operation, extra, schema
+                )
+            touched, keep = _split_files(prev["files"], touch)
+            merged, commit_if = resolve(self._read_files(schema, touched), batch, keys)
+            if touched and not everything:
+                batch_bytes = {"bytes": self._plan_size_estimate(batch), "path": ""}
+                merged = merged.coalesce(self._rewrite_partitions(touched + [batch_bytes]))
+            return self._commit_files(
+                v, prev, keep, merged, operation, extra, commit_if=commit_if
+            )
+        finally:
+            batch.unpersist()
+
     def upsert(
         self,
         df: DataFrame,
@@ -1023,9 +1071,9 @@ class LakeTable:
         extra: dict | None = None,
         order_col: str | None = None,
     ) -> int:
-        """Copy-on-write MERGE: rows in ``df`` replace same-key rows;
-        new keys append. Only files whose zone-map range on
-        ``keys[0]`` can intersect the incoming key range are
+        """Copy-on-write MERGE (``_merge``): rows in ``df`` replace
+        same-key rows; new keys append. Only files whose zone-map range
+        on ``keys[0]`` can intersect the incoming key range are
         rewritten — untouched files carry over into the new manifest
         by reference, which is what keeps a point-update cheap on a
         100 TB table. Exactness comes from the key match (the
@@ -1033,16 +1081,14 @@ class LakeTable:
         pruning is a strict superset of the files that contain
         matches.
 
-        NULL keys are matched null-safely (``<=>``): parquet footer
-        min/max excludes nulls, so when the incoming batch carries a
-        NULL key the zone-map cannot prove any file null-free and
-        pruning is disabled for that commit — correctness over
-        pruning; a plain equi anti-join would leave the stored
-        NULL-key row in place and duplicate it on every upsert.
-
-        Columns the table already has are cast to the table's type
-        first (``_to_table_types``), so a wider frame type never widens
-        the committed schema.
+        NULL keys are matched null-safely (``<=>``), with pruning
+        disabled for a batch that holds one: a plain equi anti-join
+        would leave the stored NULL-key row in place and duplicate it
+        on every upsert. Columns the table already has are cast to the
+        table's type first, so a wider frame type never widens the
+        committed schema; new ``df`` columns widen it (additive
+        evolution, as in a ``merge_schema`` append) and columns ``df``
+        lacks null-fill.
 
         ``order_col`` makes the MERGE conditional (latest wins): ``df``
         should hold one row per key, and its row replaces the stored
@@ -1050,55 +1096,44 @@ class LakeTable:
         row has its key, when the stored ``order_col`` is NULL, or when
         its ``order_col`` is greater; the stored row stays on a tie and
         against a NULL batch order. This is one pass over the touched
-        files (``_latest_wins``), so ``df`` is best persisted by the
-        caller: it is read for the key range and again for the write.
-        When no batch row wins (an all-stale or empty batch) nothing is
-        committed: the files just written are deleted, and the return
-        value is the unchanged latest version. Without
-        ``order_col`` every ``df`` row wins, via a null-safe anti-join
-        of the touched files against ``df``'s keys."""
-        v, prev = self._snapshot()
-        schema = StructType.fromJson(prev["schema_json"])
-        df = _to_table_types(df, schema)
-        touch = _key_pruner(df, keys[0])
-        if touch is None:
-            if order_col is not None:
-                return v  # empty batch: no row can win
-            return self._commit_files(v, prev, prev["files"], None, "upsert", extra, schema)
-        touched, keep = _split_files(prev["files"], touch)
-        # go through the evolved-schema read path: touched files may
-        # pre-date added columns (a plain parquet read of them would
-        # fail the declared-schema select); no touched file reads as an
-        # empty frame
-        old = self._read_files(schema, touched)
-        any_won = None
+        files (``_latest_wins``). When a non-empty batch has no winning
+        row (all stale) nothing is committed: the files just written
+        are deleted, and the return value is the unchanged latest
+        version. Without ``order_col`` every ``df`` row wins, via a
+        null-safe anti-join of the touched files against ``df``'s keys.
+
+        An empty ``df`` commits a version that writes no file, with or
+        without ``order_col``, so ``extra`` is recorded. ``df`` need not
+        be persisted by the caller: ``_merge`` persists the batch."""
+
+        def replace(stored: DataFrame, batch: DataFrame, keys: list[str]):
+            incoming = batch.select(*keys)
+            cond = [stored[k].eqNullSafe(incoming[k]) for k in keys]
+            merged = stored.join(incoming, on=cond, how="left_anti")
+            return merged.unionByName(batch, allowMissingColumns=True), None
+
         if order_col is None:
-            incoming = df.select(*keys)
-            cond = [old[k].eqNullSafe(incoming[k]) for k in keys]
-            # columns df lacks null-fill from the declared schema; new
-            # df columns widen it (additive evolution, as in
-            # merge_schema append) — the manifest schema is taken from
-            # the union, so an upsert can never silently narrow the table
-            rewritten = old.join(incoming, on=cond, how="left_anti").unionByName(
-                df, allowMissingColumns=True
-            )
-        else:
-            rewritten, any_won = _latest_wins(old, df, keys, order_col)
-        if touched:
-            # size the rewrite to the bytes it replaces plus the
-            # incoming batch's estimated bytes (the latter keeps a
-            # bulk MERGE from collapsing into too few write tasks);
-            # when nothing is touched the incoming frame keeps its own
-            # partitioning — an all-new-keys upsert is append-shaped
-            # and the caller controls its layout
-            n_out = self._rewrite_partitions(
-                touched
-                + [{"bytes": self._plan_size_estimate(df), "path": ""}]
-            )
-            rewritten = rewritten.coalesce(n_out)
-        return self._commit_files(
-            v, prev, keep, rewritten, "upsert", extra, commit_if=any_won
-        )
+            return self._merge(df, keys, replace, "upsert", extra)
+        return self._merge(df, keys, partial(_latest_wins, order_col=order_col), "upsert", extra)
+
+    def accumulate(
+        self, df: DataFrame, keys: list[str], count_col: str, extra: dict | None = None
+    ) -> int:
+        """Copy-on-write additive MERGE (``_merge``), the incremental
+        aggregate: ``df`` holds ``keys`` and ``count_col`` (the table's
+        columns), and each stored count of a batch key grows by the
+        batch's count; new keys insert. The touched files are unioned
+        with the batch and summed per key, so stored rows of keys the
+        batch lacks pass through unchanged, NULL keys group null-safely,
+        and files outside the batch's key range carry over by
+        reference. The sum keeps the table's ``count_col`` type. An
+        empty ``df`` commits a version that writes no file."""
+
+        def add(stored: DataFrame, batch: DataFrame, keys: list[str]):
+            n = F.sum(count_col).cast(batch.schema[count_col].dataType).alias(count_col)
+            return stored.unionByName(batch).groupBy(*keys).agg(n), None
+
+        return self._merge(df, keys, add, "accumulate", extra)
 
     def _probe_files(self, schema, files: list[dict], match) -> tuple[list, list]:
         """Split ``files`` into (touched, carried) for a copy-on-write
@@ -1195,72 +1230,64 @@ class LakeTable:
         change_ts: str,
         extra: dict | None = None,
     ) -> int:
-        """Type-2 slowly-changing-dimension MERGE: instead of
-        replacing a matched row (``upsert``'s latest-wins), the stored
-        CURRENT row for each incoming key is CLOSED (``__valid_to`` =
-        incoming ``change_ts``, ``__is_current`` = false) and the
-        incoming row opens a new open-ended version. Point-in-time
-        reads go through ``read_asof``; history is never destroyed,
-        and unlike manifest time travel it survives VACUUM because the
-        history lives in the DATA, not the version chain.
+        """Type-2 slowly-changing-dimension MERGE (``_merge``): instead
+        of replacing a matched row (``upsert``'s latest-wins), the
+        stored CURRENT row for each incoming key is CLOSED
+        (``__valid_to`` = incoming ``change_ts``, ``__is_current`` =
+        false) and the incoming row opens a new open-ended version.
+        Point-in-time reads go through ``read_asof``; history is never
+        destroyed, and unlike manifest time travel it survives VACUUM
+        because the history lives in the DATA, not the version chain.
 
-        First call on a table without the SCD2 columns bootstraps them
-        (stored rows become current, valid from the epoch). Physically
-        the same copy-on-write shape as ``upsert``: zone-map pruning on
+        The first call on a table whose snapshot lacks the SCD2 columns
+        bootstraps them: it touches every file, and the stored rows
+        become current, valid from the epoch. Afterwards it is the same
+        copy-on-write shape as ``upsert``: zone-map pruning on
         ``keys[0]`` rewrites only files that can contain a matched
         row; closed-history files outside the incoming key range carry
         over by reference — what keeps a daily dimension delta cheap
         when history is 100x the delta. NULL keys match null-safely,
-        with pruning disabled for that commit (footer stats exclude
-        nulls), exactly as in ``upsert``. As in ``upsert`` too, columns
-        the table already has are cast to the table's types first
-        (``_to_table_types``), so a wider frame type never widens the
-        committed schema."""
-        v, prev = self._snapshot()
-        schema = StructType.fromJson(prev["schema_json"])
-        df = _to_table_types(df, schema)
+        with pruning disabled for that commit, columns the table
+        already has are cast to its types, and after the bootstrap an
+        empty batch commits a version that writes no file, all exactly
+        as in ``upsert``."""
         vf, vt, cur = self.SCD2_COLS
-        # a bootstrap rewrites everything (every file gains the SCD2
-        # columns); afterwards only key-range-matching files rewrite
-        bootstrapped = vf not in schema.names
-        touch = (lambda f: True) if bootstrapped else _key_pruner(df, keys[0])
-        if touch is None:
-            return self._commit_files(
-                v, prev, prev["files"], None, "upsert_scd2", extra, schema
-            )
-        touched, keep = _split_files(prev["files"], touch)
-        stored = self._read_files(schema, touched)
-        if bootstrapped:
-            stored = stored.select(
+
+        def close_and_open(stored: DataFrame, batch: DataFrame, keys: list[str]):
+            if vf not in stored.columns:  # the bootstrap
+                stored = stored.select(
+                    "*",
+                    F.timestamp_micros(F.lit(0)).alias(vf),
+                    F.lit(None).cast("timestamp").alias(vt),
+                    F.lit(True).alias(cur),
+                )
+            incoming = batch.select(
                 "*",
-                F.timestamp_micros(F.lit(0)).alias(vf),
+                F.col(change_ts).cast("timestamp").alias(vf),
                 F.lit(None).cast("timestamp").alias(vt),
                 F.lit(True).alias(cur),
             )
+            # per-key close timestamp (max over the batch, so a batch
+            # with several versions of one key closes the stored row once)
+            close_ts = batch.groupBy(*keys).agg(
+                F.max(F.col(change_ts).cast("timestamp")).alias("__close_ts")
+            )
+            cond = [stored[k].eqNullSafe(close_ts[k]) for k in keys]
+            joined = stored.join(F.broadcast(close_ts), on=cond, how="left")
+            should_close = F.col(cur) & F.col("__close_ts").isNotNull()
+            closed = joined.select(
+                *[stored[c] for c in stored.columns if c not in (vt, cur)],
+                F.when(should_close, F.col("__close_ts"))
+                .otherwise(stored[vt])
+                .alias(vt),
+                F.when(should_close, F.lit(False)).otherwise(stored[cur]).alias(cur),
+            )
+            return closed.unionByName(incoming, allowMissingColumns=True), None
 
-        incoming = df.select(
-            "*",
-            F.col(change_ts).cast("timestamp").alias(vf),
-            F.lit(None).cast("timestamp").alias(vt),
-            F.lit(True).alias(cur),
+        return self._merge(
+            df, keys, close_and_open, "upsert_scd2", extra,
+            touch_all=lambda schema: vf not in schema.names,
         )
-        # per-key close timestamp (max over the batch, so a batch with
-        # several versions of one key closes the stored row once)
-        close_ts = df.groupBy(*keys).agg(
-            F.max(F.col(change_ts).cast("timestamp")).alias("__close_ts")
-        )
-        cond = [stored[k].eqNullSafe(close_ts[k]) for k in keys]
-        joined = stored.join(F.broadcast(close_ts), on=cond, how="left")
-        should_close = F.col(cur) & F.col("__close_ts").isNotNull()
-        closed = joined.select(
-            *[stored[c] for c in stored.columns if c not in (vt, cur)],
-            F.when(should_close, F.col("__close_ts"))
-            .otherwise(stored[vt])
-            .alias(vt),
-            F.when(should_close, F.lit(False)).otherwise(stored[cur]).alias(cur),
-        )
-        rewritten = closed.unionByName(incoming, allowMissingColumns=True)
-        return self._commit_files(v, prev, keep, rewritten, "upsert_scd2", extra)
 
     def read_asof(self, t, version: int | None = None) -> DataFrame:
         """Point-in-time view of an SCD2 table: rows valid at ``t``

@@ -561,13 +561,10 @@ def lake_upsert_sink(
     Per micro-batch:
       1. collapse the batch to one deterministic winner per key
          (max ``order_col``, ties by arrival order within the window
-         dedup — operators/windows.latest_per_key) and persist the
-         winners once: every later action reuses them instead of
-         re-deriving the parse, the enrichment join and the window
-         (Spark's pattern for several actions on one foreachBatch
-         frame), and they are released when the commit ends;
+         dedup — operators/windows.latest_per_key);
       2. one conditional copy-on-write MERGE,
-         ``LakeTable.upsert(order_col=...)``: it reads the files whose
+         ``LakeTable.upsert(order_col=...)``: it persists the winners
+         once for its key range, match and write, reads the files whose
          zone map on keys[0] can hold a batch key (all files when the
          batch has a NULL key) once, and keeps per key the stored row
          or the winner, whichever is newer — NULL keys match
@@ -586,17 +583,14 @@ def lake_upsert_sink(
     from ..operators.windows import latest_per_key
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        winners = latest_per_key(batch_df, keys, order_col).persist()
+        winners = latest_per_key(batch_df, keys, order_col)
         table = LakeTable(batch_df.sparkSession, table_path)
-        try:
-            _commit_batch(
-                table,
-                batch_id,
-                lambda extra: table.create(winners, extra=extra),
-                lambda extra: table.upsert(winners, keys, extra=extra, order_col=order_col),
-            )
-        finally:
-            winners.unpersist()
+        _commit_batch(
+            table,
+            batch_id,
+            lambda extra: table.create(winners, extra=extra),
+            lambda extra: table.upsert(winners, keys, extra=extra, order_col=order_col),
+        )
 
     return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
 
@@ -618,17 +612,16 @@ def lake_aggregate_sink(
     ever re-reading history.
 
     Per micro-batch:
-      1. the batch reduces to per-key delta counts (micro-batch-sized),
-         persisted once for the empty check, the key range, the semi
-         join and the MERGE, and released when the commit ends;
-      2. the stored counts for ONLY the touched keys come back via a
-         batch-keyed semi join against ``LakeTable.read_candidates``
-         (the zone-map-pruned snapshot files that can hold a batch
-         key). The join is null-safe (``<=>``), or the stored NULL-key
-         count never matches and the key re-inserts fresh every batch
-         (silent divergence);
-      3. stored + delta sum per key and copy-on-write MERGE in place
-         (untouched files carry over by reference).
+      1. an empty batch is skipped: it adds nothing;
+      2. the batch reduces to per-key delta counts (micro-batch-sized);
+      3. one additive copy-on-write MERGE, ``LakeTable.accumulate``:
+         it persists the deltas once, reads the files whose zone map on
+         key_cols[0] can hold a batch key (all files when the batch has
+         a NULL key) once, and sums stored + delta per key. The sum
+         groups NULL keys together, or the stored NULL-key count would
+         never match and the key would re-insert fresh every batch
+         (silent divergence). Files outside the key range carry over by
+         reference.
 
     Exactly-once: checkpointed source offsets plus the recorded
     ``batch_id`` high-water mark (``_commit_batch``) — a replayed batch
@@ -638,33 +631,18 @@ def lake_aggregate_sink(
     from ..sources.metadata import LakeTable
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.take(1):
+            return
         delta = batch_df.groupBy(*key_cols).agg(
             F.count(F.lit(1)).cast("bigint").alias(count_col)
-        ).persist()
+        )
         table = LakeTable(batch_df.sparkSession, table_path)
-
-        def write(extra: dict) -> None:
-            stored = table.read_candidates(delta, key_cols[0])
-            batch_keys = F.broadcast(delta.select(*key_cols))
-            current = stored.join(
-                batch_keys,
-                on=[stored[k].eqNullSafe(batch_keys[k]) for k in key_cols],
-                how="semi",
-            )
-            merged = (
-                current.unionByName(delta)
-                .groupBy(*key_cols)
-                .agg(F.sum(count_col).cast("bigint").alias(count_col))
-            )
-            table.upsert(merged, key_cols, extra=extra)
-
-        try:
-            if delta.take(1):  # else an empty batch: nothing to add
-                _commit_batch(
-                    table, batch_id, lambda extra: table.create(delta, extra=extra), write
-                )
-        finally:
-            delta.unpersist()
+        _commit_batch(
+            table,
+            batch_id,
+            lambda extra: table.create(delta, extra=extra),
+            lambda extra: table.accumulate(delta, key_cols, count_col, extra=extra),
+        )
 
     return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
 
@@ -687,7 +665,8 @@ def lake_scd2_sink(
     Per micro-batch the batch collapses to its LATEST change per key
     (earlier same-batch changes are superseded before touching the
     table — one batch-sized aggregation), then merges copy-on-write
-    with zone-map pruning. Exactly-once via the recorded ``batch_id``
+    with zone-map pruning (``upsert_scd2``, which persists the winners
+    once for all its reads). Exactly-once via the recorded ``batch_id``
     high-water mark (``_commit_batch``), the same replay contract as
     lake_upsert_sink: a replayed batch is skipped before any
     arithmetic, so history can never double-close or duplicate

@@ -282,10 +282,10 @@ def test_upsert_never_widens_a_column_type(spark, tmp_path):
 
 def _two_step_latest_wins(t, batch, keys, order_col):
     """The reference latest-wins MERGE in two steps: a null-safe left
-    join of the batch against the candidate stored rows, the ``stored
-    order IS NULL OR batch order > stored order`` filter, then a plain
-    upsert of the surviving rows (none: no commit)."""
-    stored = t.read_candidates(batch, keys[0]).select(
+    join of the batch against the stored rows, the ``stored order IS
+    NULL OR batch order > stored order`` filter, then a plain upsert of
+    the surviving rows (none: no commit)."""
+    stored = t.read().select(
         *keys, F.col(order_col).alias("__cur_ord")
     )
     newer = (
@@ -358,6 +358,62 @@ def test_upsert_order_col_matches_two_step_latest_wins(spark, tmp_path, batch_ro
         spark.createDataFrame(want, schema)
     )
     batch_has_null_key = any(k is None for k, _, _ in batch_rows)
+    assert (xy_file in {f["path"] for f in t.manifest()["files"]}) != batch_has_null_key
+
+
+def _semi_join_then_upsert(t, batch, keys, count_col):
+    """The reference additive MERGE in two steps: the stored rows of
+    the batch's keys (null-safe semi join), summed per key with the
+    batch, then a plain upsert of the sums."""
+    stored = t.read()
+    batch_keys = batch.select(*keys)
+    current = stored.join(
+        batch_keys, on=[stored[k].eqNullSafe(batch_keys[k]) for k in keys], how="semi"
+    )
+    t.upsert(
+        current.unionByName(batch)
+        .groupBy(*keys)
+        .agg(F.sum(count_col).cast("bigint").alias(count_col)),
+        keys,
+    )
+
+
+@pytest.mark.parametrize(
+    "batch_rows, want",
+    [
+        (  # no NULL key: only the a-b file is touched, the x-y file is pruned
+            [("a", 1), ("c", 2)],
+            [("a", 3), ("b", 1), ("c", 2), ("x", 3), ("y", 5), (None, 4)],
+        ),
+        (  # a NULL key: every file is touched, the NULL key sums null-safely
+            [(None, 2), ("x", 1), ("z", 1)],
+            [("a", 2), ("b", 1), ("x", 4), ("y", 5), ("z", 1), (None, 6)],
+        ),
+    ],
+)
+def test_accumulate_matches_semi_join_then_upsert(spark, tmp_path, batch_rows, want):
+    """``accumulate`` is one additive MERGE pass; it must commit what
+    the two-step path (semi join of the stored counts, sum, plain
+    upsert) commits, sum a NULL key null-safely, and carry a file
+    outside the batch's key range over by path."""
+    schema = "k string, n bigint"
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame([("a", 2), ("b", 1), (None, 4)], schema).coalesce(1))
+    t.append(spark.createDataFrame([("x", 3), ("y", 5)], schema).coalesce(1))
+    ref = t.clone_to(str(tmp_path / "ref"))
+    xy_file = next(f["path"] for f in t.manifest()["files"] if f["stats"]["k"]["min"] == "x")
+    batch = spark.createDataFrame(batch_rows, schema)
+
+    v = t.accumulate(batch, ["k"], "n")
+    _semi_join_then_upsert(ref, batch, ["k"], "n")
+
+    def rows(df):
+        return sorted(((r.k, r.n) for r in df.collect()), key=repr)
+
+    assert v == 2 == t.latest_version()
+    assert rows(t.read()) == rows(ref.read()) == sorted(want, key=repr)
+    assert t.read().schema == ref.read().schema
+    batch_has_null_key = any(k is None for k, _ in batch_rows)
     assert (xy_file in {f["path"] for f in t.manifest()["files"]}) != batch_has_null_key
 
 
@@ -778,6 +834,31 @@ def test_scd2_prunes_unmatched_files_after_bootstrap(spark, tmp_path):
     assert t.read().where("id = 107").count() == 2
 
 
+def test_scd2_bootstrap_rewrites_every_file(spark, tmp_path):
+    """The bootstrap merge adds the SCD2 columns, so it must rewrite
+    every file, not only those in the batch's key range: a carried-over
+    file would read back NULL for ``__is_current`` and drop out of every
+    current-row read."""
+    t = LakeTable(spark, str(tmp_path / "dim"))
+    schema = "id long, val string"
+    t.create(spark.createDataFrame([(i, f"v{i}") for i in range(10)], schema).coalesce(1))
+    t.append(
+        spark.createDataFrame([(i, f"v{i}") for i in range(100, 110)], schema).coalesce(1)
+    )
+    before = {f["path"] for f in t.manifest()["files"]}
+    v = t.upsert_scd2(
+        spark.createDataFrame(
+            [(105, "NEW", "2024-02-01 00:00:00")], "id long, val string, ts string"
+        ).withColumn("ts", F.col("ts").cast("timestamp")),
+        keys=["id"],
+        change_ts="ts",
+    )
+    assert not before & {f["path"] for f in t.manifest(v)["files"]}
+    current = t.read().where("__is_current")
+    assert sorted(r.id for r in current.collect()) == list(range(10)) + list(range(100, 110))
+    assert current.where("id < 10 AND __valid_from = timestamp_micros(0)").count() == 10
+
+
 def test_scd2_upsert_never_widens_a_column_type(spark, tmp_path):
     """``upsert_scd2`` casts like ``upsert``: a delta with a wider type
     (``v long`` into ``v int``) that touches only some files must
@@ -1121,7 +1202,7 @@ def test_merge_schema_new_column_committed_nullable(spark, tmp_path):
     assert got == {0: None, 1: None, 2: 7, 3: 7}
 
 
-@pytest.mark.parametrize("op", ["upsert", "upsert_scd2"])
+@pytest.mark.parametrize("op", ["upsert", "upsert_order_col", "upsert_scd2", "accumulate"])
 def test_empty_merge_batch_carries_every_file(spark, tmp_path, op):
     """An empty MERGE batch has no key range and no NULL key, so it
     touches no file: every file carries over by path, no file is
@@ -1132,14 +1213,22 @@ def test_empty_merge_batch_carries_every_file(spark, tmp_path, op):
         [(i, f"v{i}", "2024-01-01") for i in range(2000)],
         "id long, val string, ts string",
     )
+    if op == "accumulate":
+        df = df.select("id", F.lit(1).cast("bigint").alias("n"))
     t.create(df.repartition(3))
-    if op == "upsert":
-        def merge(batch, **kw):
-            return t.upsert(batch, keys=["id"], **kw)
-    else:
-        def merge(batch, **kw):
-            return t.upsert_scd2(batch, keys=["id"], change_ts="ts", **kw)
-
+    merge = {
+        "upsert": lambda batch, **kw: t.upsert(batch, keys=["id"], **kw),
+        "upsert_order_col": lambda batch, **kw: t.upsert(
+            batch, keys=["id"], order_col="ts", **kw
+        ),
+        "upsert_scd2": lambda batch, **kw: t.upsert_scd2(
+            batch, keys=["id"], change_ts="ts", **kw
+        ),
+        "accumulate": lambda batch, **kw: t.accumulate(
+            batch, keys=["id"], count_col="n", **kw
+        ),
+    }[op]
+    if op == "upsert_scd2":
         merge(df.limit(0))  # the first SCD2 merge adds the history columns
     before = t.manifest()
     assert len(before["files"]) >= 3
@@ -1151,7 +1240,10 @@ def test_empty_merge_batch_carries_every_file(spark, tmp_path, op):
     assert t.read().count() == 2000
 
 
-@pytest.mark.parametrize("op", ["append", "overwrite", "upsert", "delete_matching"])
+@pytest.mark.parametrize(
+    "op",
+    ["append", "overwrite", "upsert", "upsert_order_col", "upsert_scd2", "delete_matching"],
+)
 def test_stale_snapshot_commit_fails_instead_of_dropping_files(
     spark, tmp_path, monkeypatch, op
 ):
@@ -1175,14 +1267,19 @@ def test_stale_snapshot_commit_fails_instead_of_dropping_files(
         return write_files(df, partition_by)
 
     monkeypatch.setattr(writer, "_write_files", racing_write)
-    args = {
-        "append": (rows(2000, 10),),
-        "overwrite": (rows(2000, 10),),
-        "upsert": (rows(50, 10), ["id"]),
-        "delete_matching": (rows(0, 10), ["id"]),
+    # "w" sorts after every stored "v<i>", so the order_col batch wins
+    newer = rows(50, 10).withColumn("val", F.lit("w"))
+    change = rows(50, 10).withColumn("ts", F.lit("2024-01-01").cast("timestamp"))
+    mutate = {
+        "append": lambda: writer.append(rows(2000, 10)),
+        "overwrite": lambda: writer.overwrite(rows(2000, 10)),
+        "upsert": lambda: writer.upsert(rows(50, 10), ["id"]),
+        "upsert_order_col": lambda: writer.upsert(newer, ["id"], order_col="val"),
+        "upsert_scd2": lambda: writer.upsert_scd2(change, ["id"], "ts"),
+        "delete_matching": lambda: writer.delete_matching(rows(0, 10), ["id"]),
     }[op]
     with pytest.raises(FileExistsError, match="version 1"):
-        getattr(writer, op)(*args)
+        mutate()
     assert competitor.latest_version() == 1
     got = {r.id for r in competitor.read().collect()}
     assert got == set(range(100)) | set(range(1000, 1050))

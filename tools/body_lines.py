@@ -8,7 +8,7 @@ Usage:
     python tools/body_lines.py FILE [QUALNAME ...]
 
 QUALNAME is a dotted name such as ``lake_upsert_sink`` or
-``LakeTable.read_candidates``. With none given, every function that is
+``LakeTable.accumulate``. With none given, every function that is
 not nested in another function is counted. Prints one
 ``<lines>  <qualname>`` row per function and a total.
 """
