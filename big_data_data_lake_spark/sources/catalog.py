@@ -13,12 +13,27 @@ Source-operator coverage (SURVEY §2.1):
 - S6 option'd CSV (``read_csv`` below: quotechar, column pruning)
 - S7 JSONL with explicit schema (``read_jsonl``)
 - S11 pathGlobFilter
+
+Parquet schema inference is a Spark job per read. ``load_table``
+therefore infers each table's schema once per session and reads it back
+with that schema afterwards: the cache key is the absolute path, the
+fingerprint of the files it resolves to (``(size, mtime_ns)`` of a
+single file, or the sorted ``(name, size, mtime_ns)`` of every data
+file under a directory) and the session values that change parquet
+inference. A rewritten or added file, or a flipped inference setting,
+misses and infers again. A path ``os.stat`` cannot see (``hdfs://``,
+``s3a://``) is inferred on every read, as Spark does by itself.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES = (
     "region",
@@ -34,8 +49,66 @@ TABLES = (
 )
 
 
+# session values that change the schema parquet inference yields
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# per session: (absolute path, inference confs) -> (fingerprint, schema);
+# a changed fingerprint replaces its path's entry, so the map holds one
+# schema per table and setting, not one per file version
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+
+
+def _fingerprint(path: str):
+    """What a parquet read of ``path`` resolves to: ``(size,
+    mtime_ns)`` of a single file, or the sorted ``(relative name, size,
+    mtime_ns)`` of every data file under a directory (names starting
+    with ``_`` or ``.`` are skipped, as Spark's listing skips them).
+    None when ``os.stat`` cannot see the path."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_size, st.st_mtime_ns)
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for n in names:
+            if not n.startswith(("_", ".")):
+                full = os.path.join(root, n)
+                fst = os.stat(full)
+                files.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema of ``path`` from this session's cache, inferred (one
+    Spark job) and cached on a miss. A path ``os.stat`` cannot see is
+    inferred on every call."""
+    fp = _fingerprint(path)
+    if fp is None:
+        return spark.read.parquet(path).schema
+    key = (os.path.abspath(path), tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    cache = _SCHEMAS.setdefault(spark, {})
+    hit = cache.get(key)
+    if hit is None or hit[0] != fp:
+        hit = cache[key] = (fp, spark.read.parquet(path).schema)
+    return hit[1]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one lake table; Catalyst prunes columns/filters.
+
+    The scan reads with the table's schema from this session's cache
+    (module docstring), so only the first read of a table version
+    starts an inference job; a path ``os.stat`` cannot see is inferred
+    on every call.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS): with
     ``spark.sql.legacy.parquet.nanosAsLong`` it scans as a raw nanos
@@ -50,12 +123,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     keeps the engine independent of the caller's
     ``inferTimestampNTZ`` setting.
     """
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _parquet_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    types = {f.name: f.dataType for f in schema.fields}
+    if name == "events" and isinstance(types.get("ts"), LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
+    ntz = [c for c, t in types.items() if isinstance(t, TimestampNTZType)]
     if ntz:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
     return df

@@ -835,13 +835,15 @@ class LakeTable:
         return os.path.dirname(path)
 
     def _read_files(self, schema, files: list[dict]) -> DataFrame:
-        """Read a manifest file list back to the declared schema:
-        mergeSchema tolerates files that pre-date evolved columns,
-        then column order and partition-column types are pinned back
-        (path-derived partition values are inferred; columns newer
-        than a file read back as nulls). Every internal reader of
-        manifest files — read() and _merge()'s touched-file read —
-        must go through this, or a schema-evolved table breaks them.
+        """Read a manifest file list back to the manifest's schema.
+        The files are read with that schema, never an inferred one, so
+        building the read starts no Spark job: a file that pre-dates an
+        evolved column reads it back as NULL, and path-derived
+        partition values take the schema's type. A select pins the
+        column order (Spark moves partition columns last) and the
+        types. Every internal reader of manifest files — read(),
+        changes() and _merge()'s touched-file read among them — must go
+        through this, or a schema-evolved table breaks them.
 
         Files are grouped by their partition-discovery base
         (``_base_of``) and each group read with its own basePath: a
@@ -857,20 +859,14 @@ class LakeTable:
             by_base.setdefault(self._base_of(f["path"], pcols), []).append(
                 f["path"]
             )
-        frames = []
-        for base, paths in sorted(by_base.items()):
-            df = (
-                self.spark.read.option("basePath", base)
-                .option("mergeSchema", "true")
-                .parquet(*paths)
-            )
-            cols = [
-                F.col(f.name).cast(f.dataType)
-                if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-            frames.append(df.select(cols))
+        cols = [F.col(f.name).cast(f.dataType) for f in schema.fields]
+        frames = [
+            self.spark.read.schema(schema)
+            .option("basePath", base)
+            .parquet(*paths)
+            .select(cols)
+            for base, paths in sorted(by_base.items())
+        ]
         out = frames[0]
         for fr in frames[1:]:
             out = out.unionByName(fr)

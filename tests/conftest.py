@@ -12,6 +12,26 @@ def spark():
     s.stop()
 
 
+@pytest.fixture()
+def jobs_started(spark):
+    """``jobs_started(fn)``: the number of Spark jobs ``fn()`` starts in
+    this thread's job group, from the status tracker's job ids before
+    and after the call."""
+    sc = spark.sparkContext
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
+    def count(fn) -> int:
+        before = job_ids()
+        fn()
+        return len(job_ids() - before)
+
+    return count
+
+
 @pytest.fixture(autouse=True)
 def _release_scoped_caches():
     """Free query-scoped persists after EVERY test. The oracle-parity

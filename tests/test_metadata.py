@@ -8,6 +8,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from big_data_data_lake_spark.sources.metadata import LakeTable
 
@@ -1283,3 +1284,46 @@ def test_stale_snapshot_commit_fails_instead_of_dropping_files(
     assert competitor.latest_version() == 1
     got = {r.id for r in competitor.read().collect()}
     assert got == set(range(100)) | set(range(1000, 1050))
+
+
+def _evolved(spark, tmp_path):
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(1, "a")], "id long, k string"))
+    t.append(
+        spark.createDataFrame([(2, "b", 9.5)], "id long, k string, score double"),
+        merge_schema=True,
+    )
+    return t, {(1, "a", None), (2, "b", 9.5)}
+
+
+def _partitioned(spark, tmp_path):
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(
+        spark.createDataFrame([(1, 3), (2, 4)], "id long, day int"), partition_by=["day"]
+    )
+    return t, {(1, 3), (2, 4)}
+
+
+def _clone(spark, tmp_path):
+    src, rows = _partitioned(spark, tmp_path)
+    clone = src.clone_to(str(tmp_path / "clone"))
+    clone.append(spark.createDataFrame([(5, 3)], "id long, day int"))
+    return clone, rows | {(5, 3)}
+
+
+@pytest.mark.parametrize("make", [_evolved, _partitioned, _clone])
+def test_read_is_built_without_a_job(spark, tmp_path, jobs_started, make):
+    """A snapshot read takes its schema from the manifest, so building
+    it starts no schema-inference job: on an evolved table (the older
+    file lacks ``score`` and reads it back NULL), a partitioned one
+    (``day`` comes from the path, typed as the manifest says) and a
+    shallow clone that reads files under two roots."""
+    t, want = make(spark, tmp_path)
+    frames = []
+    assert jobs_started(lambda: frames.append(t.read())) == 0
+    got = frames[0]
+    declared = StructType.fromJson(t.manifest()["schema_json"])
+    assert [(f.name, f.dataType) for f in got.schema.fields] == [
+        (f.name, f.dataType) for f in declared.fields
+    ]
+    assert {tuple(r) for r in got.collect()} == want
