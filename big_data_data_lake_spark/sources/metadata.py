@@ -238,9 +238,11 @@ def _latest_wins(stored: DataFrame, batch: DataFrame, keys: list[str], order_col
     AND batch.order > stored.order UPDATE``, ``WHEN NOT MATCHED
     INSERT``): union the ``stored`` rows with the ``batch`` rows,
     tagged by side, and keep one row per key of the batch with a
-    ``row_number`` window. The batch row wins when the stored order is
-    NULL or lower; the stored row wins ties and against a NULL batch
-    order. The window's ``partitionBy`` groups NULL keys, so keys match
+    ``row_number`` window, which ranks the stored row and every batch
+    row of a key together: a batch may hold several rows per key, and
+    the newest wins. A batch row wins when the stored order is NULL or
+    lower; the stored row wins ties and against a NULL batch order.
+    The window's ``partitionBy`` groups NULL keys, so keys match
     null-safely, and stored rows of keys the batch lacks pass through
     unchanged.
 
@@ -1087,12 +1089,15 @@ class LakeTable:
         lacks null-fill.
 
         ``order_col`` makes the MERGE conditional (latest wins): ``df``
-        should hold one row per key, and its row replaces the stored
-        row only when it is newer. The batch row wins when no stored
-        row has its key, when the stored ``order_col`` is NULL, or when
-        its ``order_col`` is greater; the stored row stays on a tie and
-        against a NULL batch order. This is one pass over the touched
-        files (``_latest_wins``). When a non-empty batch has no winning
+        may hold several rows per key, and the newest of them and the
+        stored row wins. A batch row wins when no stored row has its
+        key, when the stored ``order_col`` is NULL, or when its
+        ``order_col`` is greater; the stored row stays on a tie and
+        against a NULL batch order. Among batch rows of one key a NULL
+        order loses, and which of several equal-order rows wins is
+        arbitrary, as in ``operators.windows.latest_per_key``. This is
+        one pass over the touched files (``_latest_wins``), one shuffle
+        of the batch. When a non-empty batch has no winning
         row (all stale) nothing is committed: the files just written
         are deleted, and the return value is the unchanged latest
         version. Without ``order_col`` every ``df`` row wins, via a

@@ -2,9 +2,16 @@
 silver services (SURVEY §2.7, §3 E1/E2) as a handful of composable
 streaming stages:
 
-    kafka_source → parse_state_vectors → latest_wins_dedup
+    kafka_source → [normalize_payloads →] parse_state_vectors
+        → latest_wins_dedup
         → bronze_to_silver (stream-static broadcast join)
         → micro_batch_writer (60 s trigger, checkpointed)
+
+Each payload is parsed once: ``normalize_payloads`` detects the
+payload format and emits the parsed vectors, and
+``parse_state_vectors`` maps a parsed vector to columns without a
+second ``from_json`` (it parses only a JSON-text input, such as a bare
+Kafka ``value``).
 
 The reference's hand-rolled loops become engine guarantees: its
 at-least-once buffer/flush (consumer.py:102-139) and text-file
@@ -18,7 +25,10 @@ share one exactly-once step, ``_commit_batch``: every commit records
 its micro-batch id in the manifest, the first batch creates the table,
 and a batch whose id is at or below the latest recorded one is a replay
 and is skipped. Each sink supplies only its create and write calls;
-``_lake_sink`` is their one checkpointed ``foreachBatch`` writer.
+``_lake_sink`` is their one checkpointed ``foreachBatch`` writer. The
+upsert sink hands each later micro-batch to ``LakeTable.upsert`` as it
+is: the MERGE's one window picks the newest row per key, so the batch
+is shuffled once per commit.
 """
 
 from __future__ import annotations
@@ -64,29 +74,31 @@ def kafka_source(
 def normalize_payloads(raw: DataFrame, payload_col: str = "value") -> DataFrame:
     """Format detection (consumer.py:161-173): a payload may be a dict
     ``{"states": [[...], ...]}``, a batch list-of-vectors, or one flat
-    vector. Emit one row per state vector, re-serialized as a flat
-    JSON array so ``parse_state_vectors`` composes unchanged.
+    vector. Emit one row per state vector, with ``payload_col`` holding
+    the parsed vector as ``array<string>``, which ``parse_state_vectors``
+    maps to columns without parsing it again.
 
     The reference's ``isinstance`` chain becomes prefix dispatch on the
-    serialized form — all three branches are one codegen'd expression,
-    and non-matching payloads yield zero rows (its ``continue``).
+    serialized form: all three branches are one codegen'd expression
+    that references each format's ``from_json`` once, so a payload is
+    parsed exactly once. Non-matching or malformed payloads yield zero
+    rows (its ``continue``).
     """
     s = F.trim(F.col(payload_col).cast("string"))
     empty = F.array().cast("array<array<string>>")
-    is_dict = s.startswith("{")
     is_nested = s.rlike(r"^\[\s*\[")
-    is_flat = s.startswith("[") & ~is_nested
     as_dict = F.from_json(s, "struct<states: array<array<string>>>")
     as_nested = F.from_json(s, "array<array<string>>")
     as_flat = F.from_json(s, "array<string>")
     vectors = (
-        F.when(is_dict, F.coalesce(as_dict["states"], empty))
+        F.when(s.startswith("{"), F.coalesce(as_dict["states"], empty))
         .when(is_nested, F.coalesce(as_nested, empty))
-        .when(is_flat & as_flat.isNotNull(), F.array(as_flat))
+        .when(s.startswith("["), F.array(as_flat))
         .otherwise(empty)
     )
+    # drops NULL vectors, among them a malformed flat payload's parse
     out = raw.withColumn("__vec", F.explode(vectors)).where(F.col("__vec").isNotNull())
-    return out.withColumn(payload_col, F.to_json("__vec")).drop("__vec")
+    return out.withColumn(payload_col, F.col("__vec")).drop("__vec")
 
 
 def parse_state_vectors(raw: DataFrame, payload_col: str = "value") -> DataFrame:
@@ -97,8 +109,14 @@ def parse_state_vectors(raw: DataFrame, payload_col: str = "value") -> DataFrame
     shorter than 17 are dropped (F8), optional tail fields null out,
     and every field is cast to the canonical schema (schemas.py) —
     ending the reference's per-zone schema drift.
+
+    ``payload_col`` is the JSON text (a Kafka ``value``, cast to
+    string) or an already-parsed ``array<string>`` vector, as
+    ``normalize_payloads`` emits; the latter is used as is.
     """
-    arr = F.from_json(F.col(payload_col).cast("string"), "array<string>")
+    arr = F.col(payload_col)
+    if raw.schema[payload_col].dataType.simpleString() != "array<string>":
+        arr = F.from_json(arr.cast("string"), "array<string>")
     parsed = raw.withColumn("__sv", arr).where(F.size("__sv") >= 17)
     cols = []
     for i, field in enumerate(STATE_VECTOR_SCHEMA.fields):
@@ -558,18 +576,18 @@ def lake_upsert_sink(
     (the silver-table semantics the reference approximates by
     rewriting whole CSVs, process_silver.py:114-122).
 
-    Per micro-batch:
-      1. collapse the batch to one deterministic winner per key
-         (max ``order_col``, ties by arrival order within the window
-         dedup — operators/windows.latest_per_key);
-      2. one conditional copy-on-write MERGE,
-         ``LakeTable.upsert(order_col=...)``: it persists the winners
-         once for its key range, match and write, reads the files whose
-         zone map on keys[0] can hold a batch key (all files when the
-         batch has a NULL key) once, and keeps per key the stored row
-         or the winner, whichever is newer — NULL keys match
-         null-safely, and a stored NULL order counts as older. Files
-         outside the key range carry over by reference.
+    Each non-first micro-batch is one conditional copy-on-write MERGE,
+    ``LakeTable.upsert(order_col=...)``, of the raw batch: it persists
+    the batch once for its key range, match and write, reads the files
+    whose zone map on keys[0] can hold a batch key (all files when the
+    batch has a NULL key) once, and keeps per key the newest of the
+    stored row and every batch row in one window: one shuffle of the
+    batch per commit. The stored row wins ties and against a NULL
+    batch order, a stored NULL order loses to any batch row, NULL keys
+    match null-safely, and files outside the key range carry over by
+    reference. Equal-order batch rows of one key leave the winner
+    arbitrary, as in ``latest_per_key``. The first batch creates the
+    table from ``latest_per_key`` of the batch.
 
     Exactly-once: Spark's checkpoint dedups source offsets, and every
     commit records its ``batch_id`` — a replayed batch id (<= the last
@@ -583,13 +601,14 @@ def lake_upsert_sink(
     from ..operators.windows import latest_per_key
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        winners = latest_per_key(batch_df, keys, order_col)
         table = LakeTable(batch_df.sparkSession, table_path)
         _commit_batch(
             table,
             batch_id,
-            lambda extra: table.create(winners, extra=extra),
-            lambda extra: table.upsert(winners, keys, extra=extra, order_col=order_col),
+            lambda extra: table.create(
+                latest_per_key(batch_df, keys, order_col), extra=extra
+            ),
+            lambda extra: table.upsert(batch_df, keys, extra=extra, order_col=order_col),
         )
 
     return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)

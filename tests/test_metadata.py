@@ -298,6 +298,25 @@ def _two_step_latest_wins(t, batch, keys, order_col):
         t.upsert(newer, keys)
 
 
+def _stored_ab_xy(spark, path):
+    """A two-file table: keys a-e (``d`` with a NULL order) in one
+    file, x, y and a NULL key in the other."""
+    schema = "k string, ts long, v string"
+    t = LakeTable(spark, path)
+    t.create(
+        spark.createDataFrame(
+            [("a", 100, "a0"), ("b", 100, "b0"), ("c", 100, "c0"), ("d", None, "d0"),
+             ("e", 100, "e0")],
+            schema,
+        ).coalesce(1)
+    )
+    t.append(
+        spark.createDataFrame([("x", 100, "x0"), ("y", 100, "y0"), (None, 100, "n0")], schema)
+        .coalesce(1)
+    )
+    return t
+
+
 def _sorted_rows(df):
     return sorted(((r.k, r.ts, r.v) for r in df.collect()), key=repr)
 
@@ -335,18 +354,7 @@ def test_upsert_order_col_matches_two_step_latest_wins(spark, tmp_path, batch_ro
     commit exactly what the two-step path (stale filter, then a plain
     upsert) commits for every case of the winner rule."""
     schema = "k string, ts long, v string"
-    t = LakeTable(spark, str(tmp_path / "t"))
-    t.create(
-        spark.createDataFrame(
-            [("a", 100, "a0"), ("b", 100, "b0"), ("c", 100, "c0"), ("d", None, "d0"),
-             ("e", 100, "e0")],
-            schema,
-        ).coalesce(1)
-    )
-    t.append(
-        spark.createDataFrame([("x", 100, "x0"), ("y", 100, "y0"), (None, 100, "n0")], schema)
-        .coalesce(1)
-    )
+    t = _stored_ab_xy(spark, str(tmp_path / "t"))
     ref = t.clone_to(str(tmp_path / "ref"))
     xy_file = next(f["path"] for f in t.manifest()["files"] if f["stats"]["k"]["min"] == "x")
     batch = spark.createDataFrame(batch_rows, schema)
@@ -360,6 +368,68 @@ def test_upsert_order_col_matches_two_step_latest_wins(spark, tmp_path, batch_ro
     )
     batch_has_null_key = any(k is None for k, _, _ in batch_rows)
     assert (xy_file in {f["path"] for f in t.manifest()["files"]}) != batch_has_null_key
+
+
+@pytest.mark.parametrize(
+    "batch_rows, want",
+    [
+        (  # no NULL key: the x-y file is pruned
+            [
+                ("a", 200, "a1"), ("a", 300, "a2"),  # both newer: the newest wins
+                ("b", 150, "b2"), ("b", 50, "b1"),  # one newer, one older
+                ("c", 100, "c1"), ("c", 100, "c2"), ("c", 50, "c3"),  # ties: stored stays
+                ("d", None, "d1"), ("d", 10, "d2"),  # stored NULL order: the non-NULL wins
+                ("e", None, "e1"), ("e", None, "e2"),  # NULL orders: stored stays
+                ("f", 1, "f1"), ("f", 2, "f2"), ("f", None, "f3"),  # new key
+            ],
+            [
+                ("a", 300, "a2"), ("b", 150, "b2"), ("c", 100, "c0"), ("d", 10, "d2"),
+                ("e", 100, "e0"), ("f", 2, "f2"), ("x", 100, "x0"), ("y", 100, "y0"),
+                (None, 100, "n0"),
+            ],
+        ),
+        (  # NULL keys: every file is touched, the key matches null-safely
+            [
+                (None, 250, "n1"), (None, 300, "n2"), (None, None, "n3"),
+                ("x", 50, "x1"), ("x", 100, "x2"),  # older and tied
+                ("y", 101, "y1"), ("y", 99, "y2"),
+            ],
+            [
+                ("a", 100, "a0"), ("b", 100, "b0"), ("c", 100, "c0"), ("d", None, "d0"),
+                ("e", 100, "e0"), ("x", 100, "x0"), ("y", 101, "y1"), (None, 300, "n2"),
+            ],
+        ),
+        (  # every row stale: nothing is committed
+            [("a", 50, "a1"), ("a", 100, "a2"), ("b", None, "b1"), ("b", 99, "b2")],
+            None,
+        ),
+    ],
+)
+def test_upsert_order_col_multi_row_batch_matches_latest_per_key(
+    spark, tmp_path, batch_rows, want
+):
+    """``upsert(order_col=...)`` ranks every batch row of a key with the
+    stored row in its one window, so a batch with several rows per key
+    commits what ``latest_per_key`` followed by the same upsert commits
+    (the streaming upsert sink's former two steps)."""
+    from big_data_data_lake_spark.operators.windows import latest_per_key
+
+    schema = "k string, ts long, v string"
+    t = _stored_ab_xy(spark, str(tmp_path / "t"))
+    ref = t.clone_to(str(tmp_path / "ref"))
+    stored = _sorted_rows(t.read())
+    batch = spark.createDataFrame(batch_rows, schema)
+
+    v = t.upsert(batch, keys=["k"], order_col="ts")
+    v_ref = ref.upsert(latest_per_key(batch, ["k"], "ts"), keys=["k"], order_col="ts")
+
+    # the clone starts at version 0
+    assert (v, v_ref) == ((1, 0) if want is None else (2, 1))
+    assert (v, v_ref) == (t.latest_version(), ref.latest_version())
+    assert _sorted_rows(t.read()) == _sorted_rows(ref.read())
+    assert _sorted_rows(t.read()) == (
+        stored if want is None else _sorted_rows(spark.createDataFrame(want, schema))
+    )
 
 
 def _semi_join_then_upsert(t, batch, keys, count_col):

@@ -427,6 +427,70 @@ def test_payload_format_detection(spark):
     ]
 
 
+def _python_vectors(payload: str) -> list:
+    """The reference's format detection in Python (consumer.py:161-173):
+    the state vectors a payload holds, none when it does not parse."""
+    try:
+        p = json.loads(payload)
+    except ValueError:
+        return []
+    if isinstance(p, dict):
+        return p.get("states") or []
+    if isinstance(p, list) and p and isinstance(p[0], list):
+        return p
+    return [p] if isinstance(p, list) else []
+
+
+def test_fused_parse_matches_per_vector_reparse(spark):
+    """``normalize_payloads`` hands ``parse_state_vectors`` the parsed
+    vector: the result equals ``parse_state_vectors`` of each vector
+    re-serialized by ``json.dumps``, across number spellings (``1e3``,
+    ``-0.0``, a 19-digit integer), literals, a nested ``sensors``
+    array, a non-ASCII callsign, a short vector and malformed
+    payloads. The optimized plan parses each payload format once and
+    never re-serializes a vector."""
+    from big_data_data_lake_spark.streaming.ingest import (
+        normalize_payloads,
+        parse_state_vectors,
+    )
+
+    odd = _sv("FfF001", 1234567890123456789)
+    odd[1], odd[8], odd[12], odd[15] = " ÄØ-Ω7 ", True, [1, 2, 3], None
+    text = json.dumps(odd).replace('1000.0', '1e3').replace('90.0', '-0.0')
+    assert '1e3' in text and '-0.0' in text
+    payloads = [
+        json.dumps({"time": 1, "states": [_sv("AAA111", 100), _sv("BBB222", 200)]}),
+        json.dumps([_sv("CCC333", 300), _sv("DDD444", 400)]),
+        json.dumps(_sv("EEE555", 500)),
+        text,
+        "[" + text + ", " + json.dumps(_sv("GGG777", 700)) + "]",
+        json.dumps({"states": [_sv("HHH888", 800)[:10]]}),  # short: dropped
+        json.dumps(_sv("III999", 900) + [3]),  # category present
+        '  [false, true, null]  ',
+        "[1,2",
+        '"garbage"',
+        '{"states": null}',
+        "",
+    ]
+    raw = spark.createDataFrame([(p,) for p in payloads], "value string")
+    fused = parse_state_vectors(normalize_payloads(raw))
+    vectors = [json.dumps(v) for p in payloads for v in _python_vectors(p)]
+    reference = parse_state_vectors(spark.createDataFrame([(v,) for v in vectors], "value string"))
+
+    assert fused.schema == reference.schema
+    got, want = fused.collect(), reference.collect()
+    assert len(want) == 9
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    ff = [r for r in got if r.icao24 == "fff001"]
+    assert [(r.last_contact, r.callsign, r.baro_altitude_m, r.on_ground) for r in ff] == [
+        (1234567890123456789, "ÄØ-Ω7", 1000.0, True)
+    ] * 2
+
+    plan = fused._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(") == 3  # dict, batch and flat payloads
+    assert "to_json" not in plan.lower() and "StructsToJson" not in plan
+
+
 def test_kafka_source_integration_smoke(spark):
     """S3 end-to-end, env-gated: when the spark-sql-kafka package and a
     broker (KAFKA_SMOKE_BROKER=host:port) are present, run the REAL
@@ -705,15 +769,24 @@ def test_lake_upsert_sink_all_stale_batch_leaves_no_trace(spark, tmpdir):
     assert table._list_parquet() == {f["path"] for f in table.manifest()["files"]}
 
 
-def _run_jobs(spark, query) -> int:
-    """Spark jobs one streaming run started, from the live status store
+def _run_jobs(spark, query) -> tuple[int, int]:
+    """Spark jobs one streaming run started, and the stages of those
+    jobs (skipped ones included), from the live status store
     (streaming jobs carry their query's run id as job group)."""
     sc = spark.sparkContext._jsc.sc()
     sc.listenerBus().waitUntilEmpty()
     jobs = sc.statusStore().jobsList(None)
     run_id = str(query.runId)
-    groups = [jobs.apply(i).jobGroup() for i in range(jobs.size())]
-    return sum(1 for g in groups if g.isDefined() and g.get() == run_id)
+    ours = [jobs.apply(i) for i in range(jobs.size())]
+    ours = [j for j in ours if j.jobGroup().isDefined() and j.jobGroup().get() == run_id]
+    return len(ours), sum(j.stageIds().size() for j in ours)
+
+
+# Stages of the non-first commit, measured with the job budgets below
+# (skipped stages included): upsert 7 (10 while the sink collapsed the
+# batch to its winners in a window of its own before the MERGE window),
+# aggregate 11, scd2 10.
+STAGE_BUDGET = {"upsert": 7, "aggregate": 11, "scd2": 10}
 
 
 @pytest.mark.parametrize(
@@ -727,8 +800,8 @@ def _run_jobs(spark, query) -> int:
     [("upsert", 5), ("aggregate", 6), ("scd2", 6)],
 )
 def test_lake_sink_job_budget_per_commit(spark, tmpdir, kind, budget):
-    """Jobs of one non-first commit: a regression guard for the
-    persisted batch and the one-pass MERGE (an upsert commit ran 17
+    """Jobs and stages of one non-first commit: a regression guard for
+    the persisted batch and the one-pass MERGE (an upsert commit ran 17
     jobs when every action re-derived the batch and the stale check
     read the stored rows a second time)."""
     import os
@@ -747,7 +820,9 @@ def test_lake_sink_job_budget_per_commit(spark, tmpdir, kind, budget):
         stream = spark.readStream.schema("k string, ts timestamp").json(src)
         query = start(stream, f"{tmpdir}/table", ckpt)
         query.awaitTermination(120)
-    assert _run_jobs(spark, query) <= budget
+    jobs, stages = _run_jobs(spark, query)
+    assert jobs <= budget
+    assert stages <= STAGE_BUDGET[kind]
 
 
 def _replay_sink(kind):
