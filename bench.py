@@ -472,6 +472,8 @@ def main() -> None:
                 "stat": "median",
                 "max_spread_ratio": round(spread_ratio, 2),
                 "canary": canary,
+                # totals made at different core counts do not compare
+                "cpus": {"host": os.cpu_count(), "spark": cpus},
                 "samples": {
                     n: [round(x, 3) for x in s] for n, s in all_samples.items()
                 },

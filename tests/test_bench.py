@@ -43,6 +43,7 @@ def test_bench_runs_and_emits_one_json_line():
     assert payload["metric"] == "headline_queries_total"
     assert payload["unit"] == "sec" and payload["value"] > 0
     assert payload["sf"] == 0.001
+    assert payload["cpus"] == {"host": os.cpu_count(), "spark": 8}
     from bench import HEADLINE
 
     expected = HEADLINE[::13]

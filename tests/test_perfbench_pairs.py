@@ -33,6 +33,7 @@ def _stdout(mix_cpu_s, retained_mb, failed=0, attempted=16):
             "mix_cpu_s": {"value": mix_cpu_s, "unit": "s"},
             "retained_mb": {"value": retained_mb, "unit": "MB"},
             "ingest_rows_per_s": {"value": 1000.0 / mix_cpu_s, "unit": "rows/s"},
+            "unlisted_s": {"value": mix_cpu_s, "unit": "s"},
         },
     }
     return "spark log noise\n" + json.dumps(report) + "\n" + json.dumps(result) + "\n"
@@ -45,6 +46,17 @@ def test_seeds_and_alternating_order(tool):
         (5, "change"), (5, "parent"),
         (6, "parent"), (6, "change"),
     ]
+
+
+def test_command_and_directions_come_from_benchmark_json(tool):
+    with open(os.path.join(_ROOT, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
+    assert tool.run_command(spec, "lake_ingest", 3) == [
+        *spec["command"], "--workload", "lake_ingest", "--seed", "3",
+        "--seconds", str(spec["run_seconds"]), "--trace", "0",
+    ]
+    better = tool.better_of(spec)
+    assert better["mix_cpu_s"] == "lower" and better["ingest_rows_per_s"] == "higher"
 
 
 def test_parse_result_reads_the_last_json_line(tool):
@@ -80,8 +92,12 @@ def test_summary_medians_iqr_and_wins(tool):
     assert rows["ingest_rows_per_s"]["wins"] == 4
     # every change run retained more: no win, equal medians are no win either
     assert rows["retained_mb"]["wins"] == 0
+    # a metric BENCHMARK.json does not list has no direction, so no winner
+    assert rows["unlisted_s"]["wins"] is None
+    assert rows["unlisted_s"]["change_median"] == 19.5
 
     text = tool.report(list(rows.values()), results)
     assert "mix_cpu_s" in text and "4/5" in text
+    assert "  -/5" in text
     assert "parent: 6 runs, 0 of 96 ops failed, 0 runs not correct" in text
     assert "change: 5 runs, 0 of 80 ops failed" in text

@@ -782,10 +782,8 @@ def _run_jobs(spark, query) -> tuple[int, int]:
     return len(ours), sum(j.stageIds().size() for j in ours)
 
 
-# Stages of the non-first commit, measured with the job budgets below
-# (skipped stages included): upsert 7 (10 while the sink collapsed the
-# batch to its winners in a window of its own before the MERGE window),
-# aggregate 11, scd2 10.
+# Stages of the non-first commit (skipped stages included), measured
+# alongside the job budgets below.
 STAGE_BUDGET = {"upsert": 7, "aggregate": 11, "scd2": 10}
 
 

@@ -19,8 +19,9 @@ The emitted record is the selected run's full bench JSON (same shape
 replay_outliers/drift triage already consume) plus ``runs`` (every
 run's total + canary + spread, execution order) and ``selection``
 (the rule + chosen index), so r13's triage can normalize any
-cross-round delta by host speed straight off the record, and ``cpus``
-(the host's core count and the ``local[N]`` the runs used).
+cross-round delta by host speed straight off the record. bench.py's
+own ``cpus`` field (the host's core count and the ``local[N]`` the
+runs used) comes through with the selected run.
 
 Usage:
     python tools/bench_multi.py [--runs 3] [--out BENCH_LOCAL_r12.json]
@@ -95,11 +96,6 @@ def main() -> int:
         for rec in records
     ]
     result["selection"] = {"rule": SELECTION_RULE, "selected_run": chosen}
-    # totals of records made at different core counts do not compare
-    result["cpus"] = {
-        "host": os.cpu_count(),
-        "spark": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-    }
     with open(args.out, "w") as f:
         json.dump(result, f, indent=1, sort_keys=True)
     print(

@@ -10,13 +10,15 @@ better; then the failed and attempted ops of each side.
 
 Usage:
     python tools/perfbench_pairs.py PARENT_DIR CHANGE_DIR --workload W \\
-        [--seeds 1-10] [--seconds 10] [--trace 0] [--out DIR]
+        [--seeds 1-10] [--out DIR]
 
 Each directory is a whole checkout (for instance a ``git archive`` of
 a commit); the runs write only under that checkout's ``perfbench/``.
-``--seeds`` takes ranges and lists: ``1-10``, ``11,12,15-18``. Whether
-lower or higher is better comes from the change checkout's
-``BENCHMARK.json``; a metric it does not list counts as lower-better.
+``--seeds`` takes ranges and lists: ``1-10``, ``11,12,15-18``. The
+command, the run length (``run_seconds``) and whether lower or higher
+is better come from the change checkout's ``BENCHMARK.json``, so both
+sides run alike; every run is untraced (``--trace 0``). A metric the
+file does not list gets no winner.
 """
 
 from __future__ import annotations
@@ -49,6 +51,20 @@ def run_order(seeds: list[int]) -> list[tuple[int, str]]:
     return out
 
 
+def run_command(spec: dict, workload: str, seed: int) -> list[str]:
+    """The benchmark's own command for one untraced run of ``spec``
+    (a parsed ``BENCHMARK.json``)."""
+    return [
+        *spec["command"], "--workload", workload, "--seed", str(seed),
+        "--seconds", str(spec["run_seconds"]), "--trace", "0",
+    ]
+
+
+def better_of(spec: dict) -> dict[str, str]:
+    """``{metric: "lower" | "higher"}`` for every metric ``spec`` lists."""
+    return {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
+
+
 def parse_result(stdout: str) -> dict:
     """The final JSON line of a run: ``correct``, ``attempted``,
     ``failed`` and ``metrics`` as ``{name: value}``. A run that printed
@@ -70,7 +86,8 @@ def iqr(values: list[float]) -> float:
 
 def summarize(results: dict[int, dict[str, dict]], better: dict[str, str]) -> list[dict]:
     """One row per metric both sides report in some pair: medians,
-    parent IQR and wins of the change over the pairs that have it."""
+    parent IQR and wins of the change over the pairs that have it
+    (None for a metric ``better`` does not list)."""
     names = sorted(
         {m for pair in results.values() if len(pair) == 2 for m in pair["parent"]["metrics"]}
     )
@@ -85,7 +102,7 @@ def summarize(results: dict[int, dict[str, dict]], better: dict[str, str]) -> li
             continue
         parent = [p for p, _ in pairs]
         pm, cm = statistics.median(parent), statistics.median(c for _, c in pairs)
-        sign = -1 if better.get(name, "lower") == "higher" else 1
+        sign = {"lower": 1, "higher": -1}.get(better.get(name))
         rows.append(
             {
                 "metric": name,
@@ -93,7 +110,7 @@ def summarize(results: dict[int, dict[str, dict]], better: dict[str, str]) -> li
                 "change_median": cm,
                 "parent_iqr": iqr(parent),
                 "ratio": cm / pm if pm else None,
-                "wins": sum(1 for p, c in pairs if sign * (c - p) < 0),
+                "wins": None if sign is None else sum(1 for p, c in pairs if sign * (c - p) < 0),
                 "pairs": len(pairs),
             }
         )
@@ -107,9 +124,10 @@ def report(rows: list[dict], results: dict[int, dict[str, dict]]) -> str:
     ]
     for r in rows:
         ratio = "-" if r["ratio"] is None else f"{r['ratio']:.3f}"
+        wins = "-" if r["wins"] is None else r["wins"]
         lines.append(
             f"{r['metric']:<34} {r['parent_median']:>12.4g} {r['change_median']:>12.4g} "
-            f"{r['parent_iqr']:>11.4g} {ratio:>6} {r['wins']:>3}/{r['pairs']:<3}"
+            f"{r['parent_iqr']:>11.4g} {ratio:>6} {wins:>3}/{r['pairs']:<3}"
         )
     for side in SIDES:
         runs = [pair[side] for pair in results.values() if side in pair]
@@ -123,34 +141,22 @@ def report(rows: list[dict], results: dict[int, dict[str, dict]]) -> str:
     return "\n".join(lines)
 
 
-def _better(checkout: str) -> dict[str, str]:
-    path = os.path.join(checkout, "BENCHMARK.json")
-    if not os.path.exists(path):
-        return {}
-    with open(path) as fh:
-        spec = json.load(fh)
-    return {m["name"]: m["better"] for m in spec.get("end_to_end", []) + spec.get("per_layer", [])}
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent_dir")
     ap.add_argument("change_dir")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="1-10")
-    ap.add_argument("--seconds", default="10")
-    ap.add_argument("--trace", default="0")
     ap.add_argument("--out", default=".bench/pairs")
     args = ap.parse_args(argv)
 
     dirs = {"parent": args.parent_dir, "change": args.change_dir}
+    with open(os.path.join(args.change_dir, "BENCHMARK.json")) as fh:
+        spec = json.load(fh)
     os.makedirs(args.out, exist_ok=True)
     results: dict[int, dict[str, dict]] = {}
     for seed, side in run_order(parse_seeds(args.seeds)):
-        cmd = [
-            sys.executable, "perfbench/run.py", "--workload", args.workload,
-            "--seed", str(seed), "--seconds", args.seconds, "--trace", args.trace,
-        ]
+        cmd = run_command(spec, args.workload, seed)
         proc = subprocess.run(cmd, cwd=dirs[side], capture_output=True, text=True)
         stem = os.path.join(args.out, f"{args.workload}-seed{seed}-{side}")
         with open(stem + ".out", "w") as fh:
@@ -161,7 +167,7 @@ def main(argv: list[str] | None = None) -> int:
         results.setdefault(seed, {})[side] = res
         shown = {k: round(v, 3) for k, v in res["metrics"].items()}
         print(f"seed {seed} {side}: failed {res['failed']}/{res['attempted']} {shown}", flush=True)
-    print(report(summarize(results, _better(args.change_dir)), results))
+    print(report(summarize(results, better_of(spec)), results))
     return 0
 
 
