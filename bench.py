@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from big_data_data_lake_spark.caching import release_query_caches
 from big_data_data_lake_spark.queries import load_all
-from big_data_data_lake_spark.session import get_spark
+from big_data_data_lake_spark.session import codegen_compiles, get_spark
 
 # Headline set: one per operator family (scan/agg, joins, windows,
 # quantiles, trig, sessionization, time windows, dedup x3, similarity
@@ -326,15 +326,21 @@ def warm_up(spark, cpus: int) -> None:
     ).write.format("noop").mode("overwrite").save()
 
 
-def timed_reps(spark, fn, sf_dir: str, reps: int) -> list[float]:
+def timed_reps(
+    spark, fn, sf_dir: str, reps: int, compiles: list[int] | None = None
+) -> list[float]:
     """The one per-rep timing protocol of the bench and every replay
     tool: run ``fn(spark, sf_dir)`` to a noop sink ``reps`` times and
-    return the wall time of each rep. Callers pick their statistic."""
+    return the wall time of each rep. Callers pick their statistic.
+    ``compiles``, when given, gets each rep's Janino compile count."""
     samples: list[float] = []
     for _ in range(reps):
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         samples.append(time.perf_counter() - t0)
+        if compiles is not None:
+            compiles.append(codegen_compiles(spark) - c0)
         # each query's own persisted intermediates are inside its
         # timing; drop them after every rep so no rep reuses (or
         # pays GC pressure for) another's cache — every timing is
@@ -445,8 +451,11 @@ def main() -> None:
     names = HEADLINE[::stride] if stride > 1 else HEADLINE
     timings: dict[str, float] = {}
     all_samples: dict[str, list[float]] = {}
+    compiles: dict[str, list[int]] = {}
     for name in names:
-        samples = all_samples[name] = timed_reps(spark, registry[name].fn, sf_dir, reps)
+        samples = all_samples[name] = timed_reps(
+            spark, registry[name].fn, sf_dir, reps, compiles.setdefault(name, [])
+        )
         timings[name] = round(statistics.median(samples), 3)
 
     total = round(sum(timings.values()), 3)
@@ -477,6 +486,9 @@ def main() -> None:
                 "samples": {
                     n: [round(x, 3) for x in s] for n, s in all_samples.items()
                 },
+                # generated classes compiled per rep: a later rep that
+                # compiles again lost its classes to the codegen cache
+                "codegen_compiles": compiles,
             }
         )
     )

@@ -112,12 +112,15 @@ def parse_state_vectors(raw: DataFrame, payload_col: str = "value") -> DataFrame
 
     ``payload_col`` is the JSON text (a Kafka ``value``, cast to
     string) or an already-parsed ``array<string>`` vector, as
-    ``normalize_payloads`` emits; the latter is used as is.
+    ``normalize_payloads`` emits; the latter is used as is. JSON text
+    is parsed once per row: predicate pushdown would copy a projected
+    ``from_json`` into the length filter, so the parse sits in a
+    one-element ``explode``, a Generate the filter cannot move below.
     """
-    arr = F.col(payload_col)
+    sv = F.col(payload_col)
     if raw.schema[payload_col].dataType.simpleString() != "array<string>":
-        arr = F.from_json(arr.cast("string"), "array<string>")
-    parsed = raw.withColumn("__sv", arr).where(F.size("__sv") >= 17)
+        sv = F.explode(F.array(F.from_json(sv.cast("string"), "array<string>")))
+    parsed = raw.select(sv.alias("__sv")).where(F.size("__sv") >= 17)
     cols = []
     for i, field in enumerate(STATE_VECTOR_SCHEMA.fields):
         if isinstance(field.dataType, T.ArrayType):

@@ -49,6 +49,7 @@ def test_bench_runs_and_emits_one_json_line():
     expected = HEADLINE[::13]
     assert set(payload["queries"]) == set(expected)
     assert all(v >= 0 for v in payload["queries"].values())
+    assert {n: len(c) for n, c in payload["codegen_compiles"].items()} == {n: 1 for n in expected}
     medians = json.loads(lines[1])
     assert medians["metric"] == "per_query_medians"
     assert medians["n"] == len(expected)

@@ -448,7 +448,8 @@ def test_fused_parse_matches_per_vector_reparse(spark):
     ``-0.0``, a 19-digit integer), literals, a nested ``sensors``
     array, a non-ASCII callsign, a short vector and malformed
     payloads. The optimized plan parses each payload format once and
-    never re-serializes a vector."""
+    never re-serializes a vector, and the JSON-text path parses each
+    vector once."""
     from big_data_data_lake_spark.streaming.ingest import (
         normalize_payloads,
         parse_state_vectors,
@@ -489,6 +490,8 @@ def test_fused_parse_matches_per_vector_reparse(spark):
     plan = fused._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("from_json(") == 3  # dict, batch and flat payloads
     assert "to_json" not in plan.lower() and "StructsToJson" not in plan
+    text_plan = reference._jdf.queryExecution().optimizedPlan().toString()
+    assert text_plan.count("from_json(") == 1
 
 
 def test_kafka_source_integration_smoke(spark):
