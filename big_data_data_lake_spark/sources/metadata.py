@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..operators.windows import latest_per_key
+
 MANIFEST_DIR = "_manifest"
 # copy-on-write rewrites size their output to this many bytes per file
 TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -852,9 +854,11 @@ class LakeTable:
         shallow clone's manifest references the source table's files
         by absolute path, so a single table-rooted basePath would
         reject them. One read per distinct root (>= 1, tiny), unioned
-        by name. An empty file list reads as an empty frame."""
+        by name. An empty file list reads as an always-false filter over
+        an empty frame, which the optimizer folds to an empty
+        ``LocalRelation``: a join or union against it starts no job."""
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], schema).where(F.lit(False))
         by_base: dict[str, list[str]] = {}
         for f in files:
             pcols = list(f.get("partition", {}).keys())
@@ -1015,7 +1019,8 @@ class LakeTable:
         """The one copy-on-write MERGE step of ``upsert``,
         ``upsert_scd2`` and ``accumulate``; each supplies only its
         match clause, ``resolve(stored, batch, keys) -> (merged,
-        commit_if)``.
+        commit_if)``. ``df`` is a raw batch: it may hold several rows
+        per key, and ``resolve`` reduces them.
 
         From one snapshot: ``df`` is cast to the table's types
         (``_to_table_types``) and persisted as the batch, released when
@@ -1030,6 +1035,14 @@ class LakeTable:
         those. A ``commit_if`` other than None is called after the write
         and vetoes the commit by returning False.
 
+        A path with no table yet is an empty snapshot of ``df``'s
+        schema, and its merge commits version 0 as ``create``, so a
+        streaming sink's first micro-batch needs no create of its own.
+        A snapshot with no file has nothing to prune, so its batch is
+        neither persisted nor scanned for its key range: the write
+        itself counts the merged rows, and when there are none the
+        file it wrote is deleted and the version commits no file.
+
         An empty batch touches no file and writes none, but still
         commits a version, so its ``extra`` (a streaming ``batch_id``)
         is recorded. ``touch_all(schema)``, when given and true for the
@@ -1041,9 +1054,27 @@ class LakeTable:
         collapsing into too few write tasks). A merge that touches no
         file is append-shaped and keeps the batch's own partitioning,
         and a touch-every-file merge keeps its input file layout."""
-        v, prev = self._snapshot()
-        schema = StructType.fromJson(prev["schema_json"])
-        batch = _to_table_types(df, schema).persist()
+        vs = self.versions()
+        if vs:
+            v, prev = vs[-1], self.manifest(vs[-1])
+            schema = StructType.fromJson(prev["schema_json"])
+        else:
+            v, prev, schema = -1, {"files": [], "partition_by": []}, df.schema
+            operation = "create"
+        batch = _to_table_types(df, schema)
+        if not prev["files"]:
+            # with no stored row every batch key wins, so the merged row
+            # count is the one veto
+            obs = Observation()
+            merged = resolve(self._read_files(schema, []), batch, keys)[0]
+            written = self._commit_files(
+                v, prev, [], merged.observe(obs, F.count(F.lit(1)).alias("rows")),
+                operation, extra, commit_if=lambda: obs.get["rows"] > 0,
+            )
+            if written > v:
+                return written
+            return self._commit_files(v, prev, [], None, operation, extra, schema)
+        batch = batch.persist()
         try:
             everything = touch_all is not None and touch_all(schema)
             touch = (lambda f: True) if everything else _key_pruner(batch, keys[0])
@@ -1104,8 +1135,11 @@ class LakeTable:
         null-safe anti-join of the touched files against ``df``'s keys.
 
         An empty ``df`` commits a version that writes no file, with or
-        without ``order_col``, so ``extra`` is recorded. ``df`` need not
-        be persisted by the caller: ``_merge`` persists the batch."""
+        without ``order_col``, so ``extra`` is recorded. On a path with
+        no table the upsert commits version 0 as ``create``: with
+        ``order_col`` the newest row per key, without it every ``df``
+        row. ``df`` need not be persisted by the caller: ``_merge``
+        persists the batch."""
 
         def replace(stored: DataFrame, batch: DataFrame, keys: list[str]):
             incoming = batch.select(*keys)
@@ -1123,12 +1157,15 @@ class LakeTable:
         """Copy-on-write additive MERGE (``_merge``), the incremental
         aggregate: ``df`` holds ``keys`` and ``count_col`` (the table's
         columns), and each stored count of a batch key grows by the
-        batch's count; new keys insert. The touched files are unioned
-        with the batch and summed per key, so stored rows of keys the
-        batch lacks pass through unchanged, NULL keys group null-safely,
-        and files outside the batch's key range carry over by
-        reference. The sum keeps the table's ``count_col`` type. An
-        empty ``df`` commits a version that writes no file."""
+        batch's counts; new keys insert. ``df`` may hold several rows
+        per key (a raw micro-batch with a count of 1 per row). The
+        touched files are unioned with the batch and summed per key, so
+        stored rows of keys the batch lacks pass through unchanged,
+        NULL keys group null-safely, and files outside the batch's key
+        range carry over by reference. The sum keeps the table's
+        ``count_col`` type. An empty ``df`` commits a version that
+        writes no file; on a path with no table, the sums commit as
+        version 0 ``create``."""
 
         def add(stored: DataFrame, batch: DataFrame, keys: list[str]):
             n = F.sum(count_col).cast(batch.schema[count_col].dataType).alias(count_col)
@@ -1251,7 +1288,13 @@ class LakeTable:
         with pruning disabled for that commit, columns the table
         already has are cast to its types, and after the bootstrap an
         empty batch commits a version that writes no file, all exactly
-        as in ``upsert``."""
+        as in ``upsert``.
+
+        ``df`` may hold several changes per key: only the newest row
+        per key on ``change_ts`` (``latest_per_key``) closes the stored
+        row and opens a version, so one call leaves one current row per
+        key. On a path with no table the newest rows commit as version 0
+        ``create``, each open from its ``change_ts``."""
         vf, vt, cur = self.SCD2_COLS
 
         def close_and_open(stored: DataFrame, batch: DataFrame, keys: list[str]):
@@ -1268,11 +1311,7 @@ class LakeTable:
                 F.lit(None).cast("timestamp").alias(vt),
                 F.lit(True).alias(cur),
             )
-            # per-key close timestamp (max over the batch, so a batch
-            # with several versions of one key closes the stored row once)
-            close_ts = batch.groupBy(*keys).agg(
-                F.max(F.col(change_ts).cast("timestamp")).alias("__close_ts")
-            )
+            close_ts = incoming.select(*keys, F.col(vf).alias("__close_ts"))
             cond = [stored[k].eqNullSafe(close_ts[k]) for k in keys]
             joined = stored.join(F.broadcast(close_ts), on=cond, how="left")
             should_close = F.col(cur) & F.col("__close_ts").isNotNull()
@@ -1286,7 +1325,8 @@ class LakeTable:
             return closed.unionByName(incoming, allowMissingColumns=True), None
 
         return self._merge(
-            df, keys, close_and_open, "upsert_scd2", extra,
+            latest_per_key(df, keys, change_ts), keys, close_and_open, "upsert_scd2",
+            extra,
             touch_all=lambda schema: vf not in schema.names,
         )
 

@@ -24,11 +24,12 @@ The LakeTable sinks (``lake_table_sink``, ``lake_upsert_sink``,
 share one exactly-once step, ``_commit_batch``: every commit records
 its micro-batch id in the manifest, the first batch creates the table,
 and a batch whose id is at or below the latest recorded one is a replay
-and is skipped. Each sink supplies only its create and write calls;
-``_lake_sink`` is their one checkpointed ``foreachBatch`` writer. The
-upsert sink hands each later micro-batch to ``LakeTable.upsert`` as it
-is: the MERGE's one window picks the newest row per key, so the batch
-is shuffled once per commit.
+and is skipped. Each sink supplies only its write call (the append
+sinks also a create call); ``_lake_sink`` is their one checkpointed
+``foreachBatch`` writer. The upsert, aggregate and SCD2 sinks hand
+every micro-batch, the first one included, to one keyed LakeTable
+MERGE as it is: the MERGE reduces the batch's rows per key itself and
+creates the table on a path that has none.
 """
 
 from __future__ import annotations
@@ -486,19 +487,21 @@ def _lake_sink(
     return _start(writer, trigger_seconds, available_now)
 
 
-def _commit_batch(table, batch_id: int, create, write) -> None:
+def _commit_batch(table, batch_id: int, write, create=None) -> None:
     """The one exactly-once step of the LakeTable sinks. Spark's
     checkpoint dedups source offsets, but a batch that committed to the
     table before its checkpoint commit was written re-runs after a
     restart with the same id. Every manifest records the ``batch_id``
-    it came from, so: on the first batch call ``create(extra)``; skip a
-    batch whose id is at or below the latest manifest's ``batch_id``
-    (already committed); otherwise call ``write(extra)``. ``extra`` is
-    ``{"batch_id": batch_id}`` for the commit to record."""
+    it came from, so: on the first batch call ``create(extra)``, or
+    ``write(extra)`` when no ``create`` is given (a keyed MERGE creates
+    its own table); skip a batch whose id is at or below the latest
+    manifest's ``batch_id`` (already committed); otherwise call
+    ``write(extra)``. ``extra`` is ``{"batch_id": batch_id}`` for the
+    commit to record."""
     extra = {"batch_id": batch_id}
     versions = table.versions()
     if not versions:
-        create(extra)
+        (create or write)(extra)
     elif batch_id > table.manifest(versions[-1]).get("batch_id", -1):
         write(extra)
 
@@ -555,10 +558,10 @@ def lake_table_sink(
         _commit_batch(
             table,
             batch_id,
+            lambda extra: table.append(batch_df, extra=extra, **gate),
             lambda extra: table.create(
                 batch_df, partition_by=partition_by, extra=extra, **gate
             ),
-            lambda extra: table.append(batch_df, extra=extra, **gate),
         )
 
     return _lake_sink(stream, checkpoint, "append", trigger_seconds, available_now, commit)
@@ -579,7 +582,7 @@ def lake_upsert_sink(
     (the silver-table semantics the reference approximates by
     rewriting whole CSVs, process_silver.py:114-122).
 
-    Each non-first micro-batch is one conditional copy-on-write MERGE,
+    Each micro-batch is one conditional copy-on-write MERGE,
     ``LakeTable.upsert(order_col=...)``, of the raw batch: it persists
     the batch once for its key range, match and write, reads the files
     whose zone map on keys[0] can hold a batch key (all files when the
@@ -589,8 +592,10 @@ def lake_upsert_sink(
     batch order, a stored NULL order loses to any batch row, NULL keys
     match null-safely, and files outside the key range carry over by
     reference. Equal-order batch rows of one key leave the winner
-    arbitrary, as in ``latest_per_key``. The first batch creates the
-    table from ``latest_per_key`` of the batch.
+    arbitrary, as in ``latest_per_key``. On the first batch the same
+    MERGE, into an empty snapshot, creates the table. An empty batch
+    commits a version that writes no file, so its ``batch_id`` is
+    recorded.
 
     Exactly-once: Spark's checkpoint dedups source offsets, and every
     commit records its ``batch_id`` — a replayed batch id (<= the last
@@ -601,16 +606,12 @@ def lake_upsert_sink(
     no-op.
     """
     from ..sources.metadata import LakeTable
-    from ..operators.windows import latest_per_key
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         table = LakeTable(batch_df.sparkSession, table_path)
         _commit_batch(
             table,
             batch_id,
-            lambda extra: table.create(
-                latest_per_key(batch_df, keys, order_col), extra=extra
-            ),
             lambda extra: table.upsert(batch_df, keys, extra=extra, order_col=order_col),
         )
 
@@ -633,17 +634,17 @@ def lake_aggregate_sink(
     equivalent of re-running a batch groupBy over all history without
     ever re-reading history.
 
-    Per micro-batch:
-      1. an empty batch is skipped: it adds nothing;
-      2. the batch reduces to per-key delta counts (micro-batch-sized);
-      3. one additive copy-on-write MERGE, ``LakeTable.accumulate``:
-         it persists the deltas once, reads the files whose zone map on
-         key_cols[0] can hold a batch key (all files when the batch has
-         a NULL key) once, and sums stored + delta per key. The sum
-         groups NULL keys together, or the stored NULL-key count would
-         never match and the key would re-insert fresh every batch
-         (silent divergence). Files outside the key range carry over by
-         reference.
+    Each micro-batch, with a count of 1 per row, is one additive
+    copy-on-write MERGE, ``LakeTable.accumulate``: it persists the
+    batch once, reads the files whose zone map on key_cols[0] can hold
+    a batch key (all files when the batch has a NULL key) once, and
+    sums the stored count and the batch's rows per key in one
+    aggregation. The sum groups NULL keys together, or the stored
+    NULL-key count would never match and the key would re-insert fresh
+    every batch (silent divergence). Files outside the key range carry
+    over by reference. On the first batch the same MERGE, into an
+    empty snapshot, creates the table. An empty batch commits a
+    version that writes no file, so its ``batch_id`` is recorded.
 
     Exactly-once: checkpointed source offsets plus the recorded
     ``batch_id`` high-water mark (``_commit_batch``) — a replayed batch
@@ -653,17 +654,12 @@ def lake_aggregate_sink(
     from ..sources.metadata import LakeTable
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        delta = batch_df.groupBy(*key_cols).agg(
-            F.count(F.lit(1)).cast("bigint").alias(count_col)
-        )
+        ones = batch_df.select(*key_cols, F.lit(1).cast("bigint").alias(count_col))
         table = LakeTable(batch_df.sparkSession, table_path)
         _commit_batch(
             table,
             batch_id,
-            lambda extra: table.create(delta, extra=extra),
-            lambda extra: table.accumulate(delta, key_cols, count_col, extra=extra),
+            lambda extra: table.accumulate(ones, key_cols, count_col, extra=extra),
         )
 
     return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
@@ -684,36 +680,25 @@ def lake_scd2_sink(
     dimension load, keeping full history queryable point-in-time
     (read_asof) while the stream runs.
 
-    Per micro-batch the batch collapses to its LATEST change per key
-    (earlier same-batch changes are superseded before touching the
-    table — one batch-sized aggregation), then merges copy-on-write
-    with zone-map pruning (``upsert_scd2``, which persists the winners
-    once for all its reads). Exactly-once via the recorded ``batch_id``
-    high-water mark (``_commit_batch``), the same replay contract as
-    lake_upsert_sink: a replayed batch is skipped before any
-    arithmetic, so history can never double-close or duplicate
+    Each micro-batch is one ``upsert_scd2`` MERGE of the raw batch: it
+    keeps the LATEST change per key (earlier same-batch changes are
+    superseded before touching the table), persists those rows once
+    for all its reads and merges copy-on-write with zone-map pruning.
+    On the first batch the same MERGE, into an empty snapshot, creates
+    the table. An empty batch commits a version that writes no file,
+    so its ``batch_id`` is recorded. Exactly-once via the recorded
+    ``batch_id`` high-water mark (``_commit_batch``), the same replay
+    contract as lake_upsert_sink: a replayed batch is skipped before
+    any arithmetic, so history can never double-close or duplicate
     versions."""
-    from ..operators.windows import latest_per_key
     from ..sources.metadata import LakeTable
 
-    vf, vt, cur = LakeTable.SCD2_COLS
-
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        winners = latest_per_key(batch_df, keys, change_ts)
         table = LakeTable(batch_df.sparkSession, table_path)
-        first = winners.select(
-            "*",
-            F.col(change_ts).cast("timestamp").alias(vf),
-            F.lit(None).cast("timestamp").alias(vt),
-            F.lit(True).alias(cur),
-        )
         _commit_batch(
             table,
             batch_id,
-            lambda extra: table.create(first, extra=extra),
-            lambda extra: table.upsert_scd2(winners, keys, change_ts, extra=extra),
+            lambda extra: table.upsert_scd2(batch_df, keys, change_ts, extra=extra),
         )
 
     return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
@@ -763,8 +748,8 @@ def indexed_novelty_sink(
         _commit_batch(
             table,
             batch_id,
-            lambda extra: table.create(df, extra=extra),
             lambda extra: table.append(df, extra=extra),
+            lambda extra: table.create(df, extra=extra),
         )
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:

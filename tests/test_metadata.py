@@ -4,6 +4,7 @@ partition pruning from the manifest, and atomic commits.
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
@@ -583,6 +584,19 @@ def test_changes_returns_only_new_rows(spark, tmp_path):
     assert t.changes(2, 2).count() == 0
 
 
+def test_empty_changes_read_starts_no_job(spark, tmp_path, jobs_started):
+    """A read of no file is a relation the optimizer knows is empty,
+    so collecting it, or a join or union against it, starts no job."""
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(1, "a")], "id long, k string"))
+    empty = t.changes(0, 0)
+    got = []
+    assert jobs_started(lambda: got.extend(empty.collect())) == 0
+    assert got == [] and empty.schema.simpleString() == "struct<id:bigint,k:string>"
+    both = empty.unionByName(t.changes(0, 0)).join(t.changes(0, 0), "id")
+    assert jobs_started(both.collect) == 0
+
+
 def test_cluster_by_zorder_enables_multi_column_skipping(spark, tmp_path):
     """After z-ordering on (x, y), a stat_filter on EITHER column must
     prune most files; a plain x-sorted layout only helps x."""
@@ -866,6 +880,40 @@ def test_scd2_upsert_keeps_history_and_point_in_time_reads(spark, tmp_path):
     assert feb == {1: "gold", 2: "silver"}
     jan = {r.id: r.tier for r in t.read_asof("2024-01-15 00:00:00").collect()}
     assert jan == {1: "bronze", 2: "silver"}
+
+
+def test_scd2_multi_row_batch_keeps_one_current_row_per_key(spark, tmp_path):
+    """One ``upsert_scd2`` call with two changes of one key opens only
+    the newest: the stored row closes at the newest change, and every
+    point-in-time read holds one row per key."""
+    t = LakeTable(spark, str(tmp_path / "dim"))
+    t.create(
+        spark.createDataFrame([("a", "bronze"), ("b", "silver")], "k string, tier string")
+    )
+    delta = "k string, tier string, ts string"
+
+    def merge(rows):
+        df = spark.createDataFrame(rows, delta)
+        return t.upsert_scd2(
+            df.withColumn("ts", F.col("ts").cast("timestamp")), keys=["k"], change_ts="ts"
+        )
+
+    merge([])  # the bootstrap: every stored row becomes current
+    merge([("a", "gold", "2024-01-02 00:00:00"), ("a", "platinum", "2024-01-03 00:00:00")])
+
+    jan3 = datetime.datetime(2024, 1, 3)
+    current = t.read().where("__is_current").collect()
+    assert sorted((r.k, r.tier) for r in current) == [("a", "platinum"), ("b", "silver")]
+    assert [r["__valid_from"] for r in current if r.k == "a"] == [jan3]
+    closed = t.read().where("NOT __is_current").collect()
+    assert [(r.k, r.tier, r["__valid_to"]) for r in closed] == [("a", "bronze", jan3)]
+    for at in ("2024-01-02 12:00:00", "2024-01-04 00:00:00"):
+        keys = [r.k for r in t.read_asof(at).collect()]
+        assert sorted(keys) == ["a", "b"]
+    assert {r.k: r.tier for r in t.read_asof("2024-01-04 00:00:00").collect()} == {
+        "a": "platinum",
+        "b": "silver",
+    }
 
 
 def test_scd2_prunes_unmatched_files_after_bootstrap(spark, tmp_path):
@@ -1309,6 +1357,84 @@ def test_empty_merge_batch_carries_every_file(spark, tmp_path, op):
     assert {f["path"] for f in after["files"]} == {f["path"] for f in before["files"]}
     assert after["rows"] == before["rows"] == 2000
     assert t.read().count() == 2000
+
+
+def _first_sink_commit(op, batch):
+    """What the streaming sink's first micro-batch committed before a
+    keyed MERGE could create its table: the upsert sink's
+    ``latest_per_key``, the aggregate sink's per-key counts and the
+    SCD2 sink's newest rows opened from their change time. A plain
+    upsert inserts every batch row."""
+    from big_data_data_lake_spark.operators.windows import latest_per_key
+
+    if op == "upsert":
+        return batch
+    if op == "accumulate":
+        return batch.groupBy("k").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    winners = latest_per_key(batch, ["k"], "ts")
+    if op == "upsert_order_col":
+        return winners
+    return winners.select(
+        "*",
+        F.col("ts").alias("__valid_from"),
+        F.lit(None).cast("timestamp").alias("__valid_to"),
+        F.lit(True).alias("__is_current"),
+    )
+
+
+@pytest.mark.parametrize("op", ["upsert", "upsert_order_col", "accumulate", "upsert_scd2"])
+def test_keyed_merge_into_missing_path_creates_version_0(spark, tmp_path, op):
+    """A keyed MERGE on a path with no table merges into an empty
+    snapshot and commits version 0 as ``create``: the same rows the
+    streaming sink's first batch committed, in-batch duplicate keys
+    and a NULL key included. An empty first batch commits version 0
+    with no file and the batch's schema, and the next MERGE fills it.
+    ``append`` still needs an existing table."""
+    rows = spark.createDataFrame(
+        [
+            ("a", "2024-01-01 00:00:00", "a1"), ("a", "2024-01-03 00:00:00", "a3"),
+            ("a", "2024-01-02 00:00:00", "a2"), ("b", "2024-01-01 00:00:00", "b1"),
+            (None, "2024-01-02 00:00:00", "n2"), (None, "2024-01-01 00:00:00", "n1"),
+        ],
+        "k string, ts string, v string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    if op == "accumulate":  # the aggregate sink's batch: a count of 1 per row
+        rows = rows.select("k", F.lit(1).cast("bigint").alias("n"))
+
+    def merge(t, batch, **kw):
+        return {
+            "upsert": lambda: t.upsert(batch, ["k"], **kw),
+            "upsert_order_col": lambda: t.upsert(batch, ["k"], order_col="ts", **kw),
+            "accumulate": lambda: t.accumulate(batch, ["k"], "n", **kw),
+            "upsert_scd2": lambda: t.upsert_scd2(batch, ["k"], "ts", **kw),
+        }[op]()
+
+    def table_rows(t):
+        df = t.read()
+        return sorted(map(repr, df.collect())), [(f.name, f.dataType) for f in df.schema]
+
+    want = LakeTable(spark, str(tmp_path / "want"))
+    want.create(_first_sink_commit(op, rows))
+
+    t = LakeTable(spark, str(tmp_path / "t"))
+    assert merge(t, rows, extra={"batch_id": 0}) == 0
+    assert [h["operation"] for h in t.history()] == ["create"]
+    assert t.manifest()["batch_id"] == 0
+    assert table_rows(t) == table_rows(want)
+
+    e = LakeTable(spark, str(tmp_path / "e"))
+    assert merge(e, rows.limit(0), extra={"batch_id": 0}) == 0
+    assert [h["operation"] for h in e.history()] == ["create"]
+    assert e.manifest()["files"] == [] and e._list_parquet() == set()
+    schema = StructType.fromJson(e.manifest()["schema_json"])
+    assert [(f.name, f.dataType) for f in schema] == [
+        (f.name, f.dataType) for f in rows.schema
+    ]
+    assert merge(e, rows) == 1
+    assert table_rows(e) == table_rows(want)
+
+    with pytest.raises(FileNotFoundError):
+        LakeTable(spark, str(tmp_path / "missing")).append(rows)
 
 
 @pytest.mark.parametrize(
