@@ -5,8 +5,9 @@ per micro-batch in streaming. The production posture at 100 TB: a
 quality dashboard must not cost a second pass over the data, and
 per-batch metrics are how an ingest pipeline alarms on upstream drift
 (sudden null spikes, schema rot) without blocking the write path —
-complementing the lake layer's HARD expectations (enforce_expectations
-fails or sheds rows; observe() only measures).
+complementing the lake layer's HARD expectations (the ``expectations``
+of a ``LakeTable`` write fail or shed rows, counted by an observation
+on the commit's own write; these metrics only measure).
 """
 
 from __future__ import annotations

@@ -293,53 +293,14 @@ class ExpectationViolation(ValueError):
         super().__init__(f"expectations violated: {violations}")
 
 
-def enforce_expectations(
-    df: DataFrame, rules: dict[str, str], mode: str = "fail"
-) -> tuple[DataFrame, dict[str, int]]:
-    """Write-time quality gates (the CHECK-constraint / expectations
-    pattern): ``rules`` maps rule name -> boolean SQL over the rows.
-    NULL results satisfy a rule (SQL-standard CHECK semantics) in both
-    the counting and the filtering path.
-
-    mode='fail'  -> raise ExpectationViolation if any rule has
-                    violations; nothing should be committed.
-    mode='drop'  -> return (df filtered to passing rows, counts); the
-                    caller records counts in the commit metadata.
-
-    Violation counting is ONE aggregation over the batch and the
-    collect is a single row of counters (metadata-scale, like the
-    upsert bounds fetch). It is a second scan next to the write; at
-    100 TB fold it into the write itself with ``df.observe()`` metrics
-    — same counters, zero extra passes."""
-    if mode not in ("fail", "drop"):
-        raise ValueError(f"unknown expectation mode: {mode}")
-    sat = {name: F.coalesce(F.expr(expr), F.lit(True)) for name, expr in rules.items()}
-    counts_row = df.agg(
-        *[
-            F.sum((~c).cast("bigint")).cast("bigint").alias(name)
-            for name, c in sat.items()
-        ]
-    ).collect()[0]
-    violations = {name: int(counts_row[name] or 0) for name in rules}
-    if mode == "fail":
-        if any(violations.values()):
-            raise ExpectationViolation({k: v for k, v in violations.items() if v})
-        return df, violations
-    clean = df
-    for c in sat.values():
-        clean = clean.where(c)
-    return clean, violations
-
-
-def _gate(
-    df: DataFrame, extra: dict | None, rules: dict[str, str] | None, mode: str
-) -> tuple[DataFrame, dict | None]:
-    """Apply ``enforce_expectations`` when ``rules`` are given and
-    record the mode and violation counts in the commit's ``extra``."""
-    if not rules:
-        return df, extra
-    df, stats = enforce_expectations(df, rules, mode)
-    return df, {**(extra or {}), "expectations": {"mode": mode, "violations": stats}}
+def _discard(paths) -> None:
+    """Delete data files no manifest will reference, each with the
+    checksum file Hadoop's local FS writes beside it."""
+    for path in paths:
+        d, name = os.path.split(path)
+        for p in (path, os.path.join(d, f".{name}.crc")):
+            if os.path.exists(p):
+                os.remove(p)
 
 
 class LakeTable:
@@ -460,7 +421,11 @@ class LakeTable:
         the directory listing, is the source of truth. Each entry
         records its on-disk ``bytes`` so later copy-on-write commits
         can size their rewrite output from the manifest alone (no
-        filesystem stat storm at 10^5 files)."""
+        filesystem stat storm at 10^5 files).
+
+        A file with 0 rows (Spark writes one, schema only, for an empty
+        frame) is deleted and left out, so an empty write adds no
+        file."""
         before = self._list_parquet()
         writer = df.write.mode("append")
         if partition_by:
@@ -469,13 +434,16 @@ class LakeTable:
 
         files: list[dict] = []
         for full in sorted(self._list_parquet() - before):
+            rows, col_stats = _footer_stats(full)
+            if not rows:
+                _discard([full])
+                continue
             pvals = {}
             rel = os.path.relpath(full, self.path)
             for seg in rel.split(os.sep)[:-1]:
                 if "=" in seg:
                     k, v = seg.split("=", 1)
                     pvals[k] = v
-            rows, col_stats = _footer_stats(full)
             files.append(
                 {
                     "path": full,
@@ -545,6 +513,8 @@ class LakeTable:
         extra: dict | None = None,
         schema=None,
         commit_if=None,
+        expectations: dict[str, str] | None = None,
+        expect_mode: str = "fail",
     ) -> int:
         """The one commit tail of every data-writing mutator: write
         ``df`` as new files and commit ``keep`` plus those files as
@@ -564,9 +534,21 @@ class LakeTable:
 
         ``df`` None writes no file: an empty MERGE batch still commits
         a version, so its ``extra`` (a streaming ``batch_id``) is
-        recorded. The commit records its operation metrics: files
-        written, files of ``prev`` not carried over, and bytes
+        recorded. An empty ``df`` writes no file either (``_write_files``
+        drops a 0-row file). The commit records its operation metrics:
+        files written, files of ``prev`` not carried over, and bytes
         written.
+
+        ``expectations`` gates the write with named CHECK rules: rule
+        name -> boolean SQL over the rows, where a NULL result
+        satisfies the rule (SQL CHECK semantics). One ``Observation``
+        on the written frame counts each rule's violations, so the gate
+        costs no pass of its own. ``expect_mode='drop'`` writes only
+        the rows that pass every rule; ``'fail'`` writes every row, and
+        when any rule has a violation deletes the files just written
+        and raises ``ExpectationViolation`` with nothing committed. The
+        mode and the per-rule counts are recorded in the manifest as
+        ``expectations``, an audit trail per version.
 
         ``commit_if``, when given, is called after the write: if it
         returns False the files just written are deleted and nothing is
@@ -574,14 +556,26 @@ class LakeTable:
         during the write itself (upsert's stale-batch count) veto the
         commit without a second pass over the data."""
         schema = schema if schema is not None else df.schema
+        rules = {n: F.coalesce(F.expr(e), F.lit(True)) for n, e in (expectations or {}).items()}
+        if rules:
+            if expect_mode not in ("fail", "drop"):
+                raise ValueError(f"unknown expectation mode: {expect_mode}")
+            obs = Observation()
+            df = df.observe(obs, *[F.count_if(~ok).alias(n) for n, ok in rules.items()])
+            if expect_mode == "drop":
+                for ok in rules.values():
+                    df = df.where(ok)
         new = self._write_files(df, prev["partition_by"]) if df is not None else []
-        if commit_if is not None and not commit_if():
-            for f in new:  # and the checksum file Hadoop's local FS writes beside it
-                d, name = os.path.split(f["path"])
-                for p in (f["path"], os.path.join(d, f".{name}.crc")):
-                    if os.path.exists(p):
-                        os.remove(p)
+        violations = {n: obs.get[n] for n in rules} if rules else {}
+        failed = {n: c for n, c in violations.items() if c and expect_mode == "fail"}
+        if failed or (commit_if is not None and not commit_if()):
+            _discard(f["path"] for f in new)
+            if failed:
+                raise ExpectationViolation(failed)
             return v_read
+        if rules:
+            audit = {"mode": expect_mode, "violations": violations}
+            extra = {**(extra or {}), "expectations": audit}
         files = keep + new
         manifest = {
             "schema_ddl": schema.simpleString(),  # human-readable
@@ -620,12 +614,15 @@ class LakeTable:
         expectations: dict[str, str] | None = None,
         expect_mode: str = "fail",
     ) -> int:
-        """Version 0: initial snapshot."""
+        """Version 0: initial snapshot. ``expectations`` gates the
+        batch exactly as in append."""
         if self.versions():
             raise FileExistsError(f"table already exists at {self.path}")
-        df, extra = _gate(df, extra, expectations, expect_mode)
         empty = {"files": [], "partition_by": partition_by or []}
-        return self._commit_files(-1, empty, [], df, "create", extra)
+        return self._commit_files(
+            -1, empty, [], df, "create", extra,
+            expectations=expectations, expect_mode=expect_mode,
+        )
 
     def append(
         self,
@@ -643,11 +640,11 @@ class LakeTable:
         (filled with nulls on write). Type changes and column renames
         are rejected — those are rewrites, not appends.
 
-        ``expectations`` gates the batch with named CHECK rules
-        (enforce_expectations): 'fail' rejects the whole commit,
-        'drop' admits passing rows and records violation counts in
-        the committed manifest — an audit trail per version."""
-        df, extra = _gate(df, extra, expectations, expect_mode)
+        ``expectations`` gates the batch with named CHECK rules, counted
+        by an observation on the write itself (``_commit_files``):
+        'fail' rejects the whole commit, 'drop' admits passing rows and
+        records violation counts in the committed manifest — an audit
+        trail per version."""
         v, prev = self._snapshot()
         prev_schema = StructType.fromJson(prev["schema_json"])
         if merge_schema:
@@ -687,7 +684,10 @@ class LakeTable:
                 for f in df.schema.fields
             ]
         )
-        return self._commit_files(v, prev, prev["files"], df, "append", extra, committed)
+        return self._commit_files(
+            v, prev, prev["files"], df, "append", extra, committed,
+            expectations=expectations, expect_mode=expect_mode,
+        )
 
     def overwrite(
         self,
@@ -699,9 +699,11 @@ class LakeTable:
         on disk so prior versions remain readable (``vacuum`` is the
         separate, explicitly destructive retirement step).
         ``expectations`` gates the batch exactly as in append."""
-        df, extra = _gate(df, None, expectations, expect_mode)
         v, prev = self._snapshot()
-        return self._commit_files(v, prev, [], df, "overwrite", extra)
+        return self._commit_files(
+            v, prev, [], df, "overwrite",
+            expectations=expectations, expect_mode=expect_mode,
+        )
 
     def add_bloom(self, col: str, bits: int = 1024, k: int = 4) -> int:
         """Maintenance commit attaching a per-file Bloom filter on
@@ -1015,6 +1017,7 @@ class LakeTable:
         operation: str,
         extra: dict | None = None,
         touch_all=None,
+        expectations: dict[str, str] | None = None,
     ) -> int:
         """The one copy-on-write MERGE step of ``upsert``,
         ``upsert_scd2`` and ``accumulate``; each supplies only its
@@ -1039,9 +1042,9 @@ class LakeTable:
         schema, and its merge commits version 0 as ``create``, so a
         streaming sink's first micro-batch needs no create of its own.
         A snapshot with no file has nothing to prune, so its batch is
-        neither persisted nor scanned for its key range: the write
-        itself counts the merged rows, and when there are none the
-        file it wrote is deleted and the version commits no file.
+        neither persisted nor scanned for its key range: its merge is
+        one write, and an empty result commits no file (the 0-row file
+        is dropped) with the merged frame's schema.
 
         An empty batch touches no file and writes none, but still
         commits a version, so its ``extra`` (a streaming ``batch_id``)
@@ -1053,7 +1056,11 @@ class LakeTable:
         plus the batch's bytes (the latter keeps a bulk MERGE from
         collapsing into too few write tasks). A merge that touches no
         file is append-shaped and keeps the batch's own partitioning,
-        and a touch-every-file merge keeps its input file layout."""
+        and a touch-every-file merge keeps its input file layout.
+
+        ``expectations`` gates every written merge in drop mode
+        (``_commit_files``): rows that fail a rule are left out and
+        counted in the version's ``expectations`` audit."""
         vs = self.versions()
         if vs:
             v, prev = vs[-1], self.manifest(vs[-1])
@@ -1062,18 +1069,10 @@ class LakeTable:
             v, prev, schema = -1, {"files": [], "partition_by": []}, df.schema
             operation = "create"
         batch = _to_table_types(df, schema)
-        if not prev["files"]:
-            # with no stored row every batch key wins, so the merged row
-            # count is the one veto
-            obs = Observation()
+        gated = partial(self._commit_files, expectations=expectations, expect_mode="drop")
+        if not prev["files"]:  # with no stored row every batch key wins
             merged = resolve(self._read_files(schema, []), batch, keys)[0]
-            written = self._commit_files(
-                v, prev, [], merged.observe(obs, F.count(F.lit(1)).alias("rows")),
-                operation, extra, commit_if=lambda: obs.get["rows"] > 0,
-            )
-            if written > v:
-                return written
-            return self._commit_files(v, prev, [], None, operation, extra, schema)
+            return gated(v, prev, [], merged, operation, extra)
         batch = batch.persist()
         try:
             everything = touch_all is not None and touch_all(schema)
@@ -1087,9 +1086,7 @@ class LakeTable:
             if touched and not everything:
                 batch_bytes = {"bytes": self._plan_size_estimate(batch), "path": ""}
                 merged = merged.coalesce(self._rewrite_partitions(touched + [batch_bytes]))
-            return self._commit_files(
-                v, prev, keep, merged, operation, extra, commit_if=commit_if
-            )
+            return gated(v, prev, keep, merged, operation, extra, commit_if=commit_if)
         finally:
             batch.unpersist()
 
@@ -1294,7 +1291,15 @@ class LakeTable:
         per key on ``change_ts`` (``latest_per_key``) closes the stored
         row and opens a version, so one call leaves one current row per
         key. On a path with no table the newest rows commit as version 0
-        ``create``, each open from its ``change_ts``."""
+        ``create``, each open from its ``change_ts``; an empty first
+        batch commits version 0 with no file and the SCD2 columns, so
+        ``read_asof`` reads it.
+
+        A row whose ``change_ts`` is NULL opens no version and closes
+        none: the close join skips a NULL close time, and the drop-mode
+        rule ``<change_ts>_not_null`` sheds the row and counts it in
+        the version's ``expectations`` audit, so the stored row stays
+        current."""
         vf, vt, cur = self.SCD2_COLS
 
         def close_and_open(stored: DataFrame, batch: DataFrame, keys: list[str]):
@@ -1328,6 +1333,7 @@ class LakeTable:
             latest_per_key(df, keys, change_ts), keys, close_and_open, "upsert_scd2",
             extra,
             touch_all=lambda schema: vf not in schema.names,
+            expectations={f"{change_ts}_not_null": f"{vf} IS NOT NULL"},
         )
 
     def read_asof(self, t, version: int | None = None) -> DataFrame:

@@ -548,19 +548,22 @@ def lake_table_sink(
     ``expectations`` applies write-time CHECK gates per micro-batch in
     drop mode (a stream must keep flowing, so violating ROWS are shed
     and counted, never the whole batch rejected); each committed
-    manifest carries that batch's violation audit."""
+    manifest carries that batch's violation audit. The violations are
+    counted by an observation on the commit's own write, so a gated
+    commit runs the same one job as an ungated one."""
     from ..sources.metadata import LakeTable
-
-    gate = {"expectations": expectations, "expect_mode": "drop"} if expectations else {}
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         table = LakeTable(batch_df.sparkSession, table_path)
         _commit_batch(
             table,
             batch_id,
-            lambda extra: table.append(batch_df, extra=extra, **gate),
+            lambda extra: table.append(
+                batch_df, extra=extra, expectations=expectations, expect_mode="drop"
+            ),
             lambda extra: table.create(
-                batch_df, partition_by=partition_by, extra=extra, **gate
+                batch_df, partition_by=partition_by, extra=extra,
+                expectations=expectations, expect_mode="drop",
             ),
         )
 

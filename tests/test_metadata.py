@@ -680,6 +680,51 @@ def test_expectations_drop_mode_filters_and_audits(spark, tmp_path):
     assert got == [1, 3, 4]  # -5 dropped; NULL kept
 
 
+def test_expectations_fail_mode_leaves_no_file_behind(spark, tmp_path):
+    """The fail-mode veto runs after the write: the files it wrote are
+    deleted, so every parquet file on disk is one the manifest lists."""
+    from big_data_data_lake_spark.sources.metadata import ExpectationViolation
+
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(1, 10.0)], "id long, v double"))
+    bad = spark.createDataFrame([(2, -5.0), (3, 7.0)], "id long, v double")
+    with pytest.raises(ExpectationViolation):
+        t.append(bad, expectations={"v_nonneg": "v >= 0"})
+    assert t.latest_version() == 0
+    assert t._list_parquet() == {f["path"] for f in t.manifest()["files"]}
+
+
+def test_zero_row_file_never_enters_a_manifest(spark, tmp_path):
+    """An empty write commits no file: ``create`` and ``overwrite`` of
+    an empty frame, and a ``delete_where`` that empties a file, leave
+    no 0-row manifest entry, and the 0-row file Spark wrote is gone
+    from disk with its checksum."""
+    schema = "id long, v string"
+    t = LakeTable(spark, str(tmp_path / "t"))
+
+    def check(v):
+        files = t.manifest(v)["files"]
+        assert all(f["rows"] > 0 for f in files)
+        listed = {f["path"] for u in t.versions() for f in t.manifest(u)["files"]}
+        assert t._list_parquet() == listed
+        crcs = {
+            os.path.join(d, n[1:-4])
+            for d, _, names in os.walk(t.path)
+            for n in names
+            if n.endswith(".parquet.crc")
+        }
+        assert crcs <= listed
+        return files
+
+    assert check(t.create(spark.createDataFrame([], schema))) == []
+    t.append(spark.createDataFrame([(1, "a"), (2, "b")], schema).coalesce(1))
+    t.append(spark.createDataFrame([(10, "c")], schema).coalesce(1))
+    assert [f["rows"] for f in check(t.delete_where("id < 10"))] == [1]
+    assert sorted(r.id for r in t.read().collect()) == [10]
+    assert check(t.overwrite(spark.createDataFrame([], schema))) == []
+    assert t.read().count() == 0
+
+
 def test_bloom_filter_point_lookup_skips_files(spark, tmp_path):
     """Bloom skipping prunes files for point lookups that zone maps
     cannot (hash-scattered keys: every file's min/max covers every
@@ -913,6 +958,23 @@ def test_scd2_multi_row_batch_keeps_one_current_row_per_key(spark, tmp_path):
     assert {r.k: r.tier for r in t.read_asof("2024-01-04 00:00:00").collect()} == {
         "a": "platinum",
         "b": "silver",
+    }
+
+
+def test_scd2_null_change_ts_keeps_the_stored_row_current(spark, tmp_path):
+    """A batch row with a NULL ``change_ts`` neither closes the stored
+    row nor opens a version: it is shed and counted in the version's
+    ``expectations`` audit, and the key keeps one current row."""
+    t = LakeTable(spark, str(tmp_path / "dim"))
+    t.create(spark.createDataFrame([("a", "bronze")], "k string, tier string"))
+    v = t.upsert_scd2(
+        spark.createDataFrame([("a", "gold", None)], "k string, tier string, ts timestamp"),
+        keys=["k"], change_ts="ts",
+    )
+    current = t.read().where("__is_current").collect()
+    assert [(r.k, r.tier) for r in current] == [("a", "bronze")]
+    assert t.manifest(v)["expectations"] == {
+        "mode": "drop", "violations": {"ts_not_null": 1}
     }
 
 
@@ -1388,8 +1450,9 @@ def test_keyed_merge_into_missing_path_creates_version_0(spark, tmp_path, op):
     snapshot and commits version 0 as ``create``: the same rows the
     streaming sink's first batch committed, in-batch duplicate keys
     and a NULL key included. An empty first batch commits version 0
-    with no file and the batch's schema, and the next MERGE fills it.
-    ``append`` still needs an existing table."""
+    with no file and the merged frame's schema (an SCD2 table's
+    includes its validity columns, so ``read_asof`` reads it), and the
+    next MERGE fills it. ``append`` still needs an existing table."""
     rows = spark.createDataFrame(
         [
             ("a", "2024-01-01 00:00:00", "a1"), ("a", "2024-01-03 00:00:00", "a3"),
@@ -1428,8 +1491,10 @@ def test_keyed_merge_into_missing_path_creates_version_0(spark, tmp_path, op):
     assert e.manifest()["files"] == [] and e._list_parquet() == set()
     schema = StructType.fromJson(e.manifest()["schema_json"])
     assert [(f.name, f.dataType) for f in schema] == [
-        (f.name, f.dataType) for f in rows.schema
+        (f.name, f.dataType) for f in want.read().schema
     ]
+    if op == "upsert_scd2":
+        assert e.read_asof("2024-01-02 00:00:00").count() == 0
     assert merge(e, rows) == 1
     assert table_rows(e) == table_rows(want)
 

@@ -698,3 +698,70 @@ def test_exact_sum_survives_past_long_range():
     assert wide.collect()[0]["s"] == round(2 * v, 2)
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW|overflow"):
         df.agg(exact_sum("v", scale=10000).alias("s")).collect()
+
+
+# CHECK rules over (a, b), NULLs included: each result may be NULL
+_GATE_RULES = {
+    "a_pos": "a > 0",
+    "b_set": "b IS NOT NULL",
+    "a_below_b": "a < b",
+    "sum_small": "a + b <= 2",
+}
+
+
+def _scan_gate(df, rules: dict, mode: str):
+    """The reference gate: one aggregation over the batch counts each
+    rule's violations before any write (NULL satisfies a rule), and
+    drop mode filters to the rows that pass every rule. Returns
+    (violations, rows the commit should hold)."""
+    from pyspark.sql import functions as F
+
+    sat = {name: F.coalesce(F.expr(expr), F.lit(True)) for name, expr in rules.items()}
+    counts_row = df.agg(
+        *[
+            F.sum((~c).cast("bigint")).cast("bigint").alias(name)
+            for name, c in sat.items()
+        ]
+    ).collect()[0]
+    violations = {name: int(counts_row[name] or 0) for name in rules}
+    clean = df
+    if mode == "drop":
+        for c in sat.values():
+            clean = clean.where(c)
+    return violations, clean.collect()
+
+
+_maybe_int = st.one_of(st.none(), st.integers(-3, 3))
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    rows=st.lists(st.tuples(_maybe_int, _maybe_int), max_size=10),
+    names=st.sets(st.sampled_from(sorted(_GATE_RULES)), min_size=1),
+    mode=st.sampled_from(["fail", "drop"]),
+)
+def test_commit_gate_matches_a_scan_of_the_batch(
+    spark, tmp_path_factory, rows, names, mode
+):
+    """The expectation gate observed on a LakeTable append's own write
+    commits the same rows and records the same violation counts as a
+    separate aggregation over the batch, in both modes; a violating
+    fail-mode batch commits nothing."""
+    from big_data_data_lake_spark.sources.metadata import ExpectationViolation, LakeTable
+
+    rules = {n: _GATE_RULES[n] for n in sorted(names)}
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(rows)], "id int, a int, b int"
+    )
+    violations, want = _scan_gate(df, rules, mode)
+    t = LakeTable(spark, str(tmp_path_factory.mktemp("gate") / "t"))
+    t.create(df.limit(0))
+    if mode == "fail" and any(violations.values()):
+        with pytest.raises(ExpectationViolation) as ei:
+            t.append(df, expectations=rules, expect_mode=mode)
+        assert ei.value.violations == {n: c for n, c in violations.items() if c}
+        assert t.latest_version() == 0 and t.manifest()["files"] == []
+        return
+    v = t.append(df, expectations=rules, expect_mode=mode)
+    assert t.manifest(v)["expectations"] == {"mode": mode, "violations": violations}
+    assert sorted(t.read().collect()) == sorted(want)
