@@ -1,6 +1,6 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line:
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+host's cores) and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {...}, "sf": <float>}
@@ -27,7 +27,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from big_data_data_lake_spark.caching import release_query_caches
 from big_data_data_lake_spark.queries import load_all
-from big_data_data_lake_spark.session import codegen_compiles, get_spark
+from big_data_data_lake_spark.session import (
+    codegen_compiles,
+    env_positive_int,
+    get_spark,
+    local_cpus,
+)
 
 # Headline set: one per operator family (scan/agg, joins, windows,
 # quantiles, trig, sessionization, time windows, dedup x3, similarity
@@ -304,8 +309,8 @@ def shuffle_partitions(sf_dir: str, cpus: int) -> int:
     """The tier's shuffle-partition count: $SPARK_GRAFT_SHUFFLE_PARTITIONS
     when set, else the input-bytes rule above. Every tool resolves it
     here, so a replay runs under the config its bench record ran under."""
-    return int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
+    return env_positive_int(
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS"
     ) or _auto_shuffle_partitions(sf_dir, cpus)
 
 
@@ -421,7 +426,7 @@ def host_canary(spark) -> dict[str, float]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or 0.1)
 
     spark = get_spark(

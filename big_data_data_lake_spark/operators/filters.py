@@ -18,12 +18,6 @@ def membership(col: Column | str, values: Sequence) -> Column:
     return c.isin(list(values))
 
 
-def airborne(on_ground: Column | str = "on_ground") -> Column:
-    """F2 — boolean equality on on_ground (app.py:219,236)."""
-    c = F.col(on_ground) if isinstance(on_ground, str) else on_ground
-    return ~c
-
-
 def in_range(col: Column | str, lo, hi) -> Column:
     """F3 — between (app.py:220-222)."""
     c = F.col(col) if isinstance(col, str) else col

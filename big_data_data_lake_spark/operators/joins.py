@@ -7,7 +7,6 @@ fact side keeps its partitioning, so downstream aggregations reuse it.
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -154,40 +153,3 @@ def anti(fact: DataFrame, other: DataFrame, key: str | Sequence[str]) -> DataFra
     """NOT EXISTS — rows of fact without a match."""
     keys = [key] if isinstance(key, str) else list(key)
     return fact.join(other, on=keys, how="left_anti")
-
-
-def point_in_time_join(
-    facts: DataFrame,
-    dim_history: DataFrame,
-    key: str | Sequence[str],
-    ts_col: str,
-    valid_from: str = "__valid_from",
-    valid_to: str = "__valid_to",
-) -> DataFrame:
-    """Join each fact row to the dimension version that was CURRENT at
-    the fact's event time — the read side of SCD2 (LakeTable.
-    upsert_scd2 writes the history; this consumes it). A fact at ts
-    matches the row with valid_from <= ts < valid_to (null valid_to =
-    still open); facts before the key's first version get NULL
-    attributes (left join).
-
-    Scale shape: an equi-join on the key with the interval predicate
-    evaluated inside the matched (fact, version) candidates — per-key
-    history is version-count-bounded (a dim attribute changes
-    thousands of times at most, never data-scale), so candidate
-    fan-out is |facts| x versions_per_key, not a range-join
-    explosion. Broadcast the history when it fits; the fact side
-    never shuffles in that case."""
-    keys = [key] if isinstance(key, str) else list(key)
-    cond = [facts[k] == dim_history[k] for k in keys]
-    interval = (dim_history[valid_from] <= facts[ts_col]) & (
-        dim_history[valid_to].isNull() | (facts[ts_col] < dim_history[valid_to])
-    )
-    joined = facts.join(
-        dim_history, functools.reduce(lambda a, b: a & b, cond) & interval, "left"
-    )
-    drop = [dim_history[k] for k in keys]
-    out = joined
-    for c in drop:
-        out = out.drop(c)
-    return out

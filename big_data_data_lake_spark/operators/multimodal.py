@@ -9,9 +9,10 @@ stdlib ``zlib``; the scanline filters are numpy), and baseline JPEG
 (numpy DCT + pure-Python Huffman, ``operators/jpeg.py``) — with
 numpy nearest-neighbor resampling behind ``resize_images``; only
 video containers remain a clearly-marked NotImplementedError stub,
-because ffmpeg is absent in this container. The plumbing — binary columns, Arrow batch transfer,
-output schema, 1→n flatMap shape — is identical either way: swapping
-in PIL/ffmpeg changes only a function body, never the plan.
+because ffmpeg is absent in this container. The plumbing — binary
+columns, Arrow batch transfer, output schema — is identical either
+way: swapping in PIL/ffmpeg changes only a function body, never the
+plan.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 FEATURE_SCHEMA = "doc_id bigint, blob_len int, first_byte int, checksum int"
@@ -219,33 +220,6 @@ def decode_png(blob: bytes) -> np.ndarray:
     return np.repeat(px[:, :, :1], 3, axis=2)
 
 
-def encode_png(img: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 RGB -> PNG bytes (8-bit color type 2, filter
-    None per scanline, stdlib zlib DEFLATE + CRCs). Round-trips
-    ``decode_png`` exactly; any external PNG reader accepts it."""
-    import zlib
-
-    h, w = img.shape[:2]
-    body = np.ascontiguousarray(img, dtype=np.uint8)
-    raw = b"".join(b"\x00" + body[y].tobytes() for y in range(h))
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            len(data).to_bytes(4, "big")
-            + typ
-            + data
-            + (zlib.crc32(typ + data) & 0xFFFFFFFF).to_bytes(4, "big")
-        )
-
-    ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 2, 0, 0, 0])
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
 def decode_image(blob: bytes) -> np.ndarray:
     """Decode an image blob to an (h, w, 3) uint8 RGB array.
 
@@ -388,26 +362,6 @@ def decode_wav(blob: bytes) -> tuple[np.ndarray, int]:
     return samples, rate
 
 
-def encode_wav(samples: np.ndarray, rate: int) -> bytes:
-    """(n, channels) int16 -> 16-bit PCM WAV bytes (round-trips
-    decode_wav)."""
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, ch = samples.shape
-    data = np.ascontiguousarray(samples, dtype="<i2").tobytes()
-    fmt = (
-        (1).to_bytes(2, "little")
-        + ch.to_bytes(2, "little")
-        + rate.to_bytes(4, "little")
-        + (rate * ch * 2).to_bytes(4, "little")
-        + (ch * 2).to_bytes(2, "little")
-        + (16).to_bytes(2, "little")
-    )
-    body = b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-    body += b"data" + len(data).to_bytes(4, "little") + data
-    return b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WAVE" + body
-
-
 def _as_mono_float(blob: bytes) -> tuple[np.ndarray, int]:
     """Decode to mono float in [-1, 1]: real WAV decode when the blob
     is RIFF; otherwise the bytes are INTERPRETED as headerless
@@ -454,293 +408,3 @@ def audio_features(df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
             yield pd.DataFrame(out)
 
     return df.select(id_col, blob_col).mapInPandas(op, schema=AUDIO_FEATURE_SCHEMA)
-
-
-FRAME_ENERGY_SCHEMA = "doc_id bigint, frame_idx int, start_ms double, rms double"
-
-
-def frame_energy(
-    df: DataFrame,
-    frame_ms: int = 250,
-    id_col: str = "doc_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """Windowed RMS energy per fixed-length frame (1 clip in →
-    n_frames rows out — the flatMap shape of VAD / silence-trimming
-    front-ends). Real windowed DSP over the decoded waveform."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, starts, rmss = [], [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf[blob_col]):
-                x, rate = _as_mono_float(blob)
-                step = max(1, int(rate * frame_ms / 1000))
-                n = len(x)
-                n_frames = max(1, -(-n // step))
-                # One reshape + axis reduction instead of a Python
-                # per-frame loop: zero-pad to a (n_frames, step) grid
-                # (adding 0.0 is float-exact, so padded row sums equal
-                # the unpadded frame sums bit-for-bit), then divide by
-                # each frame's REAL length so the partial tail frame
-                # is not diluted.
-                if n:
-                    padded = np.zeros(n_frames * step, dtype=np.float64)
-                    padded[:n] = x
-                    sumsq = np.square(padded).reshape(n_frames, step).sum(axis=1)
-                    lens = np.full(n_frames, step, dtype=np.float64)
-                    lens[-1] = n - (n_frames - 1) * step
-                    frame_rms = np.sqrt(sumsq / lens)
-                else:
-                    frame_rms = np.zeros(1)
-                ids.extend([int(doc_id)] * n_frames)
-                idxs.extend(range(n_frames))
-                starts.extend(
-                    round(i * step * 1000.0 / rate, 3) for i in range(n_frames)
-                )
-                rmss.extend(float(v) for v in frame_rms)
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "start_ms": starts, "rms": rmss}
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(op, schema=FRAME_ENERGY_SCHEMA)
-
-
-FRAME_SAMPLE_SCHEMA = "doc_id bigint, frame_idx int, frame binary"
-
-
-def _ppm_frame_length(blob: bytes, pos: int) -> int:
-    """Byte length of the P6 frame starting at ``pos`` (header +
-    raster), using the same tokenizer/terminator rules as decode_ppm."""
-    tok, p = _ppm_token(blob, pos)
-    if tok != b"P6":
-        raise ValueError(f"not a P6 frame at offset {pos}")
-    w_tok, p = _ppm_token(blob, p)
-    h_tok, p = _ppm_token(blob, p)
-    _mx, p = _ppm_token(blob, p)
-    raster_off = p + 2 if blob[p : p + 2] == b"\r\n" else p + 1
-    return (raster_off - pos) + int(w_tok) * int(h_tok) * 3
-
-
-def split_ppm_stream(blob: bytes) -> list[bytes]:
-    """Split a concatenated-P6 video stream into its frames — the
-    ``ffmpeg -f image2pipe -vcodec ppm`` wire format (a REAL format, so
-    the extraction is genuine container work, not a stand-in). Each
-    frame's extent comes from its own header, so variable-size frames
-    are fine; trailing garbage raises instead of yielding a torn
-    frame."""
-    frames = []
-    pos = 0
-    while pos < len(blob):
-        length = _ppm_frame_length(blob, pos)
-        if pos + length > len(blob):
-            raise ValueError(f"truncated PPM frame at offset {pos}")
-        frames.append(bytes(blob[pos : pos + length]))
-        pos += length
-    return frames
-
-
-def _jpeg_frame_length(blob: bytes, pos: int) -> int:
-    """Byte length of the baseline JPEG frame starting at ``pos``
-    (must be SOI): walks marker SEGMENTS by their length fields —
-    never scanning payloads, where ``FF D9`` may legally occur (an
-    EXIF APP1 thumbnail carries its own EOI) — then scans the
-    post-SOS entropy stream, where a bare ``FF D9`` IS unambiguous
-    (encoders stuff data ``FF`` as ``FF 00``; ``FF D0-D7`` are
-    restart markers). Exact for spec-conformant baseline (single-
-    scan) frames; T.81-legal ``FF`` fill bytes before markers are
-    skipped."""
-    n = len(blob)
-    p = pos + 2  # past SOI
-    while True:
-        while p + 1 < n and blob[p] == 0xFF and blob[p + 1] == 0xFF:
-            p += 1  # fill byte
-        if p + 1 >= n:
-            raise ValueError(f"truncated MJPEG frame at offset {pos}")
-        if blob[p] != 0xFF:
-            raise ValueError(f"garbage in marker stream at offset {p}")
-        marker = blob[p + 1]
-        if marker == 0xD9:  # EOI with no scan — empty but well-formed
-            return p + 2 - pos
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # standalone
-            p += 2
-            continue
-        if p + 4 > n:
-            raise ValueError(f"truncated MJPEG frame at offset {pos}")
-        seg_len = (blob[p + 2] << 8) | blob[p + 3]
-        if marker == 0xDA:  # SOS: entropy data follows the header
-            q = p + 2 + seg_len
-            while q + 1 < n:
-                if blob[q] == 0xFF and blob[q + 1] == 0xD9:
-                    return q + 2 - pos
-                q += 1
-            raise ValueError(f"truncated MJPEG frame at offset {pos}")
-        p += 2 + seg_len
-
-
-def split_mjpeg_stream(blob: bytes) -> list[bytes]:
-    """Split an MJPEG stream (concatenated baseline JPEGs — the
-    ``ffmpeg -f image2pipe -vcodec mjpeg`` / motion-JPEG-over-HTTP
-    wire format) into its frames on SOI..EOI extents. Each frame's
-    extent comes from a real marker-segment walk
-    (``_jpeg_frame_length``): segment payloads are skipped by their
-    length fields, so an ``FF D9`` inside e.g. an EXIF thumbnail
-    cannot split a frame early (advisor finding, r5 — the naive
-    forward scan would), and only the entropy stream — where EOI is
-    unambiguous — is scanned. A missing EOI raises instead of
-    yielding a torn frame."""
-    frames = []
-    pos = 0
-    while pos < len(blob):
-        if blob[pos : pos + 2] != b"\xff\xd8":
-            raise ValueError(f"not a JPEG frame at offset {pos}")
-        length = _jpeg_frame_length(blob, pos)
-        frames.append(bytes(blob[pos : pos + length]))
-        pos += length
-    return frames
-
-
-def sample_frames(
-    df: DataFrame,
-    n_frames: int = 4,
-    frame_bytes: int = 16,
-    id_col: str = "doc_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """Video frame sampling (1 row in → n_frames rows out — the
-    flatMap shape of an ffmpeg-backed keyframe sampler).
-
-    Blobs that are concatenated-PPM video streams (image2pipe format,
-    magic ``P6``) or MJPEG streams (concatenated JPEGs, magic
-    ``FF D8``) get REAL frame extraction: the stream is split on
-    frame boundaries and ``n_frames`` equally-spaced WHOLE frames come
-    back, each independently decodable by ``decode_image`` (round-trip
-    tested). Inter-coded containers (MP4/AVI) would need ffmpeg —
-    absent here — so any other blob falls back to the deterministic
-    equally-spaced byte-slice stand-in, keeping the operator total on
-    mixed corpora."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf[blob_col]):
-                magic = bytes(blob[:2])
-                if magic == b"P6" or magic == b"\xff\xd8":
-                    all_frames = (
-                        split_ppm_stream(bytes(blob))
-                        if magic == b"P6"
-                        else split_mjpeg_stream(bytes(blob))
-                    )
-                    # equally-spaced sample over the real frame list
-                    take = min(n_frames, len(all_frames))
-                    picks = [
-                        all_frames[(i * len(all_frames)) // take]
-                        for i in range(take)
-                    ]
-                    for i, fr in enumerate(picks):
-                        ids.append(int(doc_id))
-                        idxs.append(i)
-                        frames.append(fr)
-                    continue
-                step = max(1, len(blob) // n_frames)
-                for i in range(n_frames):
-                    start = i * step
-                    ids.append(int(doc_id))
-                    idxs.append(i)
-                    frames.append(bytes(blob[start : start + frame_bytes]))
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return df.select(id_col, blob_col).mapInPandas(op, schema=FRAME_SAMPLE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Perceptual hashing + image near-duplicate detection
-# ---------------------------------------------------------------------------
-
-PHASH_SCHEMA = "doc_id bigint, dhash bigint"
-PHASH_BITS = 64
-PHASH_CHUNKS = 4  # 16-bit chunks; pigeonhole covers hamming <= 3
-
-
-def dhash_image(img: np.ndarray, hash_w: int = 8, hash_h: int = 8) -> int:
-    """Difference hash: grayscale, resample to (hash_h, hash_w+1),
-    take the sign of each horizontal gradient — 64 bits that survive
-    resizing, re-encoding, brightness shifts, and small edits, which
-    is exactly what byte-level dedup can't see. Returned as a SIGNED
-    int64 (two's complement) so it round-trips a Spark bigint."""
-    gray = img.mean(axis=2) if img.ndim == 3 else img
-    small = resize_nearest(gray, hash_w + 1, hash_h)
-    bits = (small[:, 1:] > small[:, :-1]).flatten()
-    packed = np.packbits(bits.astype(np.uint8)).tobytes()
-    return int.from_bytes(packed[:8].ljust(8, b"\0"), "big", signed=True)
-
-
-def perceptual_hashes(
-    df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
-) -> DataFrame:
-    """dHash every decodable image blob over Arrow batches; rows whose
-    blob can't be decoded (compressed codec, truncated file) are
-    DROPPED — crawl-corpus posture: undecodable media can't be
-    perceptually deduped, and downstream joins shouldn't see them."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, b in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    img = decode_image(bytes(b))
-                except (NotImplementedError, ValueError):
-                    continue
-                ids.append(int(doc_id))
-                hashes.append(dhash_image(img))
-            yield pd.DataFrame(
-                {"doc_id": pd.array(ids, dtype="int64"),
-                 "dhash": pd.array(hashes, dtype="int64")}
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(op, schema=PHASH_SCHEMA)
-
-
-def image_near_dups(hashes: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-duplicate image pairs from a (doc_id, dhash) frame:
-    band the 64-bit hash into four 16-bit chunks and equi-join on
-    any-chunk-equal (pigeonhole: hamming <= 3 guarantees one equal
-    chunk), then recheck exact hamming with bit_count(xor) — the same
-    band-join-then-verify shape as simhash_near_dups, applied to the
-    visual domain.
-
-    Scale shape: the only shuffle is the (chunk_idx, chunk_value)
-    equi-join; candidate volume is governed by band width, never
-    corpus size squared, and the verify step is a row-local bit op.
-    At 100 TB of images the hash frame is 16 bytes/row — the join
-    input is ~1/10^5 the corpus bytes."""
-    if max_hamming >= PHASH_CHUNKS:
-        raise ValueError(
-            f"pigeonhole banding with {PHASH_CHUNKS} chunks only covers "
-            f"hamming <= {PHASH_CHUNKS - 1}; got {max_hamming}"
-        )
-    chunks = F.array(
-        *[
-            (F.shiftrightunsigned(F.col("dhash"), 16 * i).bitwiseAND(F.lit(0xFFFF)))
-            for i in range(PHASH_CHUNKS)
-        ]
-    )
-    banded = hashes.select(
-        "doc_id", "dhash", F.posexplode(chunks).alias("chunk_idx", "chunk_val")
-    )
-    a = banded.select(
-        F.col("doc_id").alias("d1"), F.col("dhash").alias("h1"), "chunk_idx", "chunk_val"
-    )
-    b = banded.select(
-        F.col("doc_id").alias("d2"), F.col("dhash").alias("h2"), "chunk_idx", "chunk_val"
-    )
-    return (
-        a.join(b, ["chunk_idx", "chunk_val"])
-        .filter(F.col("d1") < F.col("d2"))
-        .select(
-            "d1",
-            "d2",
-            F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["d1", "d2"])
-    )

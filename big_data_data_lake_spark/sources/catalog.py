@@ -180,52 +180,3 @@ def read_jsonl(spark: SparkSession, path: str, schema=None, glob: str | None = N
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """ORC source — the second columnar format Spark ships natively.
-
-    Beyond the reference's surface (its lake is parquet-only): kept
-    thin because ORC shares parquet's scan behaviors (column pruning,
-    predicate pushdown into stripe/row-group stats), so every
-    downstream operator is format-agnostic. Avro, by contrast, needs
-    the external spark-avro jar (org.apache.spark:spark-avro_2.13) —
-    not in this container, so it is documented here rather than
-    half-implemented.
-    """
-    reader = spark.read
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink (zlib default codec; snappy via spark.sql.orc.compression.codec)."""
-    df.write.mode(mode).orc(path)
-
-
-def read_binary_files(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Binary-file source (``binaryFile`` format): one row per file
-    with (path, modificationTime, length, content) — the ingest edge
-    for the multimodal pipeline (operators/multimodal.py decodes the
-    ``content`` byte column into images/audio/frames downstream).
-
-    ``glob`` maps to pathGlobFilter (e.g. ``*.ppm``); ``max_bytes``
-    filters oversized blobs BY the scan's length column so the filter
-    is evaluated before content lands in memory. At 100 TB of media,
-    partition the directory layout by ingest date and size-bucket so
-    Spark's file listing parallelizes and no task deserializes a
-    multi-GB blob; spark.sql.files.maxPartitionBytes governs batch
-    packing of small files into tasks."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    if max_bytes is not None:
-        df = df.filter(F.col("length") <= max_bytes)
-    return df

@@ -76,174 +76,3 @@ class TableFormat(Protocol):
     def compact(self, *args, **kwargs) -> int: ...
 
     def vacuum(self, retain_last: int = 1) -> list[str]: ...
-
-
-def delta_available() -> bool:
-    """True when the delta-spark Python binding (and therefore its
-    jar) is importable — the gate an adapter registration checks, the
-    same pattern as the env-gated Kafka smoke."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def delta_session_builder(builder):
-    """Apply the Delta session wiring documented in this module's
-    header to a SparkSession.Builder (extensions + catalog), then let
-    delta-spark pin its jar. Callable only where ``delta_available()``
-    — split out so tests and deployments share one binding recipe."""
-    from delta import configure_spark_with_delta_pip
-
-    return configure_spark_with_delta_pip(
-        builder.config(
-            "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-        ).config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-    )
-
-
-class DeltaTableAdapter:
-    """The TableFormat binding for Delta Lake — the executable form of
-    the method mapping in this module's docstring, so the seam is
-    code, not prose. Construction is delta-import-free (all delta
-    calls are inside methods), which lets the structural protocol
-    check run in jar-less containers while execution stays gated on
-    ``delta_available()`` (tests/test_metadata.py runs the full
-    create/append/time-travel/upsert/changes parity sweep wherever
-    the jar exists — same env-gate pattern as the Kafka smoke).
-
-    Version numbers are Delta's own commit versions, so time travel
-    and change feeds line up with ``LakeTable`` semantics one-to-one;
-    ``create`` enables the change data feed table property so
-    ``changes`` works from version 0, matching LakeTable's CDF.
-    ``vacuum(retain_last=n)`` maps version-retention onto Delta's
-    time-retention by resolving the timestamp of the n-th-newest
-    commit (DESCRIBE HISTORY) — the same files survive."""
-
-    def __init__(self, spark, path: str):
-        self.spark = spark
-        self.path = path
-
-    # -- snapshot metadata -------------------------------------------------
-    def _history(self):
-        from delta.tables import DeltaTable
-
-        return DeltaTable.forPath(self.spark, self.path).history()
-
-    def versions(self) -> list[int]:
-        return sorted(r.version for r in self._history().select("version").collect())
-
-    def latest_version(self) -> int:
-        return self.versions()[-1]
-
-    # -- writes ------------------------------------------------------------
-    def create(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
-        w = (
-            df.write.format("delta")
-            .option("delta.enableChangeDataFeed", "true")
-            .mode("errorifexists")
-        )
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(self.path)
-        return self.latest_version()
-
-    def _write(self, df: DataFrame, mode: str) -> int:
-        df.write.format("delta").mode(mode).save(self.path)
-        return self.latest_version()
-
-    def append(self, df: DataFrame) -> int:
-        return self._write(df, "append")
-
-    def overwrite(self, df: DataFrame) -> int:
-        return self._write(df, "overwrite")
-
-    def upsert(self, df: DataFrame, keys: list[str]) -> int:
-        from delta.tables import DeltaTable
-
-        t = DeltaTable.forPath(self.spark, self.path)
-        cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in keys)
-        (
-            t.alias("t")
-            .merge(df.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return self.latest_version()
-
-    # -- reads -------------------------------------------------------------
-    def read(self, version: int | None = None) -> DataFrame:
-        r = self.spark.read.format("delta")
-        if version is not None:
-            r = r.option("versionAsOf", version)
-        return r.load(self.path)
-
-    def changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
-        r = (
-            self.spark.read.format("delta")
-            .option("readChangeFeed", "true")
-            .option("startingVersion", v_from)
-        )
-        if v_to is not None:
-            r = r.option("endingVersion", v_to)
-        return r.load(self.path)
-
-    def row_count(self, version: int | None = None) -> int:
-        return self.read(version).count()
-
-    # -- maintenance -------------------------------------------------------
-    def compact(self) -> int:
-        from delta.tables import DeltaTable
-
-        DeltaTable.forPath(self.spark, self.path).optimize().executeCompaction()
-        return self.latest_version()
-
-    def vacuum(self, retain_last: int = 1) -> list[str]:
-        from delta.tables import DeltaTable
-
-        hist = sorted(
-            self._history().select("version", "timestamp").collect(),
-            key=lambda r: r.version,
-        )
-        keep = hist[-retain_last:] if retain_last else hist
-        cutoff = keep[0].timestamp if keep else None
-        t = DeltaTable.forPath(self.spark, self.path)
-        if cutoff is None:
-            return []
-        import datetime as _dt
-
-        hours = max(
-            0.0,
-            (_dt.datetime.now(_dt.timezone.utc) - cutoff.astimezone(_dt.timezone.utc))
-            .total_seconds()
-            / 3600.0,
-        )
-        # Version-retention maps to a time cutoff that is almost
-        # always < Delta's 168 h retentionDurationCheck minimum (any
-        # table written in the last week), which would throw
-        # IllegalArgumentException. The check exists to protect
-        # concurrent readers; LakeTable's vacuum(retain_last=n)
-        # contract is explicitly version-based, so we disable the
-        # check ONLY for these two statements and restore the
-        # caller's session setting in finally (r6 advisory).
-        chk = "spark.databricks.delta.retentionDurationCheck.enabled"
-        old_chk = self.spark.conf.get(chk, "true")
-        try:
-            self.spark.conf.set(chk, "false")
-            # dry run lists what the real pass removes (Delta returns paths)
-            listed = [
-                r.path
-                for r in self.spark.sql(
-                    f"VACUUM delta.`{self.path}` RETAIN {hours} HOURS DRY RUN"
-                ).collect()
-            ]
-            t.vacuum(hours)
-        finally:
-            self.spark.conf.set(chk, old_chk)
-        return listed

@@ -801,114 +801,3 @@ def indexed_novelty_sink(
                 c.unpersist()
 
     return _lake_sink(stream, checkpoint, "append", trigger_seconds, available_now, commit)
-
-
-def sessionize_stateful(
-    stream: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts_s",
-    value_col: str = "value",
-    gap_s: int = 1800,
-    lateness_s: int = 300,
-) -> DataFrame:
-    """Custom stateful sessionization: assemble per-key sessions
-    (events closer than ``gap_s`` chain; a larger gap closes the
-    session) and emit ONE SUMMARY ROW per closed session — start,
-    end, event count, value sum. The built-in ``session_window``
-    aggregation can only express windowed aggs; this operator owns
-    its state, so it can emit exactly one row per session at close
-    time (the shape downstream fact tables want) and evict by
-    event-time timeout so an abandoned session still flushes.
-
-    Sessions close two ways, both replay-deterministic:
-    - in-stream: a same-key event arrives past the gap — the closed
-      session emits in that micro-batch;
-    - by timeout: the event-time watermark passes last_ts + gap —
-      the open session flushes without needing another event.
-
-    Scale shape: state is one (start, last, n, sum) tuple per LIVE
-    key, hash-partitioned across executors and bounded by the gap
-    timeout; per-batch work is a vectorized sort + gap-split (diff/
-    cumsum segments), no Python row loop. Same watermark caveat as
-    latest_wins_dedup: rows later than ``lateness_s`` behind the
-    global watermark are dropped before the operator sees them."""
-    import numpy as np
-
-    out_schema = T.StructType(
-        [
-            T.StructField("key", T.LongType()),
-            T.StructField("session_start", T.LongType()),
-            T.StructField("session_end", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("sum_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("start", T.LongType()),
-            T.StructField("last", T.LongType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("sv", T.DoubleType()),
-        ]
-    )
-    gap = int(gap_s)
-
-    def session_fn(
-        key_tuple: Any, pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        k = int(key_tuple[0])
-
-        def row(start: int, last: int, n: int, sv: float) -> dict:
-            return {
-                "key": k,
-                "session_start": int(start),
-                "session_end": int(last),
-                "n_events": int(n),
-                "sum_value": float(sv),
-            }
-
-        if state.hasTimedOut:
-            start, last, n, sv = state.get
-            state.remove()
-            yield pd.DataFrame([row(start, last, n, sv)])
-            return
-
-        cur = list(state.get) if state.exists else None
-        closed: list[dict] = []
-        for batch in pdfs:
-            if not len(batch):
-                continue
-            b = batch.sort_values(ts_col, kind="mergesort")
-            ts = b[ts_col].to_numpy(dtype="int64")
-            vals = b[value_col].to_numpy(dtype="float64")
-            # vectorized gap split: segment id increments where the
-            # inter-event gap exceeds the session gap
-            seg = np.concatenate(([0], np.cumsum(np.diff(ts) > gap)))
-            for s in range(int(seg[-1]) + 1):
-                m = seg == s
-                f, l = int(ts[m][0]), int(ts[m][-1])
-                n, sv = int(m.sum()), float(np.nansum(vals[m]))
-                if cur is not None and f - cur[1] <= gap:
-                    cur = [cur[0], max(cur[1], l), cur[2] + n, cur[3] + sv]
-                else:
-                    if cur is not None:
-                        closed.append(row(*cur))
-                    cur = [f, l, n, sv]
-        if closed:
-            yield pd.DataFrame(closed)
-        if cur is not None:
-            state.update(tuple(cur))
-            state.setTimeoutTimestamp(
-                max((cur[1] + gap) * 1000, state.getCurrentWatermarkMs() + 1)
-            )
-
-    with_evt = stream.withColumn(
-        "__evt", F.timestamp_seconds(F.col(ts_col))
-    ).withWatermark("__evt", f"{lateness_s} seconds")
-    return with_evt.groupBy(key).applyInPandasWithState(
-        session_fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf="EventTimeTimeout",
-    )

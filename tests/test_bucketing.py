@@ -57,22 +57,6 @@ def test_unbucketed_join_would_shuffle(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_orc_roundtrip_preserves_schema_and_pushdown(spark, tmp_path):
-    """ORC source/sink: schema round-trips exactly and a filtered read
-    plans a PushedFilters entry (stripe-level skipping at scale)."""
-    from big_data_data_lake_spark import plans
-    from big_data_data_lake_spark.sources.catalog import load_table, read_orc, write_orc
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    write_orc(ev, str(tmp_path / "ev.orc"))
-    back = read_orc(spark, str(tmp_path / "ev.orc"))
-    assert back.schema == ev.schema
-    assert back.count() == ev.count()
-    filtered = back.where(back.event_type == "purchase").select("event_id")
-    pushed = " ".join(plans.pushed_filters(filtered))
-    assert "event_type" in pushed, pushed
-
-
 def test_gzip_jsonl_ingest_transparent(spark, tmp_path):
     """Compressed text ingest: crawl corpora arrive as .jsonl.gz, and
     Spark's text sources decode by file extension with no config — the

@@ -131,6 +131,9 @@ def test_ppm_decode_roundtrip():
     # header comments are legal PPM
     with_comment = b"P6\n# a comment\n9 5\n255\n" + img.tobytes()
     assert (mm.decode_image(with_comment) == img).all()
+    # a "\r\n"-terminated header must not shift the raster
+    crlf = b"P6\r\n9 5\r\n255\r\n" + img.tobytes()
+    assert (mm.decode_ppm(crlf) == img).all()
 
 
 def test_bmp_decode_real_pixels():
@@ -169,15 +172,14 @@ def test_compressed_decode_is_a_loud_stub():
 
 def test_jpeg_roundtrip_smooth_image():
     import numpy as np
-
-    from big_data_data_lake_spark.operators import jpeg as J
+    from _encoders import encode_jpeg
 
     h, w = 24, 33  # non-multiple-of-8 width exercises edge padding
     yy, xx = np.mgrid[0:h, 0:w]
     img = np.stack(
         [(yy * 7) % 256, (xx * 5) % 256, ((yy + xx) * 3) % 256], axis=2
     ).astype(np.uint8)
-    blob = J.encode_jpeg(img)
+    blob = encode_jpeg(img)
     # spec structure: SOI ... EOI, with DQT/SOF0/DHT/SOS segments
     assert blob[:2] == b"\xff\xd8" and blob[-2:] == b"\xff\xd9"
     for marker in (b"\xff\xdb", b"\xff\xc0", b"\xff\xc4", b"\xff\xda"):
@@ -192,19 +194,23 @@ def test_jpeg_roundtrip_smooth_image():
 def test_jpeg_flat_block_is_near_exact():
     import numpy as np
 
+    from _encoders import encode_jpeg
+
     from big_data_data_lake_spark.operators import jpeg as J
 
     flat = np.full((8, 8, 3), 77, dtype=np.uint8)
-    dec = J.decode_jpeg(J.encode_jpeg(flat))
+    dec = J.decode_jpeg(encode_jpeg(flat))
     assert np.abs(dec.astype(int) - 77).max() <= 2
 
 
 def test_jpeg_unsupported_profiles_are_loud():
     import numpy as np
 
+    from _encoders import encode_jpeg
+
     from big_data_data_lake_spark.operators import jpeg as J
 
-    blob = bytearray(J.encode_jpeg(np.zeros((8, 8, 3), dtype=np.uint8)))
+    blob = bytearray(encode_jpeg(np.zeros((8, 8, 3), dtype=np.uint8)))
     # rewrite the SOF0 marker (FFC0) to SOF2 (progressive)
     i = bytes(blob).find(b"\xff\xc0")
     blob[i + 1] = 0xC2
@@ -216,10 +222,11 @@ def test_jpeg_unsupported_profiles_are_loud():
 
 def test_png_roundtrip():
     import numpy as np
+    from _encoders import encode_png
 
     rng = np.random.default_rng(11)
     img = rng.integers(0, 256, size=(7, 5, 3), dtype=np.uint8)
-    blob = mm.encode_png(img)
+    blob = encode_png(img)
     assert blob[:8] == b"\x89PNG\r\n\x1a\n"
     assert (mm.decode_image(blob) == img).all()
 
@@ -301,9 +308,10 @@ def test_png_gray_and_rgba_normalize_to_rgb():
 
 def test_png_unsupported_profiles_are_loud():
     import numpy as np
+    from _encoders import encode_png
 
     img = np.zeros((2, 2, 3), dtype=np.uint8)
-    blob = bytearray(mm.encode_png(img))
+    blob = bytearray(encode_png(img))
     # flip IHDR bit depth (byte 8 of the 13-byte IHDR payload) to 16
     depth_off = 8 + 8 + 8  # sig + len/type + width/height
     blob[depth_off] = 16
@@ -369,15 +377,6 @@ def test_resize_plumbing_shapes(spark):
     assert all(len(r.resized) == 64 for r in rows)
 
 
-def test_frame_sample_is_one_to_n(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    n_docs = docs.count()
-    out = mm.sample_frames(mm.attach_blob(docs), n_frames=4, frame_bytes=8)
-    assert out.count() == n_docs * 4
-    one = out.where(F.col("doc_id") == out.first().doc_id).collect()
-    assert sorted(r.frame_idx for r in one) == [0, 1, 2, 3]
-
-
 def test_ngram_df_cap_bounds_fanout(spark, tmp_path):
     """The max_df cap must (a) drop pairs whose only overlap is a
     stopword-like hot shingle and (b) bound the inverted-index key
@@ -430,13 +429,14 @@ def test_wav_roundtrip_and_rms():
     """Real audio decode: a 440 Hz int16 sine round-trips encode/decode
     and its RMS lands at amplitude/sqrt(2)."""
     import numpy as np
+    from _encoders import encode_wav
 
     from big_data_data_lake_spark.operators import multimodal as mm
 
     rate, amp = 8000, 0.5
     t = np.arange(rate)  # 1 second
     wave = (amp * 32767 * np.sin(2 * np.pi * 440 * t / rate)).astype(np.int16)
-    blob = mm.encode_wav(wave, rate)
+    blob = encode_wav(wave, rate)
     decoded, got_rate = mm.decode_wav(blob)
     assert got_rate == rate and decoded.shape == (rate, 1)
     assert np.array_equal(decoded[:, 0], wave)
@@ -444,21 +444,21 @@ def test_wav_roundtrip_and_rms():
     assert abs(float(np.sqrt(np.mean(x * x))) - amp / np.sqrt(2)) < 0.01
 
 
-def test_audio_features_and_frame_energy(spark):
-    """audio_features: real per-clip stats; frame_energy: windowed RMS
-    localizes a loud burst in an otherwise silent clip. Non-WAV blobs
-    fall back to the u8-PCM interpretation instead of failing."""
+def test_audio_features_real_stats_and_u8_fallback(spark):
+    """audio_features: real per-clip stats on decoded WAV. Non-WAV
+    blobs fall back to the u8-PCM interpretation instead of failing."""
     import numpy as np
+    from _encoders import encode_wav
 
     from big_data_data_lake_spark.operators import multimodal as mm
 
     rate = 8000
     silent = np.zeros(rate, dtype=np.int16)
     burst = silent.copy()
-    burst[2000:4000] = 16000  # loud square in frames 1 (250ms windows)
+    burst[2000:4000] = 16000  # a loud square in an otherwise silent clip
     rows = [
-        (1, bytearray(mm.encode_wav(burst, rate))),
-        (2, bytearray(mm.encode_wav(silent, rate))),
+        (1, bytearray(encode_wav(burst, rate))),
+        (2, bytearray(encode_wav(silent, rate))),
         (3, bytearray(b"not audio at all")),  # u8-PCM fallback
     ]
     df = spark.createDataFrame(rows, "doc_id long, blob binary")
@@ -468,113 +468,25 @@ def test_audio_features_and_frame_energy(spark):
     assert feats[2]["rms"] == 0.0 and feats[1]["rms"] > 0.1
     assert feats[3]["n_samples"] == 16  # fallback decoded, not crashed
 
-    frames = mm.frame_energy(df, frame_ms=250).collect()
-    by_doc1 = {r["frame_idx"]: r["rms"] for r in frames if r["doc_id"] == 1}
-    assert len(by_doc1) == 4
-    assert by_doc1[1] > 0.2 and by_doc1[0] == 0.0 and by_doc1[3] == 0.0
 
-
-def test_sample_frames_extracts_real_ppm_video_frames(spark):
-    """Concatenated-PPM (image2pipe) blobs must round-trip: every
-    sampled frame decodes back to the exact source image."""
-    import numpy as np
-
-    from big_data_data_lake_spark.operators import multimodal as mm
-
-    rng = np.random.RandomState(7)
-    imgs = [rng.randint(0, 256, (6, 5, 3)).astype(np.uint8) for _ in range(10)]
-    stream = b"".join(mm.encode_ppm(im) for im in imgs)
-    assert len(mm.split_ppm_stream(stream)) == 10
-
-    df = spark.createDataFrame([(1, bytearray(stream))], "doc_id long, blob binary")
-    rows = sorted(
-        mm.sample_frames(df, n_frames=4).collect(), key=lambda r: r.frame_idx
-    )
-    assert [r.frame_idx for r in rows] == [0, 1, 2, 3]
-    # equally spaced picks out of 10 frames: 0, 2, 5, 7
-    for row, src_idx in zip(rows, [0, 2, 5, 7]):
-        assert np.array_equal(mm.decode_image(bytes(row.frame)), imgs[src_idx])
-
-    # a "\r\n"-terminated header must not shift the raster (ADVICE r2)
-    crlf = b"P6\r\n5 6\r\n255\r\n" + imgs[0].tobytes()
-    assert np.array_equal(mm.decode_ppm(crlf), imgs[0])
-
-    # truncated streams fail loudly, never yield torn frames
-    import pytest
-
-    with pytest.raises(ValueError, match="truncated"):
-        mm.split_ppm_stream(stream[:-10])
-
-
-def test_sample_frames_extracts_real_mjpeg_frames(spark):
-    """Concatenated-JPEG (MJPEG) blobs get the same real frame
-    extraction: split on SOI..EOI extents, every sampled frame decodes
-    to a close reconstruction of its source image."""
-    import numpy as np
-
-    from big_data_data_lake_spark.operators import jpeg as J
-    from big_data_data_lake_spark.operators import multimodal as mm
-
-    yy, xx = np.mgrid[0:16, 0:16]
-    imgs = [
-        np.stack(
-            [(yy * 9 + k * 40) % 256, (xx * 6) % 256, ((yy + xx) * 4) % 256],
-            axis=2,
-        ).astype(np.uint8)
-        for k in range(6)
-    ]
-    stream = b"".join(J.encode_jpeg(im) for im in imgs)
-    assert len(mm.split_mjpeg_stream(stream)) == 6
-
-    df = spark.createDataFrame([(1, bytearray(stream))], "doc_id long, blob binary")
-    rows = sorted(
-        mm.sample_frames(df, n_frames=3).collect(), key=lambda r: r.frame_idx
-    )
-    assert [r.frame_idx for r in rows] == [0, 1, 2]
-    # equally spaced picks out of 6 frames: 0, 2, 4
-    for row, src_idx in zip(rows, [0, 2, 4]):
-        dec = mm.decode_image(bytes(row.frame))
-        err = np.abs(dec.astype(int) - imgs[src_idx].astype(int))
-        assert err.mean() < 8.0  # lossy, within quantization error
-        # and it is THIS frame, not a neighbor: distance to the right
-        # source is far below distance to any other frame
-        other = min(
-            np.abs(dec.astype(int) - imgs[j].astype(int)).mean()
-            for j in range(6)
-            if j != src_idx
-        )
-        assert err.mean() < other / 2
-
-    import pytest
-
-    with pytest.raises(ValueError, match="truncated"):
-        mm.split_mjpeg_stream(stream[:-4])
-
-
-def test_mjpeg_split_survives_eoi_inside_marker_payload():
+def test_jpeg_decode_skips_eoi_inside_marker_payload():
     """An FF D9 byte pair may legally occur INSIDE a marker segment
-    payload (e.g. an EXIF APP1 thumbnail's own EOI). The splitter
-    must walk segments by their length fields — a naive forward scan
-    tears the frame at the embedded EOI and the torn frame fails to
-    decode (advisor finding, r5)."""
+    payload (e.g. an EXIF APP1 thumbnail's own EOI). The decoder walks
+    segments by their length fields, so the embedded EOI does not end
+    the image."""
     import numpy as np
+    from _encoders import encode_jpeg
 
     from big_data_data_lake_spark.operators import jpeg as J
-    from big_data_data_lake_spark.operators import multimodal as mm
 
     img = (np.mgrid[0:16, 0:16][0] * 9 % 256).astype(np.uint8)
     img = np.stack([img, img, img], axis=2)
-    frame = J.encode_jpeg(img)
+    frame = encode_jpeg(img)
     # inject an APP1 segment right after SOI whose payload embeds EOI
     payload = b"Exif\x00\x00" + b"\xff\xd9" + b"trailing"
     app1 = b"\xff\xe1" + (len(payload) + 2).to_bytes(2, "big") + payload
     poisoned = frame[:2] + app1 + frame[2:]
-    stream = poisoned + frame + poisoned
-    frames = mm.split_mjpeg_stream(stream)
-    assert len(frames) == 3
-    assert [len(f) for f in frames] == [len(poisoned), len(frame), len(poisoned)]
-    for f in frames:  # every frame still decodes whole
-        assert mm.decode_image(bytes(f)).shape == (16, 16, 3)
+    assert np.array_equal(J.decode_jpeg(poisoned), J.decode_jpeg(frame))
 
 
 def test_jpeg_decode_skips_fill_bytes_before_markers():
@@ -583,45 +495,15 @@ def test_jpeg_decode_skips_fill_bytes_before_markers():
     marker and the following bytes as a segment length (advisor
     finding, r5)."""
     import numpy as np
+    from _encoders import encode_jpeg
 
     from big_data_data_lake_spark.operators import jpeg as J
 
     img = (np.mgrid[0:8, 0:8][1] * 30 % 256).astype(np.uint8)
     img = np.stack([img, img, img], axis=2)
-    blob = J.encode_jpeg(img)
+    blob = encode_jpeg(img)
     padded = blob[:2] + b"\xff\xff\xff" + blob[2:]  # fill before 1st marker
     assert np.array_equal(J.decode_jpeg(padded), J.decode_jpeg(blob))
-
-
-def test_dhash_invariant_to_brightness_shift():
-    rng = np.random.default_rng(7)
-    base = rng.integers(0, 200, size=(32, 32, 3)).astype(np.uint8)
-    shifted = np.clip(base.astype(np.int16) + 20, 0, 255).astype(np.uint8)
-    assert mm.dhash_image(base) == mm.dhash_image(shifted)
-    other = rng.integers(0, 200, size=(32, 32, 3)).astype(np.uint8)
-    xor = mm.dhash_image(base) ^ mm.dhash_image(other)
-    assert bin(xor & ((1 << 64) - 1)).count("1") > 10  # unrelated images differ
-
-
-def test_image_near_dups_band_join(spark):
-    rng = np.random.default_rng(11)
-    base = rng.integers(0, 200, size=(24, 24, 3)).astype(np.uint8)
-    near = np.clip(base.astype(np.int16) + 5, 0, 255).astype(np.uint8)
-    far = rng.integers(0, 200, size=(24, 24, 3)).astype(np.uint8)
-    rows = [
-        (1, bytearray(mm.encode_ppm(base))),
-        (2, bytearray(mm.encode_ppm(near))),
-        (3, bytearray(mm.encode_ppm(far))),
-        (4, bytearray(b"\x89PNG not decodable")),  # dropped, not fatal
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, blob binary")
-    hashes = mm.perceptual_hashes(df)
-    assert sorted(r.doc_id for r in hashes.collect()) == [1, 2, 3]
-    pairs = mm.image_near_dups(hashes, max_hamming=3).collect()
-    assert [(r.d1, r.d2, r.hamming) for r in pairs] == [(1, 2, 0)]
-    # banding guard: 4 chunks cannot cover hamming >= 4
-    with pytest.raises(ValueError):
-        mm.image_near_dups(hashes, max_hamming=4)
 
 
 def test_quantized_gram_matches_naive_and_power_iteration(spark):

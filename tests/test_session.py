@@ -1,6 +1,15 @@
 from __future__ import annotations
 
-from big_data_data_lake_spark.session import codegen_compiles
+import os
+
+import pytest
+
+from big_data_data_lake_spark.session import (
+    codegen_compiles,
+    env_positive_int,
+    get_spark,
+    local_cpus,
+)
 
 
 def test_rerun_plans_reuse_their_generated_classes(spark):
@@ -18,3 +27,32 @@ def test_rerun_plans_reuse_their_generated_classes(spark):
     before = codegen_compiles(spark)
     one_pass()
     assert codegen_compiles(spark) - before == 0
+
+
+@pytest.mark.parametrize("value", ["abc", "0", "-1"])
+def test_bad_core_and_partition_counts_name_the_variable(monkeypatch, value):
+    """A value that is not a positive integer fails before any session
+    starts, and the error names the variable and the value."""
+    from bench import shuffle_partitions
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
+    with pytest.raises(ValueError, match=f"SPARK_GRAFT_CPUS.*'{value}'"):
+        local_cpus()
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        get_spark()
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", value)
+    with pytest.raises(ValueError, match=f"SPARK_GRAFT_SHUFFLE_PARTITIONS.*'{value}'"):
+        shuffle_partitions("/nonexistent", 4)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE_PARTITIONS"):
+        get_spark(cpus=2)
+
+
+def test_unset_cores_resolve_to_the_host(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == os.cpu_count()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+    assert env_positive_int("SPARK_GRAFT_SHUFFLE_PARTITIONS") is None

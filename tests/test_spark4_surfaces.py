@@ -114,128 +114,3 @@ def test_observe_stream_metrics_per_microbatch(spark, tmp_path):
         assert metrics["n_rows"] == 2 and metrics["v_nulls"] == 1
     finally:
         q.stop()
-
-
-# ---------------------------------------------------------------------------
-# Python DataSource WRITER (jsonl_audit two-phase-commit sink)
-# ---------------------------------------------------------------------------
-
-
-def _register_sink(spark):
-    from big_data_data_lake_spark.sources.jsonl_sink import JsonlAuditDataSource
-
-    spark.dataSource.register(JsonlAuditDataSource)
-
-
-def test_jsonl_audit_writer_commits_atomically(spark, tmp_path):
-    """Each task writes one temp file; commit renames exactly the
-    acknowledged files, writes a _SUCCESS manifest whose counts equal
-    the data, and clears _temporary. A JSON round-trip through
-    spark.read.json returns the rows."""
-    import json as _json
-    import os
-
-    _register_sink(spark)
-    out = str(tmp_path / "audit")
-    df = spark.range(100).select(
-        F.col("id"), F.concat(F.lit("u"), F.col("id") % 7).alias("user")
-    ).repartition(4)
-    df.write.format("jsonl_audit").mode("append").save(out)
-
-    files = [f for f in os.listdir(out) if f.endswith(".jsonl")]
-    assert len(files) == 4  # one committed file per task
-    assert not os.path.isdir(os.path.join(out, "_temporary"))
-    manifest = _json.load(open(os.path.join(out, "_SUCCESS")))
-    assert manifest["rows"] == 100
-    assert sorted(manifest["files"]) == sorted(files)
-    back = spark.read.json(out)
-    assert back.count() == 100
-    assert {r.user for r in back.select("user").distinct().collect()} == {
-        f"u{i}" for i in range(7)
-    }
-
-
-def test_jsonl_audit_writer_overwrite_replaces_at_commit(spark, tmp_path):
-    import json as _json
-    import os
-
-    _register_sink(spark)
-    out = str(tmp_path / "audit_ow")
-    spark.range(10).coalesce(1).write.format("jsonl_audit").mode("append").save(out)
-    spark.range(5).coalesce(1).write.format("jsonl_audit").mode(
-        "overwrite"
-    ).save(out)
-    manifest = _json.load(open(os.path.join(out, "_SUCCESS")))
-    assert manifest["rows"] == 5
-    assert spark.read.json(out).count() == 5
-
-
-def test_jsonl_audit_append_manifest_carries_prior_commits(spark, tmp_path):
-    """A second append must MERGE the prior _SUCCESS file list, not
-    replace it — manifest-gated readers would otherwise lose every
-    earlier committed append (advisor finding, r5)."""
-    import json as _json
-    import os
-
-    _register_sink(spark)
-    out = str(tmp_path / "audit_appends")
-    spark.range(10).coalesce(1).write.format("jsonl_audit").mode("append").save(out)
-    spark.range(5).coalesce(1).write.format("jsonl_audit").mode("append").save(out)
-    manifest = _json.load(open(os.path.join(out, "_SUCCESS")))
-    files = [f for f in os.listdir(out) if f.endswith(".jsonl")]
-    assert manifest["rows"] == 15
-    assert sorted(manifest["files"]) == sorted(files)
-    assert len(files) == 2
-    assert spark.read.json(out).count() == 15
-
-
-def test_jsonl_audit_overwrite_renames_before_removing(spark, tmp_path):
-    """Overwrite order is rename-in -> _SUCCESS swap -> delete old:
-    the manifest written at the atomicity point must never reference
-    a file that was deleted first, and old files survive until after
-    the swap (advisor finding, r5: delete-first meant a mid-commit
-    crash left neither old nor new data visible)."""
-    import json as _json
-    import os
-
-    _register_sink(spark)
-    out = str(tmp_path / "audit_ow_order")
-    spark.range(10).coalesce(1).write.format("jsonl_audit").mode("append").save(out)
-    old_files = {f for f in os.listdir(out) if f.endswith(".jsonl")}
-    spark.range(5).coalesce(1).write.format("jsonl_audit").mode(
-        "overwrite"
-    ).save(out)
-    manifest = _json.load(open(os.path.join(out, "_SUCCESS")))
-    on_disk = {f for f in os.listdir(out) if f.endswith(".jsonl")}
-    assert on_disk == set(manifest["files"])  # superseded files swept
-    assert not (old_files & on_disk)
-    assert manifest["rows"] == 5
-
-
-def test_jsonl_audit_writer_failed_job_commits_nothing(spark, tmp_path):
-    """A task that fails after others succeeded must abort the whole
-    job: no committed .jsonl files, no _SUCCESS — the commit is the
-    atomicity point."""
-    import os
-
-    import pytest as _pytest
-    from pyspark.sql import types as T
-
-    _register_sink(spark)
-    out = str(tmp_path / "audit_fail")
-
-    @F.udf(T.LongType())
-    def boom(v):
-        if v == 7:
-            raise ValueError("poisoned row")
-        return v
-
-    df = spark.range(10).repartition(4).select(boom(F.col("id")).alias("id"))
-    with _pytest.raises(Exception):
-        df.write.format("jsonl_audit").mode("append").save(out)
-    committed = [
-        f
-        for f in os.listdir(out)
-        if f.endswith(".jsonl") or f == "_SUCCESS"
-    ] if os.path.isdir(out) else []
-    assert committed == [], committed

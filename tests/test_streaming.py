@@ -1040,113 +1040,6 @@ def test_lake_scd2_sink_historizes_and_replay_safe(spark, tmpdir):
     assert {r.k: r.tier for r in table.read().where("__is_current").collect()} == cur
 
 
-def test_stream_point_in_time_enrichment_against_scd2_dim(spark, tmpdir):
-    """Composition: a fact stream enriched per micro-batch against the
-    SCD2 dim HISTORY with point-in-time correctness — each fact joins
-    the dim version valid AT ITS EVENT TIME, so late-arriving facts
-    about last week get last week's attributes, not today's. This is
-    the read side of lake_scd2_sink's write side."""
-    import os
-
-    from big_data_data_lake_spark.operators.joins import point_in_time_join
-    from big_data_data_lake_spark.sources.metadata import LakeTable
-
-    # dim history: key 'a' is bronze from the epoch (SCD2 bootstrap),
-    # then gold from 2024-01-03
-    t = LakeTable(spark, f"{tmpdir}/dim")
-    t.create(
-        spark.createDataFrame([("a", "bronze")], "k string, tier string").coalesce(1)
-    )
-    t.upsert_scd2(
-        spark.createDataFrame(
-            [("a", "gold", "2024-01-03 00:00:00")], "k string, tier string, ts string"
-        ).selectExpr("k", "tier", "cast(ts as timestamp) ts"),
-        keys=["k"],
-        change_ts="ts",
-    )
-
-    src = f"{tmpdir}/facts"
-    os.makedirs(src)
-    with open(f"{src}/b0.jsonl", "w") as fh:
-        fh.write(json.dumps({"k": "a", "fts": "2024-01-02 12:00:00", "v": 1.0}) + "\n")
-        fh.write(json.dumps({"k": "a", "fts": "2024-01-04 12:00:00", "v": 2.0}) + "\n")
-        fh.write(json.dumps({"k": "z", "fts": "2024-01-02 12:00:00", "v": 3.0}) + "\n")
-
-    got = []
-
-    def enrich_batch(batch_df, batch_id):
-        hist = t.read().select("k", "tier", "__valid_from", "__valid_to")
-        out = point_in_time_join(
-            batch_df.selectExpr("k", "cast(fts as timestamp) fts", "v"),
-            hist,
-            key="k",
-            ts_col="fts",
-        )
-        got.extend(
-            (r.k, float(r.v), r.tier) for r in out.select("k", "v", "tier").collect()
-        )
-
-    stream = spark.readStream.schema("k string, fts string, v double").json(src)
-    q = stream.writeStream.foreachBatch(enrich_batch).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-
-    assert sorted(got) == [
-        ("a", 1.0, "bronze"),  # fact before the change sees the OLD tier
-        ("a", 2.0, "gold"),    # fact after the change sees the new tier
-        ("z", 3.0, None),      # unknown key survives with NULL attributes
-    ]
-
-
-def test_sessionize_stateful_gap_close_and_timeout_flush(spark, tmpdir):
-    """The custom stateful sessionizer closes sessions both ways:
-    in-stream (a same-key event past the gap emits the closed session
-    in that batch) and by event-time timeout (the watermark passing
-    last_ts + gap flushes an abandoned session without another
-    event)."""
-    import os
-
-    from big_data_data_lake_spark.streaming.ingest import sessionize_stateful
-
-    src = f"{tmpdir}/src"
-    os.makedirs(src)
-    # b0: user 1 session A (two events 10 s apart), user 2 lone event
-    with open(f"{src}/b0.jsonl", "w") as fh:
-        fh.write(json.dumps({"user_id": 1, "ts_s": 1000, "value": 1.0}) + "\n")
-        fh.write(json.dumps({"user_id": 1, "ts_s": 1010, "value": 2.0}) + "\n")
-        fh.write(json.dumps({"user_id": 2, "ts_s": 1000, "value": 5.0}) + "\n")
-    # b1: user 1 event 4000 s later -> closes session A in-stream and
-    # opens session B; a far-future key advances the watermark
-    with open(f"{src}/b1.jsonl", "w") as fh:
-        fh.write(json.dumps({"user_id": 1, "ts_s": 5000, "value": 3.0}) + "\n")
-        fh.write(json.dumps({"user_id": 99, "ts_s": 100000, "value": 0.0}) + "\n")
-    # b2: another far event so the b1-advanced watermark fires the
-    # gap timeouts for user 1's session B and user 2's session
-    with open(f"{src}/b2.jsonl", "w") as fh:
-        fh.write(json.dumps({"user_id": 98, "ts_s": 200000, "value": 0.0}) + "\n")
-
-    stream = (
-        spark.readStream.schema("user_id long, ts_s long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    sessions = sessionize_stateful(stream, gap_s=1800, lateness_s=10)
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.key, r.session_start, r.session_end, r.n_events, r.sum_value)
-        for r in spark.sql("SELECT * FROM sessions_out").collect()
-    }
-    assert (1, 1000, 1010, 2, 3.0) in got         # closed in-stream by the gap
-    assert (1, 5000, 5000, 1, 3.0) in got         # flushed by timeout
-    assert (2, 1000, 1000, 1, 5.0) in got         # flushed by timeout
-
-
 def test_interval_join_left_outer_emits_delayed_nulls(spark, tmpdir):
     """Left-outer stream-stream interval join: an unmatched left row
     must surface with NULL right columns — but only after the

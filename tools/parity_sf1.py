@@ -84,7 +84,7 @@ def main() -> int:
         SAMPLE_FIRST,
         load_all,
     )
-    from big_data_data_lake_spark.session import get_spark
+    from big_data_data_lake_spark.session import get_spark, local_cpus
 
     registry = load_all()
     if args.all:
@@ -111,7 +111,7 @@ def main() -> int:
                 + [n for n in SAMPLE_FIRST[:N_CURRENT_ROUND] if n in registry]
             )
         )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     spark = get_spark(app_name="parity-sf1", cpus=cpus)
     result = {"sf_dir": args.sf_dir, "queries": {}, "failures": 0}
     for n in names:

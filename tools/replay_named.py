@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import host_canary, shuffle_partitions, timed_reps, warm_up  # noqa: E402
 from big_data_data_lake_spark.queries import load_all  # noqa: E402
-from big_data_data_lake_spark.session import get_spark  # noqa: E402
+from big_data_data_lake_spark.session import get_spark, local_cpus  # noqa: E402
 
 
 def main() -> None:
@@ -37,7 +37,7 @@ def main() -> None:
     ap.add_argument("--json", default=None)
     args = ap.parse_args()
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     spark = get_spark(
         app_name="replay_named",
         cpus=cpus,

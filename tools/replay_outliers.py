@@ -76,18 +76,19 @@ def _replay(spark, fn, sf_dir: str, reps: int) -> float:
     # must replay under the same value, or this tool reintroduces the
     # exact config-mismatch class the r10 fix closed.
     from bench import shuffle_partitions, timed_reps
+    from big_data_data_lake_spark.session import local_cpus
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions(sf_dir, cpus)))
     return round(min(timed_reps(spark, fn, sf_dir, reps)), 3)
 
 
 def _session(app_name: str):
-    """A warmed-up session at $SPARK_GRAFT_CPUS cores (bench.warm_up)."""
+    """A warmed-up session at ``session.local_cpus()`` cores (bench.warm_up)."""
     from bench import warm_up
-    from big_data_data_lake_spark.session import get_spark
+    from big_data_data_lake_spark.session import get_spark, local_cpus
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     spark = get_spark(app_name=app_name, cpus=cpus)
     warm_up(spark, cpus)
     return spark

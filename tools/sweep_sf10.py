@@ -53,8 +53,9 @@ def _replay(spark, fn, sf_dir: str, reps: int) -> list[float]:
     # Mirror bench.py's FULL resolution order, env override included
     # (r10 advice): see replay_outliers._replay.
     from bench import shuffle_partitions, timed_reps
+    from big_data_data_lake_spark.session import local_cpus
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions(sf_dir, cpus)))
     return [round(x, 3) for x in timed_reps(spark, fn, sf_dir, reps)]
 
@@ -65,8 +66,9 @@ def _canary(spark, sf10_dir: str) -> dict:
     adjudicable. Same-tier comparisons only (the shuffle leg follows
     the partition count)."""
     from bench import host_canary, shuffle_partitions
+    from big_data_data_lake_spark.session import local_cpus
 
-    parts = shuffle_partitions(sf10_dir, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    parts = shuffle_partitions(sf10_dir, local_cpus())
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     c = host_canary(spark)
     return {**c, "total_sec": round(sum(c.values()), 3), "shuffle_partitions": parts}
@@ -91,7 +93,7 @@ def main() -> int:
 
     from bench import warm_up
     from big_data_data_lake_spark.queries import load_all
-    from big_data_data_lake_spark.session import get_spark
+    from big_data_data_lake_spark.session import get_spark, local_cpus
 
     with open(args.bench_sf1) as f:
         rec = json.load(f)
@@ -127,7 +129,7 @@ def main() -> int:
         names = qualifiers
     print(f"{len(names)} queries in sweep population", flush=True)
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     spark = get_spark(app_name="sweep-sf10", cpus=cpus)
     warm_up(spark, cpus)
     result = {
