@@ -427,6 +427,9 @@ def host_canary(spark) -> dict[str, float]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = local_cpus()
+    # read before the JVM starts, so a bad value fails at once
+    reps = env_positive_int("SPARK_GRAFT_REPS") or 3
+    stride = env_positive_int("SPARK_GRAFT_BENCH_STRIDE") or 1
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or 0.1)
 
     spark = get_spark(
@@ -444,7 +447,6 @@ def main() -> None:
     warm_up(spark, cpus)
     canary = host_canary(spark)
 
-    reps = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
     # Test-only stride knob: SPARK_GRAFT_BENCH_STRIDE=k runs every
     # k-th headline query so the pytest contract smoke (bench
     # subprocess end to end) costs seconds, not the 10 minutes the
@@ -452,8 +454,7 @@ def main() -> None:
     # driver's pytest run must finish). The driver and every recorded
     # bench run leave it unset: names == HEADLINE, measurement
     # methodology unchanged.
-    stride = int(os.environ.get("SPARK_GRAFT_BENCH_STRIDE", "1"))
-    names = HEADLINE[::stride] if stride > 1 else HEADLINE
+    names = HEADLINE[::stride]
     timings: dict[str, float] = {}
     all_samples: dict[str, list[float]] = {}
     compiles: dict[str, list[int]] = {}

@@ -5,7 +5,8 @@ loop extracted from the near-dup clustering query (see
 queries/corpus.py::dedup_clusters, where its scale rationale is
 documented): one equi-join + one partial-aggregated min per round,
 label sum as the exact convergence check, eager localCheckpoint to
-cut the iterative lineage. Reference scope: the reference has no
+cut the iterative lineage. AQE sizes the loop's stages; the loop
+sets no session config. Reference scope: the reference has no
 graph operator; this is the §7 LLM-pipeline extension that turns
 pairwise similarity into keep/drop decisions.
 """
@@ -35,17 +36,14 @@ def min_label_components(
     rounds (see the loop comment); hard-fails rather than silently
     mislabeling if not converged in ``max_rounds``.
 
-    Shuffle partitions for the loop are sized to GRAPH VOLUME, not the
-    session default: every round launches ~5 shuffle stages on frames
-    of |V|/|E| rows, and AQE's runtime coalescing does NOT cover the
-    eager ``localCheckpoint`` materialization path — at the session's
-    data-sized partition count a 20k-vertex graph paid 128-256 tasks
-    per tiny stage (measured 2.3x the whole loop: 12.0 s -> 5.3 s at
-    sf1). One partition per ~100k ids, floored at 8, capped at the
-    session setting — a dup-graph at 100 TB keeps the full configured
-    parallelism, a small one stops paying task-launch overhead. The
-    session conf is restored in ``finally`` (engine queries execute
-    serially; this is the same knob a per-stage scheduler would set).
+    The loop runs under the session's shuffle-partition setting; AQE
+    sizes its stages. Every round launches ~5 shuffle stages on frames
+    of |V|/|E| rows, and AQE's runtime coalescing (which, with
+    ``canChangeCachedPlanOutputPartitioning`` on, also covers the eager
+    ``localCheckpoint`` materializations) packs each tiny stage into a
+    few tasks: a 200-vertex graph ran at most 8 tasks per stage under
+    64 session partitions (local[4]). So the loop sets no session config, and a
+    query running beside it plans under the session's own settings.
     """
     id_col = ids.columns[0]
     a, b = pairs.columns[:2]
@@ -53,12 +51,7 @@ def min_label_components(
     edges = sym.union(
         sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
-    spark = ids.sparkSession
-    n_ids = ids.count()
-    n_edges = edges.count()  # also materializes the persist once, up front
-    conf_key = "spark.sql.shuffle.partitions"
-    old_p = spark.conf.get(conf_key)
-    loop_p = max(8, min(int(old_p), -(-(n_ids + n_edges) // 100_000)))
+    edges.count()  # materializes the persist once, up front
     # Each round references `labels` TWICE (once in the propagation
     # join, once in the merge), so a persist()-chained loop doubles
     # the LOGICAL plan per round — by round ~8 the plan string hits
@@ -68,13 +61,6 @@ def min_label_components(
     # flattens the lineage, keeping every round's plan constant-size;
     # checkpoint blocks are reclaimed by the ContextCleaner as each
     # round's frame is dereferenced.
-    #
-    # The INITIAL checkpoint runs under the session partition setting:
-    # the caller's `ids` plan may carry corpus-scale upstream shuffles
-    # that must not execute at the loop's floor-8 clamp. Only after it
-    # is materialized do we lower the conf — and the set happens inside
-    # the try so the finally always restores the session even if the
-    # first loop job fails.
     labels = ids.select(
         F.col(id_col).alias("vid"), F.col(id_col).alias("label")
     ).localCheckpoint(eager=True)
@@ -83,7 +69,6 @@ def min_label_components(
         return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
     try:
-        spark.conf.set(conf_key, str(loop_p))
         prev_sum = _label_sum(labels)
         for _ in range(max_rounds):
             prop = (
@@ -129,5 +114,4 @@ def min_label_components(
             )
         return labels.select(F.col("vid").alias(id_col), "label")
     finally:
-        spark.conf.set(conf_key, old_p)
         edges.unpersist()

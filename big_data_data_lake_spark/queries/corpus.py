@@ -519,44 +519,35 @@ def token_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty corpus: no token graph — 1/n would constant-fold to an
         # ANSI divide-by-zero before any row exists to skip it
         return spark.createDataFrame([], "tok string, pr double")
-    n_edges = es.count()  # metadata-scale; also materializes the persist
     base = F.lit(1.0) / F.lit(float(n))
     teleport = F.lit(0.15) / F.lit(float(n))
-    # Iteration frames are VOCABULARY-sized, not corpus-sized: size the
-    # loop's shuffle partitions to the graph (the min_label_components
-    # rule — AQE does not coalesce the eager-materialization path) and
-    # flatten each iteration's lineage with an eager localCheckpoint so
-    # the per-iteration broadcast doesn't recompute every prior
-    # iteration's join chain. Measured at sf1: the 3 iterations ran
-    # ~10 s at session partitioning with lazy chains, ~2 s this way.
-    conf_key = "spark.sql.shuffle.partitions"
-    old_p = spark.conf.get(conf_key)
-    loop_p = max(8, min(int(old_p), -(-(n + n_edges) // 100_000)))
-    spark.conf.set(conf_key, str(loop_p))
-    try:
-        r = nodes.select("tok", F.round(base, 9).alias("r")).localCheckpoint(
-            eager=True
+    # Iteration frames are VOCABULARY-sized, not corpus-sized: AQE
+    # sizes the loop's stages from their observed shuffle bytes, the
+    # eager checkpoints included, so the loop sets no session config.
+    # An eager localCheckpoint flattens each iteration's lineage so the
+    # per-iteration broadcast doesn't recompute every prior iteration's
+    # join chain.
+    r = nodes.select("tok", F.round(base, 9).alias("r")).localCheckpoint(
+        eager=True
+    )
+    for _ in range(PR_ITERS):
+        contrib = (
+            es.join(F.broadcast(r.select(F.col("tok").alias("rtok"), "r")),
+                    F.col("src") == F.col("rtok"))
+            .groupBy(F.col("dst").alias("ctok"))
+            .agg(F.sum(F.round(F.col("r") * F.col("s"), 12)).alias("m"))
         )
-        for _ in range(PR_ITERS):
-            contrib = (
-                es.join(F.broadcast(r.select(F.col("tok").alias("rtok"), "r")),
-                        F.col("src") == F.col("rtok"))
-                .groupBy(F.col("dst").alias("ctok"))
-                .agg(F.sum(F.round(F.col("r") * F.col("s"), 12)).alias("m"))
+        r = (
+            nodes.join(F.broadcast(contrib), F.col("tok") == F.col("ctok"), "left")
+            .select(
+                "tok",
+                F.round(
+                    teleport + F.lit(PR_DAMP) * F.coalesce(F.col("m"), F.lit(0.0)),
+                    9,
+                ).alias("r"),
             )
-            r = (
-                nodes.join(F.broadcast(contrib), F.col("tok") == F.col("ctok"), "left")
-                .select(
-                    "tok",
-                    F.round(
-                        teleport + F.lit(PR_DAMP) * F.coalesce(F.col("m"), F.lit(0.0)),
-                        9,
-                    ).alias("r"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        spark.conf.set(conf_key, old_p)
+            .localCheckpoint(eager=True)
+        )
     return (
         r.select("tok", F.round("r", 6).alias("pr"))
         .orderBy(F.desc("pr"), "tok")

@@ -20,6 +20,7 @@ what the cluster profile would pin per-executor:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -41,6 +42,20 @@ def local_cpus() -> int:
     return env_positive_int("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: $SPARK_GRAFT_DRIVER_MEM, or 24g when it
+    is unset. Local mode passes the value to the JVM as ``-Xmx``, so it
+    must be a whole number with a k, m, g or t unit, as Spark documents
+    for this setting; anything else raises ValueError naming the
+    variable and the value."""
+    raw = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    if re.fullmatch(r"[1-9][0-9]*[kmgt]", raw, re.IGNORECASE):
+        return raw
+    raise ValueError(
+        f"$SPARK_GRAFT_DRIVER_MEM must be a size such as 512m or 24g, got {raw!r}"
+    )
+
+
 def get_spark(
     app_name: str = "big_data_data_lake_spark",
     cpus: int | None = None,
@@ -51,6 +66,7 @@ def get_spark(
 
     ``cpus`` defaults to ``local_cpus()``.
     """
+    memory = driver_memory()
     if cpus is None:
         cpus = local_cpus()
     if shuffle_partitions is None:
@@ -115,14 +131,8 @@ def get_spark(
         # (late_order_priority_counts, 4.6x standalone). Matching the
         # production default means local plan shapes ARE the cluster
         # plan shapes. Explicit broadcast() hints still pin every
-        # known-small dimension regardless of the threshold;
-        # $SPARK_GRAFT_BROADCAST_THR overrides for experiments.
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            os.environ.get(
-                "SPARK_GRAFT_BROADCAST_THR", str(10 * 1024 * 1024)
-            ),
-        )
+        # known-small dimension regardless of the threshold.
+        .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         # Spark's generated-class cache (static, default 100 entries)
         # is an LRU smaller than one pass over the registry, so every
@@ -136,7 +146,7 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "4096")
         # local mode runs every task thread inside the driver JVM — size
         # the heap for all of them, not for a lone driver process
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", memory)
     )
     if extra_conf:
         for k, v in extra_conf.items():

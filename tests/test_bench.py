@@ -10,6 +10,26 @@ import os
 import subprocess
 import sys
 
+import pytest
+
+
+@pytest.mark.parametrize("var", ["SPARK_GRAFT_REPS", "SPARK_GRAFT_BENCH_STRIDE"])
+def test_bad_rep_and_stride_counts_name_the_variable(var):
+    """A rep or stride count that is not a positive integer stops
+    bench.py before its session starts, and the error names the
+    variable and the value."""
+    out = subprocess.run(
+        [sys.executable, "bench.py"],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=dict(os.environ, **{var: "abc"}),
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode != 0
+    assert f"ValueError: ${var} must be a positive integer, got 'abc'" in out.stderr
+    assert out.stdout == ""
+
 
 def test_bench_runs_and_emits_one_json_line():
     env = dict(

@@ -45,3 +45,38 @@ def test_empty_graph(spark):
     ids = spark.createDataFrame([], "id long")
     pairs = spark.createDataFrame([], "a long, b long")
     assert min_label_components(ids, pairs).collect() == []
+
+
+def test_aqe_sizes_the_loop_stages(spark):
+    """The loop sets no shuffle-partition count of its own: AQE's
+    runtime coalescing sizes every stage, the eager localCheckpoint
+    materializations included. Under 64 session partitions a 200-vertex
+    graph runs no stage at 64 tasks; if AQE stopped coalescing the
+    loop, its tiny stages would pay the full 64 each."""
+    sc = spark.sparkContext
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    group = "test_aqe_sizes_the_loop_stages"
+    ids = spark.createDataFrame([(i,) for i in range(200)], "id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 199) if i % 10 != 9], "a long, b long"
+    )
+    spark.conf.set(key, "64")
+    try:
+        sc.setJobGroup(group, group)
+        got = {r.id: r.label for r in min_label_components(ids, pairs).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set(key, old)
+    assert got == {i: i - i % 10 for i in range(200)}
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stages = {
+        sid: tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(jid).stageIds
+    }
+    tasks = {sid: s.numTasks for sid, s in stages.items() if s is not None}
+    assert len(tasks) > 20, tasks
+    assert max(tasks.values()) < 64, tasks

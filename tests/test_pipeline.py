@@ -6,8 +6,6 @@ expectation audit."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from big_data_data_lake_spark.pipeline import curate_corpus
 from big_data_data_lake_spark.queries import load_all
 from big_data_data_lake_spark.sources.metadata import LakeTable

@@ -928,3 +928,45 @@ def test_registry_sweep_releases_caches_when_a_query_raises(monkeypatch):
     with pytest.raises(RuntimeError, match="query failed"):
         _sweep.registry_sweep(["a", "b", "c"], run_one, batch=2)
     assert released == [1]
+
+
+def test_registry_sweep_reports_queries_that_change_session_config(monkeypatch):
+    """A query that sets or unsets session config is a sweep failure
+    naming the query and the keys; its calls still reach the config,
+    and the wrapping ends with the sweep."""
+    import _sweep
+    from pyspark.sql.conf import RuntimeConfig
+
+    monkeypatch.setattr(_sweep, "release_query_caches", lambda: None)
+    reached = []
+
+    class JConf:
+        def set(self, key, value):
+            reached.append(("set", key, value))
+
+        def unset(self, key):
+            reached.append(("unset", key))
+
+    conf = RuntimeConfig(JConf())
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def run_one(name):
+        if name == "a":
+            conf.set("spark.sql.shuffle.partitions", "8")
+            conf.unset("spark.sql.shuffle.partitions")
+        if name == "c":
+            conf.set("spark.x", "1")
+        return None
+
+    failures = _sweep.registry_sweep(["a", "b", "c"], run_one, batch=2)
+    assert failures == [
+        "a: changes session config: set(spark.sql.shuffle.partitions), "
+        "unset(spark.sql.shuffle.partitions)",
+        "c: changes session config: set(spark.x)",
+    ]
+    assert reached == [
+        ("set", "spark.sql.shuffle.partitions", "8"),
+        ("unset", "spark.sql.shuffle.partitions"),
+        ("set", "spark.x", "1"),
+    ]
+    assert (RuntimeConfig.set, RuntimeConfig.unset) == (real_set, real_unset)

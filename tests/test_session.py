@@ -6,6 +6,7 @@ import pytest
 
 from big_data_data_lake_spark.session import (
     codegen_compiles,
+    driver_memory,
     env_positive_int,
     get_spark,
     local_cpus,
@@ -29,10 +30,11 @@ def test_rerun_plans_reuse_their_generated_classes(spark):
     assert codegen_compiles(spark) - before == 0
 
 
-@pytest.mark.parametrize("value", ["abc", "0", "-1"])
+@pytest.mark.parametrize("value", ["abc", "0", "-1", "1.5g"])
 def test_bad_core_and_partition_counts_name_the_variable(monkeypatch, value):
-    """A value that is not a positive integer fails before any session
-    starts, and the error names the variable and the value."""
+    """A core or partition count that is not a positive integer, or a
+    driver memory that is not a JVM size such as 512m, fails before any
+    session starts, and the error names the variable and the value."""
     from bench import shuffle_partitions
 
     monkeypatch.setenv("SPARK_GRAFT_CPUS", value)
@@ -47,6 +49,18 @@ def test_bad_core_and_partition_counts_name_the_variable(monkeypatch, value):
         shuffle_partitions("/nonexistent", 4)
     with pytest.raises(ValueError, match="SPARK_GRAFT_SHUFFLE_PARTITIONS"):
         get_spark(cpus=2)
+
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    for mem in (value, value + "m", "24gb", "g"):
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", mem)
+        with pytest.raises(ValueError, match=f"SPARK_GRAFT_DRIVER_MEM.*'{mem}'"):
+            driver_memory()
+        with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
+            get_spark(cpus=2)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "512M")
+    assert driver_memory() == "512M"
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    assert driver_memory() == "24g"
 
 
 def test_unset_cores_resolve_to_the_host(monkeypatch):

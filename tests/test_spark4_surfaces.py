@@ -5,8 +5,6 @@ and observe() quality metrics in batch and streaming.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 
 from big_data_data_lake_spark.observability import observe_batch, observe_stream

@@ -13,7 +13,6 @@ import tempfile
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from big_data_data_lake_spark.schemas import STATE_VECTOR_SCHEMA
 from big_data_data_lake_spark.sources.catalog import load_table

@@ -24,7 +24,7 @@ from big_data_data_lake_spark.testing import (  # noqa: E402
 def main() -> None:
     rnd = sys.argv[1] if len(sys.argv) > 1 else "0"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
-    spark = get_spark(cpus=16)
+    spark = get_spark()
     violations: dict[str, list[str]] = {}
     names = sorted(load_all())
     for n in names:
