@@ -1,17 +1,23 @@
 """Window-function operators: latest-per-key dedup (batch F9), top-k
-per group, running aggregates, sessionization.
+per group, and exact global scans over a total order.
 
 The reference's only windowed semantic is the producer's latest-wins
 dedup (producer.py:89-96); the rest are the standard analytic
-extensions SURVEY §2.10 flags as free in Spark. All shuffle once on
-the partition key and are AQE-coalesced.
+extensions SURVEY §2.10 flags as free in Spark. The per-key operators
+shuffle once on the key. The global scans (``global_rank``,
+``global_cumsum``, ``global_cummax_prev``) share one range-prefix
+kernel, ``_range_prefix``, that never plans a single-partition window.
+Its contract: materialize downstream results before calling the
+returned ``release``, because a re-run range exchange may re-sample
+its bounds and misalign the per-partition offsets.
 """
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
@@ -77,32 +83,55 @@ def topk_per_group(
     )
 
 
-def global_rank(
+def map_lookup(
+    mapping: dict, key: F.Column, default: int | None = None
+) -> F.Column:
+    """``mapping[key]`` as a long, through a literal ``create_map`` of
+    the driver-side dict ``mapping``; ``default`` where ``key`` is
+    absent. The dict is metadata-scale (a row per partition or group),
+    so the map rides in the plan instead of a join."""
+    fallback = F.lit(default).cast("long")
+    if not mapping:
+        return fallback
+    m = F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv])
+    return F.coalesce(F.try_element_at(m, key).cast("long"), fallback)
+
+
+def _range_prefix(
     df: DataFrame,
     order_cols: Sequence[str],
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, int, Callable[[], None]]:
-    """Exact 1-based global rank by the total order ``order_cols``
-    (which must include a unique tiebreak column) WITHOUT the
-    single-partition window Spark plans for an unpartitioned
-    ``Window.orderBy`` — the classic "No Partition Defined for Window"
-    scale-killer that funnels every row through one task.
+    num_partitions: int | None,
+    part_agg: F.Column,
+    fold: Callable,
+    zero: int | None,
+    local: Callable[[WindowSpec], F.Column],
+    op: Callable[[F.Column, F.Column], F.Column],
+    out_col: str,
+) -> tuple[DataFrame, int | None, Callable[[], None]]:
+    """The one skeleton of the exact global scans below: an answer over
+    the total order ``order_cols`` WITHOUT the single-partition window
+    Spark plans for an unpartitioned ``Window.orderBy`` — the "No
+    Partition Defined for Window" scale-killer that funnels every row
+    through one task.
 
-    Pattern (scales to any row count):
-      1. ``repartitionByRange`` on the order columns — a parallel
-         range exchange, same machinery as Spark's distributed sort.
-      2. One metadata-scale job: per-partition row counts (one row per
-         partition), turned into prefix-sum offsets on the driver.
-      3. ``row_number`` over a window PARTITIONED by the physical
-         partition id + the broadcast offset map = exact global rank.
+      1. ``repartitionByRange`` on ``order_cols`` — a parallel range
+         exchange — with each row tagged by its partition id ``__pid``
+         and persisted.
+      2. One metadata-scale job: ``part_agg`` per partition.
+      3. A driver fold of those aggregates, in partition order, into
+         each partition's EXCLUSIVE prefix: it starts at ``zero``,
+         skips NULL aggregates and combines with ``fold``; a partition
+         whose prefix is still NULL gets no entry.
+      4. The prefix looked up by ``__pid`` (:func:`map_lookup`).
+      5. ``out_col`` combines the prefix with ``local``, the window
+         value PARTITIONED by ``__pid``: ``op`` of both when both are
+         non-NULL, otherwise whichever is non-NULL.
 
-    The input is persisted so the range bounds sampled for the
-    exchange are shared between the offsets job and downstream jobs
-    (re-sampling could re-draw bounds and misalign the offsets). Call
-    the returned ``release`` once downstream results are materialized.
-
-    Returns ``(ranked_df, total_rows, release)``.
+    Contract: the persist shares the range bounds sampled for the
+    exchange between the prefix job and downstream jobs — a re-run
+    exchange may re-sample the bounds and misalign the prefixes — so
+    materialize downstream results before calling the returned
+    ``release``. Returns ``(df_with_out_col, fold_of_all, release)``.
     """
     spark = df.sparkSession
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
@@ -112,29 +141,40 @@ def global_rank(
         .withColumn("__pid", F.spark_partition_id())
         .persist()
     )
-    counts = {
-        int(r["__pid"]): int(r["__c"])
-        for r in ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__c")).collect()
-    }
-    offsets: dict[int, int] = {}
-    total = 0
-    for pid in sorted(counts):
-        offsets[pid] = total
-        total += counts[pid]
-    if offsets:
-        off_map = F.create_map(
-            *[F.lit(v) for pid_off in offsets.items() for v in pid_off]
-        )
-        offset = F.coalesce(
-            F.try_element_at(off_map, F.col("__pid")).cast("long"), F.lit(0).cast("long")
-        )
-    else:
-        offset = F.lit(0).cast("long")
-    w = Window.partitionBy("__pid").orderBy(*cols)
-    ranked = ranged.withColumn(
-        rank_col, F.row_number().over(w).cast("long") + offset
-    ).drop("__pid")
-    return ranked, total, lambda: ranged.unpersist()
+    parts = ranged.groupBy("__pid").agg(part_agg.alias("__a")).collect()
+    prefix, acc = {}, zero
+    for pid, agg in sorted((int(r["__pid"]), r["__a"]) for r in parts):
+        if acc is not None:
+            prefix[pid] = acc
+        if agg is not None:
+            acc = agg if acc is None else fold(acc, agg)
+    offset = map_lookup(prefix, F.col("__pid"), zero)
+    # the window value goes through a column: inlined three times into
+    # the combine, it would be computed three times by the Window
+    v = F.col("__v")
+    out = ranged.withColumn("__v", local(Window.partitionBy("__pid").orderBy(*cols)))
+    out = out.withColumn(out_col, F.coalesce(op(v, offset), v, offset))
+    return out.drop("__pid", "__v"), acc, ranged.unpersist
+
+
+def global_rank(
+    df: DataFrame,
+    order_cols: Sequence[str],
+    rank_col: str = "rank",
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, int, Callable[[], None]]:
+    """Exact 1-based global rank by the total order ``order_cols``
+    (which must include a unique tiebreak column): ``row_number`` per
+    range partition plus the row count of the partitions before it
+    (:func:`_range_prefix`).
+
+    Returns ``(ranked_df, total_rows, release)``; call ``release``
+    once downstream results are materialized.
+    """
+    return _range_prefix(
+        df, order_cols, num_partitions, F.count(F.lit(1)), operator.add, 0,
+        lambda w: F.row_number().over(w).cast("long"), operator.add, rank_col,
+    )
 
 
 def global_cumsum(
@@ -145,63 +185,27 @@ def global_cumsum(
     num_partitions: int | None = None,
 ) -> tuple[DataFrame, int, Callable[[], None]]:
     """Exact global running sum of integral ``value_col`` over the
-    total order ``order_cols`` (must include a unique tiebreak) —
-    the prefix-sum twin of :func:`global_rank`, and the same
-    scale posture: a parallel ``repartitionByRange`` exchange,
-    per-partition running sums under a window PARTITIONED by the
-    physical partition id, and one metadata-scale job (one row per
-    partition) whose totals become broadcast prefix offsets. No
-    single-partition window anywhere.
+    total order ``order_cols`` (must include a unique tiebreak) — SQL
+    ``SUM(value_col) OVER (ORDER BY order_cols ROWS UNBOUNDED
+    PRECEDING)``, NULL until the first non-NULL value — as a running
+    sum per range partition plus the sum of the partitions before it
+    (:func:`_range_prefix`).
 
     Restricted to integral values (summed as long) so the
     per-partition reordering cannot perturb the total the way float
     association would.
 
-    Returns ``(df_with_cumsum, grand_total, release)``; call
-    ``release`` after materializing downstream results.
+    Returns ``(df_with_cumsum, grand_total, release)`` (a grand total
+    of 0 when every value is NULL); call ``release`` after
+    materializing downstream results.
     """
-    spark = df.sparkSession
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) for c in order_cols]
-    ranged = (
-        df.repartitionByRange(num_partitions, *cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
+    v = F.col(value_col).cast("long")
+    out, total, release = _range_prefix(
+        df, order_cols, num_partitions, F.sum(v), operator.add, None,
+        lambda w: F.sum(v).over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        operator.add, out_col,
     )
-    sums = {
-        # sum() is NULL when every value in a partition is NULL (e.g.
-        # a null-heavy column on a degenerate input) — count it as 0
-        # instead of crashing the driver-side int()
-        int(r["__pid"]): int(r["__s"] or 0)
-        for r in (
-            ranged.groupBy("__pid")
-            .agg(F.sum(F.col(value_col).cast("long")).alias("__s"))
-            .collect()
-        )
-    }
-    offsets: dict[int, int] = {}
-    total = 0
-    for pid in sorted(sums):
-        offsets[pid] = total
-        total += sums[pid]
-    if offsets:
-        off_map = F.create_map(
-            *[F.lit(v) for pid_off in offsets.items() for v in pid_off]
-        )
-        offset = F.coalesce(
-            F.try_element_at(off_map, F.col("__pid")).cast("long"), F.lit(0).cast("long")
-        )
-    else:
-        offset = F.lit(0).cast("long")
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = ranged.withColumn(
-        out_col, F.sum(F.col(value_col).cast("long")).over(w) + offset
-    ).drop("__pid")
-    return out, total, lambda: ranged.unpersist()
+    return out, total or 0, release
 
 
 def exact_ntile(rank: F.Column, total: int, buckets: int) -> F.Column:
@@ -271,11 +275,10 @@ def global_cummax_prev(
     """Exact EXCLUSIVE running max of integral ``value_col`` over the
     total order ``order_cols`` (must include a unique tiebreak): each
     row gets the max of all STRICTLY PRECEDING rows' values, NULL for
-    the global first row. Same scale posture as :func:`global_cumsum`
-    — parallel range exchange, per-partition window PARTITIONED by
-    physical partition id, one metadata-scale job (a row per
-    partition) whose running maxes become broadcast prefix offsets;
-    no single-partition window.
+    the global first row — SQL ``MAX(value_col) OVER (ORDER BY
+    order_cols ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)``, as
+    the exclusive max per range partition and the max of the
+    partitions before it (:func:`_range_prefix`).
 
     The exclusive frame is what dominance/skyline operators need
     ("is any earlier row's value >= mine?"); max is order-insensitive
@@ -285,48 +288,10 @@ def global_cummax_prev(
     Returns ``(df_with_prev_max, release)``; call ``release`` after
     materializing downstream results.
     """
-    spark = df.sparkSession
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) for c in order_cols]
-    ranged = (
-        df.repartitionByRange(num_partitions, *cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()
+    v = F.col(value_col).cast("long")
+    out, _, release = _range_prefix(
+        df, order_cols, num_partitions, F.max(v), max, None,
+        lambda w: F.max(v).over(w.rowsBetween(Window.unboundedPreceding, -1)),
+        F.greatest, out_col,
     )
-    maxes = {
-        int(r["__pid"]): r["__m"]
-        for r in (
-            ranged.groupBy("__pid")
-            .agg(F.max(F.col(value_col).cast("long")).alias("__m"))
-            .collect()
-        )
-    }
-    # prefix[pid] = max over all partitions BEFORE pid (None if none)
-    prefix: dict[int, int | None] = {}
-    running: int | None = None
-    for pid in sorted(maxes):
-        prefix[pid] = running
-        m = maxes[pid]
-        if m is not None:
-            running = m if running is None else max(running, m)
-    entries = [(pid, v) for pid, v in prefix.items() if v is not None]
-    if entries:
-        off_map = F.create_map(
-            *[F.lit(x) for pid_v in entries for x in pid_v]
-        )
-        offset = F.try_element_at(off_map, F.col("__pid")).cast("long")
-    else:
-        offset = F.lit(None).cast("long")
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local_prev = F.max(F.col(value_col).cast("long")).over(w)
-    out = ranged.withColumn(
-        out_col,
-        F.when(
-            local_prev.isNotNull() & offset.isNotNull(), F.greatest(local_prev, offset)
-        ).otherwise(F.coalesce(local_prev, offset)),
-    ).drop("__pid")
-    return out, lambda: ranged.unpersist()
+    return out, release

@@ -44,160 +44,9 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# Queries the per-round correctness driver has never sampled (it checks a
-# subset of the registry per round).  Enumerate these first so a
-# prefix-biased sampler attests them; all pass the local DuckDB mirror
-# (tests/test_oracle_parity.py) regardless.
-#
-# N_CURRENT_ROUND = how many leading entries are THIS round's landings
-# (everything above the first "carried from round" marker).  Keep in
-# sync when re-ordering SAMPLE_FIRST at round close —
-# tools/parity_sf1.py always includes exactly this prefix in the sf1
-# sweep, so an off-by-one silently drops a current-round query from
-# the guaranteed set (round-8 advisory).
-N_CURRENT_ROUND = 4
-SAMPLE_FIRST: tuple[str, ...] = (
-    # NEW or changed in round 12, enumerated first so the
-    # prefix-biased driver sampler attests them this round; all
-    # verified against the local DuckDB mirror at sf0.001+sf0.01 on
-    # landing, and the full-registry sf0.01 sweep re-ran green.
-    "fuzzy_dup_summary",  # r12 NEW: bounded per-doc edit-distance verdicts (two-level)
-    "fuzzy_dup_lsh_summary",  # r12 NEW: LSH candidates + Levenshtein re-rank
-    "fuzzy_dup_levenshtein",  # r12: threshold-bounded DP (same values); reclassified audit
-    "minhash_dup_summary",  # r12: NULL-signature window fix (r11 advice)
-    # carried from round 11:
-    "simhash_dup_summary",  # r11: combo-key candidate join (same values)
-    "simhash_near_dups",  # r11: combo-key candidate join (same values)
-    "decontamination_verdicts_13g",  # r11: promoted to headline (unchanged)
-    "decontamination_verdicts",  # r11: reclassified audit (unchanged)
-    "minhash_lsh_pairs",  # r11: reclassified audit (unchanged)
-    # carried from round 10:
-    "lsh_pr_audit",  # r10: absolute-doc-budget gate (same values <= sf0.1)
-    "semantic_dedup_crosscheck",  # r10: broadcasts bounded pair list, not documents
-    "pricing_summary",  # r10: money accumulator hardening (same values)
-    "country_intelligence",  # r10: money accumulator hardening (same values)
-    # changed in round 9 but OMITTED from the r9 prefix (r9 advice #2)
-    # — full sf1 sweep covered them green; attested in the guaranteed
-    # prefix now:
-    "marker_sizes",
-    "kmeans_phases",
-    "kmeans_lloyd_phases",
-    "view_purchase_pairs",
-    "event_chain_expansion",
-    # changed in round 9 (the wholesale exact-integer-unit rewrite of
-    # every order-dependent float money/value aggregate, r8 verdict
-    # item #2 — query AND oracle changed together); all re-verified
-    # against the local DuckDB mirror at sf0.001+sf0.01 on landing,
-    # and the full 213-query sf0.01 sweep re-ran green.
-    "brand_revenue",  # r9: exact 1e-4-unit revenue
-    "union_segments",  # r9: exact cents
-    "membership_range_filter",  # r9: exact cents
-    "null_fill_drop",  # r9: exact cents (coalesced)
-    "lineitem_rollup",  # r9: exact cents
-    "orders_cube",  # r9: exact cents
-    "shipping_priority",  # r9: exact 1e-4 units (Q3)
-    "local_supplier_volume",  # r9: exact 1e-4 units (Q5)
-    "returned_item_report",  # r9: exact 1e-4 units (Q10)
-    "large_volume_orders",  # r9: exact-cent HAVING threshold (Q18)
-    "nation_trade_flows",  # r9: exact 1e-4 units (Q7)
-    "market_share_by_year",  # r9: integer-unit ratio (Q8)
-    "promo_revenue_share",  # r9: integer-unit ratio (Q14)
-    "disjunctive_revenue",  # r9: exact 1e-4 units (Q19)
-    "small_qty_avg_revenue",  # r9: exact cents / 7 (Q17)
-    "events_grouping_sets",  # r9: exact cents
-    "revenue_contribution",  # r9: integer cents through the window
-    "revenue_time_rollup",  # r9: exact cents
-    "nation_rank_movers",  # r9: integer cents through all windows
-    "running_value",  # r9: exact-cent window prefix sum
-    "daily_activity",  # r9: exact cents
-    "daily_activity_filled",  # r9: exact cents
-    "monthly_revenue_growth",  # r9: integer cents through lag windows
-    "range_band_join",  # r9: exact-cent avg
-    "salted_event_rollup",  # r9: exact cents through both salt phases
-    "event_dow_chi2",  # r9: 1e-6-unit cell contributions
-    "rfm_segments",  # r9: integer-cent monetary quartile
-    "top_user_by_type",  # r9: integer-cent argmax
-    "last_touch_attribution",  # r9: exact cents + exact avg
-    "ccnet_perplexity_buckets",  # r9: micro-nat sup + 1e-4-unit mean
-    "dsir_importance_weights",  # r9: micro-unit log-ratios end to end
-    "incremental_minhash_novelty_indexed",  # r9: shared probe refactor (same plan)
-    # carried from round 8:
-    "incremental_semantic_novelty_indexed",  # r8: index-fed semantic novelty
-    "excision_rewrite_incremental",  # r8: pre-staged v0, incremental-only cost
-    "continent_classification_ref",  # r8: reference-exact parity twin
-    "excision_rewrite_to_lake",  # r8: LEFT-join accounting fix + join-frame delete
-    "semantic_dedup_clusters",  # r8: fine-assign idx_limit guard wired
-    "semantic_dedup_recall",  # r8: fine-assign idx_limit guard wired
-    "incremental_semantic_novelty",  # r8: fine-assign idx_limit guard wired
-    "nation_product_profit",  # r8: exact integer 1e-4-unit sums (sf1 parity fix)
-    "unigram_surprisal",  # r8: exact integer micro-nat sums (sf1 parity fix)
-    "bigram_surprisal",  # r8: exact integer micro-nat sums (sf1 parity fix)
-    # carried from round 7:
-    "incremental_minhash_novelty",  # r7: new (batch-vs-archive LSH probe)
-    "embedding_prototypicality",  # r7: null-label centroid skip
-    # carried from round 6 (all green in CORRECTNESS_r06; ccnet/dsir
-    # moved into the round-9 prefix above after their micro-unit
-    # rewrite):
-    "repeated_span_excision",  # r6: new (ExactSubstr span cut list)
-    "excision_source_accounting",  # r6: new (per-source cut rollup)
-    "excision_rewrite_checksum",  # r6: new (executed rewrite manifest)
-    "token_pagerank",  # r6: codegen bigram edges + checkpointed loop
-    "quantile_sketch_audit",
-    "ks_drift_by_source",
-    "repetition_quality_flags",  # r6: fused Arrow metric kernel
-    "bloom_semijoin_audit",  # r6: distributed word map (no driver collect)
-    "dedup_clusters",  # r6: volume-sized propagation partitions
-    "dedup_survivors",
-    "cluster_quality_survivors",
-    "dup_graph_triangles",
-    # Exactly the 14 registry entries without a driver CORRECTNESS row
-    # yet (round-4 CORRECTNESS attested the first 50 of the previous
-    # list, all green — 172/186 all-time, zero failures ever).  Pruned
-    # per the round-4 verdict so these enumerate at positions 1-14 and
-    # a prefix-biased ~50-query sampler attests them, completing
-    # 186/186.  All pass the local DuckDB mirror
-    # (tests/test_oracle_parity.py) regardless.
-    "hourly_value_ohlc",
-    "order_pareto_frontier",
-    "source_divergence_profile",
-    "fano_burstiness_by_type",
-    "hod_seasonal_zscore",
-    "winsorized_stats",
-    "three_step_funnel",
-    "zipf_slope",
-    "dup_cluster_histogram",
-    "span_corruption_masks",
-    "epoch_shuffle_order",
-    "user_gini_concentration",
-    "negative_sampling_pairs",
-    "sequence_packing_audit",
-    # round-5 semantic changes / additions needing (re-)attestation:
-    # the exact twins are now sample-gated by default, and their
-    # ungated forms moved behind the audit_ prefix (new names).
-    "ngram_jaccard_pairs",
-    "embedding_topk_pairs",
-    "audit_ngram_jaccard_pairs",
-    "audit_embedding_topk_pairs",
-    # new in round 5
-    "interarrival_histogram",
-    "event_type_lift",
-    "shingle_df_profile",
-    "denylist_redaction_audit",
-    "variant_props_profile",
-    "cusum_changepoint",
-    "portable_hll_audit",
-)
-
-
 def load_all() -> dict[str, QueryDef]:
-    """Import every query module (registration is at import time).
-
-    Returns the registry with never-driver-sampled queries ordered first
-    (see ``SAMPLE_FIRST``); iteration order is otherwise registration
-    order, which is stable.
-    """
+    """Import every query module (registration is at import time) and
+    return the registry in registration order, which is stable."""
     from . import analytics, corpus, curation, llm_ops, relational  # noqa: F401
 
-    ordered = {n: REGISTRY[n] for n in SAMPLE_FIRST if n in REGISTRY}
-    ordered.update(REGISTRY)
-    return ordered
+    return dict(REGISTRY)

@@ -2032,16 +2032,8 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         for lang in sorted(counts):
             offsets[lang] = acc
             acc += counts[lang]
-        off_map = F.create_map(
-            *[F.lit(v) for kv in offsets.items() for v in kv]
-        )
-        tot_map = F.create_map(
-            *[F.lit(v) for kv in counts.items() for v in kv]
-        )
-        lang_rank = F.col("__rank") - F.element_at(off_map, F.col("lang")).cast(
-            "long"
-        )
-        lang_total = F.element_at(tot_map, F.col("lang")).cast("long")
+        lang_rank = F.col("__rank") - win.map_lookup(offsets, F.col("lang"))
+        lang_total = win.map_lookup(counts, F.col("lang"))
         nt = win.exact_ntile_grouped(lang_rank, lang_total, CCNET_BUCKETS)
         df = (
             ranked.withColumn("nt", nt)

@@ -43,12 +43,17 @@ def local_cpus() -> int:
 
 
 def driver_memory() -> str:
-    """``spark.driver.memory``: $SPARK_GRAFT_DRIVER_MEM, or 24g when it
-    is unset. Local mode passes the value to the JVM as ``-Xmx``, so it
-    must be a whole number with a k, m, g or t unit, as Spark documents
-    for this setting; anything else raises ValueError naming the
-    variable and the value."""
-    raw = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    """``spark.driver.memory``: $SPARK_GRAFT_DRIVER_MEM, or, when it is
+    unset, a quarter of the host's physical RAM in whole GB, clamped to
+    1g-24g: the host is shared, and local mode runs every task thread
+    in this one JVM. Local mode passes the value to the JVM as
+    ``-Xmx``, so a set value must be a whole number with a k, m, g or t
+    unit, as Spark documents for this setting; anything else raises
+    ValueError naming the variable and the value."""
+    raw = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if raw is None:
+        ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+        return f"{max(1, min(24, int(ram_gb // 4)))}g"
     if re.fullmatch(r"[1-9][0-9]*[kmgt]", raw, re.IGNORECASE):
         return raw
     raise ValueError(

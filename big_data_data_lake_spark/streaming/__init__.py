@@ -5,7 +5,6 @@ from .ingest import (
     lake_table_sink,
     first_wins_dedup,
     latest_wins_dedup,
-    latest_wins_dedup_tws,
     micro_batch_writer,
     normalize_payloads,
     parse_state_vectors,
@@ -20,7 +19,6 @@ __all__ = [
     "lake_table_sink",
     "first_wins_dedup",
     "latest_wins_dedup",
-    "latest_wins_dedup_tws",
     "micro_batch_writer",
     "normalize_payloads",
     "parse_state_vectors",

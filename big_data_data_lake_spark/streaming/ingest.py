@@ -248,103 +248,6 @@ def latest_wins_dedup(
     )
 
 
-def latest_wins_dedup_tws(
-    stream: DataFrame,
-    key: str = "icao24",
-    ts_col: str = "last_contact",
-    ttl_s: int = DEDUP_TTL_S,
-    lateness_s: int = 300,
-) -> DataFrame:
-    """latest_wins_dedup on Spark 4's ``transformWithStateInPandas`` —
-    the arbitrary-state API that SUPERSEDES applyInPandasWithState:
-    named value state (``getValueState``) instead of one positional
-    state tuple, and explicit event-time TIMERS
-    (``registerTimer``/``handleExpiredTimer``) instead of the single
-    implicit ``timeoutConf`` — a key can carry many independent
-    timers, state can be typed per name, and TTL can also be declared
-    declaratively on the state itself. Semantics here are kept
-    IDENTICAL to latest_wins_dedup (same vectorized cummax emission,
-    same event-time TTL eviction, same lateness caveat) so the two
-    operators are drop-in twins and the test suite can assert
-    equivalent emissions.
-
-    Requires at QUERY START (not at plan construction): the RocksDB
-    state store provider
-    (``spark.sql.streaming.stateStore.providerClass =
-    org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``,
-    bundled with Spark — transformWithState refuses the default
-    HDFS-backed store; at scale RocksDB is the provider you want
-    anyway, state spills to local SSD instead of executor heap), and
-    the ``protobuf`` package (pyspark optional dependency — the
-    Python state client speaks protobuf to the JVM state server;
-    absent from this container, so the execution tests are env-gated
-    exactly like the Kafka smoke while the construction test runs
-    everywhere)."""
-    import numpy as np
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = stream.schema
-    field_names = [f.name for f in out_schema.fields]
-    ttl_ms = ttl_s * 1000
-
-    class _LatestWins(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._last = handle.getValueState("last_ts", "last_ts long")
-
-        def handleInputRows(self, key_tuple, rows, timer_values):
-            floor = (
-                np.int64(self._last.get()[0])
-                if self._last.exists()
-                else np.iinfo(np.int64).min
-            )
-            for batch in rows:
-                if not len(batch):
-                    continue
-                ts = batch[ts_col].to_numpy(dtype="int64", copy=False)
-                # arrival-order cummax mask — see latest_wins_dedup
-                prev_max = np.maximum.accumulate(
-                    np.concatenate(([floor], ts[:-1]))
-                )
-                keep = ts > prev_max
-                floor = max(floor, np.int64(ts.max()))
-                if keep.any():
-                    yield batch.loc[keep, field_names]
-            if floor != np.iinfo(np.int64).min:
-                self._last.update((int(floor),))
-                # one live TTL timer per key: re-arm on every batch
-                # (timers are a SET on this API, unlike the single
-                # implicit timeout of applyInPandasWithState)
-                for t in self._handle.listTimers():
-                    self._handle.deleteTimer(t)
-                self._handle.registerTimer(
-                    max(
-                        int(floor) * 1000 + ttl_ms,
-                        timer_values.getCurrentWatermarkInMs() + 1,
-                    )
-                )
-
-        def handleExpiredTimer(self, key_tuple, timer_values, expired_timer_info):
-            self._last.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    with_evt = stream.withColumn(
-        "__evt", F.timestamp_seconds(F.col(ts_col))
-    ).withWatermark("__evt", f"{lateness_s} seconds")
-    return with_evt.groupBy(key).transformWithStateInPandas(
-        statefulProcessor=_LatestWins(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="EventTime",
-    )
-
-
 def bronze_to_silver(bronze: DataFrame, metadata: DataFrame) -> DataFrame:
     """E2/J1 — continuous silver enrichment: stream-static broadcast
     left join against the (deduped) dimension with 'Unknown' fill

@@ -363,28 +363,53 @@ def test_bloom_sizing_keeps_fp_bounded_at_10x_keys(spark):
         ), row.asDict()
 
 
-def test_global_cummax_prev_matches_single_partition_window(spark):
-    """The scale-safe exclusive running max must equal the naive
-    unpartitioned-window formulation on shuffled multi-partition
-    input, including the NULL for the global first row."""
-    import numpy as np
+@pytest.mark.parametrize("num_partitions", [1, 3, 16])
+@pytest.mark.parametrize(
+    "kernel", ["global_rank", "global_cumsum", "global_cummax_prev"]
+)
+def test_global_scan_matches_single_partition_window(spark, kernel, num_partitions):
+    """Each range-prefix scan must equal its unpartitioned-window
+    formulation (ROW_NUMBER, SUM ... ROWS UNBOUNDED PRECEDING, MAX ...
+    1 PRECEDING) on shuffled input at any partition count: random
+    values, NULL values at the global and partition heads, all-NULL
+    values and no rows. A NULL partition head once turned
+    global_cumsum's running sum NULL from that row on."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from big_data_data_lake_spark.operators.windows import global_cummax_prev
+    from big_data_data_lake_spark.operators import windows as win
 
     rnd = np.random.RandomState(7)
-    rows = [(int(i), int(v)) for i, v in enumerate(rnd.randint(-1000, 1000, 5000))]
-    df = spark.createDataFrame(rows, "k long, v long").repartition(16)
-    got_df, release = global_cummax_prev(df, ["k"], "v", out_col="pm")
-    try:
-        got = {r.k: r.pm for r in got_df.collect()}
-    finally:
-        release()
-    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, -1)
-    want = {r.k: r.pm for r in df.withColumn("pm", F.max("v").over(w)).collect()}
-    assert got == want
-    assert got[0] is None
+    inputs = {
+        "random": [(i, int(v)) for i, v in enumerate(rnd.randint(-1000, 1000, 2000))],
+        "null_heads": [(i, i % 7 - 3 if i % 6 == 5 else None) for i in range(200)],
+        "all_null": [(i, None) for i in range(50)],
+        "empty": [],
+    }
+    w = Window.orderBy("k")
+    scan, want_col = {
+        "global_rank": (
+            lambda df: win.global_rank(df, ["k"], "out", num_partitions),
+            F.row_number().over(w),
+        ),
+        "global_cumsum": (
+            lambda df: win.global_cumsum(df, ["k"], "v", "out", num_partitions),
+            F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        ),
+        "global_cummax_prev": (
+            lambda df: win.global_cummax_prev(df, ["k"], "v", "out", num_partitions),
+            F.max("v").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+        ),
+    }[kernel]
+    for name, rows in inputs.items():
+        df = spark.createDataFrame(rows, "k long, v long").repartition(4)
+        got_df, *_, release = scan(df)
+        try:
+            got = {r.k: r.out for r in got_df.collect()}
+        finally:
+            release()
+        want = {r.k: r.out for r in df.withColumn("out", want_col).collect()}
+        assert got == want, name
 
 
 # ---------------------------------------------------------------------------

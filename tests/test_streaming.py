@@ -149,134 +149,6 @@ def test_latest_wins_ttl_evicts_on_event_time(spark, tmpdir):
     assert got == [("aaa", 1000), ("ccc", 2000), ("ddd", 2500)]
 
 
-# transformWithState's Python state client speaks protobuf to the JVM
-# state server (pyspark/sql/streaming/proto/StateMessage_pb2) — the
-# `protobuf` package is an optional pyspark dependency absent from
-# this container (verified: no google.protobuf runtime anywhere on
-# disk; no network to fetch one). Same env-gated posture as the Kafka
-# connector smoke: the operator is shipped, the tests execute wherever
-# `pip install protobuf` has run.
-try:  # find_spec raises when even the parent `google` package is absent
-    import importlib.util as _ilu
-
-    _HAS_PROTOBUF = _ilu.find_spec("google.protobuf") is not None
-except ModuleNotFoundError:
-    _HAS_PROTOBUF = False
-
-requires_protobuf = pytest.mark.skipif(
-    not _HAS_PROTOBUF,
-    reason=(
-        "transformWithStateInPandas needs the `protobuf` package "
-        "(pyspark optional dep; `pip install protobuf`) — not in this "
-        "container and no network to fetch it"
-    ),
-)
-
-
-@pytest.fixture
-def rocksdb_state_store(spark):
-    """transformWithState refuses the default HDFS-backed state store;
-    point the session at the bundled RocksDB provider and restore."""
-    k = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(k, None)
-    spark.conf.set(
-        k,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    yield
-    if saved is None:
-        spark.conf.unset(k)
-    else:
-        spark.conf.set(k, saved)
-
-
-def test_latest_wins_tws_constructs_without_protobuf(spark, tmpdir):
-    """Plan CONSTRUCTION for the transformWithState twin needs neither
-    protobuf nor RocksDB (both are query-start requirements): the
-    unresolved streaming plan must build and carry the input schema
-    unchanged — so the operator is importable and composable even
-    where the optional deps are absent."""
-    from big_data_data_lake_spark.streaming import latest_wins_dedup_tws
-
-    raw = spark.readStream.schema("value string").json(tmpdir)
-    out = latest_wins_dedup_tws(parse_state_vectors(raw))
-    assert out.isStreaming
-    assert [(f.name, f.dataType) for f in out.schema.fields] == [
-        (f.name, f.dataType) for f in STATE_VECTOR_SCHEMA.fields
-    ]
-
-
-@requires_protobuf
-def test_latest_wins_tws_matches_applyinpandas_twin(
-    spark, tmpdir, rocksdb_state_store
-):
-    """The transformWithStateInPandas twin must emit exactly what
-    latest_wins_dedup emits on the FIXTURES F-E #1 input: newer wins,
-    stale out-of-order drops, other keys pass."""
-    from big_data_data_lake_spark.streaming import latest_wins_dedup_tws
-
-    batches = [
-        _sv("aaa", 100),
-        _sv("aaa", 150),   # newer -> emit
-        _sv("aaa", 120),   # stale  -> drop
-        _sv("aaa", 900),   # newer -> emit
-        _sv("bbb", 50),    # other key -> emit
-    ]
-    with open(f"{tmpdir}/b0.jsonl", "w") as fh:
-        fh.write("\n".join(json.dumps({"value": json.dumps(b)}) for b in batches))
-
-    raw = spark.readStream.schema("value string").json(tmpdir)
-    deduped = latest_wins_dedup_tws(parse_state_vectors(raw), ttl_s=600)
-    out = _run_stream_to_memory(spark, deduped, "dedup_sv_tws").collect()
-    got = sorted((r.icao24, r.last_contact) for r in out)
-    assert got == [("aaa", 100), ("aaa", 150), ("aaa", 900), ("bbb", 50)]
-
-
-@requires_protobuf
-def test_latest_wins_tws_ttl_timer_evicts_on_event_time(
-    spark, tmpdir, rocksdb_state_store
-):
-    """Event-time TIMER eviction on the new API (explicit
-    registerTimer/handleExpiredTimer instead of timeoutConf): aaa@1000
-    arms a timer at 1600; ccc@2000 moves the watermark past it, the
-    timer fires and clears aaa's state (numRowsRemoved); a later
-    newer-than-nothing aaa re-emits because its state is gone."""
-    import os
-
-    from big_data_data_lake_spark.streaming import latest_wins_dedup_tws
-
-    src, sink, ckpt = f"{tmpdir}/src", f"{tmpdir}/sink", f"{tmpdir}/ckpt"
-    os.makedirs(src)
-
-    def run_batch(fname, *svs):
-        with open(f"{src}/{fname}", "w") as fh:
-            fh.write("\n".join(json.dumps({"value": json.dumps(s)}) for s in svs))
-        raw = spark.readStream.schema("value string").json(src)
-        q = micro_batch_writer(
-            latest_wins_dedup_tws(parse_state_vectors(raw), ttl_s=600),
-            sink, ckpt, available_now=True,
-        )
-        q.awaitTermination(120)
-        removed = 0
-        total = None
-        for p in q.recentProgress:
-            for so in p["stateOperators"]:
-                removed += so.get("numRowsRemoved", 0)
-                total = so.get("numRowsTotal", total)
-        return removed, total
-
-    run_batch("b0.jsonl", _sv("aaa", 1000))
-    removed, total = run_batch("b1.jsonl", _sv("ccc", 2000))
-    assert removed == 1 and total == 1  # aaa's timer fired at wm 1990
-    # aaa returns with an OLDER ts than its evicted floor: emits,
-    # because eviction erased the floor (same long-quiet-key-re-emits
-    # behavior the applyInPandasWithState twin pins)
-    run_batch("b2.jsonl", _sv("aaa", 1995))
-    out = spark.read.schema(STATE_VECTOR_SCHEMA).parquet(sink)
-    got = sorted((r.icao24, r.last_contact) for r in out.collect())
-    assert got == [("aaa", 1000), ("aaa", 1995), ("ccc", 2000)]
-
-
 def test_bronze_to_silver_enrichment(spark, tmpdir):
     """E2: stream-static broadcast join + Unknown fill + first-match
     on a duplicate-key dimension (J2)."""

@@ -4,9 +4,10 @@ above the driver's sf0.01 tier.
 Runs the driver-faithful check (`testing.check_query`: row count +
 schema + order-insensitive values, Spark vs DuckDB on the same data)
 at sf1 (10x the bench tier, ~6M-row events / ~50k docs) for the
-heaviest queries — by default the top N by recorded sf1 bench time
-plus every current-round SAMPLE_FIRST query — and writes
-PARITY_SF1.json. Exit 1 on any failure.
+heaviest queries — by default the top N by time in the sf1 bench
+record (``--bench``, default ``BENCH_SF1.json``) — and writes
+PARITY_SF1.json. ``--queries`` names the set instead, and ``--all``
+sweeps the whole registry. Exit 1 on any failure.
 
 The sf1 tables are Spark-written parquet DIRECTORIES
 (tools/gen_scale_data.py), so the DuckDB views glob
@@ -15,7 +16,7 @@ sf0.001/sf0.01 harness uses; everything else is the same gate.
 
 Usage:
     python tools/parity_sf1.py [--bench BENCH_SF1_rN.json] [--top 30]
-        [--sf-dir .bench/sf1] [--out PARITY_SF1.json] [--queries a,b,c]
+        [--sf-dir .bench/sf1] [--out PARITY_SF1.json] [--queries a,b,c | --all]
 """
 
 from __future__ import annotations
@@ -66,7 +67,7 @@ def check_query_sf1(spark, name: str, sf_dir: str) -> list[str]:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--bench", default=None, help="BENCH_SF1 record to rank by")
+    ap.add_argument("--bench", default="BENCH_SF1.json", help="sf1 bench record to rank by")
     ap.add_argument("--top", type=int, default=30)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF1_DIR", ".bench/sf1"))
     ap.add_argument("--out", default="PARITY_SF1.json")
@@ -79,11 +80,7 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    from big_data_data_lake_spark.queries import (
-        N_CURRENT_ROUND,
-        SAMPLE_FIRST,
-        load_all,
-    )
+    from big_data_data_lake_spark.queries import load_all
     from big_data_data_lake_spark.session import get_spark, local_cpus
 
     registry = load_all()
@@ -92,25 +89,13 @@ def main() -> int:
     elif args.queries:
         names = [n.strip() for n in args.queries.split(",") if n.strip()]
     else:
-        ranked: list[str] = []
-        if args.bench:
-            with open(args.bench) as f:
-                rec = json.load(f)
-            ranked = [
-                n
-                for n, _t in sorted(
-                    rec["queries"].items(), key=lambda kv: -kv[1]
-                )
-                if n in registry
-            ][: args.top]
-        # current-round landings always included (the full current-round
-        # prefix of SAMPLE_FIRST, not a hardcoded slice — round-8 advisory)
-        names = list(
-            dict.fromkeys(
-                ranked
-                + [n for n in SAMPLE_FIRST[:N_CURRENT_ROUND] if n in registry]
-            )
-        )
+        with open(args.bench) as f:
+            rec = json.load(f)
+        names = [
+            n
+            for n, _t in sorted(rec["queries"].items(), key=lambda kv: -kv[1])
+            if n in registry
+        ][: args.top]
     cpus = local_cpus()
     spark = get_spark(app_name="parity-sf1", cpus=cpus)
     result = {"sf_dir": args.sf_dir, "queries": {}, "failures": 0}
