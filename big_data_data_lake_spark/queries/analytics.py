@@ -2695,66 +2695,76 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake operator runs against a new 100 TB table (and the stats a
     catalog publishes next to the table). One row per column.
 
-    Scale shape: ONE scan. All 6x4 statistics are computed in a single
-    wide aggregate row (Catalyst plans the 6 distinct-aggregates as one
-    Expand + two-level hash aggregate — still one pass over the data,
-    partial-aggregated map-side), then the wide row is unpivoted to
-    rows with ``stack`` at metadata scale. The oracle reads the table
-    once per column because DuckDB has no multi-distinct Expand — at
-    audit scale (sf0.01) that is fine; the Spark plan is the 100 TB
-    one. Min/max reprs are formatted identically on both engines
-    (DECIMAL(18,2) for doubles, microsecond strftime for timestamps).
-    The small-file scan is spread across cores (the profile reads
-    every column, so the one round-robin exchange buys 32x parallel
-    aggregation; at 100 TB the scan arrives pre-split and the
-    exchange plans away).
+    Scale shape: ONE scan. Each event row explodes into one
+    (column, typed value) row per column; a first aggregate groups
+    those by value (the distinct values of every column, with their
+    counts and the NULL count), partial-aggregated map-side, and a
+    second one folds each column's values into its row of statistics
+    at metadata scale. Each value type has its own slot, so grouping
+    keeps that type's equality: doubles are never compared as strings.
+    There is no ``countDistinct`` on purpose: the ``Expand`` Catalyst
+    plans for several distinct aggregates orders its slots differently
+    on each call, so each call would compile new classes. A 0-count
+    all-NULL row per column keeps the six result rows on an empty
+    table. The oracle reads the table once per column — at audit scale
+    (sf0.01) that is fine; the Spark plan is the 100 TB one. Min/max
+    reprs are formatted identically on both engines (DECIMAL(18,2) for
+    doubles, microsecond strftime for timestamps). The small-file scan
+    is spread across cores (the profile reads every column, so the one
+    round-robin exchange buys 32x parallel aggregation; at 100 TB the
+    scan arrives pre-split and the exchange plans away).
     """
     from .llm_ops import _spread
 
-    ev = _spread(spark, _t(spark, sf_dir, "events"))
+    slot = {"event_id": "l", "ts": "t", "user_id": "l", "event_type": "s",
+            "value": "d", "props": "s"}
+    types = {"l": "bigint", "t": "timestamp", "s": "string", "d": "double"}
 
-    def reprs(c: str):
-        if c == "ts":
-            return (
-                F.date_format(F.min(c), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-                F.date_format(F.max(c), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
+    def cells(with_values: bool) -> str:
+        """SQL array of one struct per column: its name and one slot per
+        value type, with the column's value (NULL without
+        ``with_values``) in its own type's slot and NULL in the rest."""
+        return "array(" + ", ".join(
+            f"named_struct('col_name', '{c}', "
+            + ", ".join(
+                f"'{k}', CAST({c if with_values and k == sk else 'NULL'} AS {t})"
+                for k, t in types.items()
             )
-        if c == "value":
-            return (
-                F.round(F.min(c), 2).cast("decimal(18,2)").cast("string"),
-                F.round(F.max(c), 2).cast("decimal(18,2)").cast("string"),
-            )
-        return (F.min(c).cast("string"), F.max(c).cast("string"))
+            + ")"
+            for c, sk in slot.items()
+        ) + ")"
 
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in cols:
-        mn, mx = reprs(c)
-        aggs += [
-            F.count(c).alias(f"{c}__nn"),
-            F.countDistinct(c).alias(f"{c}__nd"),
-            mn.alias(f"{c}__mn"),
-            mx.alias(f"{c}__mx"),
-        ]
-    wide = ev.agg(*aggs)
-    stack_args = ", ".join(
-        f"'{c}', __n - {c}__nn, {c}__nd, {c}__mn, {c}__mx" for c in cols
-    )
-    return (
-        wide.selectExpr(
-            "__n",
-            f"stack({len(cols)}, {stack_args}) AS (col_name, n_nulls, n_distinct, min_repr, max_repr)",
+    def repr_of(agg: str) -> str:
+        """``agg`` of a column formatted for its type: a column fills one
+        slot, so at most one term of the coalesce is non-NULL."""
+        return (
+            f"coalesce(CAST({agg}(l) AS STRING), "
+            f"date_format({agg}(t), 'yyyy-MM-dd HH:mm:ss.SSSSSS'), {agg}(s), "
+            f"CAST(CAST(round({agg}(d), 2) AS DECIMAL(18,2)) AS STRING))"
         )
-        .select(
+
+    ev = _spread(spark, _t(spark, sf_dir, "events"))
+    per_value = ev.selectExpr(f"inline({cells(True)})").groupBy(
+        "col_name", *types
+    ).count()
+    pad = spark.range(1).selectExpr(f"inline({cells(False)})", "0L AS count")
+    all_null = " AND ".join(f"{k} IS NULL" for k in types)
+    return (
+        per_value.unionByName(pad)
+        .groupBy("col_name")
+        .agg(
+            F.expr("sum(count)").alias("n"),
+            F.expr(f"sum(if({all_null}, count, 0))").alias("n_nulls"),
+            F.expr(" + ".join(f"count({k})" for k in types)).alias("n_distinct"),
+            F.expr(repr_of("min")).alias("min_repr"),
+            F.expr(repr_of("max")).alias("max_repr"),
+        )
+        .selectExpr(
             "col_name",
-            F.col("n_nulls").cast("bigint").alias("n_nulls"),
-            # day-zero guard: __n = 0 on an empty table and ANSI division
-            # raises — NULL fraction of nothing is NULL
-            F.round(
-                F.col("n_nulls").cast("double") / F.when(F.col("__n") != 0, F.col("__n")),
-                4,
-            ).alias("null_frac"),
-            F.col("n_distinct").cast("bigint").alias("n_distinct"),
+            "n_nulls",
+            # NULL fraction of nothing is NULL (ANSI division by 0 raises)
+            "round(CAST(n_nulls AS DOUBLE) / nullif(n, 0), 4) AS null_frac",
+            "n_distinct",
             "min_repr",
             "max_repr",
         )

@@ -21,12 +21,14 @@ an event-time TTL, deterministic under replay.
 
 The LakeTable sinks (``lake_table_sink``, ``lake_upsert_sink``,
 ``lake_aggregate_sink``, ``lake_scd2_sink``, ``indexed_novelty_sink``)
-share one exactly-once step, ``_commit_batch``: every commit records
-its micro-batch id in the manifest, the first batch creates the table,
-and a batch whose id is at or below the latest recorded one is a replay
-and is skipped. Each sink supplies only its write call (the append
-sinks also a create call); ``_lake_sink`` is their one checkpointed
-``foreachBatch`` writer. The upsert, aggregate and SCD2 sinks hand
+are exactly-once by one rule of the table itself: each commit passes
+its micro-batch id as ``extra={"batch_id": ...}``, the manifest records
+it, and ``LakeTable._commit_files`` commits nothing for an id at or
+below the one the table last recorded (a batch that committed before
+its checkpoint did re-runs after a restart with the same id). Each
+sink supplies only its write call; ``_lake_sink`` is their one
+checkpointed ``foreachBatch`` writer. The append sinks create the
+table on their first batch. The upsert, aggregate and SCD2 sinks hand
 every micro-batch, the first one included, to one keyed LakeTable
 MERGE as it is: the MERGE reduces the batch's rows per key itself and
 creates the table on a path that has none.
@@ -390,25 +392,6 @@ def _lake_sink(
     return _start(writer, trigger_seconds, available_now)
 
 
-def _commit_batch(table, batch_id: int, write, create=None) -> None:
-    """The one exactly-once step of the LakeTable sinks. Spark's
-    checkpoint dedups source offsets, but a batch that committed to the
-    table before its checkpoint commit was written re-runs after a
-    restart with the same id. Every manifest records the ``batch_id``
-    it came from, so: on the first batch call ``create(extra)``, or
-    ``write(extra)`` when no ``create`` is given (a keyed MERGE creates
-    its own table); skip a batch whose id is at or below the latest
-    manifest's ``batch_id`` (already committed); otherwise call
-    ``write(extra)``. ``extra`` is ``{"batch_id": batch_id}`` for the
-    commit to record."""
-    extra = {"batch_id": batch_id}
-    versions = table.versions()
-    if not versions:
-        (create or write)(extra)
-    elif batch_id > table.manifest(versions[-1]).get("batch_id", -1):
-        write(extra)
-
-
 def micro_batch_writer(
     stream: DataFrame,
     path: str,
@@ -443,10 +426,8 @@ def lake_table_sink(
     manifest commit, so readers always see batch-aligned snapshots
     and can time-travel across micro-batches.
 
-    Exactly-once: Spark's checkpoint dedups source offsets, and the
-    commit itself is idempotent under replay — each manifest records
-    the ``batch_id`` it came from, and a replayed batch id (<= the
-    last committed one) is skipped without writing (``_commit_batch``).
+    Exactly-once: Spark's checkpoint dedups source offsets, and a
+    replayed batch id commits nothing (the module docstring's rule).
 
     ``expectations`` applies write-time CHECK gates per micro-batch in
     drop mode (a stream must keep flowing, so violating ROWS are shed
@@ -458,17 +439,11 @@ def lake_table_sink(
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         table = LakeTable(batch_df.sparkSession, table_path)
-        _commit_batch(
-            table,
-            batch_id,
-            lambda extra: table.append(
-                batch_df, extra=extra, expectations=expectations, expect_mode="drop"
-            ),
-            lambda extra: table.create(
-                batch_df, partition_by=partition_by, extra=extra,
-                expectations=expectations, expect_mode="drop",
-            ),
-        )
+        gate = {"expectations": expectations, "expect_mode": "drop"}
+        if table.versions():
+            table.append(batch_df, extra={"batch_id": batch_id}, **gate)
+        else:
+            table.create(batch_df, partition_by, extra={"batch_id": batch_id}, **gate)
 
     return _lake_sink(stream, checkpoint, "append", trigger_seconds, available_now, commit)
 
@@ -503,22 +478,17 @@ def lake_upsert_sink(
     commits a version that writes no file, so its ``batch_id`` is
     recorded.
 
-    Exactly-once: Spark's checkpoint dedups source offsets, and every
-    commit records its ``batch_id`` — a replayed batch id (<= the last
-    committed one) is skipped without writing, so restarts never
-    double-apply (``_commit_batch``, shared with lake_table_sink).
-    Batches whose rows are ALL stale commit nothing (``upsert`` deletes
-    the files it wrote for them); replaying them is a cheap idempotent
-    no-op.
+    Exactly-once: Spark's checkpoint dedups source offsets, and a
+    replayed batch id commits nothing (the module docstring's rule), so
+    restarts never double-apply. Batches whose rows are ALL stale
+    commit nothing (``upsert`` deletes the files it wrote for them);
+    replaying them is a cheap idempotent no-op.
     """
     from ..sources.metadata import LakeTable
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        table = LakeTable(batch_df.sparkSession, table_path)
-        _commit_batch(
-            table,
-            batch_id,
-            lambda extra: table.upsert(batch_df, keys, extra=extra, order_col=order_col),
+        LakeTable(batch_df.sparkSession, table_path).upsert(
+            batch_df, keys, extra={"batch_id": batch_id}, order_col=order_col
         )
 
     return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
@@ -552,20 +522,16 @@ def lake_aggregate_sink(
     empty snapshot, creates the table. An empty batch commits a
     version that writes no file, so its ``batch_id`` is recorded.
 
-    Exactly-once: checkpointed source offsets plus the recorded
-    ``batch_id`` high-water mark (``_commit_batch``) — a replayed batch
-    is skipped before any arithmetic, so counts can never double-apply
-    (the failure mode that makes naive foreachBatch aggregation
-    wrong)."""
+    Exactly-once: checkpointed source offsets plus the module
+    docstring's replay rule — a replayed batch id commits nothing, so
+    counts can never double-apply (the failure mode that makes naive
+    foreachBatch aggregation wrong)."""
     from ..sources.metadata import LakeTable
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         ones = batch_df.select(*key_cols, F.lit(1).cast("bigint").alias(count_col))
-        table = LakeTable(batch_df.sparkSession, table_path)
-        _commit_batch(
-            table,
-            batch_id,
-            lambda extra: table.accumulate(ones, key_cols, count_col, extra=extra),
+        LakeTable(batch_df.sparkSession, table_path).accumulate(
+            ones, key_cols, count_col, extra={"batch_id": batch_id}
         )
 
     return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
@@ -592,19 +558,14 @@ def lake_scd2_sink(
     for all its reads and merges copy-on-write with zone-map pruning.
     On the first batch the same MERGE, into an empty snapshot, creates
     the table. An empty batch commits a version that writes no file,
-    so its ``batch_id`` is recorded. Exactly-once via the recorded
-    ``batch_id`` high-water mark (``_commit_batch``), the same replay
-    contract as lake_upsert_sink: a replayed batch is skipped before
-    any arithmetic, so history can never double-close or duplicate
-    versions."""
+    so its ``batch_id`` is recorded. Exactly-once by the module
+    docstring's replay rule: a replayed batch id commits nothing, so
+    history can never double-close or duplicate versions."""
     from ..sources.metadata import LakeTable
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        table = LakeTable(batch_df.sparkSession, table_path)
-        _commit_batch(
-            table,
-            batch_id,
-            lambda extra: table.upsert_scd2(batch_df, keys, change_ts, extra=extra),
+        LakeTable(batch_df.sparkSession, table_path).upsert_scd2(
+            batch_df, keys, change_ts, extra={"batch_id": batch_id}
         )
 
     return _lake_sink(stream, checkpoint, "update", trigger_seconds, available_now, commit)
@@ -636,11 +597,12 @@ def indexed_novelty_sink(
     The first batch bootstraps empty index tables (every doc novel,
     max_est_sim 0.0) — a cold-started stream needs no offline build.
 
-    Exactly-once: Spark's checkpoint dedups source offsets, and every
-    table records the ``batch_id`` it last committed — a replayed
-    batch skips each table it already reached, so a crash BETWEEN the
-    novelty commit and the index commits heals on restart (the
-    novelty append skips, the missing index appends land).
+    Exactly-once: Spark's checkpoint dedups source offsets, and each
+    of the three tables applies the module docstring's replay rule on
+    its own — a replayed batch commits nothing to a table it already
+    reached, so a crash BETWEEN the novelty commit and the index
+    commits heals on restart (the novelty append skips, the missing
+    index appends land).
 
     Scale shape: per-trigger cost is the batch sketch (row-local) +
     one narrow (band, bkey) equi-join + a candidate-keyed signature
@@ -649,14 +611,8 @@ def indexed_novelty_sink(
     append path the batch twin simulates with N_INDEX_COMMITS)."""
     from ..sources.metadata import LakeTable
 
-    def _commit_or_skip(table: "LakeTable", df: DataFrame, batch_id: int) -> None:
-        df = df.coalesce(4)
-        _commit_batch(
-            table,
-            batch_id,
-            lambda extra: table.append(df, extra=extra),
-            lambda extra: table.create(df, extra=extra),
-        )
+    def _commit_or_skip(table: "LakeTable", df: DataFrame, extra: dict) -> None:
+        (table.append if table.versions() else table.create)(df.coalesce(4), extra=extra)
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         # lazy: queries.* imports streaming.* at module load
@@ -696,9 +652,8 @@ def indexed_novelty_sink(
                     F.lit(0.0).alias("max_est_sim"),
                     F.lit(True).alias("is_novel"),
                 )
-            _commit_or_skip(out_t, novelty, batch_id)
-            _commit_or_skip(sigs_t, sig, batch_id)
-            _commit_or_skip(bands_t, bands, batch_id)
+            for table, df in ((out_t, novelty), (sigs_t, sig), (bands_t, bands)):
+                _commit_or_skip(table, df, extra={"batch_id": batch_id})
         finally:
             for c in batch_caches:
                 c.unpersist()

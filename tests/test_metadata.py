@@ -549,6 +549,50 @@ def test_batch_id_survives_maintenance_commits(spark, tmp_path):
     assert t.manifest()["batch_id"] == 2
 
 
+@pytest.mark.parametrize(
+    "op", ["append", "upsert", "upsert_order_col", "accumulate", "upsert_scd2"]
+)
+def test_replayed_batch_id_commits_nothing(spark, tmp_path, op):
+    """A write whose ``extra`` batch id is at or below the snapshot's
+    recorded ``batch_id`` is a replayed micro-batch: it writes no file,
+    commits no version, leaves the rows as they are and returns the
+    latest version. A compact in between keeps the mark; a higher id
+    still commits."""
+
+    def batch(day: int, keys: list[str]):
+        if op == "accumulate":
+            return spark.createDataFrame([(k, 1) for k in keys], "k string, n bigint")
+        return spark.createDataFrame(
+            [(k, f"2024-01-{day:02d}") for k in keys], "k string, ts string"
+        )
+
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(batch(1, ["a", "b"]))
+    write = {
+        "append": lambda df, **kw: t.append(df, **kw),
+        "upsert": lambda df, **kw: t.upsert(df, ["k"], **kw),
+        "upsert_order_col": lambda df, **kw: t.upsert(df, ["k"], order_col="ts", **kw),
+        "accumulate": lambda df, **kw: t.accumulate(df, ["k"], "n", **kw),
+        "upsert_scd2": lambda df, **kw: t.upsert_scd2(df, ["k"], "ts", **kw),
+    }[op]
+
+    def state():
+        return sorted(map(repr, t.read().collect())), t._list_parquet()
+
+    v = write(batch(2, ["a", "c2"]), extra={"batch_id": 3})
+    assert v == 1 and t.manifest()["batch_id"] == 3
+    committed = state()
+    assert write(batch(4, ["a", "c4"]), extra={"batch_id": 3}) == v
+    assert t.latest_version() == v and state() == committed
+    v = t.compact()
+    assert t.manifest()["batch_id"] == 3
+    compacted = state()
+    assert write(batch(5, ["a", "c5"]), extra={"batch_id": 2}) == v
+    assert t.latest_version() == v and state() == compacted
+    assert write(batch(6, ["a", "c6"]), extra={"batch_id": 4}) == v + 1
+    assert t.manifest()["batch_id"] == 4 and state()[0] != compacted[0]
+
+
 def test_upsert_after_schema_evolution(spark, tmp_path):
     """Upserting a table whose touched files pre-date an added column
     must read them through the evolved-schema path (null-fill), not

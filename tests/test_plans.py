@@ -667,14 +667,28 @@ def test_value_trend_is_one_hash_aggregate(spark):
 
 
 def test_table_profile_single_aggregate_pass(spark):
-    """The per-column profile must be ONE scan + one (expanded)
-    aggregate — never a scan per column like its DuckDB oracle."""
+    """The per-column profile must be ONE scan of the exploded
+    (column, value) rows — never a scan per column like its DuckDB
+    oracle."""
     import re
 
     df = _q(spark, "table_profile")
     plan = plans.formatted_plan(df)
     # each physical node appears once as a numbered detail header
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
+
+
+def test_table_profile_rerun_compiles_nothing(spark):
+    """A second build and run of the profile reuses every generated
+    class: its plan is the same on each call. A distinct-aggregate
+    ``Expand`` orders its slots differently per call and compiles
+    about 9 classes every time."""
+    from big_data_data_lake_spark.session import codegen_compiles
+
+    _q(spark, "table_profile").collect()
+    before = codegen_compiles(spark)
+    _q(spark, "table_profile").collect()
+    assert codegen_compiles(spark) - before == 0
 
 
 def test_countmin_sketch_partial_aggregates(spark):

@@ -699,6 +699,33 @@ def test_lake_sink_job_budget_per_commit(spark, tmpdir, kind):
         assert jobs <= job_budget and stages <= stage_budget, (got, BUDGET[kind])
 
 
+@pytest.mark.parametrize("kind", BUDGET)
+def test_lake_sink_reads_one_manifest_per_commit(spark, tmpdir, monkeypatch, kind):
+    """A non-first sink commit loads the table's latest manifest once:
+    the snapshot its mutator reads, which also holds the ``batch_id``
+    the replay check compares against."""
+    import os
+
+    from big_data_data_lake_spark.sources.metadata import LakeTable
+
+    src, ckpt = f"{tmpdir}/src", f"{tmpdir}/ckpt"
+    os.makedirs(src)
+    start = _replay_sink(kind)
+    calls = []
+    manifest = LakeTable.manifest
+    monkeypatch.setattr(
+        LakeTable, "manifest", lambda self, *a, **kw: calls.append(a) or manifest(self, *a, **kw)
+    )
+    for i in range(2):
+        calls.clear()
+        with open(f"{src}/b{i}.jsonl", "w") as fh:
+            fh.write(json.dumps({"k": f"k{i}", "ts": "2024-01-01 00:00:00"}) + "\n")
+        stream = spark.readStream.schema("k string, ts timestamp").json(src)
+        start(stream, f"{tmpdir}/table", ckpt).awaitTermination(120)
+    assert len(calls) == 1, calls
+    assert LakeTable(spark, f"{tmpdir}/table").versions() == [0, 1]
+
+
 def _replay_sink(kind):
     """Starter ``(stream, table_path, checkpoint) -> query`` of one
     single-table LakeTable sink, for the replay-guard test."""
